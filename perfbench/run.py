@@ -108,12 +108,11 @@ def main():
 
     cp = build()
     work = os.path.join(RUNS, f"{a.workload}-{a.seed}-{a.trace}")
-    cores = min(2, os.cpu_count() or 1)  # see README: fewer task threads, less exposure to host steal
     cmd = (["java"] + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")] +
            [f"-Xms{HEAP}", f"-Xmx{HEAP}", "-Dspark.ui.enabled=false",
             "-cp", cp, "graftbench.Main",
             "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
-            "--trace", str(a.trace), "--work", work, "--states", STATES, "--cores", str(cores)])
+            "--trace", str(a.trace), "--work", work, "--states", STATES])
     os.makedirs(RUNS, exist_ok=True)
     jvm_log = os.path.join(RUNS, f"{a.workload}-{a.seed}-{a.trace}.log")
     with open(jvm_log, "w") as err:

@@ -125,7 +125,7 @@ final class CorpusClient(spark: SparkSession, run: Run, root: Path, gen: Docs) {
     held.foreach(_.unpersist())
   }
 
-  private def live: IndexedSeq[Long] = expected.keys.toIndexedSeq.sorted
+  def liveKeys: IndexedSeq[Long] = expected.keys.toIndexedSeq.sorted
 
   /** One pruned point lookup, checked against the expected table. */
   def lookup(key: Long): Unit = {
@@ -149,33 +149,36 @@ final class CorpusClient(spark: SparkSession, run: Run, root: Path, gen: Docs) {
     }
   }
 
-  def lookupHit(): Unit = if (live.nonEmpty) lookup(live(gen.nextInt(live.length)))
+  def lookupHit(): Unit = {
+    val live = liveKeys
+    if (live.nonEmpty) lookup(live(gen.nextInt(live.length)))
+  }
   def lookupMiss(): Unit = lookup(MissBase + gen.nextInt(1000000))
 
   /** Take down a few scattered live keys: mask them with a deletion
     * vector, then apply the vector physically — one write. A lookup of a
     * taken-down key and a full read must no longer see them; the full read
     * must otherwise equal the expected table, as applying a vector leaves
-    * the logical table unchanged. Returns the keys.
+    * the logical table unchanged.
     */
-  def takedown(k: Int, apply: Boolean = true): Seq[Long] = {
-    val keys = gen.sample(live, k)
+  def takedown(k: Int): Unit = {
+    val keys = gen.sample(liveKeys, k)
     if (keys.nonEmpty) run.op("write") {
       val masked = Trace.span("util.scan.delete_deferred")(Scan.deleteByKeysDeferred(spark, table, keys))
-      val applied = if (apply) Some(Trace.span("util.scan.apply_dv")(Scan.applyDeletionVectors(spark, table)))
-        else None
-      (masked, applied)
-    }.foreach { case ((_, _, removed), applied) =>
+      (masked, Trace.span("util.scan.apply_dv")(Scan.applyDeletionVectors(spark, table)))
+    }.foreach { case ((_, _, removed), (_, physical)) =>
       run.check("takedownRemoved", removed == keys.length, s"removed $removed of ${keys.length}")
-      keys.foreach(expected.remove)
-      takenDown ++= keys
-      applied.foreach { case (_, physical) =>
-        Trace.count("util.scan.apply_dv.rows_removed", physical.toDouble)
-      }
+      markTakenDown(keys)
+      Trace.count("util.scan.apply_dv.rows_removed", physical.toDouble)
     }
     keys.headOption.foreach(lookup)
-    checkTable(if (apply) "applyDvLogicalUnchanged" else "fullRead")
-    keys
+    checkTable("applyDvLogicalUnchanged")
+  }
+
+  /** Record `keys` as taken down: later checks expect them absent. */
+  def markTakenDown(keys: Seq[Long]): Unit = {
+    keys.foreach(expected.remove)
+    takenDown ++= keys
   }
 
   /** The logical table through the Scan API: every shard, masks applied. */

@@ -121,7 +121,11 @@ object Docs {
     def bytes: Long = jsonLines.length.toLong
   }
 
-  /** Planted shares, in percent of a batch. */
+  /** Planted shares, in percent of a batch. They are assumptions, not
+    * measured from a real crawl: each is large enough that its curation
+    * step removes something in a 500-document batch (`ext.kept_ratio`,
+    * `ext.near_dup_pairs`, and the exact-group check).
+    */
   val ExactPct = 8
   val NearPct = 6
   val ForeignPct = 6

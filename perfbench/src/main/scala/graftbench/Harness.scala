@@ -8,12 +8,13 @@ import scala.jdk.CollectionConverters._
 
 /** One timed operation of a workload. Times are epoch milliseconds (as
   * doubles, from a monotonic clock anchored once), so they line up with
-  * Spark's listener timestamps in the traced run; `cpu` is the JVM's CPU
-  * seconds (every thread) over the operation, and `readBytes` and
+  * Spark's listener timestamps in the traced run; `cpu` is the CPU seconds
+  * the JVM's Java threads (driver and task threads; not the JIT compiler's
+  * or the collector's) spent in the operation, and `readBytes` and
   * `writtenBytes` the bytes its read and write calls moved (table files,
   * shuffle and spill files alike).
   */
-final case class Op(kind: String, start: Double, end: Double, cpu: Double,
+final case class Op(kind: String, start: Double, end: Double, cpu: Double, allocBytes: Long,
     readBytes: Long, writtenBytes: Long, failed: Boolean) {
   def seconds: Double = (end - start) / 1000.0
 }
@@ -42,7 +43,8 @@ final class Run(val seed: Long, val seconds: Int, val work: Path) {
   def op[A](kind: String)(body: => A): Option[A] = {
     val (r0, w0) = Jvm.ioBytes
     val t0 = now()
-    val c0 = Jvm.cpuSeconds
+    val c0 = Jvm.threadCpu()
+    val a0 = Jvm.threadAlloc()
     val r = try Some(Trace.span(kind)(body)) catch {
       case e: Throwable if scala.util.control.NonFatal(e) =>
         System.err.println(s"[perfbench] $kind failed: $e")
@@ -50,11 +52,13 @@ final class Run(val seed: Long, val seconds: Int, val work: Path) {
         None
     }
     val t1 = now()
-    val c1 = Jvm.cpuSeconds
+    val cpu = Jvm.cpuSince(c0)
+    val alloc = Jvm.allocSince(a0)
     val (r1, w1) = Jvm.ioBytes
-    val o = Op(kind, t0, t1, c1 - c0, r1 - r0, w1 - w0, r.isEmpty)
+    val o = Op(kind, t0, t1, cpu, alloc, r1 - r0, w1 - w0, r.isEmpty)
     ops += o
-    System.err.println(f"[op] $kind ${o.seconds}%.3f cpu ${o.cpu}%.3f read ${o.readBytes} " +
+    System.err.println(f"[op] $kind ${o.seconds}%.3f cpu ${o.cpu}%.3f alloc ${o.allocBytes} " +
+      f"read ${o.readBytes} " +
       f"written ${o.writtenBytes}${if (timing) "" else " untimed"}")
     r
   }
@@ -128,11 +132,36 @@ object Jvm {
 
   def peakMb: Double = { sample(); peak / 1048576.0 }
 
-  private val os = ManagementFactory.getOperatingSystemMXBean
-    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+  private val threads = ManagementFactory.getThreadMXBean
 
-  /** CPU seconds the JVM has used, all threads. */
-  def cpuSeconds: Double = os.getProcessCpuTime / 1e9
+  /** CPU nanoseconds of every live Java thread, by thread id. The JIT
+    * compiler's and the collector's threads are not among them, so warm-up
+    * and heap pressure move this less than the process's CPU time; time
+    * the host steals from the virtual CPU is not charged to any thread.
+    */
+  def threadCpu(): Map[Long, Long] =
+    threads.getThreadInfo(threads.getAllThreadIds).iterator
+      .filter(i => i != null && !i.getThreadName.contains("CompilerThread"))
+      .map(i => i.getThreadId -> threads.getThreadCpuTime(i.getThreadId))
+      .filter(_._2 >= 0).toMap
+
+  /** CPU seconds Java threads spent since `before` was taken; a thread that
+    * ended in between loses its share.
+    */
+  def cpuSince(before: Map[Long, Long]): Double =
+    threadCpu().iterator.map { case (id, t) => (t - before.getOrElse(id, 0L)).max(0L) }.sum / 1e9
+
+  private val allocs = threads.asInstanceOf[com.sun.management.ThreadMXBean]
+
+  /** Heap bytes every live Java thread has allocated, by thread id. */
+  def threadAlloc(): Map[Long, Long] = {
+    val ids = allocs.getAllThreadIds
+    ids.zip(allocs.getThreadAllocatedBytes(ids)).filter(_._2 >= 0).toMap
+  }
+
+  /** Heap bytes Java threads allocated since `before` was taken. */
+  def allocSince(before: Map[Long, Long]): Long =
+    threadAlloc().iterator.map { case (id, b) => (b - before.getOrElse(id, 0L)).max(0L) }.sum
 
   /** Bytes this process has read and written through system calls, from
     * Linux's per-process I/O counters (page-cache hits included).

@@ -12,18 +12,20 @@ import scala.collection.mutable
   *                 --work <dir> --states <us_states.csv>
   * }}}
   *
-  * Set-up (session start, input generation, seeding, warm-up) is timed as
-  * `setup_s`. The timed phase then runs the workload's closed loop for the
-  * given seconds. With `--trace 1` the same loop runs once untraced and
-  * once traced, and the run reports per-layer metrics and the tracing
-  * overhead instead of the end-to-end metrics. The last line of standard
-  * output is the result object.
+  * After the session starts, the workload sets up [[Workloads.SetupReps]]
+  * times from scratch (input generation, seeding); `setup_s` is the median
+  * of those set-ups. One untimed warm-up cycle follows, then the timed
+  * phase runs the workload's closed loop for the given seconds. With `--trace 1` a second
+  * phase alternates traced and untraced cycles, and the run reports
+  * per-layer metrics and the tracing overhead instead of the end-to-end
+  * metrics. The last line of standard output is the result object.
   */
 object Main {
 
   /** End-to-end metric names and units, in report order. */
   val EndToEnd: Seq[(String, String)] = Seq(
-    "setup_s" -> "s", "write_bytes_p50" -> "bytes", "query_bytes_p50" -> "bytes",
+    "setup_s" -> "s", "write_alloc_mb" -> "MB", "query_alloc_mb" -> "MB",
+    "write_bytes_p50" -> "bytes", "query_bytes_p50" -> "bytes",
     "stored_bytes_per_input_byte" -> "ratio")
 
   def main(args: Array[String]): Unit = {
@@ -32,39 +34,52 @@ object Main {
     require(Workloads.Names.contains(workload), s"unknown workload '$workload'")
     val code = run(workload, opts("seed").toLong, opts("seconds").toInt,
       opts.getOrElse("trace", "0") == "1", Path.of(opts("work")).toAbsolutePath,
-      Path.of(opts("states")).toAbsolutePath, opts.get("cores").map(_.toInt).getOrElse(4))
+      Path.of(opts("states")).toAbsolutePath)
     System.out.flush()
     // Spark's non-daemon threads must not keep the JVM alive past the result
     Runtime.getRuntime.halt(code)
   }
 
   def run(workload: String, seed: Long, seconds: Int, traced: Boolean, work: Path,
-      statesCsv: Path, cores: Int): Int = {
+      statesCsv: Path): Int = {
     Files2.deleteTree(work)
     Files.createDirectories(work)
     System.setProperty("spark.local.dir", work.resolve("spark-local").toString)
     System.setProperty("spark.sql.warehouse.dir", work.resolve("spark-warehouse").toString)
     val r = new Run(seed, seconds, work)
     val jvmStart = ManagementFactory.getRuntimeMXBean.getStartTime.toDouble
+    // the inputs are small: two task threads load about as fast as four,
+    // and leave the run less exposed to CPU other tenants of a host take
+    val cores = math.min(2, Runtime.getRuntime.availableProcessors)
     val spark = graft.util.GraftSession.local(cores, cores)
     spark.sparkContext.setLogLevel("ERROR")
-    System.err.println(f"[op] session ${(System.currentTimeMillis() - jvmStart) / 1000}%.3f")
+    val sessionS = (System.currentTimeMillis() - jvmStart) / 1000.0
+    System.err.println(f"[op] session $sessionS%.3f")
     val w = Workloads(workload, spark, r, statesCsv)
-    w.setup()
-    val setupS = (System.currentTimeMillis() - jvmStart) / 1000.0
+    val setups = Seq.fill(Workloads.SetupReps) {
+      val t0 = r.now()
+      w.setup()
+      val s = (r.now() - t0) / 1000.0
+      System.err.println(f"[op] setup $s%.3f")
+      s
+    }
+    val setupS = Stats.median(setups)
+    // the timed operations run once before timing starts
+    w.cycle()
 
     val storagePeak = new StoragePeak(spark)
-    /** Run cycles for the measured seconds; `tracedCycle(i)` says whether
-      * cycle i is traced. Returns the operations and each cycle's wall
-      * time with whether it was traced.
+    /** Run cycles for the measured seconds, and at least `minCycles`;
+      * `tracedCycle(i)` says whether cycle i is traced. Returns the
+      * operations and each cycle's wall time with whether it was traced.
       */
-    def phase(tracedCycle: Int => Boolean): (Seq[Op], Seq[(Double, Boolean)]) = {
+    def phase(minCycles: Int)(tracedCycle: Int => Boolean): (Seq[Op], Seq[(Double, Boolean)]) = {
       val first = r.ops.length
       val cycles = mutable.ArrayBuffer.empty[(Double, Boolean)]
       r.beginTimed()
-      // start a cycle only while it is expected to end near the deadline
-      while (r.now() + (if (cycles.isEmpty) 0.0 else 0.5 * Stats.median(cycles.map(_._1).toSeq)) <
-          r.deadline) {
+      // past the minimum, start a cycle only while it is expected to end
+      // near the deadline
+      while (cycles.length < minCycles ||
+          r.now() + 0.5 * Stats.median(cycles.map(_._1).toSeq) < r.deadline) {
         val on = tracedCycle(cycles.length)
         if (on) Trace.start(spark, s"$workload-$seed")
         val t0 = r.now()
@@ -84,15 +99,16 @@ object Main {
       w.tracedExtras()
       Trace.stop(spark)
     }
-    val (timedOps, timedCycles) = phase(_ => false)
+    val (timedOps, timedCycles) = phase(1)(_ => false)
     val rows = w.rowsConsumed
     val opSeconds = timedOps.map(_.seconds).sum
     val heapMb = Jvm.peakMb
     val layerMetrics = if (traced) {
-      // a second phase alternates untraced and traced cycles, so the
-      // tracing overhead is not confounded with the JIT still warming up
+      // a second phase alternates traced and untraced cycles, so the
+      // tracing overhead is not confounded with the JIT still warming up;
+      // it runs at least one of each, however long a cycle takes
       val gc0 = Jvm.gcMillis
-      val (_, cycles) = phase(_ % 2 == 1)
+      val (_, cycles) = phase(2)(_ % 2 == 0)
       val gcS = (Jvm.gcMillis - gc0) / 1000.0 / math.max(1, cycles.length)
       val on = cycles.filter(_._2).map(_._1)
       val off = cycles.filterNot(_._2).map(_._1)
@@ -100,6 +116,7 @@ object Main {
       val m = Layers.compute(Trace.allSpans, Trace.allJobs, Trace.allPlans,
         Trace.allCounts, w.readings, gcS, storagePeak.peakMb)
       TraceFile.write(work.resolve("trace.json"))
+      w.ownLayers.foreach(n => r.check(s"traced:$n", m(n) > 0, "no work recorded for it"))
       Some(m ++ Map("trace.overhead_s" -> overhead / 1000.0,
         "trace.overhead_ratio" -> (if (off.isEmpty) 0.0 else overhead / Stats.median(off))))
     } else None
@@ -109,6 +126,8 @@ object Main {
     def kind(k: String) = ofKind(k).map(_.seconds)
     val e2e = mutable.LinkedHashMap[String, Double](
       "setup_s" -> setupS,
+      "write_alloc_mb" -> Stats.median(ofKind("write").map(_.allocBytes / 1048576.0)),
+      "query_alloc_mb" -> Stats.median(ofKind("query").map(_.allocBytes / 1048576.0)),
       "write_bytes_p50" -> Stats.median(ofKind("write").map(o => (o.readBytes + o.writtenBytes).toDouble)),
       "query_bytes_p50" -> Stats.median(ofKind("query").map(o => (o.readBytes + o.writtenBytes).toDouble)),
 
@@ -129,6 +148,8 @@ object Main {
     }
     report("write_cpu_s") = Stats.median(ofKind("write").map(_.cpu))
     report("query_cpu_s") = Stats.median(ofKind("query").map(_.cpu))
+    report("session_start_s") = sessionS
+    report("setup_reps_s") = setups
     report("error_rate") = failed.toDouble / math.max(1, r.ops.length)
     report("heap_peak_mb") = heapMb
     report("operations") = r.ops.length

@@ -101,7 +101,13 @@ object SelfTest {
     c.curateAndPublish(c.writeBatch(batch, "batch.jsonl"), batch)
     c.lookupHit()
     c.lookupMiss()
-    val taken = c.takedown(3, apply = false)
+    c.takedown(3)
+    // mask three more keys and leave the deletion vector unapplied
+    val taken = c.liveKeys.take(3)
+    graft.util.Scan.deleteByKeysDeferred(spark, c.table, taken)
+    c.markTakenDown(taken)
+    taken.foreach(c.lookup)
+    c.checkTable("fullRead")
     expect("corpus checks pass on the real table", run.checkFailures.isEmpty && taken.nonEmpty)
 
     // corrupt the result: resurrect the taken-down keys by removing the

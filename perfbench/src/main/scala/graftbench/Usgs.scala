@@ -191,7 +191,10 @@ object Usgs {
 
   private final case class Line(text: String, added: Boolean)
 
-  /** Activity types with cumulative weights: earthquakes dominate. */
+  /** Activity types with cumulative weights: earthquakes dominate. The
+    * weights are an assumption; every type occurs, so every row of
+    * `totalsByType` and the type dimension are exercised.
+    */
   private val TypeWeights: Seq[(String, Double)] = Seq(
     "earthquake" -> 0.86, "quarry blast" -> 0.90, "explosion" -> 0.93,
     "ice quake" -> 0.95, "landslide" -> 0.97, "sonic boom" -> 0.985,

@@ -4,10 +4,15 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.SparkSession
 
-/** A workload: its set-up (timed as `setup_s`) and one cycle of its closed
-  * loop. Cycles repeat until the measured seconds are used up.
+/** A workload: its set-up and one cycle of its closed loop. Cycles repeat
+  * until the measured seconds are used up.
   */
 trait Workload {
+  /** One set-up from scratch in a fresh directory: inputs generated from
+    * the seed and the table seeded. It runs [[Workloads.SetupReps]] times
+    * (`setup_s` is their median); the timed phase uses what the last one
+    * built.
+    */
   def setup(): Unit
   def cycle(): Unit
   /** Untimed checks once the timed phase is over. */
@@ -21,14 +26,17 @@ trait Workload {
   def readings: Map[String, Double] = Map.empty
   /** Work only the traced run does, traced, before its timed phases. */
   def tracedExtras(): Unit = ()
+  /** Per-layer metrics that must not read 0 after a traced run: the
+    * workload's own layers did work and their spans were recorded.
+    */
+  def ownLayers: Seq[String]
 }
 
 object Workloads {
-  /** Cycles run in set-up before timing starts. The JIT keeps speeding
-    * operations up for several cycles; the warm-up takes the steepest part
-    * of that out of the timed phase.
+  /** Set-ups per run. The first one runs while the JIT is cold; the
+    * median leaves it out.
     */
-  val WarmUpCycles = 2
+  val SetupReps = 3
 
   val Names: Seq[String] = Seq("wh_daily", "corpus_table")
 
@@ -45,28 +53,30 @@ object Workloads {
 final class WhDaily(spark: SparkSession, run: Run, statesCsv: Path) extends Workload {
 
   import WhDaily._
-  import Workloads.WarmUpCycles
 
-  private val gen = new Usgs(run.seed, Usgs.readStates(statesCsv))
-  private val root = run.work.resolve("wh_daily")
-  private val inputs = root.resolve("inputs")
-  private val w = new WarehouseClient(spark, run, root, statesCsv)
+  private val states = Usgs.readStates(statesCsv)
+  private var reps = 0
+  private var w: WarehouseClient = _
   private val deltas = scala.collection.mutable.Queue.empty[Usgs.File]
   private var rows = 0L
   private var bytesIn = 0L
 
   def setup(): Unit = {
+    Files2.deleteTree(run.work.resolve(s"wh_daily-${reps - 1}"))
+    val root = run.work.resolve(s"wh_daily-$reps")
+    reps += 1
+    val inputs = root.resolve("inputs")
     Files.createDirectories(inputs)
+    val gen = new Usgs(run.seed, states)
     val history = gen.wholeMonth(inputs, HistoryEvents, HistoryDays)
+    deltas.clear()
     (0 until MaxDeltas).foreach { i =>
-      deltas += gen.allDay(inputs, DeltaEvents, ReportShare, newDim = i % 3 == 1)
+      deltas += gen.allDay(inputs, DeltaEvents, ReportShare, newDim = i % NewDimEvery == 1)
     }
     Session.sizeFor(spark, history.bytes + deltas.map(_.bytes).sum)
-    val t0 = run.now()
+    w = new WarehouseClient(spark, run, root, statesCsv)
     w.loadBatch(history)
-    System.err.println(f"[op] history ${(run.now() - t0) / 1000}%.3f")
-    bytesIn += history.bytes
-    (0 until WarmUpCycles).foreach(_ => cycle())
+    bytesIn = history.bytes
   }
 
   def cycle(): Unit = {
@@ -85,19 +95,32 @@ final class WhDaily(spark: SparkSession, run: Run, statesCsv: Path) extends Work
   override def readings: Map[String, Double] = Map(
     "fact_files" -> w.factFiles.toDouble,
     "fact_bytes_per_row" -> w.factBytes.toDouble / math.max(1L, w.factRows))
+  def ownLayers: Seq[String] = Seq("ingest.bytes_read", "ods.bytes_written",
+    "dw.fact.bytes_written", "pipeline.jobs", "analytics.jobs")
 }
 
+/** The mix below is an assumption, not measured traffic: the repository
+  * has no feed history to derive it from. Each value is there to make one
+  * layer do its work.
+  */
 object WhDaily {
-  /** History: 10,000 events over 30 days. */
-  val HistoryEvents = 10000
-  val HistoryDays = 30
-  /** A delta: 200 new events (the fact starts 50 times larger) plus 10%
-    * re-reports of warehoused events; every third one brings a new network
-    * and a new region.
+  /** History: 5,000 events over 30 days. A delta adds 100 new events, so
+    * the fact starts 50 times larger than the delta and grows from there:
+    * the full-fact rewrite of the merge (`dw.fact.write_amp`,
+    * `dw.fact.bytes_written`) outweighs staging (`ingest.*`, `ods.*`).
     */
-  val DeltaEvents = 200
+  val HistoryEvents = 5000
+  val HistoryDays = 30
+  val DeltaEvents = 100
+  /** Re-reports of warehoused events, as a share of a delta's new events:
+    * the key dedup of the merge has matches to drop.
+    */
   val ReportShare = 0.10
-  val MaxDeltas = 60
+  /** One delta in three brings a new network and a new region: the
+    * dimension extension of `dw` runs in the timed phase.
+    */
+  val NewDimEvery = 3
+  val MaxDeltas = 40
 }
 
 /** A seeded corpus batch published as a sharded table during set-up, then
@@ -108,14 +131,19 @@ object WhDaily {
 final class CorpusTable(spark: SparkSession, run: Run) extends Workload {
 
   import CorpusTable._
-  import Workloads.WarmUpCycles
 
-  private val gen = new Docs(run.seed)
-  private val c = new CorpusClient(spark, run, run.work.resolve("corpus_table"), gen)
+  private var reps = 0
+  private var c: CorpusClient = _
   private val pool = scala.collection.mutable.ArrayBuffer.empty[(Path, Docs.Batch)]
   private var bytesIn = 0L
 
   def setup(): Unit = {
+    Files2.deleteTree(run.work.resolve(s"corpus_table-${reps - 1}"))
+    val root = run.work.resolve(s"corpus_table-$reps")
+    reps += 1
+    val gen = new Docs(run.seed)
+    c = new CorpusClient(spark, run, root, gen)
+    pool.clear()
     (0 until PoolBatches).foreach { i =>
       val b = gen.batch(BatchDocs)
       pool += ((c.writeBatch(b, s"batch-$i.jsonl"), b))
@@ -123,7 +151,6 @@ final class CorpusTable(spark: SparkSession, run: Run) extends Workload {
     Session.sizeFor(spark, pool.map(_._2.bytes).sum)
     c.publishRaw(pool(0)._1)
     bytesIn = pool(0)._2.bytes
-    (0 until WarmUpCycles).foreach(_ => cycle())
   }
 
   override def tracedExtras(): Unit = {
@@ -141,11 +168,19 @@ final class CorpusTable(spark: SparkSession, run: Run) extends Workload {
   def rowsConsumed: Long = 0L
   def inputBytes: Long = bytesIn
   def publishedBytes: Long = c.publishedBytes
+  def ownLayers: Seq[String] = Seq("util.scan.jobs_per_verb", "util.scan.candidates_per_lookup",
+    "util.scan.write_sharded.busy_s", "ext.kept_ratio", "ext.near_dup_pairs")
 }
 
+/** Sizes, and assumptions rather than measured traffic: the repository has
+  * no corpus or takedown log to derive them from.
+  */
 object CorpusTable {
-  /** Documents per batch; planted shares are in [[Docs]]. */
+  /** Documents per batch; the planted shares are in [[Docs]]. */
   val BatchDocs = 500
   val PoolBatches = 2
+  /** Keys per takedown: a handful of scattered keys, so a takedown touches
+    * several shards (`util.scan.apply_dv.bytes_rewritten_per_row_removed`).
+    */
   val Takedowns = 4
 }

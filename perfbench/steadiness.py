@@ -6,8 +6,8 @@ each end-to-end metric's median, quartiles and spread against its bound.
 
 The spread is (q3 - q1) / median, with quartiles from Python's
 statistics.quantiles(values, n=4); bounds come from BENCHMARK.json. A
-metric is steady when its spread is under a third of its bound; setup_s is
-compared between sets of runs by its median only. Beside
+metric is steady when its spread is under a third of its bound, and
+unresolved when its spread is wider than its bound. Beside
 each run the report records the 1-minute load average and the host-steal
 ticks the run saw. They are there for reading only: no run is dropped or
 re-weighted because of them. The full record is written to
@@ -77,11 +77,8 @@ def main():
                 continue
             q1, med, q3 = statistics.quantiles(vals, n=4)
             spread = (q3 - q1) / med if med else float("inf")
-            if name == "setup_s":
-                verdict = "compared by median only"  # its spread is not bounded
-            else:
-                verdict = ("steady" if spread < bound / 3 else
-                           "within bound" if spread <= bound else "TOO WIDE")
+            verdict = ("steady" if spread < bound / 3 else
+                       "within bound" if spread <= bound else "UNRESOLVED: wider than its bound")
             print(f"  {name:32} {med:10.4g} {q1:10.4g} {q3:10.4g} {spread:8.3f} {bound:6.2f}  {verdict}")
         print(flush=True)
     os.makedirs(os.path.join(BENCH, ".run"), exist_ok=True)
