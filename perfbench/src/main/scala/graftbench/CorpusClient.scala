@@ -62,10 +62,12 @@ final class CorpusClient(spark: SparkSession, run: Run, root: Path, gen: Docs) {
         zTotalBits = Some(16), nShards = Some(Shards), dicts = Map("source" -> dict))
     }
 
+  /** The table now holds exactly `ids`: a full read must show them. */
   private def published(ids: Iterable[Long]): Unit = {
     expected.clear()
     ids.foreach(id => expected(id) = 0L)
     takenDown = Set.empty
+    checkTable("published")
   }
 
   /** Publish a batch file as it was generated, without curation. */
@@ -155,14 +157,16 @@ final class CorpusClient(spark: SparkSession, run: Run, root: Path, gen: Docs) {
   }
   def lookupMiss(): Unit = lookup(MissBase + gen.nextInt(1000000))
 
-  /** Take down a few scattered live keys: mask them with a deletion
+  /** Take down `k` live keys in `k` different shards: mask them with a deletion
     * vector, then apply the vector physically — one write. A lookup of a
     * taken-down key and a full read must no longer see them; the full read
     * must otherwise equal the expected table, as applying a vector leaves
     * the logical table unchanged.
     */
   def takedown(k: Int): Unit = {
-    val keys = gen.sample(liveKeys, k)
+    // one key from each of `k` shards, so every takedown rewrites as many
+    val byShard = liveKeys.filter(shardOf.contains).groupBy(shardOf).toIndexedSeq.sortBy(_._1)
+    val keys = gen.sample(byShard, k).map { case (_, ks) => ks(gen.nextInt(ks.length)) }
     if (keys.nonEmpty) run.op("write") {
       val masked = Trace.span("util.scan.delete_deferred")(Scan.deleteByKeysDeferred(spark, table, keys))
       (masked, Trace.span("util.scan.apply_dv")(Scan.applyDeletionVectors(spark, table)))
@@ -181,12 +185,17 @@ final class CorpusClient(spark: SparkSession, run: Run, root: Path, gen: Docs) {
     takenDown ++= keys
   }
 
+  /** Shard of each key in the last full read. */
+  private var shardOf = Map.empty[Long, Int]
+
   /** The logical table through the Scan API: every shard, masks applied. */
   def logical(): Map[Long, Long] = {
     val shards = Scan.statsManifest(spark, table).select(col("shard").cast("int"))
       .collect().map(_.getInt(0)).toSeq
-    Scan.readShards(spark, table, shards).select("doc_id", "rev").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rows = Scan.readShards(spark, table, shards)
+      .select(col("doc_id"), col("rev"), col("shard").cast("int")).collect()
+    shardOf = rows.map(r => r.getLong(0) -> r.getInt(2)).toMap
+    rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
   /** Full read equals the expected table: takedowns absent. */

@@ -112,13 +112,13 @@ object Main {
       val gcS = (Jvm.gcMillis - gc0) / 1000.0 / math.max(1, cycles.length)
       val on = cycles.filter(_._2).map(_._1)
       val off = cycles.filterNot(_._2).map(_._1)
-      val overhead = if (on.isEmpty || off.isEmpty) 0.0 else Stats.median(on) - Stats.median(off)
+      val overhead = Stats.median(on) - Stats.median(off)
       val m = Layers.compute(Trace.allSpans, Trace.allJobs, Trace.allPlans,
         Trace.allCounts, w.readings, gcS, storagePeak.peakMb)
       TraceFile.write(work.resolve("trace.json"))
       w.ownLayers.foreach(n => r.check(s"traced:$n", m(n) > 0, "no work recorded for it"))
       Some(m ++ Map("trace.overhead_s" -> overhead / 1000.0,
-        "trace.overhead_ratio" -> (if (off.isEmpty) 0.0 else overhead / Stats.median(off))))
+        "trace.overhead_ratio" -> overhead / Stats.median(off)))
     } else None
     w.finish()
 

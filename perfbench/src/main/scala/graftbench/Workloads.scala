@@ -179,8 +179,8 @@ object CorpusTable {
   /** Documents per batch; the planted shares are in [[Docs]]. */
   val BatchDocs = 500
   val PoolBatches = 2
-  /** Keys per takedown: a handful of scattered keys, so a takedown touches
-    * several shards (`util.scan.apply_dv.bytes_rewritten_per_row_removed`).
+  /** Keys per takedown, each in its own shard: a takedown rewrites four
+    * shards (`util.scan.apply_dv.bytes_rewritten_per_row_removed`).
     */
   val Takedowns = 4
 }
