@@ -136,8 +136,7 @@ object Jvm {
 
   /** CPU nanoseconds of every live Java thread, by thread id. The JIT
     * compiler's and the collector's threads are not among them, so warm-up
-    * and heap pressure move this less than the process's CPU time; time
-    * the host steals from the virtual CPU is not charged to any thread.
+    * and heap pressure move this less than the process's CPU time.
     */
   def threadCpu(): Map[Long, Long] =
     threads.getThreadInfo(threads.getAllThreadIds).iterator

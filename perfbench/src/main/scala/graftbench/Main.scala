@@ -15,10 +15,11 @@ import scala.collection.mutable
   * After the session starts, the workload sets up [[Workloads.SetupReps]]
   * times from scratch (input generation, seeding); `setup_s` is the median
   * of those set-ups. One untimed warm-up cycle follows, then the timed
-  * phase runs the workload's closed loop for the given seconds. With `--trace 1` a second
-  * phase alternates traced and untraced cycles, and the run reports
-  * per-layer metrics and the tracing overhead instead of the end-to-end
-  * metrics. The last line of standard output is the result object.
+  * phase runs the workload's closed loop for the given seconds. With
+  * `--trace 1` a second phase alternates traced and untraced cycles, and
+  * the run reports per-layer metrics and the tracing overhead instead of
+  * the end-to-end metrics. The last line of standard output is the result
+  * object.
   */
 object Main {
 
