@@ -831,11 +831,6 @@ object Dedup {
       prev = cur
       iters += 1
     }
-    // rounds-executed evidence for the optimization record (gated: the
-    // env flag costs nothing in normal runs)
-    if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
-      System.err.println(
-        s"[dupClusters] converged=$converged rounds=$iters members=$nLabels")
     // a silent early exit would split components across two canonicals
     // with no signal — fail loudly instead (raise maxIters for graphs
     // with diameter > 30, which near-dup chains never reach in practice)

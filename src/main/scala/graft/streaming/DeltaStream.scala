@@ -2,12 +2,17 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.analytics.EventOps
+import graft.ext.{Corpus, Dedup, Similarity, TextAnalysis}
 import graft.ingest.Staging
 import graft.ods.OdsTransform
+import graft.util.{Compaction, Par, Scan}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType,
+  StringType, StructType}
 
 /** The reference's delta path (the `Delta Load Scripts` jobs), re-expressed as
   * Structured Streaming: the landing directory becomes a file-source stream
@@ -22,6 +27,14 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery}
   * Beyond reference parity, [[eventRates]] and [[networkStats]] give the
   * streaming-native analytics surface: watermarked windowed aggregation and
   * arbitrary keyed state (`mapGroupsWithState`).
+  *
+  * Every `start*` mount is its seed step plus a per-batch function over
+  * one private skeleton ([[mount]]) and one of four state shapes: read-only
+  * seeded state ([[mountReadOnly]]), id-keyed growing tables
+  * ([[mountKeyed]]), `_src`-tagged additive tables ([[mountTagged]]) and
+  * sharded tables (the `Scan` table is the sink — [[landBatch]],
+  * [[maintain]], [[retryLease]]). Each shape carries the replay-safety
+  * argument that holds for every mount built on it.
   */
 object DeltaStream {
 
@@ -73,6 +86,13 @@ object DeltaStream {
       markSeeded(lastSeededDir)
     }
 
+  /** [[seedOnce]] for the common one-table seed: `rows` overwrite `dir`. */
+  private def seedRows(dir: String)(rows: => DataFrame): Unit =
+    seedOnce(dir)(overwrite(rows, dir))
+
+  private def overwrite(df: DataFrame, dir: String): Unit =
+    df.write.mode("overwrite").parquet(dir)
+
   /** Re-create the seed marker after a REFRESH overwrites a seedOnce-gated
     * table: parquet `overwrite` deletes the directory — marker included —
     * so without this a restart after a refresh would silently re-seed the
@@ -84,6 +104,12 @@ object DeltaStream {
     */
   private def markSeeded(dir: String): Unit = {
     new java.io.File(dir, "_GRAFT_SEEDED").createNewFile(); ()
+  }
+
+  /** A per-batch REFRESH of a seeded table: overwrite, then re-mark. */
+  private def reseed(dir: String)(rows: DataFrame): Unit = {
+    overwrite(rows, dir)
+    markSeeded(dir)
   }
 
   /** seedOnce for a table PUBLISHED through [[graft.util.Scan
@@ -101,6 +127,342 @@ object DeltaStream {
       seed: => Unit): Unit = {
     graft.dw.Merge.recover(spark, tableDir)
     if (!new java.io.File(tableDir).exists()) seed
+  }
+
+  /** A declared JSON schema: arrivals are read with it, never inferred
+    * per file, and absent fields come back NULL. */
+  private def schemaOf(cols: (String, DataType)*): StructType =
+    cols.foldLeft(new StructType())((s, c) => s.add(c._1, c._2))
+
+  private def docSchema(idCol: String, textCol: String): StructType =
+    schemaOf(idCol -> LongType, textCol -> StringType)
+
+  private def vecSchema(idCol: String, vecCol: String): StructType =
+    schemaOf(idCol -> LongType, vecCol -> ArrayType(FloatType))
+
+  private def eventSchema(idCol: String, xCol: String,
+      yCol: String): StructType =
+    schemaOf(idCol -> LongType, xCol -> LongType, yCol -> LongType)
+
+  /** The mount skeleton: the stale-`batch-N` guard when the mount writes
+    * per-batch output dirs (`outDir`), the checkpoint, and the
+    * empty-batch skip. With `spread` the batch is first spread over the
+    * cluster ([[graft.util.Par.spread]] — one arriving file is one input
+    * partition) and persisted for the whole per-batch function, then
+    * released. Exactly-once per input file comes from the checkpoint.
+    */
+  private def mount(source: DataFrame, checkpointDir: String,
+      outDir: Option[String], spread: Boolean)(
+      perBatch: (DataFrame, Long) => Unit): StreamingQuery = {
+    outDir.foreach(cleanStaleBatchDirs(source.sparkSession, checkpointDir, _))
+    source.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) {
+          if (!spread) perBatch(batch, batchId)
+          else {
+            val b = Par.spread(batch).persist()
+            try perBatch(b, batchId) finally b.unpersist()
+          }
+        }
+      }
+      .start()
+  }
+
+  /** One non-empty micro-batch as a mount's per-batch function sees it:
+    * the rows `b`, the batch's own session `s` (every state read goes
+    * through it), and the batch's output dir `out`. [[emit]] overwrites
+    * that dir, so a foreachBatch retry after a mid-batch crash rewrites
+    * the same `batch-<id>` files — outputs are retry-idempotent.
+    */
+  private class Batch(val b: DataFrame, id: Long, outDir: String) {
+    val s: SparkSession = b.sparkSession
+    val out: String = s"$outDir/batch-$id"
+    def read(dir: String): DataFrame = s.read.parquet(dir)
+    def emit(df: DataFrame): Unit = df.write.mode("overwrite").parquet(out)
+  }
+
+  /** READ-ONLY SEEDED STATE: the state tables seed once and are only READ
+    * per batch, so the loop needs no append-idempotence machinery at all
+    * — the overwrite-per-batch output ([[Batch.emit]] of `score`) is the
+    * whole replay argument, and because nothing grows, a batch's result
+    * is independent of arrival order by construction.
+    */
+  private def mountReadOnly(source: DataFrame, checkpointDir: String,
+      outDir: String, spread: Boolean)(
+      score: Batch => DataFrame): StreamingQuery =
+    mount(source, checkpointDir, Some(outDir), spread) { (b, id) =>
+      val t = new Batch(b, id, outDir)
+      t.emit(score(t))
+    }
+
+  /** ID-KEYED GROWING TABLES: the batch is scored against tables that
+    * hold the corpus AND every earlier batch, then appends its own rows.
+    * Replay safety under foreachBatch retry closes both crash windows
+    * with one broadcast-sized anti-join each:
+    *
+    *  - reads EXCLUDE the batch's own ids ([[others]]) — a retry after a
+    *    crash between an append and the checkpoint commit would otherwise
+    *    match the batch against itself;
+    *  - appends EXCLUDE keys already present ([[append]]) — no duplicate
+    *    rows from a double-run. Each append gates on ITS OWN table's
+    *    keys, so a crash between two appends converges on retry instead
+    *    of desyncing the tables.
+    *
+    * A re-seed input built as `others(table) ∪ batch` is therefore the
+    * same SET on every retry, even after a crash past the append, so any
+    * state derived from it (refreshed centroids, thresholds, frames)
+    * converges too. Id spaces must be disjoint across the corpus and
+    * every stream file. Batches are always spread and persisted.
+    */
+  private final class Keyed(batch: DataFrame, id: Long, outDir: String,
+      idCol: String) extends Batch(batch, id, outDir) {
+    def others(dir: String, key: String = idCol): DataFrame = {
+      val ids = b.select(col(idCol))
+      read(dir).join(broadcast(
+          if (key == idCol) ids else ids.withColumnRenamed(idCol, key)),
+        Seq(key), "left_anti")
+    }
+    def unseen(dir: String, key: String = idCol, distinct: Boolean = false)(
+        rows: => DataFrame): DataFrame = {
+      val present = read(dir).select(col(key))
+      rows.join(if (distinct) present.distinct() else present, Seq(key),
+        "left_anti")
+    }
+    def append(dir: String, key: String = idCol, distinct: Boolean = false)(
+        rows: => DataFrame): Unit =
+      unseen(dir, key, distinct)(rows).write.mode("append").parquet(dir)
+  }
+
+  private def mountKeyed(source: DataFrame, checkpointDir: String,
+      outDir: String, idCol: String)(
+      perBatch: Keyed => Unit): StreamingQuery =
+    mount(source, checkpointDir, Some(outDir), spread = true)((b, id) =>
+      perBatch(new Keyed(b, id, outDir, idCol)))
+
+  /** `_src`-TAGGED ADDITIVE TABLES: the table stores per-ingest ROWS tagged
+    * with their source (the seed `corpus`, each batch `batch-<id>`), and
+    * the state a batch scores against is the aggregate-on-read over the
+    * table — additive laws make that equal to one table built from all
+    * prior input, so nothing is re-read and appends never rewrite it.
+    * Rows are not id-keyed, so a naive retry would DOUBLE-COUNT the
+    * batch: both windows close on the tag — scoring reads exclude the
+    * batch's own tag ([[others]]), and the append is skipped when the tag
+    * already landed (a bounded existence probe — limit-1, not a data
+    * collect).
+    */
+  private final class Tagged(batch: DataFrame, id: Long, outDir: String,
+      dir: String) extends Batch(batch, id, outDir) {
+    private val tag = s"batch-$id"
+    def others: DataFrame = read(dir).filter(col("_src") =!= tag)
+    def append(rows: DataFrame): Unit =
+      if (read(dir).filter(col("_src") === tag).isEmpty)
+        rows.withColumn("_src", lit(tag)).write.mode("append").parquet(dir)
+  }
+
+  private def seedTagged(dir: String)(rows: => DataFrame): Unit =
+    seedRows(dir)(rows.withColumn("_src", lit("corpus")))
+
+  private def mountTagged(source: DataFrame, checkpointDir: String,
+      outDir: String, stateDir: String, spread: Boolean)(
+      perBatch: Tagged => Unit): StreamingQuery =
+    mount(source, checkpointDir, Some(outDir), spread)((b, id) =>
+      perBatch(new Tagged(b, id, outDir, stateDir)))
+
+  /** SHARDED-TABLE MOUNTS: the [[graft.util.Scan]] table is the sink, so
+    * there are no per-batch output dirs to guard — a checkpoint reset
+    * replays batches INTO the surviving table, and
+    * [[graft.util.Scan.appendSharded]]'s bounded per-touched-shard id probe
+    * drops rows already landed, so a replay converges instead of
+    * duplicating.
+    *
+    * Poison events: a row whose dimension columns are NULL (the JSON
+    * schema nulls absent fields) is UNROUTABLE — the int-keyed manifests
+    * cannot name its shard, and `appendSharded` rejects it. Passing it
+    * through would fail the micro-batch and checkpoint replay would
+    * re-fail it forever — one malformed event wedging the stream. The
+    * shape therefore QUARANTINES NULL-shard rows to a side table
+    * (`<tableDir>_quarantine/<gen>`, with the batch id; the seed's go to
+    * `seed` with id -1) BEFORE the append — the explicit routing the
+    * layout contract demands. Idempotent under replay: the quarantine is
+    * keyed by batch id, so a replayed batch overwrites its own rejects
+    * rather than duplicating them. Returns the routable rows.
+    */
+  private def routable(laid: DataFrame, tableDir: String, batchId: Long,
+      gen: String): DataFrame = {
+    val bad = laid.filter(col("shard").isNull)
+    if (!bad.isEmpty)
+      bad.withColumn("_batch_id", lit(batchId))
+        .write.mode("overwrite").parquet(s"${tableDir}_quarantine/$gen")
+    laid.filter(col("shard").isNotNull)
+  }
+
+  /** The shard count from the TABLE's meta, not the mount's
+    * construction-time parameter: a between-batches `reshardSharded`
+    * changes the table's shard space, and an appender still sharding at
+    * the old count would corrupt it. */
+  private def shardsNow(s: SparkSession, tableDir: String,
+      nShards: Int): Int =
+    Scan.readMeta(s, tableDir).flatMap(_.nShards).getOrElse(nShards)
+
+  /** Land one laid-out batch: persisted while its NULL shards quarantine
+    * and the rest append, and while `andThen` (a mount's trigger) runs. */
+  private def landBatch(s: SparkSession, laid: DataFrame, tableDir: String,
+      idCol: String, batchId: Long)(andThen: DataFrame => Unit): Unit = {
+    val l = laid.persist()
+    try {
+      Scan.appendSharded(s, routable(l, tableDir, batchId, s"batch-$batchId"),
+        tableDir, idCol)
+      andThen(l)
+    } finally l.unpersist()
+  }
+
+  /** The scheduled maintenance of a streaming-maintained table, inside the
+    * SAME foreachBatch because the table has exactly one writer (the
+    * mount); a separate daemon would race the appender's directory swap,
+    * and the writer lease would reject it.
+    *
+    * `maxFilesPerShard > 0` arms the scheduled-OPTIMIZE leg: one FS
+    * metadata sweep counts data files per shard directory (no data read),
+    * and when any shard exceeds the threshold the batch runs
+    * [[graft.util.Compaction.compactShardsTargeted]] — rewriting ONLY the
+    * breaching shards (work ∝ hot shards, never the table — what a
+    * per-batch trigger can afford at 100 TB; the full
+    * [[graft.util.Compaction.compactSharded]] republish stays the explicit
+    * OPTIMIZE verb). Storage hygiene rides the same schedule: with the
+    * lease held by this mount's thread, swap debris from any prior crash
+    * is provably dead, one listing when clean.
+    *
+    * `maxStaleFraction > 0` arms the LOOSENESS-triggered leg: when any
+    * shard's `_stale_rows / n_rows` (the fraction of rows that entered
+    * through additive manifest folds since the stats were last exact —
+    * [[graft.util.Scan.manifestStaleness]], a driver-side read of the
+    * shards-sized manifest) exceeds the threshold after the (possibly
+    * skipped) targeted pass, the STALE shards' manifest rows are
+    * recomputed exactly ([[graft.util.Scan.refreshShards]] — a read of
+    * those shards, no rewrite): manifests are refreshed because they are
+    * LOOSE, not merely because files accumulated (the x123 drift
+    * pattern, third use).
+    */
+  private def maintain(s: SparkSession, tableDir: String,
+      maxFilesPerShard: Int, maxStaleFraction: Double): Unit = {
+    val fileCountBreach = maxFilesPerShard > 0 && {
+      val p = new Path(tableDir)
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      fs.listStatus(p).exists(d =>
+        d.isDirectory && d.getPath.getName.startsWith("shard=") &&
+          fs.listStatus(d.getPath).count(f => f.isFile &&
+            !f.getPath.getName.startsWith("_") &&
+            !f.getPath.getName.startsWith(".")) > maxFilesPerShard)
+    }
+    if (fileCountBreach) {
+      Compaction.compactShardsTargeted(s, tableDir, maxFilesPerShard,
+        sortCol = Some("zvalue"))
+      Scan.vacuumTable(s, tableDir)
+    }
+    if (maxStaleFraction > 0 &&
+        Scan.manifestStaleness(s, tableDir) > maxStaleFraction) {
+      val man = Scan.statsManifest(s, tableDir)
+      if (man.columns.contains("_stale_rows")) {
+        val stale = man.filter(col("_stale_rows") > 0L)
+          .select(col("shard").cast("int"))
+          .collect().map(_.getInt(0)).toSeq
+        Scan.refreshShards(s, tableDir, stale)
+      }
+    }
+  }
+
+  /** Run a table verb, retrying with backoff while another writer holds
+    * the lease: a mount sharing its table with another writer retries
+    * instead of failing the stream. Exhausting `maxAttempts` fails the
+    * batch, and the checkpoint retries it — converging, never
+    * corrupting. */
+  private def retryLease(maxAttempts: Int)(verb: => Any): Unit = {
+    def attempt(n: Int): Unit =
+      try { verb; () }
+      catch {
+        case _: Scan.ConcurrentWriterException if n < maxAttempts =>
+          Thread.sleep(200); attempt(n + 1)
+      }
+    attempt(0)
+  }
+
+  /** The fixed 1-row (`_xmin/_xmax/_ymin/_ymax`) frame of two numeric
+    * z-order dimensions. */
+  private def frameOf(df: DataFrame, xCol: String, yCol: String): DataFrame =
+    df.agg(
+      min(col(xCol).cast("long")).as("_xmin"),
+      max(col(xCol).cast("long")).as("_xmax"),
+      min(col(yCol).cast("long")).as("_ymin"),
+      max(col(yCol).cast("long")).as("_ymax"))
+
+  /** Whether either dimension falls outside the collected frame `f` (was
+    * clamped to an edge cell); a NULL dimension is unroutable, not
+    * out-of-frame. */
+  private def outOfFrame(f: Row, xCol: String, yCol: String): Column = {
+    def out(v: String, lo: String, hi: String) =
+      col(v) < f.getAs[Long](lo) || col(v) > f.getAs[Long](hi)
+    coalesce(out(xCol, "_xmin", "_xmax") || out(yCol, "_ymin", "_ymax"),
+      lit(false))
+  }
+
+  /** The string-dimension z-order layout of `df` against a frozen frame
+    * (`bounds` + the string column's `dict`) at `n` shards. */
+  private def layString(df: DataFrame, bounds: DataFrame, idCol: String,
+      strCol: String, numCol: String, bits: Int, n: Int,
+      dict: DataFrame): DataFrame = {
+    val dims = Seq(strCol, numCol)
+    Corpus.zorderLayoutAgainstN(df, bounds, idCol, dims, bits, n,
+        keepCols = dims, dicts = Map(strCol -> dict))
+      .drop(dims.map(c => s"cell_$c"): _*)
+  }
+
+  private def publishString(s: SparkSession, rows: DataFrame,
+      tableDir: String, strCol: String, numCol: String, bits: Int, n: Int,
+      dict: DataFrame): Unit =
+    Scan.writeSharded(s, rows, tableDir, statCols = Seq(strCol, numCol),
+      sortCol = Some("zvalue"), bloomKeyCol = Some(strCol), bloomM = 1024,
+      zTotalBits = Some(2 * bits), nShards = Some(n),
+      dicts = Map(strCol -> dict))
+
+  /** The string-dimension table's seed, shared by both string mounts:
+    * dict-rank + numeric bounds, then the table published with its dict.
+    * A crash between a bounds-swap's renames (the re-base republish)
+    * leaves boundsDir absent but fully recoverable — resolved BEFORE the
+    * seed check, or the restart would re-seed pre-rebase bounds over a
+    * rebased table and misroute every later batch. */
+  private def seedStringTable(spark: SparkSession, corpusDocs: DataFrame,
+      tableDir: String, boundsDir: String, idCol: String, strCol: String,
+      numCol: String, bits: Int, nShards: Int): Unit = {
+    graft.dw.Merge.recover(spark, boundsDir)
+    seedRows(boundsDir) {
+      val dict = Corpus.stringDimDict(corpusDocs, strCol)
+      dict.agg(
+          min(col("rank")).as(s"_min_$strCol"),
+          max(col("rank")).as(s"_max_$strCol"))
+        .crossJoin(corpusDocs.agg(
+          min(col(numCol).cast("long")).as(s"_min_$numCol"),
+          max(col(numCol).cast("long")).as(s"_max_$numCol")))
+    }
+    seedTableOnce(spark, tableDir) {
+      val dict = Corpus.stringDimDict(corpusDocs, strCol)
+      publishString(spark, routable(layString(corpusDocs,
+          spark.read.parquet(boundsDir), idCol, strCol, numCol, bits,
+          nShards, dict), tableDir, -1L, "seed"),
+        tableDir, strCol, numCol, bits, nShards, dict)
+    }
+  }
+
+  /** One string-table batch laid out against the frame recovered from
+    * the table's own sidecars (dict via [[graft.util.Scan.readDicts]],
+    * shard count via [[shardsNow]]); returns the layout and that count. */
+  private def layStringBatch(s: SparkSession, batch: DataFrame,
+      tableDir: String, boundsDir: String, idCol: String, strCol: String,
+      numCol: String, bits: Int, nShards: Int): (DataFrame, Int) = {
+    val dict = Scan.readDicts(s, tableDir)(strCol)
+    val n = shardsNow(s, tableDir, nShards)
+    (layString(Par.spread(batch), s.read.parquet(boundsDir), idCol, strCol,
+      numCol, bits, n, dict), n)
   }
 
   /** Landing-dir CSV stream → parsed, null-normalized staging stream.
@@ -173,7 +535,9 @@ object DeltaStream {
     * committed — is additionally idempotent because `warehouseStages`
     * orders its commits (dims → fact swap → T_ODS last) so the slice that
     * drives the rerun is recomputed unchanged until everything it feeds is
-    * durable; see its replay-safety note.
+    * durable; see its replay-safety note. One landing file arrives as one
+    * input partition, so the batch is spread (as in `Staging.run`) for the
+    * parse/DQ/stg write to parallelize.
     *
     * Requires an initialized warehouse (a full load has run) — the
     * reference's own cadence (`load_controller_DAG.py:186-188`: the first
@@ -182,60 +546,40 @@ object DeltaStream {
   def startDeltaLoad(spark: SparkSession, landingDir: String,
       states: DataFrame, wh: graft.pipeline.Warehouse, checkpointDir: String,
       jobId: String, insertionTs: Option[Timestamp] = None): StreamingQuery =
-    stagingStream(spark, landingDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val ts = insertionTs.getOrElse(new Timestamp(System.currentTimeMillis()))
-          graft.dw.Merge.recover(s, wh.fact)
-          // one landing file arrives as one input partition — spread it so
-          // the parse/DQ/stg write parallelize (same as Staging.run)
-          val cached = graft.util.Par.spread(batch).persist()
-          try {
-            val split = Staging.dqSplit(cached)
-            split.rejected.unionByName(split.errors).select(Staging.RawLineCol)
-              .coalesce(1).write.mode("overwrite")
-              .text(s"${wh.rejected}/batch-$batchId")
-            Staging.finalizeStg(split.accepted, jobId,
-                s"stream-batch-$batchId", ts.toString)
-              .write.mode("overwrite").parquet(wh.stg)
-            graft.pipeline.DeltaLoad.warehouseStages(s, states, wh, jobId, ts)
-          } finally cached.unpersist()
-        }
-      }
-      .start()
+    mount(stagingStream(spark, landingDir), checkpointDir, None,
+        spread = true) { (cached, batchId) =>
+      val s = cached.sparkSession
+      val ts = insertionTs.getOrElse(new Timestamp(System.currentTimeMillis()))
+      graft.dw.Merge.recover(s, wh.fact)
+      val split = Staging.dqSplit(cached)
+      split.rejected.unionByName(split.errors).select(Staging.RawLineCol)
+        .coalesce(1).write.mode("overwrite")
+        .text(s"${wh.rejected}/batch-$batchId")
+      Staging.finalizeStg(split.accepted, jobId,
+          s"stream-batch-$batchId", ts.toString)
+        .write.mode("overwrite").parquet(wh.stg)
+      graft.pipeline.DeltaLoad.warehouseStages(s, states, wh, jobId, ts)
+    }
 
   /** Streaming incremental near-dup flagging: each arriving JSON-lines
     * document file is one micro-batch scored against the (static) corpus by
     * [[graft.ext.Dedup.minhashNearDupsAgainst]] — x36's per-ingest shape
     * mounted on Structured Streaming, so the "daily delta" cadence becomes
     * continuous. Flagged (doc_a = new id, doc_b = corpus id, inter, uni)
-    * pairs land in `outDir/batch-<id>` — overwrite-per-batch, so a
-    * foreachBatch retry after a mid-batch crash is idempotent and the
-    * checkpoint gives exactly-once per input file. Per-batch cost is the
-    * batch's bucket collisions against the corpus, never corpus².
+    * pairs land in `outDir/batch-<id>` (read-only shape). Per-batch cost
+    * is the batch's bucket collisions against the corpus, never corpus².
     */
   def startNearDupFlagging(spark: SparkSession, docsDir: String,
       corpus: DataFrame, outDir: String, checkpointDir: String,
       textCol: String = "text", idCol: String = "doc_id",
       k: Int = 8, bands: Int = 4, shingleLen: Int = 5,
-      thNum: Int = 4, thDen: Int = 5): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.ext.Dedup.minhashNearDupsAgainst(
-              graft.util.Par.spread(batch), corpus,
-              textCol, idCol, k, bands, shingleLen, thNum, thDen)
-            .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-      }
-      .start()
-  }
+      thNum: Int = 4, thDen: Int = 5): StreamingQuery =
+    mountReadOnly(spark.readStream
+        .schema(docSchema(idCol, textCol)).json(docsDir),
+        checkpointDir, outDir, spread = false) { t =>
+      Dedup.minhashNearDupsAgainst(Par.spread(t.b), corpus,
+        textCol, idCol, k, bands, shingleLen, thNum, thDen)
+    }
 
   /** [[startNearDupFlagging]] with the corpus side kept as a MAINTAINED
     * signature table that GROWS with the stream — the production
@@ -254,53 +598,27 @@ object DeltaStream {
     * Verify-side texts come from `corpusDocs` ∪ the arrived stream files
     * (candidate partners are always in the signature table, which the
     * current batch is excluded from, so the exact-Jaccard join finds each
-    * partner's text in that union). Replay safety under foreachBatch
-    * retry: scoring EXCLUDES the current batch's ids from the table read
-    * (a retry after a crash between the signature append and the
-    * checkpoint commit would otherwise match the batch against itself),
-    * and the append EXCLUDES ids already present (no duplicate signature
-    * rows from a double-run) — both windows close with one broadcast-sized
-    * anti-join, keeping the whole loop idempotent per input file. Id
-    * spaces must be disjoint across the corpus and every stream file.
+    * partner's text in that union). Replay safety is the id-keyed shape's.
     */
   def startNearDupFlaggingMaintained(spark: SparkSession, docsDir: String,
       corpusDocs: DataFrame, sigsDir: String, outDir: String,
       checkpointDir: String, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 8, bands: Int = 4,
       shingleLen: Int = 5, thNum: Int = 4, thDen: Int = 5): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
-    seedOnce(sigsDir) {
-      graft.ext.Dedup.minhashSignatures(
-          graft.util.Par.spread(corpusDocs), textCol, idCol, k, shingleLen)
-        .write.mode("overwrite").parquet(sigsDir)
+    val schema = docSchema(idCol, textCol)
+    seedRows(sigsDir)(Dedup.minhashSignatures(
+      Par.spread(corpusDocs), textCol, idCol, k, shingleLen))
+    mountKeyed(spark.readStream.schema(schema).json(docsDir),
+        checkpointDir, outDir, idCol) { t =>
+      val sigs = t.others(sigsDir)
+      val texts = corpusDocs.select(col(idCol), col(textCol)).unionByName(
+        t.s.read.schema(schema).json(docsDir)
+          .select(col(idCol), col(textCol)))
+      t.emit(Dedup.minhashNearDupsAgainstSigs(t.b, sigs, texts,
+        textCol, idCol, k, bands, shingleLen, thNum, thDen))
+      t.append(sigsDir)(
+        Dedup.minhashSignatures(t.b, textCol, idCol, k, shingleLen))
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = graft.util.Par.spread(batch).persist()
-          try {
-            val batchIds = b.select(col(idCol))
-            val sigs = s.read.parquet(sigsDir)
-              .join(broadcast(batchIds), Seq(idCol), "left_anti")
-            val texts = corpusDocs.select(col(idCol), col(textCol)).unionByName(
-              s.read.schema(schema).json(docsDir)
-                .select(col(idCol), col(textCol)))
-            graft.ext.Dedup.minhashNearDupsAgainstSigs(b, sigs, texts,
-                textCol, idCol, k, bands, shingleLen, thNum, thDen)
-              .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-            val present = s.read.parquet(sigsDir).select(col(idCol))
-            graft.ext.Dedup.minhashSignatures(b, textCol, idCol, k, shingleLen)
-              .join(present, Seq(idCol), "left_anti")
-              .write.mode("append").parquet(sigsDir)
-          } finally b.unpersist()
-        }
-      }
-      .start()
   }
 
   /** Embedding-side sibling of [[startNearDupFlaggingMaintained]] — the
@@ -312,50 +630,28 @@ object DeltaStream {
     * against the corpus and every earlier batch; the corpus is never
     * re-hashed — the hyperplanes are deterministic, so every batch's rows
     * compose), then appends its own bucket rows. Verify-side vectors come
-    * from `corpusEmb` ∪ the arrived stream files. Retry idempotence
-    * mirrors the text path: the table read excludes the current batch's
-    * ids, the append excludes ids already present.
+    * from `corpusEmb` ∪ the arrived stream files. Replay safety is the
+    * id-keyed shape's, as on the text path.
     */
   def startEmbedNearDupFlaggingMaintained(spark: SparkSession,
       vecsDir: String, corpusEmb: DataFrame, bucketsDir: String,
       outDir: String, checkpointDir: String, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
       nPlanes: Int = 8, bands: Int = 2, dims: Int = 64): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(vecCol, org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType))
-    seedOnce(bucketsDir) {
-      graft.ext.Similarity.bandedSignTable(
-          graft.util.Par.spread(corpusEmb), idCol, vecCol, nPlanes, bands, dims)
-        .write.mode("overwrite").parquet(bucketsDir)
+    val schema = vecSchema(idCol, vecCol)
+    seedRows(bucketsDir)(Similarity.bandedSignTable(
+      Par.spread(corpusEmb), idCol, vecCol, nPlanes, bands, dims))
+    mountKeyed(spark.readStream.schema(schema).json(vecsDir),
+        checkpointDir, outDir, idCol) { t =>
+      val buckets = t.others(bucketsDir)
+      val vecs = corpusEmb.select(col(idCol), col(vecCol)).unionByName(
+        t.s.read.schema(schema).json(vecsDir)
+          .select(col(idCol), col(vecCol)))
+      t.emit(Similarity.cosineNearDupsBlockedAgainstBuckets(t.b, buckets,
+        vecs, idCol, vecCol, threshold, nPlanes, bands, dims))
+      t.append(bucketsDir, distinct = true)(Similarity.bandedSignTable(
+        t.b, idCol, vecCol, nPlanes, bands, dims))
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(vecsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = graft.util.Par.spread(batch).persist()
-          try {
-            val batchIds = b.select(col(idCol))
-            val buckets = s.read.parquet(bucketsDir)
-              .join(broadcast(batchIds), Seq(idCol), "left_anti")
-            val vecs = corpusEmb.select(col(idCol), col(vecCol)).unionByName(
-              s.read.schema(schema).json(vecsDir)
-                .select(col(idCol), col(vecCol)))
-            graft.ext.Similarity.cosineNearDupsBlockedAgainstBuckets(b,
-                buckets, vecs, idCol, vecCol, threshold, nPlanes, bands, dims)
-              .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-            val present = s.read.parquet(bucketsDir).select(col(idCol)).distinct()
-            graft.ext.Similarity.bandedSignTable(b, idCol, vecCol,
-                nPlanes, bands, dims)
-              .join(present, Seq(idCol), "left_anti")
-              .write.mode("append").parquet(bucketsDir)
-          } finally b.unpersist()
-        }
-      }
-      .start()
   }
 
   /** Streaming containment screen — the x126 contract mounted at ingest
@@ -363,13 +659,12 @@ object DeltaStream {
     * quote/excerpt relations ([[graft.ext.Dedup.ngramContainmentAgainst]],
     * both probe directions) against the corpus AND every earlier batch,
     * then its own arrays/grams/prefixes append into the index so later
-    * arrivals screen against it. The df universe stays FROZEN at the
+    * arrivals screen against it (arrays once, then their exploded
+    * gram/prefix projections). The df universe stays FROZEN at the
     * corpus seed (`dfsDir` is seeded once and never appended — the
     * documented incremental approximation: batch grams novel to the
     * corpus keep df 1 forever, so per-batch work never re-aggregates
-    * history). Retry idempotence is the sibling mounts' contract: index
-    * reads exclude the current batch's ids, appends exclude ids already
-    * present, outputs overwrite-per-batch.
+    * history). Replay safety is the id-keyed shape's, keyed on `_id`.
     */
   def startContainmentScreen(spark: SparkSession, docsDir: String,
       corpusDocs: DataFrame, arrsDir: String, gramIdxDir: String,
@@ -377,61 +672,35 @@ object DeltaStream {
       checkpointDir: String, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 3, thNum: Int = 4,
       thDen: Int = 5, maxDf: Int = 1000): StreamingQuery = {
-    import graft.ext.Dedup
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
     seedOnce(pfxIdxDir) {
       val idx = Dedup.containmentIndex(corpusDocs, textCol, idCol, n,
         thNum, thDen, maxDf)
-      idx.dfs.write.mode("overwrite").parquet(dfsDir)
-      idx.arrs.write.mode("overwrite").parquet(arrsDir)
-      idx.gramIdx.write.mode("overwrite").parquet(gramIdxDir)
-      idx.pfxIdx.write.mode("overwrite").parquet(pfxIdxDir)
+      overwrite(idx.dfs, dfsDir)
+      overwrite(idx.arrs, arrsDir)
+      overwrite(idx.gramIdx, gramIdxDir)
+      overwrite(idx.pfxIdx, pfxIdxDir)
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = graft.util.Par.spread(batch).persist()
-          try {
-            val batchIds = b.select(col(idCol))
-            def minus(dir: String) = s.read.parquet(dir)
-              .join(broadcast(batchIds.withColumnRenamed(idCol, "_id")),
-                Seq("_id"), "left_anti")
-            val dfs = s.read.parquet(dfsDir)
-            val idx = Dedup.ContainmentIndex(minus(arrsDir),
-              minus(gramIdxDir), minus(pfxIdxDir), dfs)
-            Dedup.ngramContainmentAgainst(b, idx, textCol, idCol, n,
-                thNum, thDen, maxDf)
-              .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-            // the screened batch becomes index for every later batch:
-            // arrays once, then their exploded gram/prefix projections.
-            // Each append anti-joins its OWN target's present ids, so a
-            // crash between the three appends converges on retry instead
-            // of desyncing the tables.
-            val bArr = Dedup.containmentBatchArrays(b, dfs, textCol,
-              idCol, n, maxDf).persist()
-            try {
-              def notIn(dir: String)(df: org.apache.spark.sql.DataFrame) =
-                df.join(s.read.parquet(dir).select(col("_id")).distinct(),
-                  Seq("_id"), "left_anti")
-              notIn(arrsDir)(bArr).write.mode("append").parquet(arrsDir)
-              notIn(gramIdxDir)(
-                  bArr.select(col("_id"), explode(col("_ga")).as("_g")))
-                .write.mode("append").parquet(gramIdxDir)
-              val pfxLen = (col("_n") - floor((col("_n") * thNum
-                + (thDen - 1)) / thDen).cast("int") + 1)
-              notIn(pfxIdxDir)(bArr.select(col("_id"),
-                  explode(slice(col("_ga"), lit(1), pfxLen)).as("_g")))
-                .write.mode("append").parquet(pfxIdxDir)
-            } finally bArr.unpersist()
-          } finally b.unpersist()
-        }
-      }
-      .start()
+    mountKeyed(spark.readStream.schema(docSchema(idCol, textCol)).json(docsDir),
+        checkpointDir, outDir, idCol) { t =>
+      val dfs = t.read(dfsDir)
+      val idx = Dedup.ContainmentIndex(t.others(arrsDir, "_id"),
+        t.others(gramIdxDir, "_id"), t.others(pfxIdxDir, "_id"), dfs)
+      t.emit(Dedup.ngramContainmentAgainst(t.b, idx, textCol, idCol, n,
+        thNum, thDen, maxDf))
+      val bArr = Dedup.containmentBatchArrays(t.b, dfs, textCol,
+        idCol, n, maxDf).persist()
+      try {
+        def append(dir: String)(rows: => DataFrame): Unit =
+          t.append(dir, "_id", distinct = true)(rows)
+        append(arrsDir)(bArr)
+        append(gramIdxDir)(
+          bArr.select(col("_id"), explode(col("_ga")).as("_g")))
+        val pfxLen = (col("_n") - floor((col("_n") * thNum
+          + (thDen - 1)) / thDen).cast("int") + 1)
+        append(pfxIdxDir)(bArr.select(col("_id"),
+          explode(slice(col("_ga"), lit(1), pfxLen)).as("_g")))
+      } finally bArr.unpersist()
+    }
   }
 
   /** Streaming semantic cell routing against a MAINTAINED centroid table
@@ -450,14 +719,13 @@ object DeltaStream {
     * `vecTblDir` (the appended vector snapshot the re-seed draws from).
     * Batch outputs carry (`idCol`, `cell`, `refreshed`).
     *
-    * Retry idempotence: snapshot reads exclude the current batch's ids
-    * and the vector append excludes ids already present, so the re-seed
-    * input — prior snapshot ∪ batch — is the same SET on a retry even
-    * after a crash past the append. A retry after the centroid overwrite
-    * re-measures drift against the refreshed reference; whether it then
-    * decides keep or refresh-again, the resulting centroids are the same
-    * pure function of the same snapshot, so the routing output and all
-    * three tables converge to the identical state.
+    * Retry idempotence: the id-keyed shape makes the re-seed input —
+    * prior snapshot ∪ batch — the same SET on a retry even after a crash
+    * past the append. A retry after the centroid overwrite re-measures
+    * drift against the refreshed reference; whether it then decides keep
+    * or refresh-again, the resulting centroids are the same pure function
+    * of the same snapshot, so the routing output and all three tables
+    * converge to the identical state.
     *
     * Scale shape per batch: one map-only assignment + ≤ nCells-row drift
     * algebra on the no-refresh path; a refresh adds `refineIters`
@@ -470,67 +738,36 @@ object DeltaStream {
       idCol: String = "vec_id", vecCol: String = "embedding",
       nCells: Int = 16, tau: Double = 0.2,
       refineIters: Int = 2): StreamingQuery = {
-    import graft.ext.Similarity
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(vecCol, org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType))
-    seedOnce(centsDir) {
-      Similarity.centroidTable(corpusEmb, idCol, vecCol, nCells)
-        .write.mode("overwrite").parquet(centsDir)
-    }
-    seedOnce(vecTblDir) {
-      corpusEmb.select(col(idCol), col(vecCol))
-        .write.mode("overwrite").parquet(vecTblDir)
-    }
-    seedOnce(occDir) {
-      Similarity.cellOccupancy(corpusEmb, idCol, vecCol,
-          spark.read.parquet(centsDir))
-        .write.mode("overwrite").parquet(occDir)
-    }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(vecsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = graft.util.Par.spread(batch).persist()
-          try {
-            val batchIds = b.select(col(idCol))
-            val cents = s.read.parquet(centsDir)
-            val refOcc = s.read.parquet(occDir)
-            val snapshot = s.read.parquet(vecTblDir)
-              .join(broadcast(batchIds), Seq(idCol), "left_anti")
-              .unionByName(b.select(col(idCol), col(vecCol)))
-            val (newCents, refreshed) = Similarity.refreshedCentroids(
-              snapshot, idCol, vecCol, nCells, cents, refOcc, b, tau,
-              refineIters)
-            // materialize the (possibly refreshed) centroids before any
-            // maintained table is overwritten: the routing, the centroid
-            // overwrite, and the new reference all read this one copy
-            val nc = newCents.persist()
-            try {
-              Similarity.cellAssignmentsAgainst(b, idCol, vecCol, nc)
-                .withColumn("refreshed", lit(refreshed))
-                .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-              if (refreshed) {
-                nc.write.mode("overwrite").parquet(centsDir)
-                markSeeded(centsDir)
-                // the refreshed snapshot occupancy IS the new reference:
-                // later batches drift against the new normal
-                Similarity.cellOccupancy(snapshot, idCol, vecCol, nc)
-                  .write.mode("overwrite").parquet(occDir)
-                markSeeded(occDir)
-              }
-            } finally nc.unpersist()
-            val present = s.read.parquet(vecTblDir).select(col(idCol))
-            b.select(col(idCol), col(vecCol))
-              .join(present, Seq(idCol), "left_anti")
-              .write.mode("append").parquet(vecTblDir)
-          } finally b.unpersist()
+    seedRows(centsDir)(
+      Similarity.centroidTable(corpusEmb, idCol, vecCol, nCells))
+    seedRows(vecTblDir)(corpusEmb.select(col(idCol), col(vecCol)))
+    seedRows(occDir)(Similarity.cellOccupancy(corpusEmb, idCol, vecCol,
+      spark.read.parquet(centsDir)))
+    mountKeyed(spark.readStream.schema(vecSchema(idCol, vecCol)).json(vecsDir),
+        checkpointDir, outDir, idCol) { t =>
+      val cents = t.read(centsDir)
+      val refOcc = t.read(occDir)
+      val snapshot = t.others(vecTblDir)
+        .unionByName(t.b.select(col(idCol), col(vecCol)))
+      val (newCents, refreshed) = Similarity.refreshedCentroids(
+        snapshot, idCol, vecCol, nCells, cents, refOcc, t.b, tau,
+        refineIters)
+      // materialize the (possibly refreshed) centroids before any
+      // maintained table is overwritten: the routing, the centroid
+      // overwrite, and the new reference all read this one copy
+      val nc = newCents.persist()
+      try {
+        t.emit(Similarity.cellAssignmentsAgainst(t.b, idCol, vecCol, nc)
+          .withColumn("refreshed", lit(refreshed)))
+        if (refreshed) {
+          reseed(centsDir)(nc)
+          // the refreshed snapshot occupancy IS the new reference:
+          // later batches drift against the new normal
+          reseed(occDir)(Similarity.cellOccupancy(snapshot, idCol, vecCol, nc))
         }
-      }
-      .start()
+      } finally nc.unpersist()
+      t.append(vecTblDir)(t.b.select(col(idCol), col(vecCol)))
+    }
   }
 
   /** Streaming CCNet bucket routing against MAINTAINED state WITH the
@@ -555,12 +792,10 @@ object DeltaStream {
     * re-seed draws from). Batch outputs carry (`idCol`, `langCol`,
     * `score`, `bucket`, `refreshed`).
     *
-    * Retry idempotence (the x123 standard): snapshot reads exclude the
-    * current batch's ids and the document append excludes ids already
-    * present, so the re-seed input — prior snapshot ∪ batch — is the
-    * same SET on a retry even after a crash past the append. A retry
-    * after the threshold overwrite re-measures drift against the
-    * refreshed reference; whether it then decides keep or
+    * Retry idempotence (the x123 standard): the id-keyed shape makes the
+    * re-seed input the same SET on a retry even after a crash past the
+    * append. A retry after the threshold overwrite re-measures drift
+    * against the refreshed reference; whether it then decides keep or
     * refresh-again, the resulting boundaries are the same pure function
     * of the same snapshot (ccnetThresholdsFromCounts ranks on a
     * total-order `(−score, id)` key), so the routing output and all
@@ -580,116 +815,56 @@ object DeltaStream {
       idCol: String = "doc_id", langCol: String = "lang",
       trainPred: Column = lit(true), nBuckets: Int = 3,
       tau: Double = 0.2, binWidth: Double = 1000.0): StreamingQuery = {
-    import graft.ext.Corpus
     require(binWidth > 0.0, "need binWidth > 0")
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(langCol, org.apache.spark.sql.types.StringType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
+    val docCols = Seq(col(idCol), col(langCol), col(textCol))
     def scoreHist(scored: DataFrame, out: String): DataFrame =
       scored.filter(col("n_pairs") > 0)
         .groupBy(floor(col("lm_score") / binWidth).cast("long").as("bin"))
         .agg(count(lit(1)).as(out))
-    seedOnce(countsDir) {
-      Corpus.lmCountTable(
-          graft.util.Par.spread(corpusDocs.filter(trainPred)), textCol)
-        .write.mode("overwrite").parquet(countsDir)
+    seedRows(countsDir)(Corpus.lmCountTable(
+      Par.spread(corpusDocs.filter(trainPred)), textCol))
+    seedRows(docTblDir)(corpusDocs.select(docCols: _*))
+    seedRows(thDir)(Corpus.ccnetThresholdsFromCounts(corpusDocs,
+      spark.read.parquet(countsDir), textCol, idCol, langCol, nBuckets))
+    seedRows(refDir)(scoreHist(Corpus.lmScoreBackoffFromCounts(
+      spark.read.parquet(countsDir), corpusDocs, textCol, idCol), "c_ref"))
+    mountKeyed(spark.readStream.schema(schemaOf(idCol -> LongType,
+        langCol -> StringType, textCol -> StringType)).json(docsDir),
+        checkpointDir, outDir, idCol) { t =>
+      val counts = t.read(countsDir)
+      val curHist = scoreHist(
+        Corpus.lmScoreBackoffFromCounts(counts, t.b, textCol, idCol),
+        "c_cur")
+      // exact-integer TV of batch scores vs the reference histogram:
+      // ≤ bins rows, ONE bounded 1-row collect (null when the batch
+      // has no scorable rows → no drift signal → keep)
+      val tvRow = Corpus.driftFromCounts(t.read(refDir), curHist, "bin")
+        .agg(sum(col("drift_share")).as("tv")).head()
+      if (!tvRow.isNullAt(0) && tvRow.getDouble(0) > tau) {
+        val snapshot = t.others(docTblDir)
+          .unionByName(t.b.select(docCols: _*)).persist()
+        try {
+          // already materialized-eager (byValue's compact-finish
+          // contract), so routing, the overwrite and the new
+          // reference all read one computed copy
+          val newThr = Corpus.ccnetThresholdsFromCounts(
+            snapshot, counts, textCol, idCol, langCol, nBuckets)
+          t.emit(Corpus.ccnetRoute(t.b, counts, newThr, textCol, idCol,
+            langCol, nBuckets).withColumn("refreshed", lit(true)))
+          reseed(thDir)(newThr)
+          // the refreshed snapshot's histogram IS the new reference:
+          // later batches drift against the new normal
+          reseed(refDir)(scoreHist(Corpus.lmScoreBackoffFromCounts(
+            counts, snapshot, textCol, idCol), "c_ref"))
+          newThr.unpersist()
+        } finally snapshot.unpersist()
+      } else
+        t.emit(Corpus.ccnetRoute(t.b, counts, t.read(thDir), textCol,
+          idCol, langCol, nBuckets).withColumn("refreshed", lit(false)))
+      t.append(docTblDir)(t.b.select(docCols: _*))
     }
-    seedOnce(docTblDir) {
-      corpusDocs.select(col(idCol), col(langCol), col(textCol))
-        .write.mode("overwrite").parquet(docTblDir)
-    }
-    seedOnce(thDir) {
-      Corpus.ccnetThresholdsFromCounts(corpusDocs,
-          spark.read.parquet(countsDir), textCol, idCol, langCol, nBuckets)
-        .write.mode("overwrite").parquet(thDir)
-    }
-    seedOnce(refDir) {
-      scoreHist(Corpus.lmScoreBackoffFromCounts(
-          spark.read.parquet(countsDir), corpusDocs, textCol, idCol), "c_ref")
-        .write.mode("overwrite").parquet(refDir)
-    }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = graft.util.Par.spread(batch).persist()
-          try {
-            val counts = s.read.parquet(countsDir)
-            val batchIds = b.select(col(idCol))
-            val curHist = scoreHist(
-              Corpus.lmScoreBackoffFromCounts(counts, b, textCol, idCol),
-              "c_cur")
-            // exact-integer TV of batch scores vs the reference histogram:
-            // ≤ bins rows, ONE bounded 1-row collect (null when the batch
-            // has no scorable rows → no drift signal → keep)
-            val tvRow = Corpus.driftFromCounts(
-                s.read.parquet(refDir), curHist, "bin")
-              .agg(sum(col("drift_share")).as("tv")).head()
-            val refresh = !tvRow.isNullAt(0) && tvRow.getDouble(0) > tau
-            if (refresh) {
-              val snapshot = s.read.parquet(docTblDir)
-                .join(broadcast(batchIds), Seq(idCol), "left_anti")
-                .unionByName(b.select(col(idCol), col(langCol), col(textCol)))
-                .persist()
-              try {
-                // already materialized-eager (byValue's compact-finish
-                // contract), so routing, the overwrite and the new
-                // reference all read one computed copy
-                val newThr = Corpus.ccnetThresholdsFromCounts(
-                  snapshot, counts, textCol, idCol, langCol, nBuckets)
-                Corpus.ccnetRoute(b, counts, newThr, textCol, idCol,
-                    langCol, nBuckets)
-                  .withColumn("refreshed", lit(true))
-                  .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-                newThr.write.mode("overwrite").parquet(thDir)
-                markSeeded(thDir)
-                // the refreshed snapshot's histogram IS the new reference:
-                // later batches drift against the new normal
-                scoreHist(Corpus.lmScoreBackoffFromCounts(
-                    counts, snapshot, textCol, idCol), "c_ref")
-                  .write.mode("overwrite").parquet(refDir)
-                markSeeded(refDir)
-                newThr.unpersist()
-                ()
-              } finally snapshot.unpersist()
-            } else {
-              Corpus.ccnetRoute(b, counts, s.read.parquet(thDir), textCol,
-                  idCol, langCol, nBuckets)
-                .withColumn("refreshed", lit(false))
-                .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-            }
-            val present = s.read.parquet(docTblDir).select(col(idCol))
-            b.select(col(idCol), col(langCol), col(textCol))
-              .join(present, Seq(idCol), "left_anti")
-              .write.mode("append").parquet(docTblDir)
-          } finally b.unpersist()
-        }
-      }
-      .start()
   }
 
-  /** Streaming segment-level dedup against a MAINTAINED first-owner
-    * segment-hash table — the streaming mount of the x60 batch contract
-    * (and the segment sibling of [[startNearDupFlaggingMaintained]]):
-    *
-    *  1. The table seeds once from the static corpus
-    *     ([[graft.ext.Dedup.segmentHashTable]]).
-    *  2. Each arriving document batch dedups against the CURRENT table
-    *     with [[graft.ext.Dedup.segmentDedupAgainst]] — a segment survives
-    *     only if no earlier corpus/batch document (or earlier position in
-    *     this batch) already owns its value; nothing is ever re-segmented.
-    *  3. The batch appends its OWN surviving-value hashes, becoming corpus
-    *     for every later batch.
-    *
-    * Retry idempotence mirrors the x41 loop: scoring excludes the current
-    * batch's table rows (a retry after the append would otherwise claim
-    * the batch's segments against itself), and the append excludes hashes
-    * already present. Id spaces must be disjoint across the corpus and
-    * every stream file.
-    */
   /** Streaming exact-substring screening against a MAINTAINED winnow pick
     * table — the x152 batch contract mounted at ingest (the exact-run
     * sibling of [[startSegmentDedupMaintained]] and the mount that closes
@@ -709,11 +884,8 @@ object DeltaStream {
     *     every later batch — a run shared only with an earlier BATCH
     *     document is still caught.
     *
-    * Retry idempotence mirrors the segment mount: screening excludes the
-    * current batch's table rows (a retry after the appends would
-    * otherwise anchor the batch against itself) and both appends exclude
-    * ids already present. Id spaces must be disjoint across the corpus
-    * and every stream file.
+    * Replay safety is the id-keyed shape's; the pick append gates the
+    * batch's documents on the pick table's ids BEFORE winnowing them.
     */
   def startExactSubstringScreenMaintained(spark: SparkSession,
       docsDir: String, corpusDocs: DataFrame, picksDir: String,
@@ -724,141 +896,75 @@ object DeltaStream {
     require(k >= 1 && minTokens > k,
       "need 1 <= k < minTokens (window w = minTokens - k + 1 >= 2)")
     val w = minTokens - k + 1
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
-    seedOnce(picksDir) {
-      graft.ext.TextAnalysis.winnowFingerprints(
-          graft.util.Par.spread(corpusDocs), textCol, idCol, k, w)
-        .write.mode("overwrite").parquet(picksDir)
+    seedRows(picksDir)(TextAnalysis.winnowFingerprints(
+      Par.spread(corpusDocs), textCol, idCol, k, w))
+    seedRows(docTblDir)(corpusDocs.select(col(idCol), col(textCol)))
+    mountKeyed(spark.readStream.schema(docSchema(idCol, textCol)).json(docsDir),
+        checkpointDir, outDir, idCol) { t =>
+      t.emit(Dedup.exactSubstringAgainstPicks(t.b, t.others(picksDir),
+        t.others(docTblDir), textCol, idCol, minTokens, k, maxAnchorDf))
+      TextAnalysis.winnowFingerprints(
+          t.unseen(picksDir, distinct = true)(t.b), textCol, idCol, k, w)
+        .write.mode("append").parquet(picksDir)
+      t.append(docTblDir)(t.b.select(col(idCol), col(textCol)))
     }
-    seedOnce(docTblDir) {
-      corpusDocs.select(col(idCol), col(textCol))
-        .write.mode("overwrite").parquet(docTblDir)
-    }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = graft.util.Par.spread(batch).persist()
-          try {
-            val batchIds = b.select(col(idCol))
-            val picks = s.read.parquet(picksDir)
-              .join(broadcast(batchIds), Seq(idCol), "left_anti")
-            val docTbl = s.read.parquet(docTblDir)
-              .join(broadcast(batchIds), Seq(idCol), "left_anti")
-            graft.ext.Dedup.exactSubstringAgainstPicks(b, picks, docTbl,
-                textCol, idCol, minTokens, k, maxAnchorDf)
-              .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-            // each append gates on ITS OWN table's ids — a crash between
-            // the two appends must not duplicate pick rows on the retry
-            val pickPresent = s.read.parquet(picksDir)
-              .select(col(idCol)).distinct()
-            graft.ext.TextAnalysis.winnowFingerprints(
-                b.join(pickPresent, Seq(idCol), "left_anti"), textCol,
-                idCol, k, w)
-              .write.mode("append").parquet(picksDir)
-            val txtPresent = s.read.parquet(docTblDir).select(col(idCol))
-            b.select(col(idCol), col(textCol))
-              .join(txtPresent, Seq(idCol), "left_anti")
-              .write.mode("append").parquet(docTblDir)
-          } finally b.unpersist()
-        }
-      }
-      .start()
   }
 
+  /** Streaming segment-level dedup against a MAINTAINED first-owner
+    * segment-hash table — the streaming mount of the x60 batch contract
+    * (and the segment sibling of [[startNearDupFlaggingMaintained]]):
+    *
+    *  1. The table seeds once from the static corpus
+    *     ([[graft.ext.Dedup.segmentHashTable]]).
+    *  2. Each arriving document batch dedups against the CURRENT table
+    *     with [[graft.ext.Dedup.segmentDedupAgainst]] — a segment survives
+    *     only if no earlier corpus/batch document (or earlier position in
+    *     this batch) already owns its value; nothing is ever re-segmented.
+    *  3. The batch appends its OWN surviving-value hashes, becoming corpus
+    *     for every later batch.
+    *
+    * Replay safety is the id-keyed shape's: scoring excludes the current
+    * batch's table rows (a retry after the append would otherwise claim
+    * the batch's segments against itself), and the append excludes hashes
+    * (`_h`) already present.
+    */
   def startSegmentDedupMaintained(spark: SparkSession, docsDir: String,
       corpusDocs: DataFrame, segsDir: String, outDir: String,
       checkpointDir: String, textCol: String = "text",
       idCol: String = "doc_id", segTokens: Int = 8): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
-    seedOnce(segsDir) {
-      graft.ext.Dedup.segmentHashTable(
-          graft.util.Par.spread(corpusDocs), textCol, idCol, segTokens)
-        .write.mode("overwrite").parquet(segsDir)
+    seedRows(segsDir)(Dedup.segmentHashTable(
+      Par.spread(corpusDocs), textCol, idCol, segTokens))
+    mountKeyed(spark.readStream.schema(docSchema(idCol, textCol)).json(docsDir),
+        checkpointDir, outDir, idCol) { t =>
+      t.emit(Dedup.segmentDedupAgainst(t.b, t.others(segsDir),
+        textCol, idCol, segTokens))
+      t.append(segsDir, "_h")(
+        Dedup.segmentHashTable(t.b, textCol, idCol, segTokens))
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = graft.util.Par.spread(batch).persist()
-          try {
-            val batchIds = b.select(col(idCol))
-            val segTable = s.read.parquet(segsDir)
-              .join(broadcast(batchIds), Seq(idCol), "left_anti")
-            graft.ext.Dedup.segmentDedupAgainst(b, segTable,
-                textCol, idCol, segTokens)
-              .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-            val present = s.read.parquet(segsDir).select(col("_h"))
-            graft.ext.Dedup.segmentHashTable(b, textCol, idCol, segTokens)
-              .join(present, Seq("_h"), "left_anti")
-              .write.mode("append").parquet(segsDir)
-          } finally b.unpersist()
-        }
-      }
-      .start()
   }
 
   /** Streaming token-rarity scoring against a MAINTAINED unigram count
     * table — the streaming mount of the x67 batch contract, and the
     * ADDITIVE sibling of the append-only signature/bucket/gram loops: the
-    * table stores per-ingest count ROWS tagged with their source
-    * (`_src`); the reference counts a batch scores against are the
-    * aggregate-on-read sum ([[graft.ext.Corpus.mergeTermCounts]]'
-    * invariant makes that equal to one table built from all prior text),
-    * so nothing is ever re-tokenized and appends never rewrite the table.
-    *
-    * Replay idempotence: counts are not id-keyed, so a naive retry would
-    * DOUBLE-COUNT the batch's tokens — both windows close on the `_src`
-    * tag: scoring excludes rows tagged with the current batch's source,
-    * and the append is skipped when the tag is already present.
+    * `_src`-tagged shape over [[graft.ext.Corpus.termCountTable]] rows;
+    * the reference counts a batch scores against are the aggregate-on-read
+    * sum ([[graft.ext.Corpus.mergeTermCounts]]' invariant makes that equal
+    * to one table built from all prior text), so nothing is ever
+    * re-tokenized and appends never rewrite the table.
     */
   def startTokenRarityMaintained(spark: SparkSession, docsDir: String,
       corpusDocs: DataFrame, countsDir: String, outDir: String,
       checkpointDir: String, textCol: String = "text",
       idCol: String = "doc_id", rareMax: Long = 2): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
-    seedOnce(countsDir) {
-      graft.ext.Corpus.termCountTable(corpusDocs, textCol)
-        .withColumn("_src", lit("corpus"))
-        .write.mode("overwrite").parquet(countsDir)
+    seedTagged(countsDir)(Corpus.termCountTable(corpusDocs, textCol))
+    mountTagged(spark.readStream
+        .schema(docSchema(idCol, textCol)).json(docsDir),
+        checkpointDir, outDir, countsDir, spread = true) { t =>
+      t.emit(Corpus.tokenRarityAgainstTable(t.b, t.others
+          .groupBy(col("term")).agg(sum(col("c")).as("c")),
+        textCol, idCol, rareMax))
+      t.append(Corpus.termCountTable(t.b, textCol))
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = graft.util.Par.spread(batch).persist()
-          try {
-            val src = s"batch-$batchId"
-            val counts = s.read.parquet(countsDir)
-              .filter(col("_src") =!= src)
-              .groupBy(col("term")).agg(sum(col("c")).as("c"))
-            graft.ext.Corpus.tokenRarityAgainstTable(b, counts,
-                textCol, idCol, rareMax)
-              .write.mode("overwrite").parquet(s"$outDir/$src")
-            // bounded existence probe (limit-1, not a data collect): skip
-            // the append when this batch's tag already landed
-            val already = !s.read.parquet(countsDir)
-              .filter(col("_src") === src).isEmpty
-            if (!already)
-              graft.ext.Corpus.termCountTable(b, textCol)
-                .withColumn("_src", lit(src))
-                .write.mode("append").parquet(countsDir)
-          } finally b.unpersist()
-        }
-      }
-      .start()
   }
 
   /** Streaming LM scoring — x137/x138 mounted at ingest. The bigram
@@ -870,50 +976,20 @@ object DeltaStream {
     * every curated arrival and later batches are scored by a strictly
     * better-trained LM. Per-batch work ∝ batch: the table rows are
     * vocab-bounded dimensions, training text is never re-read.
-    *
-    * Replay-idempotent by the maintained-table contract: scoring reads
-    * exclude the current batch tag, `outDir/batch-N` overwrites, and the
-    * append is guarded by a bounded existence probe.
     */
   def startLmScoringMaintained(spark: SparkSession, docsDir: String,
       refDocs: DataFrame, countsDir: String, outDir: String,
       checkpointDir: String, textCol: String = "text",
       idCol: String = "doc_id"): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
-    seedOnce(countsDir) {
-      graft.ext.Corpus.lmCountTable(refDocs, textCol)
-        .withColumn("_src", lit("corpus"))
-        .write.mode("overwrite").parquet(countsDir)
+    seedTagged(countsDir)(Corpus.lmCountTable(refDocs, textCol))
+    mountTagged(spark.readStream
+        .schema(docSchema(idCol, textCol)).json(docsDir),
+        checkpointDir, outDir, countsDir, spread = true) { t =>
+      t.emit(Corpus.lmScoreBackoffFromCounts(t.others
+          .groupBy(col("_u"), col("_v")).agg(sum(col("_c")).as("_c")),
+        t.b, textCol, idCol))
+      t.append(Corpus.lmCountTable(t.b, textCol))
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = graft.util.Par.spread(batch).persist()
-          try {
-            val src = s"batch-$batchId"
-            val counts = s.read.parquet(countsDir)
-              .filter(col("_src") =!= src)
-              .groupBy(col("_u"), col("_v")).agg(sum(col("_c")).as("_c"))
-            graft.ext.Corpus.lmScoreBackoffFromCounts(counts, b,
-                textCol, idCol)
-              .write.mode("overwrite").parquet(s"$outDir/$src")
-            // bounded existence probe (limit-1, not a data collect): skip
-            // the append when this batch's tag already landed
-            val already = !s.read.parquet(countsDir)
-              .filter(col("_src") === src).isEmpty
-            if (!already)
-              graft.ext.Corpus.lmCountTable(b, textCol)
-                .withColumn("_src", lit(src))
-                .write.mode("append").parquet(countsDir)
-          } finally b.unpersist()
-        }
-      }
-      .start()
   }
 
   /** Streaming CCNet routing — x144/x146 mounted at ingest. The LM count
@@ -929,63 +1005,31 @@ object DeltaStream {
     * a NULL bucket. Refreshing the boundaries for a new reference epoch
     * is an OFFLINE rebuild of the two seed tables (delete `stateDir`,
     * reseed — the [[graft.ext.Corpus.recloseSplitKeys]] pattern of
-    * periodic offline repair), never a per-batch mutation.
-    * Overwrite-per-batch output makes foreachBatch retries idempotent
-    * with no append machinery at all.
+    * periodic offline repair), never a per-batch mutation (read-only
+    * shape).
     */
   def startCcnetRouting(spark: SparkSession, docsDir: String,
       refDocs: DataFrame, trainPred: Column, stateDir: String,
       outDir: String, checkpointDir: String, textCol: String = "text",
       idCol: String = "doc_id", langCol: String = "lang",
       nBuckets: Int = 3): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
-      .add(langCol, org.apache.spark.sql.types.StringType)
     val countsDir = s"$stateDir/counts"
     val thrDir = s"$stateDir/thresholds"
     seedOnce(thrDir) {
-      graft.ext.Corpus.lmCountTable(
-          graft.util.Par.spread(refDocs.filter(trainPred)), textCol)
-        .write.mode("overwrite").parquet(countsDir)
-      graft.ext.Corpus.ccnetThresholdsFromCounts(refDocs,
-          spark.read.parquet(countsDir), textCol, idCol, langCol, nBuckets)
-        .write.mode("overwrite").parquet(thrDir)
+      overwrite(Corpus.lmCountTable(
+        Par.spread(refDocs.filter(trainPred)), textCol), countsDir)
+      overwrite(Corpus.ccnetThresholdsFromCounts(refDocs,
+        spark.read.parquet(countsDir), textCol, idCol, langCol, nBuckets),
+        thrDir)
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          graft.ext.Corpus.ccnetRoute(graft.util.Par.spread(batch),
-              s.read.parquet(countsDir), s.read.parquet(thrDir),
-              textCol, idCol, langCol, nBuckets)
-            .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        }
-      }
-      .start()
+    mountReadOnly(spark.readStream.schema(schemaOf(idCol -> LongType,
+        textCol -> StringType, langCol -> StringType)).json(docsDir),
+        checkpointDir, outDir, spread = false) { t =>
+      Corpus.ccnetRoute(Par.spread(t.b), t.read(countsDir), t.read(thrDir),
+        textCol, idCol, langCol, nBuckets)
+    }
   }
 
-  /** Streaming φ-heavy-hitter monitor — x134/x135 mounted at ingest. The
-    * Count-Min sketch lives as a MAINTAINED `_src`-tagged table (seeded
-    * once from `corpusDocs`, one per-batch sketch appended per arriving
-    * micro-batch — [[graft.ext.Corpus.cmsMerge]]'s additive law makes the
-    * aggregate-on-read view exactly `sketch(everything seen)`), and each
-    * batch's DISTINCT grams are probed against the running sketch: a gram
-    * only becomes φ-heavy ON an arrival that contains it, so probing
-    * arrivals catches every crossing with per-batch work ∝ batch, fixed
-    * depth×width sketch state, and zero text re-reads — the gram universe
-    * is never materialized anywhere.
-    *
-    * Per batch, `outDir/batch-N` gets this batch's grams whose estimate
-    * against (running sketch ⊎ this batch) clears `phiNum/phiDen` of the
-    * total gram mass, estimate-only — the exact-verify escalation
-    * ([[graft.ext.Corpus.cmsHeavyHitters]]) stays a batch job over the
-    * flagged grams. Replay-idempotent by the maintained-table contract:
-    * reads exclude the current batch tag, the per-batch output
-    * overwrites, and the append is guarded by a bounded existence probe.
-    */
   /** Streaming z-order shard assignment against a MAINTAINED bounds
     * frame — the x155 batch contract mounted at ingest (the layout leg of
     * the maintained-state family):
@@ -997,9 +1041,8 @@ object DeltaStream {
     *     frame — a pure map-side pass, the corpus never re-read; because
     *     the frame never changes, every batch's assignment is mutually
     *     consistent with the corpus layout and with every other batch,
-    *     and replay is idempotent BY CONSTRUCTION (overwrite-per-batch
-    *     output, no state appends at all — the simplest member of the
-    *     maintained family).
+    *     and replay is idempotent BY CONSTRUCTION (read-only shape — the
+    *     simplest member of the maintained family).
     *  3. Each output row carries `out_of_frame` — whether either
     *     dimension was clamped to an edge cell. The clamped fraction is
     *     the mount's DRIFT SIGNAL: when arrivals increasingly fall
@@ -1012,40 +1055,18 @@ object DeltaStream {
       checkpointDir: String, idCol: String = "event_id",
       xCol: String = "user_id", yCol: String = "ts_us",
       bits: Int = 16, nShards: Int = 64): StreamingQuery = {
-    import graft.ext.Corpus
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(xCol, org.apache.spark.sql.types.LongType)
-      .add(yCol, org.apache.spark.sql.types.LongType)
-    seedOnce(boundsDir) {
-      corpusEvents.agg(
-          min(col(xCol).cast("long")).as("_xmin"),
-          max(col(xCol).cast("long")).as("_xmax"),
-          min(col(yCol).cast("long")).as("_ymin"),
-          max(col(yCol).cast("long")).as("_ymax"))
-        .write.mode("overwrite").parquet(boundsDir)
+    seedRows(boundsDir)(frameOf(corpusEvents, xCol, yCol))
+    mountReadOnly(spark.readStream
+        .schema(eventSchema(idCol, xCol, yCol)).json(eventsDir),
+        checkpointDir, outDir, spread = false) { t =>
+      val bounds = t.read(boundsDir)
+      // 1-row bounded collect: the frame as literals for the flag
+      val f = bounds.head()
+      Corpus.zorderLayoutAgainst(t.b, bounds, idCol, xCol, yCol,
+          bits, nShards, keepCols = Seq(xCol, yCol))
+        .withColumn("out_of_frame", outOfFrame(f, xCol, yCol))
+        .drop(xCol, yCol)
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(eventsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val bounds = s.read.parquet(boundsDir)
-          // 1-row bounded collect: the frame as literals for the flag
-          val f = bounds.head()
-          def out(v: String, lo: String, hi: String) =
-            col(v) < f.getAs[Long](lo) || col(v) > f.getAs[Long](hi)
-          Corpus.zorderLayoutAgainst(batch, bounds, idCol, xCol, yCol,
-              bits, nShards, keepCols = Seq(xCol, yCol))
-            .withColumn("out_of_frame", coalesce(
-              out(xCol, "_xmin", "_xmax") || out(yCol, "_ymin", "_ymax"),
-              lit(false)))
-            .drop(xCol, yCol)
-            .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        }
-      }
-      .start()
   }
 
   /** [[startZorderShardingMaintained]] WITH the drift-triggered RE-BASE
@@ -1063,16 +1084,14 @@ object DeltaStream {
     * (`out_of_frame` — measured against the frame actually used, so a
     * re-based batch flags clean — and `rebased`).
     *
-    * Retry idempotence (the x123 standard): snapshot reads exclude the
-    * current batch's ids and the append excludes ids already present,
-    * so the re-base input — prior snapshot ∪ batch — is the same SET on
-    * a retry even after a crash past the append; the re-based frame is
-    * a pure function of that set, so routing and both tables converge.
-    * A retry AFTER the bounds overwrite re-measures the clamp fraction
-    * against the refreshed frame (typically → keep): assignments are
-    * identical either way, only the informational `rebased` flag can
-    * differ on such a retry — same contract as
-    * [[startCellRoutingMaintained]]'s `refreshed`.
+    * Retry idempotence (the x123 standard): the id-keyed shape makes the
+    * re-base input the same SET on a retry even after a crash past the
+    * append; the re-based frame is a pure function of that set, so
+    * routing and both tables converge. A retry AFTER the bounds overwrite
+    * re-measures the clamp fraction against the refreshed frame
+    * (typically → keep): assignments are identical either way, only the
+    * informational `rebased` flag can differ on such a retry — same
+    * contract as [[startCellRoutingMaintained]]'s `refreshed`.
     *
     * Scale shape per batch: map-only assignment + a 1-row clamp-count
     * aggregate on the no-re-base path; a re-base adds one min/max
@@ -1085,80 +1104,39 @@ object DeltaStream {
       xCol: String = "user_id", yCol: String = "ts_us",
       bits: Int = 16, nShards: Int = 64,
       tau: Double = 0.2): StreamingQuery = {
-    import graft.ext.Corpus
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(xCol, org.apache.spark.sql.types.LongType)
-      .add(yCol, org.apache.spark.sql.types.LongType)
-    def boundsOf(df: DataFrame): DataFrame = df.agg(
-      min(col(xCol).cast("long")).as("_xmin"),
-      max(col(xCol).cast("long")).as("_xmax"),
-      min(col(yCol).cast("long")).as("_ymin"),
-      max(col(yCol).cast("long")).as("_ymax"))
-    seedOnce(boundsDir) {
-      boundsOf(corpusEvents).write.mode("overwrite").parquet(boundsDir)
+    val evCols = Seq(col(idCol), col(xCol), col(yCol))
+    seedRows(boundsDir)(frameOf(corpusEvents, xCol, yCol))
+    seedRows(evTblDir)(corpusEvents.select(evCols: _*))
+    mountKeyed(spark.readStream
+        .schema(eventSchema(idCol, xCol, yCol)).json(eventsDir),
+        checkpointDir, outDir, idCol) { t =>
+      import t.s.implicits._
+      val f = t.read(boundsDir).head()
+      // drift signal: clamped fraction of ROUTABLE rows (NULL
+      // dims are unroutable, not out-of-frame) — one 1-row agg
+      val d = t.b.agg(
+        sum(when(outOfFrame(f, xCol, yCol), 1L).otherwise(0L)).as("_nOut"),
+        sum(when(col(xCol).isNotNull && col(yCol).isNotNull, 1L)
+          .otherwise(0L)).as("_nRt")).head()
+      val nRt = d.getLong(1)
+      val rebase = nRt > 0 && d.getLong(0).toDouble / nRt > tau
+      val snapshot = t.others(evTblDir).unionByName(t.b.select(evCols: _*))
+      // the frame actually used: re-based = pure function of
+      // snapshot ∪ batch (1-row collect, then a literal frame so
+      // output and bounds-table writes see the SAME values)
+      val uf = if (rebase) frameOf(snapshot, xCol, yCol).head() else f
+      val useBounds = Seq((uf.getAs[Long]("_xmin"),
+        uf.getAs[Long]("_xmax"), uf.getAs[Long]("_ymin"),
+        uf.getAs[Long]("_ymax")))
+        .toDF("_xmin", "_xmax", "_ymin", "_ymax")
+      t.emit(Corpus.zorderLayoutAgainst(t.b, useBounds, idCol, xCol, yCol,
+          bits, nShards, keepCols = Seq(xCol, yCol))
+        .withColumn("out_of_frame", outOfFrame(uf, xCol, yCol))
+        .withColumn("rebased", lit(rebase))
+        .drop(xCol, yCol))
+      if (rebase) reseed(boundsDir)(useBounds)
+      t.append(evTblDir)(t.b.select(evCols: _*))
     }
-    seedOnce(evTblDir) {
-      corpusEvents.select(col(idCol), col(xCol), col(yCol))
-        .write.mode("overwrite").parquet(evTblDir)
-    }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(eventsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          import s.implicits._
-          val b = graft.util.Par.spread(batch).persist()
-          try {
-            val f = s.read.parquet(boundsDir).head()
-            def outOf(v: String, lo: String, hi: String) =
-              col(v) < f.getAs[Long](lo) || col(v) > f.getAs[Long](hi)
-            val clamped = coalesce(
-              outOf(xCol, "_xmin", "_xmax") ||
-                outOf(yCol, "_ymin", "_ymax"), lit(false))
-            // drift signal: clamped fraction of ROUTABLE rows (NULL
-            // dims are unroutable, not out-of-frame) — one 1-row agg
-            val d = b.agg(
-              sum(when(clamped, 1L).otherwise(0L)).as("_nOut"),
-              sum(when(col(xCol).isNotNull && col(yCol).isNotNull, 1L)
-                .otherwise(0L)).as("_nRt")).head()
-            val nRt = d.getLong(1)
-            val rebase = nRt > 0 && d.getLong(0).toDouble / nRt > tau
-            val batchIds = b.select(col(idCol))
-            val snapshot = s.read.parquet(evTblDir)
-              .join(broadcast(batchIds), Seq(idCol), "left_anti")
-              .unionByName(b.select(col(idCol), col(xCol), col(yCol)))
-            // the frame actually used: re-based = pure function of
-            // snapshot ∪ batch (1-row collect, then a literal frame so
-            // output and bounds-table writes see the SAME values)
-            val uf = if (rebase) boundsOf(snapshot).head() else f
-            val useBounds = Seq((uf.getAs[Long]("_xmin"),
-              uf.getAs[Long]("_xmax"), uf.getAs[Long]("_ymin"),
-              uf.getAs[Long]("_ymax")))
-              .toDF("_xmin", "_xmax", "_ymin", "_ymax")
-            def outOfUsed(v: String, lo: String, hi: String) =
-              col(v) < uf.getAs[Long](lo) || col(v) > uf.getAs[Long](hi)
-            Corpus.zorderLayoutAgainst(b, useBounds, idCol, xCol, yCol,
-                bits, nShards, keepCols = Seq(xCol, yCol))
-              .withColumn("out_of_frame", coalesce(
-                outOfUsed(xCol, "_xmin", "_xmax") ||
-                  outOfUsed(yCol, "_ymin", "_ymax"), lit(false)))
-              .withColumn("rebased", lit(rebase))
-              .drop(xCol, yCol)
-              .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-            if (rebase) {
-              useBounds.write.mode("overwrite").parquet(boundsDir)
-              markSeeded(boundsDir)
-            }
-            val present = s.read.parquet(evTblDir).select(col(idCol))
-            b.select(col(idCol), col(xCol), col(yCol))
-              .join(present, Seq(idCol), "left_anti")
-              .write.mode("append").parquet(evTblDir)
-          } finally b.unpersist()
-        }
-      }
-      .start()
   }
 
   /** The full lakehouse loop mounted at ingest — a STREAMING-MAINTAINED
@@ -1176,50 +1154,12 @@ object DeltaStream {
     * [[graft.util.Compaction.compactSharded]] is the scheduled
     * maintenance that folds them back and restores exact NDV.
     *
-    * Replay idempotence: [[graft.util.Scan.appendSharded]]'s bounded
-    * per-touched-shard id probe drops rows already landed, so a
-    * checkpoint replay converges instead of duplicating — no separate
-    * output dir, the TABLE is the sink.
+    * Replay, poison-event quarantine and the table-is-the-sink contract
+    * are the sharded-table shape's. `maxFilesPerShard > 0` and
+    * `maxStaleFraction > 0` arm its scheduled OPTIMIZE and looseness
+    * legs ([[maintain]]).
     *
-    * Scale shape per batch: map-only assignment + work ∝ batch and its
-    * touched shards (the append's dedup probe and manifest folds);
-    * untouched shards are never read.
-    */
-  /** `maxFilesPerShard > 0` arms the scheduled-OPTIMIZE leg: after each
-    * append, one FS metadata sweep counts data files per shard directory
-    * (no data read), and when any shard exceeds the threshold the batch
-    * runs [[graft.util.Compaction.compactShardsTargeted]] — rewriting
-    * ONLY the breaching shards (work ∝ hot shards, never the table —
-    * what a per-batch trigger can afford at 100 TB; the full
-    * [[graft.util.Compaction.compactSharded]] republish stays the
-    * explicit OPTIMIZE verb) — inside the SAME foreachBatch, because
-    * the table has exactly one writer (this mount); a separate
-    * compaction daemon would race the appender's directory swap.
-    * Vacuum rides the same trigger.
-    *
-    * `maxStaleFraction > 0` arms the LOOSENESS-triggered leg of the
-    * same maintenance: when any shard's `_stale_rows / n_rows` (the
-    * fraction of rows that entered through additive manifest folds
-    * since the stats were last exact —
-    * [[graft.util.Scan.manifestStaleness]], a driver-side read of the
-    * shards-sized manifest) exceeds the threshold after the (possibly
-    * skipped) targeted pass, the STALE shards' manifest rows are
-    * recomputed exactly ([[graft.util.Scan.refreshShards]] — a read of
-    * those shards, no rewrite) — manifests are refreshed because they
-    * are LOOSE, not merely because files accumulated (the x123 drift
-    * pattern, third use).
-    *
-    * Poison events: a row whose dimension columns are NULL (the JSON
-    * schema nulls absent fields) is UNROUTABLE — the int-keyed manifests
-    * cannot name its shard, and `appendSharded` rejects it. Passing it
-    * through would fail the micro-batch and checkpoint replay would
-    * re-fail it forever — one malformed event wedging the stream. The
-    * mount therefore QUARANTINES NULL-shard rows to a side table
-    * (`<tableDir>_quarantine`, plain parquet appends with the batch id)
-    * before the append — the explicit routing the layout contract
-    * demands, done once here for every caller.
-    */
-  /** `retentionHorizon > 0` arms the RETENTION leg of the maintained
+    * `retentionHorizon > 0` arms the RETENTION leg of the maintained
     * loop: after each append the batch's newest `yCol` acts as the
     * event-time watermark, and rows older than `newest − horizon`
     * expire through [[graft.util.Scan.deleteByRange]] — the
@@ -1233,6 +1173,10 @@ object DeltaStream {
     * inside the same foreachBatch as the compaction leg: this mount is
     * the table's one writer, and the writer lease would reject a
     * separate expiry daemon racing it.
+    *
+    * Scale shape per batch: map-only assignment + work ∝ batch and its
+    * touched shards (the append's dedup probe and manifest folds);
+    * untouched shards are never read.
     */
   def startZorderTableMaintained(spark: SparkSession, eventsDir: String,
       corpusEvents: DataFrame, tableDir: String, boundsDir: String,
@@ -1242,120 +1186,36 @@ object DeltaStream {
       maxFilesPerShard: Int = 0,
       maxStaleFraction: Double = 0.0,
       retentionHorizon: Long = 0L): StreamingQuery = {
-    import graft.ext.Corpus
-    import graft.util.Scan
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(xCol, org.apache.spark.sql.types.LongType)
-      .add(yCol, org.apache.spark.sql.types.LongType)
-    seedOnce(boundsDir) {
-      corpusEvents.agg(
-          min(col(xCol).cast("long")).as("_xmin"),
-          max(col(xCol).cast("long")).as("_xmax"),
-          min(col(yCol).cast("long")).as("_ymin"),
-          max(col(yCol).cast("long")).as("_ymax"))
-        .write.mode("overwrite").parquet(boundsDir)
-    }
-    val quarantineDir = s"${tableDir}_quarantine"
-    seedTableOnce(spark, tableDir) {
-      val laid = Corpus.zorderLayoutAgainst(corpusEvents,
-          spark.read.parquet(boundsDir), idCol, xCol, yCol, bits,
-          nShards, keepCols = Seq(xCol, yCol))
+    def lay(df: DataFrame, bounds: DataFrame, n: Int): DataFrame =
+      Corpus.zorderLayoutAgainst(df, bounds, idCol, xCol, yCol, bits, n,
+          keepCols = Seq(xCol, yCol))
         .drop("cell_x", "cell_y")
-      // seed rows with NULL dims are unroutable too — same quarantine
-      val bad = laid.filter(col("shard").isNull)
-      if (!bad.isEmpty)
-        bad.withColumn("_batch_id", lit(-1L))
-          .write.mode("overwrite").parquet(s"$quarantineDir/seed")
-      Scan.writeSharded(spark, laid.filter(col("shard").isNotNull),
+    seedRows(boundsDir)(frameOf(corpusEvents, xCol, yCol))
+    seedTableOnce(spark, tableDir) {
+      Scan.writeSharded(spark, routable(lay(corpusEvents,
+          spark.read.parquet(boundsDir), nShards), tableDir, -1L, "seed"),
         tableDir, statCols = Seq(xCol, yCol), sortCol = Some("zvalue"),
         bloomKeyCol = Some(xCol), zTotalBits = Some(2 * bits),
         nShards = Some(nShards))
     }
-    // no per-batch output dirs to guard (the table is the sink): a
-    // checkpoint reset replays batches INTO the surviving table, and
-    // appendSharded's id probe makes that converge instead of duplicate
-    spark.readStream.schema(schema).json(eventsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          // shard count from the TABLE's meta, not the mount's
-          // construction-time parameter: a between-batches
-          // reshardSharded changes the table's shard space, and an
-          // appender still sharding at the old count would corrupt it
-          val nShardsEff = Scan.readMeta(s, tableDir)
-            .flatMap(_.nShards).getOrElse(nShards)
-          val laid = Corpus.zorderLayoutAgainst(
-              graft.util.Par.spread(batch), s.read.parquet(boundsDir),
-              idCol, xCol, yCol, bits, nShardsEff,
-              keepCols = Seq(xCol, yCol))
-            .drop("cell_x", "cell_y")
-            .persist()
-          try {
-            // quarantine BEFORE the append: one NULL-dim event must
-            // never wedge the checkpoint (appendSharded throws on NULL
-            // shards by contract — the caller routes unroutables, and
-            // this mount IS that caller). Idempotent under replay: the
-            // quarantine is keyed by batch id, so a replayed batch
-            // overwrites its own rejects rather than duplicating them.
-            val bad = laid.filter(col("shard").isNull)
-            if (!bad.isEmpty)
-              bad.withColumn("_batch_id", lit(batchId))
-                .write.mode("overwrite")
-                .parquet(s"$quarantineDir/batch-$batchId")
-            Scan.appendSharded(s, laid.filter(col("shard").isNotNull),
-              tableDir, idCol)
-          } finally laid.unpersist()
-          val fileCountBreach = maxFilesPerShard > 0 && {
-            val p = new Path(tableDir)
-            val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            fs.listStatus(p).exists(d =>
-              d.isDirectory && d.getPath.getName.startsWith("shard=") &&
-                fs.listStatus(d.getPath).count(f => f.isFile &&
-                  !f.getPath.getName.startsWith("_") &&
-                  !f.getPath.getName.startsWith(".")) > maxFilesPerShard)
-          }
-          if (fileCountBreach) {
-            // TARGETED: rewrite only the breaching shards (work ∝ hot
-            // shards, never the table — the full compactSharded
-            // republish stays the explicit OPTIMIZE verb); storage
-            // hygiene rides the same schedule — with the lease held by
-            // this mount's thread, swap debris from any prior crash is
-            // provably dead, one listing when clean
-            graft.util.Compaction.compactShardsTargeted(s, tableDir,
-              maxFilesPerShard, sortCol = Some("zvalue"))
-            Scan.vacuumTable(s, tableDir)
-            ()
-          }
-          // looseness surviving the (possibly skipped) targeted pass:
-          // exactness needs only the STALE shards' manifest rows
-          // recomputed — a read of those shards, no rewrite
-          if (maxStaleFraction > 0 &&
-              Scan.manifestStaleness(s, tableDir) > maxStaleFraction) {
-            val man = Scan.statsManifest(s, tableDir)
-            if (man.columns.contains("_stale_rows")) {
-              val stale = man.filter(col("_stale_rows") > 0L)
-                .select(col("shard").cast("int"))
-                .collect().map(_.getInt(0)).toSeq
-              Scan.refreshShards(s, tableDir, stale)
-            }
-          }
-          if (retentionHorizon > 0) {
-            // batch-derived watermark -> deterministic under replay;
-            // the expired range's shards stop being candidates after
-            // the first delete, so a replayed expiry is a no-op
-            val newest = batch.agg(max(col(yCol).cast("long"))).head()
-            if (!newest.isNullAt(0)) {
-              val cutoff = newest.getLong(0) - retentionHorizon
-              Scan.deleteByRange(s, tableDir,
-                Seq((yCol, Long.MinValue + 1, cutoff)))
-              ()
-            }
-          }
-        }
+    mount(spark.readStream
+        .schema(eventSchema(idCol, xCol, yCol)).json(eventsDir),
+        checkpointDir, None, spread = false) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val n = shardsNow(s, tableDir, nShards)
+      landBatch(s, lay(Par.spread(batch), s.read.parquet(boundsDir), n),
+        tableDir, idCol, batchId)(_ => ())
+      maintain(s, tableDir, maxFilesPerShard, maxStaleFraction)
+      if (retentionHorizon > 0) {
+        // batch-derived watermark -> deterministic under replay;
+        // the expired range's shards stop being candidates after
+        // the first delete, so a replayed expiry is a no-op
+        val newest = batch.agg(max(col(yCol).cast("long"))).head()
+        if (!newest.isNullAt(0))
+          Scan.deleteByRange(s, tableDir, Seq((yCol, Long.MinValue + 1,
+            newest.getLong(0) - retentionHorizon)))
       }
-      .start()
+    }
   }
 
   /** [[startZorderTableMaintained]] for a table whose leading z-order
@@ -1385,102 +1245,17 @@ object DeltaStream {
       numCol: String = "n_chars", bits: Int = 8, nShards: Int = 32,
       maxFilesPerShard: Int = 0,
       maxStaleFraction: Double = 0.0): StreamingQuery = {
-    import graft.ext.Corpus
-    import graft.util.Scan
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(strCol, org.apache.spark.sql.types.StringType)
-      .add(numCol, org.apache.spark.sql.types.LongType)
-    val dims = Seq(strCol, numCol)
-    val quarantineDir = s"${tableDir}_quarantine"
-    // a crash between a bounds-swap's renames (the re-base republish)
-    // leaves boundsDir absent but fully recoverable — resolve that
-    // BEFORE the seed check, or the restart would re-seed pre-rebase
-    // bounds over a rebased table and misroute every later batch
-    graft.dw.Merge.recover(spark, boundsDir)
-    seedOnce(boundsDir) {
-      val dict = Corpus.stringDimDict(corpusDocs, strCol)
-      dict.agg(
-          min(col("rank")).as(s"_min_$strCol"),
-          max(col("rank")).as(s"_max_$strCol"))
-        .crossJoin(corpusDocs.agg(
-          min(col(numCol).cast("long")).as(s"_min_$numCol"),
-          max(col(numCol).cast("long")).as(s"_max_$numCol")))
-        .write.mode("overwrite").parquet(boundsDir)
+    seedStringTable(spark, corpusDocs, tableDir, boundsDir, idCol, strCol,
+      numCol, bits, nShards)
+    mount(spark.readStream.schema(schemaOf(idCol -> LongType,
+        strCol -> StringType, numCol -> LongType)).json(eventsDir),
+        checkpointDir, None, spread = false) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val (laid, _) = layStringBatch(s, batch, tableDir, boundsDir, idCol,
+        strCol, numCol, bits, nShards)
+      landBatch(s, laid, tableDir, idCol, batchId)(_ => ())
+      maintain(s, tableDir, maxFilesPerShard, maxStaleFraction)
     }
-    seedTableOnce(spark, tableDir) {
-      val dict = Corpus.stringDimDict(corpusDocs, strCol)
-      val laid = Corpus.zorderLayoutAgainstN(corpusDocs,
-          spark.read.parquet(boundsDir), idCol, dims, bits, nShards,
-          keepCols = dims, dicts = Map(strCol -> dict))
-        .drop(dims.map(c => s"cell_$c"): _*)
-      val bad = laid.filter(col("shard").isNull)
-      if (!bad.isEmpty)
-        bad.withColumn("_batch_id", lit(-1L))
-          .write.mode("overwrite").parquet(s"$quarantineDir/seed")
-      Scan.writeSharded(spark, laid.filter(col("shard").isNotNull),
-        tableDir, statCols = dims, sortCol = Some("zvalue"),
-        bloomKeyCol = Some(strCol), bloomM = 1024,
-        zTotalBits = Some(2 * bits), nShards = Some(nShards),
-        dicts = Map(strCol -> dict))
-    }
-    spark.readStream.schema(schema).json(eventsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          // the frozen frame, from the table's own sidecars; shard
-          // count likewise from meta so a between-batches re-shard
-          // never splits the shard space (see the numeric mount)
-          val dict = Scan.readDicts(s, tableDir)(strCol)
-          val nShardsEff = Scan.readMeta(s, tableDir)
-            .flatMap(_.nShards).getOrElse(nShards)
-          val laid = Corpus.zorderLayoutAgainstN(
-              graft.util.Par.spread(batch),
-              s.read.parquet(boundsDir), idCol, dims, bits, nShardsEff,
-              keepCols = dims, dicts = Map(strCol -> dict))
-            .drop(dims.map(c => s"cell_$c"): _*)
-            .persist()
-          try {
-            // unseen categories + NULL dims: quarantined per batch id
-            // (replay overwrites its own rejects — idempotent)
-            val bad = laid.filter(col("shard").isNull)
-            if (!bad.isEmpty)
-              bad.withColumn("_batch_id", lit(batchId))
-                .write.mode("overwrite")
-                .parquet(s"$quarantineDir/batch-$batchId")
-            Scan.appendSharded(s, laid.filter(col("shard").isNotNull),
-              tableDir, idCol)
-          } finally laid.unpersist()
-          val fileCountBreach = maxFilesPerShard > 0 && {
-            val p = new Path(tableDir)
-            val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            fs.listStatus(p).exists(d =>
-              d.isDirectory && d.getPath.getName.startsWith("shard=") &&
-                fs.listStatus(d.getPath).count(f => f.isFile &&
-                  !f.getPath.getName.startsWith("_") &&
-                  !f.getPath.getName.startsWith(".")) > maxFilesPerShard)
-          }
-          if (fileCountBreach) {
-            // targeted, like the numeric mount: breaching shards only
-            graft.util.Compaction.compactShardsTargeted(s, tableDir,
-              maxFilesPerShard, sortCol = Some("zvalue"))
-            Scan.vacuumTable(s, tableDir)
-            ()
-          }
-          if (maxStaleFraction > 0 &&
-              Scan.manifestStaleness(s, tableDir) > maxStaleFraction) {
-            val man = Scan.statsManifest(s, tableDir)
-            if (man.columns.contains("_stale_rows")) {
-              val stale = man.filter(col("_stale_rows") > 0L)
-                .select(col("shard").cast("int"))
-                .collect().map(_.getInt(0)).toSeq
-              Scan.refreshShards(s, tableDir, stale)
-            }
-          }
-        }
-      }
-      .start()
   }
 
   /** [[startZorderStringTableMaintained]] with DICTIONARY EVOLUTION —
@@ -1510,216 +1285,144 @@ object DeltaStream {
       idCol: String = "doc_id", strCol: String = "lang",
       numCol: String = "n_chars", bits: Int = 8, nShards: Int = 32,
       tauNum: Long = 1L, tauDen: Long = 10L): StreamingQuery = {
-    import graft.ext.Corpus
-    import graft.util.Scan
     require(tauNum >= 0 && tauDen > 0, "need tauNum >= 0 and tauDen > 0")
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(strCol, org.apache.spark.sql.types.StringType)
-      .add(numCol, org.apache.spark.sql.types.LongType)
-    val dims = Seq(strCol, numCol)
     val quarantineDir = s"${tableDir}_quarantine"
-    // a crash between a bounds-swap's renames (the re-base republish)
-    // leaves boundsDir absent but fully recoverable — resolve that
-    // BEFORE the seed check, or the restart would re-seed pre-rebase
-    // bounds over a rebased table and misroute every later batch
-    graft.dw.Merge.recover(spark, boundsDir)
-    seedOnce(boundsDir) {
-      val dict = Corpus.stringDimDict(corpusDocs, strCol)
-      dict.agg(
-          min(col("rank")).as(s"_min_$strCol"),
-          max(col("rank")).as(s"_max_$strCol"))
-        .crossJoin(corpusDocs.agg(
-          min(col(numCol).cast("long")).as(s"_min_$numCol"),
-          max(col(numCol).cast("long")).as(s"_max_$numCol")))
-        .write.mode("overwrite").parquet(boundsDir)
-    }
-    seedTableOnce(spark, tableDir) {
-      val dict = Corpus.stringDimDict(corpusDocs, strCol)
-      val laid = Corpus.zorderLayoutAgainstN(corpusDocs,
-          spark.read.parquet(boundsDir), idCol, dims, bits, nShards,
-          keepCols = dims, dicts = Map(strCol -> dict))
-        .drop(dims.map(c => s"cell_$c"): _*)
-      val bad = laid.filter(col("shard").isNull)
-      if (!bad.isEmpty)
-        bad.withColumn("_batch_id", lit(-1L))
-          .write.mode("overwrite").parquet(s"$quarantineDir/seed")
-      Scan.writeSharded(spark, laid.filter(col("shard").isNotNull),
-        tableDir, statCols = dims, sortCol = Some("zvalue"),
-        bloomKeyCol = Some(strCol), bloomM = 1024,
-        zTotalBits = Some(2 * bits), nShards = Some(nShards),
-        dicts = Map(strCol -> dict))
-    }
-    spark.readStream.schema(schema).json(eventsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val fs = new Path(tableDir).getFileSystem(
-            s.sparkContext.hadoopConfiguration)
-          val dict = Scan.readDicts(s, tableDir)(strCol)
-          val nShardsEff = Scan.readMeta(s, tableDir)
-            .flatMap(_.nShards).getOrElse(nShards)
-          val laid = Corpus.zorderLayoutAgainstN(
-              graft.util.Par.spread(batch),
-              s.read.parquet(boundsDir), idCol, dims, bits, nShardsEff,
-              keepCols = dims, dicts = Map(strCol -> dict))
-            .drop(dims.map(c => s"cell_$c"): _*)
+    seedStringTable(spark, corpusDocs, tableDir, boundsDir, idCol, strCol,
+      numCol, bits, nShards)
+    mount(spark.readStream.schema(schemaOf(idCol -> LongType,
+        strCol -> StringType, numCol -> LongType)).json(eventsDir),
+        checkpointDir, None, spread = false) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val fs = new Path(tableDir).getFileSystem(
+        s.sparkContext.hadoopConfiguration)
+      val (laid, nShardsEff) = layStringBatch(s, batch, tableDir, boundsDir,
+        idCol, strCol, numCol, bits, nShards)
+      landBatch(s, laid, tableDir, idCol, batchId) { laid =>
+        // the trigger: this batch's UNSEEN-category fraction (rows
+        // whose string value exists but has no dict position; rows
+        // with NULL dims are unroutable under ANY frame and never
+        // argue for a re-base)
+        val nUnseen = laid.filter(col("shard").isNull)
+          .filter(col(strCol).isNotNull && col(numCol).isNotNull).count()
+        val nBatch = laid.count()
+        if (nUnseen * tauDen > nBatch * tauNum) {
+          // ---- DICTIONARY RE-BASE (full-table rewrite) ----
+          val payload = Seq(idCol, strCol, numCol)
+          val tableRows = s.read.parquet(tableDir)
+            .select(payload.map(col): _*)
+          val qRows = s.read.option("basePath", quarantineDir)
+            .parquet(s"$quarantineDir/*")
+            .select(payload.map(col): _*)
+            // fold only rows the table does not already hold —
+            // a crash-retry of an earlier re-base converges here
+            .join(tableRows.select(col(idCol)), Seq(idCol), "left_anti")
             .persist()
+          qRows.count()
+          val allRows = tableRows.unionByName(qRows).persist()
+          val newDict = Corpus.stringDimDict(allRows, strCol).persist()
+          newDict.count()
+          // string frame grows to the new ranks; numeric frame
+          // stays frozen (numeric drift is the other mount's job)
+          // 1-row frame collected and rebuilt as literals: the
+          // overwrite below targets boundsDir itself, and a lazy
+          // plan still reading it would race its own deletion
+          val ob = s.read.parquet(boundsDir).head()
+          val nd = newDict.agg(min(col("rank")), max(col("rank"))).head()
+          val newBounds = {
+            import s.implicits._
+            Seq((nd.getLong(0), nd.getLong(1),
+                ob.getAs[Long](s"_min_$numCol"),
+                ob.getAs[Long](s"_max_$numCol")))
+              .toDF(s"_min_$strCol", s"_max_$strCol",
+                s"_min_$numCol", s"_max_$numCol")
+          }
+          // materialize TO DISK before the swap: the
+          // still-unroutable read below runs after tableDir is
+          // replaced, and recomputing from lineage would read the
+          // NEW table — persist() alone is not durable (lost
+          // executor blocks recompute from lineage), so the
+          // re-laid rows go through a temp parquet and every
+          // post-swap read is against those bytes, never the
+          // swapped table
+          val relaidTmp = s"${tableDir}__rebase_relaid"
+          overwrite(layString(allRows, newBounds, idCol, strCol, numCol,
+            bits, nShardsEff, newDict), relaidTmp)
+          val relaid = s.read.parquet(relaidTmp).persist()
           try {
-            val bad = laid.filter(col("shard").isNull)
-            if (!bad.isEmpty)
-              bad.withColumn("_batch_id", lit(batchId))
-                .write.mode("overwrite")
-                .parquet(s"$quarantineDir/batch-$batchId")
-            Scan.appendSharded(s, laid.filter(col("shard").isNotNull),
-              tableDir, idCol)
-            // the trigger: this batch's UNSEEN-category fraction (rows
-            // whose string value exists but has no dict position; rows
-            // with NULL dims are unroutable under ANY frame and never
-            // argue for a re-base)
-            val nUnseen = bad.filter(col(strCol).isNotNull &&
-              col(numCol).isNotNull).count()
-            val nBatch = laid.count()
-            if (nUnseen * tauDen > nBatch * tauNum) {
-              // ---- DICTIONARY RE-BASE (full-table rewrite) ----
-              val payload = Seq(idCol) ++ dims
-              val tableRows = s.read.parquet(tableDir)
-                .select(payload.map(col): _*)
-              val qRows = s.read.option("basePath", quarantineDir)
-                .parquet(s"$quarantineDir/*")
-                .select(payload.map(col): _*)
-                // fold only rows the table does not already hold —
-                // a crash-retry of an earlier re-base converges here
-                .join(tableRows.select(col(idCol)), Seq(idCol),
-                  "left_anti")
-                .persist()
-              qRows.count()
-              val allRows = tableRows.unionByName(qRows).persist()
-              val newDict = Corpus.stringDimDict(allRows, strCol)
-                .persist()
-              newDict.count()
-              // string frame grows to the new ranks; numeric frame
-              // stays frozen (numeric drift is the other mount's job)
-              // 1-row frame collected and rebuilt as literals: the
-              // overwrite below targets boundsDir itself, and a lazy
-              // plan still reading it would race its own deletion
-              val ob = s.read.parquet(boundsDir).head()
-              val nd = newDict.agg(
-                min(col("rank")), max(col("rank"))).head()
-              val newBounds = {
-                import s.implicits._
-                Seq((nd.getLong(0), nd.getLong(1),
-                    ob.getAs[Long](s"_min_$numCol"),
-                    ob.getAs[Long](s"_max_$numCol")))
-                  .toDF(s"_min_$strCol", s"_max_$strCol",
-                    s"_min_$numCol", s"_max_$numCol")
-              }
-              // materialize TO DISK before the swap: the
-              // still-unroutable read below runs after tableDir is
-              // replaced, and recomputing from lineage would read the
-              // NEW table — persist() alone is not durable (lost
-              // executor blocks recompute from lineage), so the
-              // re-laid rows go through a temp parquet and every
-              // post-swap read is against those bytes, never the
-              // swapped table
-              val relaidTmp = s"${tableDir}__rebase_relaid"
-              Corpus.zorderLayoutAgainstN(allRows,
-                  newBounds, idCol, dims, bits, nShardsEff,
-                  keepCols = dims, dicts = Map(strCol -> newDict))
-                .drop(dims.map(c => s"cell_$c"): _*)
-                .write.mode("overwrite").parquet(relaidTmp)
-              val relaid = s.read.parquet(relaidTmp).persist()
-              try {
-                Scan.writeSharded(s,
-                  relaid.filter(col("shard").isNotNull), tableDir,
-                  statCols = dims, sortCol = Some("zvalue"),
-                  bloomKeyCol = Some(strCol), bloomM = 1024,
-                  zTotalBits = Some(2 * bits),
-                  nShards = Some(nShardsEff),
-                  dicts = Map(strCol -> newDict))
-                // bounds + seed marker publish as ONE unit (marker
-                // written inside the swap tmp): a crash can never leave
-                // the rebased table paired with pre-rebase bounds and a
-                // missing marker — the state where a restart re-seeds
-                // the OLD (smaller) rank range and silently misroutes
-                // every later batch
-                graft.dw.Merge.atomicOverwriteDir(s, boundsDir) { tmp =>
-                  newBounds.write.mode("overwrite").parquet(tmp)
-                  markSeeded(tmp)
-                }
-                // one new quarantine generation holds what is STILL
-                // unroutable (NULL dims); the folded batch dirs go.
-                // Crash windows re-fold idempotently via the anti-join.
-                val still = relaid.filter(col("shard").isNull)
-                  .withColumn("_batch_id", lit(batchId))
-                  .persist()
-                val nStill = still.count()
-                val gens = fs.listStatus(new Path(quarantineDir)).toSeq
-                  .filter(_.isDirectory).map(_.getPath)
-                if (nStill > 0)
-                  still.write.mode("overwrite")
-                    .parquet(s"$quarantineDir/rebase-$batchId")
-                still.unpersist()
-                gens.filter(_.getName != s"rebase-$batchId")
-                  .foreach(p => fs.delete(p, true))
-              } finally {
-                relaid.unpersist(); allRows.unpersist()
-                newDict.unpersist(); qRows.unpersist()
-                fs.delete(new Path(relaidTmp), true)
-              }
+            publishString(s, relaid.filter(col("shard").isNotNull),
+              tableDir, strCol, numCol, bits, nShardsEff, newDict)
+            // bounds + seed marker publish as ONE unit (marker
+            // written inside the swap tmp): a crash can never leave
+            // the rebased table paired with pre-rebase bounds and a
+            // missing marker — the state where a restart re-seeds
+            // the OLD (smaller) rank range and silently misroutes
+            // every later batch
+            graft.dw.Merge.atomicOverwriteDir(s, boundsDir) { tmp =>
+              overwrite(newBounds, tmp)
+              markSeeded(tmp)
             }
-          } finally laid.unpersist()
+            // one new quarantine generation holds what is STILL
+            // unroutable (NULL dims); the folded batch dirs go.
+            // Crash windows re-fold idempotently via the anti-join.
+            val still = relaid.filter(col("shard").isNull)
+              .withColumn("_batch_id", lit(batchId))
+              .persist()
+            val nStill = still.count()
+            val gens = fs.listStatus(new Path(quarantineDir)).toSeq
+              .filter(_.isDirectory).map(_.getPath)
+            if (nStill > 0)
+              overwrite(still, s"$quarantineDir/rebase-$batchId")
+            still.unpersist()
+            gens.filter(_.getName != s"rebase-$batchId")
+              .foreach(p => fs.delete(p, true))
+          } finally {
+            relaid.unpersist(); allRows.unpersist()
+            newDict.unpersist(); qRows.unpersist()
+            fs.delete(new Path(relaidTmp), true)
+          }
         }
       }
-      .start()
+    }
   }
 
+  /** Streaming φ-heavy-hitter monitor — x134/x135 mounted at ingest. The
+    * Count-Min sketch lives as a MAINTAINED `_src`-tagged table (seeded
+    * once from `corpusDocs`, one per-batch sketch appended per arriving
+    * micro-batch — [[graft.ext.Corpus.cmsMerge]]'s additive law makes the
+    * aggregate-on-read view exactly `sketch(everything seen)`), and each
+    * batch's DISTINCT grams are probed against the running sketch: a gram
+    * only becomes φ-heavy ON an arrival that contains it, so probing
+    * arrivals catches every crossing with per-batch work ∝ batch, fixed
+    * depth×width sketch state, and zero text re-reads — the gram universe
+    * is never materialized anywhere.
+    *
+    * Per batch, `outDir/batch-N` gets this batch's grams whose estimate
+    * against (running sketch ⊎ this batch) clears `phiNum/phiDen` of the
+    * total gram mass, estimate-only — the exact-verify escalation
+    * ([[graft.ext.Corpus.cmsHeavyHitters]]) stays a batch job over the
+    * flagged grams. Replay safety is the `_src`-tagged shape's.
+    */
   def startCmsHeavyHitterMonitor(spark: SparkSession, docsDir: String,
       corpusDocs: DataFrame, sketchDir: String, outDir: String,
       checkpointDir: String, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 3, depth: Int = 4,
       width: Int = 8192, phiNum: Long = 1,
       phiDen: Long = 4096): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
-    seedOnce(sketchDir) {
-      graft.ext.Corpus.cmsSketch(corpusDocs, textCol, n, depth, width)
-        .withColumn("_src", lit("corpus"))
-        .write.mode("overwrite").parquet(sketchDir)
+    seedTagged(sketchDir)(
+      Corpus.cmsSketch(corpusDocs, textCol, n, depth, width))
+    mountTagged(spark.readStream
+        .schema(docSchema(idCol, textCol)).json(docsDir),
+        checkpointDir, outDir, sketchDir, spread = true) { t =>
+      val bs = Corpus.cmsSketch(t.b, textCol, n, depth, width).persist()
+      try {
+        val running = Corpus.cmsMerge(t.others
+          .select("row_idx", "bucket", "cnt").unionByName(bs)).persist()
+        try t.emit(Corpus.cmsHeavyHitterProbe(running, t.b, textCol,
+          n, depth, width, phiNum, phiDen))
+        finally running.unpersist()
+        t.append(bs)
+      } finally bs.unpersist()
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = graft.util.Par.spread(batch).persist()
-          val src = s"batch-$batchId"
-          val bs = graft.ext.Corpus.cmsSketch(b, textCol, n, depth, width)
-            .persist()
-          try {
-            val running = graft.ext.Corpus.cmsMerge(
-              s.read.parquet(sketchDir).filter(col("_src") =!= src)
-                .select("row_idx", "bucket", "cnt").unionByName(bs))
-              .persist()
-            try {
-              graft.ext.Corpus.cmsHeavyHitterProbe(running, b, textCol,
-                  n, depth, width, phiNum, phiDen)
-                .write.mode("overwrite").parquet(s"$outDir/$src")
-            } finally running.unpersist()
-            // bounded existence probe (limit-1, not a data collect): skip
-            // the append when this batch's tag already landed
-            val already = !s.read.parquet(sketchDir)
-              .filter(col("_src") === src).isEmpty
-            if (!already)
-              bs.withColumn("_src", lit(src))
-                .write.mode("append").parquet(sketchDir)
-          } finally { bs.unpersist(); b.unpersist() }
-        }
-      }
-      .start()
   }
 
   /** Streaming curation gate — x49 + x50 mounted at ingest: each arriving
@@ -1735,49 +1438,32 @@ object DeltaStream {
     *
     * The gram table seeds once from `evalDocs` (x50's registration-time
     * contract — benchmarks are never re-signatured) and is only READ per
-    * batch, so the loop needs no append-idempotence machinery; the
-    * overwrite-per-batch output makes foreachBatch retries idempotent.
+    * batch (read-only shape).
     */
   def startCurationFilter(spark: SparkSession, docsDir: String,
       evalDocs: DataFrame, setCol: String, gramsDir: String, outDir: String,
       checkpointDir: String, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 8,
       minSharedGrams: Long = 1L): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
-    seedOnce(gramsDir) {
-      graft.ext.Dedup.evalSetGramTable(evalDocs, setCol, textCol, idCol, n)
-        .write.mode("overwrite").parquet(gramsDir)
+    seedRows(gramsDir)(
+      Dedup.evalSetGramTable(evalDocs, setCol, textCol, idCol, n))
+    mountReadOnly(spark.readStream
+        .schema(docSchema(idCol, textCol)).json(docsDir),
+        checkpointDir, outDir, spread = true) { t =>
+      val quality = Corpus.gopherQualityFilter(t.b, textCol, idCol)
+        .select(col(idCol), col("keep").as("keep_quality"))
+      val contaminated = Dedup.ngramOverlapAgainstGramTable(
+          t.b, t.read(gramsDir), textCol, idCol, n)
+        .groupBy(col(idCol))
+        .agg(max(col("shared_grams")).as("_sg"))
+        .filter(col("_sg") >= minSharedGrams)
+        .select(col(idCol), lit(true).as("contaminated"))
+      t.b.join(quality, Seq(idCol), "left")
+        .join(contaminated, Seq(idCol), "left")
+        .withColumn("contaminated",
+          coalesce(col("contaminated"), lit(false)))
+        .withColumn("kept", col("keep_quality") && !col("contaminated"))
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = graft.util.Par.spread(batch).persist()
-          try {
-            val quality = graft.ext.Corpus
-              .gopherQualityFilter(b, textCol, idCol)
-              .select(col(idCol), col("keep").as("keep_quality"))
-            val contaminated = graft.ext.Dedup
-              .ngramOverlapAgainstGramTable(
-                b, s.read.parquet(gramsDir), textCol, idCol, n)
-              .groupBy(col(idCol))
-              .agg(max(col("shared_grams")).as("_sg"))
-              .filter(col("_sg") >= minSharedGrams)
-              .select(col(idCol), lit(true).as("contaminated"))
-            b.join(quality, Seq(idCol), "left")
-              .join(contaminated, Seq(idCol), "left")
-              .withColumn("contaminated",
-                coalesce(col("contaminated"), lit(false)))
-              .withColumn("kept", col("keep_quality") && !col("contaminated"))
-              .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-          } finally b.unpersist()
-        }
-      }
-      .start()
   }
 
   /** Streaming importance gate — x81's DSIR weighting mounted at ingest:
@@ -1788,40 +1474,27 @@ object DeltaStream {
     * `minAffinity`). The distributions deliberately do NOT grow with the
     * stream: DSIR scores against a fixed raw/target estimate, so a doc's
     * weight never depends on arrival order — re-seed explicitly when the
-    * corpus estimate should move. Tables are only READ per batch (no
-    * append-idempotence machinery needed); overwrite-per-batch output
-    * makes foreachBatch retries idempotent. Per-batch work: one bounded
-    * table read + the batch's own map-only scoring fold.
+    * corpus estimate should move (read-only shape). Per-batch work: one
+    * bounded table read + the batch's own map-only scoring fold.
     */
   def startImportanceGate(spark: SparkSession, docsDir: String,
       corpus: DataFrame, targetPred: Column, bucketsDir: String,
       outDir: String, checkpointDir: String, textCol: String = "text",
       idCol: String = "doc_id", buckets: Int = 256,
       minAffinity: Double = 1.0): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
     seedOnce(s"$bucketsDir/raw") {
-      graft.ext.Corpus.hashedBucketTable(corpus.filter(targetPred),
-          textCol, buckets)
-        .write.mode("overwrite").parquet(s"$bucketsDir/target")
-      graft.ext.Corpus.hashedBucketTable(corpus, textCol, buckets)
-        .write.mode("overwrite").parquet(s"$bucketsDir/raw")
+      overwrite(Corpus.hashedBucketTable(corpus.filter(targetPred),
+        textCol, buckets), s"$bucketsDir/target")
+      overwrite(Corpus.hashedBucketTable(corpus, textCol, buckets),
+        s"$bucketsDir/raw")
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          graft.ext.Corpus.importanceAffinityAgainst(batch, textCol, idCol,
-              s.read.parquet(s"$bucketsDir/target"),
-              s.read.parquet(s"$bucketsDir/raw"), buckets)
-            .withColumn("keep", col("affinity") >= minAffinity)
-            .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        }
-      }
-      .start()
+    mountReadOnly(spark.readStream
+        .schema(docSchema(idCol, textCol)).json(docsDir),
+        checkpointDir, outDir, spread = false) { t =>
+      Corpus.importanceAffinityAgainst(t.b, textCol, idCol,
+          t.read(s"$bucketsDir/target"), t.read(s"$bucketsDir/raw"), buckets)
+        .withColumn("keep", col("affinity") >= minAffinity)
+    }
   }
 
   /** Streaming event-rate monitor — x113 mounted at ingest with a GROWING
@@ -1832,9 +1505,7 @@ object DeltaStream {
     * verdicts for THE BATCH'S OWN (type, day) pairs to
     * `outDir/batch-<id>`. A day's verdict reflects counts known SO FAR
     * (snapshot semantics — late events re-raise on a later batch).
-    * Replay idempotence is the x67 `_src`-tag contract: the table read
-    * excludes the current batch's tag, the append is skipped when the tag
-    * already landed.
+    * Replay safety is the x67 `_src`-tagged shape's.
     */
   def startRateMonitor(spark: SparkSession, eventsDir: String,
       corpusEvents: DataFrame, countsDir: String, outDir: String,
@@ -1842,49 +1513,28 @@ object DeltaStream {
       tsCol: String = "ts", idCol: String = "event_id",
       windowDays: Int = 7, factorNum: Long = 3,
       factorDen: Long = 2): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(typeCol, org.apache.spark.sql.types.StringType)
-      .add(tsCol, org.apache.spark.sql.types.StringType)
-    import graft.analytics.EventOps
-    seedOnce(countsDir) {
-      EventOps.dailyCounts(corpusEvents, typeCol, tsCol)
-        .withColumn("_src", lit("corpus"))
-        .write.mode("overwrite").parquet(countsDir)
+    seedTagged(countsDir)(EventOps.dailyCounts(corpusEvents, typeCol, tsCol))
+    mountTagged(spark.readStream.schema(schemaOf(idCol -> LongType,
+        typeCol -> StringType, tsCol -> StringType)).json(eventsDir),
+        checkpointDir, outDir, countsDir, spread = false) { t =>
+      val bDaily = EventOps.dailyCounts(
+        t.b.withColumn(tsCol, col(tsCol).cast("timestamp")),
+        typeCol, tsCol).persist()
+      try {
+        val merged = t.others
+          .select(col("event_type"), col("_day"), col("n"))
+          .unionByName(bDaily)
+          .groupBy(col("event_type"), col("_day"))
+          .agg(sum(col("n")).as("n"))
+        t.emit(EventOps.rateAnomaliesFromDaily(merged, windowDays,
+            factorNum, factorDen)
+          .join(bDaily.select(col("event_type"),
+            date_format(date_add(to_date(lit("1970-01-01")),
+              col("_day").cast("int")), "yyyy-MM-dd").as("day")),
+            Seq("event_type", "day"), "left_semi"))
+        t.append(bDaily)
+      } finally bDaily.unpersist()
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(eventsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val src = s"batch-$batchId"
-          val bDaily = EventOps.dailyCounts(
-            batch.withColumn(tsCol, col(tsCol).cast("timestamp")),
-            typeCol, tsCol).persist()
-          try {
-            val merged = s.read.parquet(countsDir)
-              .filter(col("_src") =!= src)
-              .select(col("event_type"), col("_day"), col("n"))
-              .unionByName(bDaily)
-              .groupBy(col("event_type"), col("_day"))
-              .agg(sum(col("n")).as("n"))
-            EventOps.rateAnomaliesFromDaily(merged, windowDays,
-                factorNum, factorDen)
-              .join(bDaily.select(col("event_type"),
-                date_format(date_add(to_date(lit("1970-01-01")),
-                  col("_day").cast("int")), "yyyy-MM-dd").as("day")),
-                Seq("event_type", "day"), "left_semi")
-              .write.mode("overwrite").parquet(s"$outDir/$src")
-            val already = !s.read.parquet(countsDir)
-              .filter(col("_src") === src).isEmpty
-            if (!already)
-              bDaily.withColumn("_src", lit(src))
-                .write.mode("append").parquet(countsDir)
-          } finally bDaily.unpersist()
-        }
-      }
-      .start()
   }
 
   /** Streaming drift monitor — [[graft.ext.Corpus.driftFromCounts]]
@@ -1893,35 +1543,20 @@ object DeltaStream {
     * every arriving micro-batch reports its own distribution's exact
     * TV-distance masses against it to `outDir/batch-<id>` — the "does
     * today's data still look like the corpus" alarm, one bounded-key
-    * aggregate per batch. Overwrite-per-batch, read-only reference: the
-    * [[startImportanceGate]] idempotence contract.
+    * aggregate per batch (read-only shape).
     */
   def startDriftMonitor(spark: SparkSession, docsDir: String,
       corpus: DataFrame, keyCol: String, refDir: String, outDir: String,
       checkpointDir: String, idCol: String = "doc_id"): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(keyCol, org.apache.spark.sql.types.StringType)
-    seedOnce(refDir) {
-      corpus.filter(col(keyCol).isNotNull).groupBy(col(keyCol))
-        .agg(count(lit(1)).as("c_ref"))
-        .write.mode("overwrite").parquet(refDir)
+    def keyCounts(df: DataFrame, c: String): DataFrame =
+      df.filter(col(keyCol).isNotNull).groupBy(col(keyCol))
+        .agg(count(lit(1)).as(c))
+    seedRows(refDir)(keyCounts(corpus, "c_ref"))
+    mountReadOnly(spark.readStream.schema(schemaOf(idCol -> LongType,
+        keyCol -> StringType)).json(docsDir),
+        checkpointDir, outDir, spread = false) { t =>
+      Corpus.driftFromCounts(t.read(refDir), keyCounts(t.b, "c_cur"), keyCol)
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          graft.ext.Corpus.driftFromCounts(
-              s.read.parquet(refDir),
-              batch.filter(col(keyCol).isNotNull).groupBy(col(keyCol))
-                .agg(count(lit(1)).as("c_cur")),
-              keyCol)
-            .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        }
-      }
-      .start()
   }
 
   /** Streaming split routing — the x102 contract mounted at ingest with
@@ -1942,10 +1577,9 @@ object DeltaStream {
     * third maintained table (`textsDir`, seeded from the corpus, appended
     * per batch) so per-batch verify-join cost follows the candidate set —
     * the stream history is never re-read as JSON. Each batch appends its
-    * own signatures, texts, and assigned keys; retry idempotence is the
-    * sibling mounts' contract (table reads exclude the current batch's
-    * ids, appends exclude ids already present, outputs
-    * overwrite-per-batch).
+    * own signatures, texts, and assigned keys (the keys re-read from the
+    * just-written output — no second routing pass); replay safety is the
+    * id-keyed shape's.
     */
   def startSplitRouting(spark: SparkSession, docsDir: String,
       corpusDocs: DataFrame, sigsDir: String, keysDir: String,
@@ -1955,70 +1589,32 @@ object DeltaStream {
       bands: Int = 4, shingleLen: Int = 5, thNum: Int = 4,
       thDen: Int = 5, textsDirOpt: String = null): StreamingQuery = {
     val textsDir = Option(textsDirOpt).getOrElse(s"$sigsDir-texts")
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
-    seedOnce(sigsDir) {
-      graft.ext.Dedup.minhashSignatures(
-          graft.util.Par.spread(corpusDocs), textCol, idCol, k, shingleLen)
-        .write.mode("overwrite").parquet(sigsDir)
-    }
-    seedOnce(keysDir) {
-      val pairs = graft.ext.Dedup.minhashNearDups(corpusDocs, textCol,
+    seedRows(sigsDir)(Dedup.minhashSignatures(
+      Par.spread(corpusDocs), textCol, idCol, k, shingleLen))
+    seedRows(keysDir) {
+      val pairs = Dedup.minhashNearDups(corpusDocs, textCol,
         idCol, k, bands, shingleLen, thNum, thDen)
         .select(col("doc_a"), col("doc_b"))
       corpusDocs.select(col(idCol))
-        .join(graft.ext.Dedup.dupClusters(pairs)
+        .join(Dedup.dupClusters(pairs)
           .withColumnRenamed("member_id", idCol), Seq(idCol), "left")
         .select(col(idCol),
           coalesce(col("canonical_id"), col(idCol)).as("split_key"))
-        .write.mode("overwrite").parquet(keysDir)
     }
-    seedOnce(textsDir) {
-      corpusDocs.select(col(idCol), col(textCol))
-        .write.mode("overwrite").parquet(textsDir)
+    seedRows(textsDir)(corpusDocs.select(col(idCol), col(textCol)))
+    mountKeyed(spark.readStream.schema(docSchema(idCol, textCol)).json(docsDir),
+        checkpointDir, outDir, idCol) { t =>
+      val sigs = t.others(sigsDir)
+      val keys = t.others(keysDir)
+      t.emit(Corpus.splitRouteAgainst(t.b, sigs, t.others(textsDir), keys,
+        textCol, idCol, valFrac, testFrac, salt, k, bands, shingleLen,
+        thNum, thDen))
+      t.append(sigsDir)(
+        Dedup.minhashSignatures(t.b, textCol, idCol, k, shingleLen))
+      t.append(textsDir)(t.b.select(col(idCol), col(textCol)))
+      t.append(keysDir)(
+        t.read(t.out).select(col(idCol), col("split_key")))
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(docsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val b = graft.util.Par.spread(batch).persist()
-          try {
-            val batchIds = b.select(col(idCol))
-            val sigs = s.read.parquet(sigsDir)
-              .join(broadcast(batchIds), Seq(idCol), "left_anti")
-            val keys = s.read.parquet(keysDir)
-              .join(broadcast(batchIds), Seq(idCol), "left_anti")
-            // texts from the maintained side table, not a re-read of the
-            // whole stream directory: per-batch cost tracks the candidate
-            // verify join, not total stream history
-            val texts = s.read.parquet(textsDir)
-              .join(broadcast(batchIds), Seq(idCol), "left_anti")
-            graft.ext.Corpus.splitRouteAgainst(b, sigs, texts, keys,
-                textCol, idCol, valFrac, testFrac, salt, k, bands,
-                shingleLen, thNum, thDen)
-              .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-            val present = s.read.parquet(sigsDir).select(col(idCol))
-            graft.ext.Dedup.minhashSignatures(b, textCol, idCol, k, shingleLen)
-              .join(present, Seq(idCol), "left_anti")
-              .write.mode("append").parquet(sigsDir)
-            val presentTexts = s.read.parquet(textsDir).select(col(idCol))
-            b.select(col(idCol), col(textCol))
-              .join(presentTexts, Seq(idCol), "left_anti")
-              .write.mode("append").parquet(textsDir)
-            // the routed keys re-read from the just-written output — no
-            // second routing pass; append only ids the table lacks
-            val presentKeys = s.read.parquet(keysDir).select(col(idCol))
-            s.read.parquet(s"$outDir/batch-$batchId")
-              .select(col(idCol), col("split_key"))
-              .join(presentKeys, Seq(idCol), "left_anti")
-              .write.mode("append").parquet(keysDir)
-          } finally b.unpersist()
-        }
-      }
-      .start()
   }
 
   /** Streaming retrieval probe — [[graft.ext.Corpus.bm25TopKAgainstPostings]]
@@ -2026,11 +1622,8 @@ object DeltaStream {
     * each micro-batch retrieves its top-`k` corpus documents against a
     * FIXED postings table seeded once from the corpus (the maintained-index
     * contract of x98: the corpus is tokenized exactly once, never per
-    * batch). Results land overwrite-per-batch at `outDir/batch-<id>` — a
-    * crashed-and-retried batch reproduces the same files, and because the
-    * table is read-only per batch, a query's retrieval result is
-    * independent of arrival order by construction (same guarantee as
-    * [[startImportanceGate]]'s fixed bucket tables).
+    * batch). Read-only shape: a query's retrieval result is independent
+    * of arrival order by construction.
     *
     * Scale shape per batch: the batch's own term explode + the term-keyed
     * postings probe (work ∝ Σ query-term df) + two map-side-combined
@@ -2041,25 +1634,13 @@ object DeltaStream {
       corpus: DataFrame, postingsDir: String, outDir: String,
       checkpointDir: String, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 10): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(textCol, org.apache.spark.sql.types.StringType)
-    seedOnce(postingsDir) {
-      graft.ext.Corpus.postingsTable(corpus, textCol, idCol)
-        .write.mode("overwrite").parquet(postingsDir)
+    seedRows(postingsDir)(Corpus.postingsTable(corpus, textCol, idCol))
+    mountReadOnly(spark.readStream
+        .schema(docSchema(idCol, textCol)).json(queriesDir),
+        checkpointDir, outDir, spread = false) { t =>
+      Corpus.bm25TopKAgainstPostings(t.b, t.read(postingsDir), idCol,
+        textCol, k)
     }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(queriesDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          graft.ext.Corpus.bm25TopKAgainstPostings(batch,
-              s.read.parquet(postingsDir), idCol, textCol, k)
-            .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        }
-      }
-      .start()
   }
 
   /** Streaming semantic decontamination — x132's contract mounted at
@@ -2071,8 +1652,7 @@ object DeltaStream {
     * verdict is arrival-order independent by construction) and the eval
     * vector table (the benchmark is fixed). Per-batch work is the batch's
     * own map-only assignment + one cell equi-join against the eval probes
-    * — ∝ batch, never ∝ history. Outputs overwrite per batch
-    * (retry-idempotent, the sibling mounts' contract).
+    * — ∝ batch, never ∝ history (read-only shape).
     */
   def startSemanticDecontam(spark: SparkSession, vecsDir: String,
       corpusEmb: DataFrame, evalEmb: DataFrame, centsDir: String,
@@ -2080,32 +1660,15 @@ object DeltaStream {
       idCol: String = "vec_id", vecCol: String = "embedding",
       nCells: Int = 16, nprobe: Int = 2,
       threshold: Double = 0.45): StreamingQuery = {
-    import graft.ext.Similarity
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add(vecCol, org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType))
-    seedOnce(centsDir) {
-      Similarity.centroidTable(corpusEmb, idCol, vecCol, nCells)
-        .write.mode("overwrite").parquet(centsDir)
+    seedRows(centsDir)(
+      Similarity.centroidTable(corpusEmb, idCol, vecCol, nCells))
+    seedRows(evalDir)(evalEmb.select(col(idCol), col(vecCol)))
+    mountReadOnly(spark.readStream
+        .schema(vecSchema(idCol, vecCol)).json(vecsDir),
+        checkpointDir, outDir, spread = false) { t =>
+      Similarity.semanticContaminationAgainst(t.b, t.read(evalDir), idCol,
+        vecCol, t.read(centsDir), nprobe, threshold)
     }
-    seedOnce(evalDir) {
-      evalEmb.select(col(idCol), col(vecCol))
-        .write.mode("overwrite").parquet(evalDir)
-    }
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(vecsDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          Similarity.semanticContaminationAgainst(batch,
-              s.read.parquet(evalDir), idCol, vecCol,
-              s.read.parquet(centsDir), nprobe, threshold)
-            .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        }
-      }
-      .start()
   }
 
   /** Streaming takedown scan — the right-to-be-forgotten mount of
@@ -2113,11 +1676,10 @@ object DeltaStream {
     * (deletion requests arrive over time; the corpus is at rest). Each
     * micro-batch of requested keys scans the corpus once and emits the
     * TOMBSTONES — the keys that actually exist and must be purged — to
-    * `outDir/batch-<id>`, overwrite-per-batch so a crashed-and-retried
-    * batch reproduces the same files (retry-idempotent, the
-    * [[startNearDupFlagging]] contract). Downstream compaction applies the
-    * tombstones with one anti-join ([[graft.ext.Blocklist.bloomAntiJoin]]
-    * when the accumulated list outgrows a broadcast).
+    * `outDir/batch-<id>` (read-only shape). Downstream compaction applies
+    * the tombstones with one anti-join
+    * ([[graft.ext.Blocklist.bloomAntiJoin]] when the accumulated list
+    * outgrows a broadcast).
     *
     * Scale shape: the corpus read is pruned to the key column (parquet
     * column pruning — the scan never touches text), and the batch's keys
@@ -2126,30 +1688,21 @@ object DeltaStream {
     */
   def startTakedownScan(spark: SparkSession, feedDir: String,
       corpusPath: String, outDir: String, checkpointDir: String,
-      keyCol: String = "doc_id"): StreamingQuery = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(keyCol, org.apache.spark.sql.types.LongType)
-    cleanStaleBatchDirs(spark, checkpointDir, outDir)
-    spark.readStream.schema(schema).json(feedDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          s.read.parquet(corpusPath).select(col(keyCol))
-            .join(broadcast(batch.select(col(keyCol)).distinct()),
-              Seq(keyCol), "left_semi")
-            .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        }
-      }
-      .start()
-  }
+      keyCol: String = "doc_id"): StreamingQuery =
+    mountReadOnly(spark.readStream
+        .schema(schemaOf(keyCol -> LongType)).json(feedDir),
+        checkpointDir, outDir, spread = false) { t =>
+      t.read(corpusPath).select(col(keyCol))
+        .join(broadcast(t.b.select(col(keyCol)).distinct()),
+          Seq(keyCol), "left_semi")
+    }
 
   /** TAKEDOWN FEED over DELETION VECTORS — [[startTakedownScan]] grown
-    * into the lakehouse loop: removal requests stream in, and each
-    * micro-batch MASKS its keys in the sharded table's deletion vector
-    * ([[graft.util.Scan.deleteByKeysDeferred]] — one metadata swap, no
-    * shard rewritten, takedown latency decoupled from rewrite cost);
-    * the physical rewrite rides the staleness trigger
+    * into the lakehouse loop (a sharded-table mount): removal requests
+    * stream in, and each micro-batch MASKS its keys in the sharded
+    * table's deletion vector ([[graft.util.Scan.deleteByKeysDeferred]] —
+    * one metadata swap, no shard rewritten, takedown latency decoupled
+    * from rewrite cost); the physical rewrite rides the staleness trigger
     * (`maxStaleFraction`), because the masked counts fold into
     * `_stale_rows` — the same signal, so compaction both merges small
     * files AND applies the accumulated vector in one scheduled pass.
@@ -2163,68 +1716,40 @@ object DeltaStream {
     * typed here, loudly, once).
     *
     * Two-writer reality: this mount may share the table with an ingest
-    * mount. The writer lease serializes them — a batch that loses the
-    * race retries with backoff instead of failing the stream
-    * (`maxAttempts` bounds it; exhausting the attempts fails the
-    * batch, and the checkpoint retries it — converging, never
-    * corrupting).
+    * mount. The writer lease serializes them ([[retryLease]]).
     */
   def startTakedownMaintained(spark: SparkSession, feedDir: String,
       tableDir: String, checkpointDir: String,
       keyField: String = "key",
       maxStaleFraction: Double = 0.0,
       maxAttempts: Int = 50,
-      maxKeysPerBatch: Int = 100000): StreamingQuery = {
-    import graft.util.Scan
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(keyField, org.apache.spark.sql.types.StringType)
-    spark.readStream.schema(schema).json(feedDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val keyCol = Scan.bloomConfigOf(s, tableDir).map(_._1)
-            .getOrElse(sys.error(s"takedown mount: $tableDir has no " +
-              "bloom index — deletion vectors key on the bloom column"))
-          val keyType = Scan.tableSchemaOf(s, tableDir)
-            .flatMap(sc => sc.fields.find(_.name == keyCol))
-            .map(_.dataType)
-            .getOrElse(sys.error(s"takedown mount: $tableDir has no " +
-              s"declared schema naming '$keyCol'"))
-          val raw = batch.select(col(keyField).cast(keyType))
-            .filter(col(keyField).isNotNull)
-            .distinct().limit(maxKeysPerBatch + 1)
-            .collect().map(_.get(0)).toSeq
-          require(raw.size <= maxKeysPerBatch,
-            s"takedown batch exceeds $maxKeysPerBatch keys — split the " +
-              "feed; a corpus-sized key list is a rewrite, not a takedown")
-          if (raw.nonEmpty) {
-            def attempt(n: Int): Unit =
-              try { Scan.deleteByKeysDeferred(s, tableDir, raw); () }
-              catch {
-                case _: Scan.ConcurrentWriterException
-                    if n < maxAttempts =>
-                  Thread.sleep(200); attempt(n + 1)
-              }
-            attempt(0)
-            if (maxStaleFraction > 0 &&
-                Scan.manifestStaleness(s, tableDir) > maxStaleFraction) {
-              def compactAttempt(n: Int): Unit =
-                try {
-                  graft.util.Compaction.compactSharded(s, tableDir)
-                  ()
-                } catch {
-                  case _: Scan.ConcurrentWriterException
-                      if n < maxAttempts =>
-                    Thread.sleep(200); compactAttempt(n + 1)
-                }
-              compactAttempt(0)
-            }
-          }
-        }
+      maxKeysPerBatch: Int = 100000): StreamingQuery =
+    mount(spark.readStream
+        .schema(schemaOf(keyField -> StringType)).json(feedDir),
+        checkpointDir, None, spread = false) { (batch, _) =>
+      val s = batch.sparkSession
+      val keyCol = Scan.bloomConfigOf(s, tableDir).map(_._1)
+        .getOrElse(sys.error(s"takedown mount: $tableDir has no " +
+          "bloom index — deletion vectors key on the bloom column"))
+      val keyType = Scan.tableSchemaOf(s, tableDir)
+        .flatMap(sc => sc.fields.find(_.name == keyCol))
+        .map(_.dataType)
+        .getOrElse(sys.error(s"takedown mount: $tableDir has no " +
+          s"declared schema naming '$keyCol'"))
+      val raw = batch.select(col(keyField).cast(keyType))
+        .filter(col(keyField).isNotNull)
+        .distinct().limit(maxKeysPerBatch + 1)
+        .collect().map(_.get(0)).toSeq
+      require(raw.size <= maxKeysPerBatch,
+        s"takedown batch exceeds $maxKeysPerBatch keys — split the " +
+          "feed; a corpus-sized key list is a rewrite, not a takedown")
+      if (raw.nonEmpty) {
+        retryLease(maxAttempts)(Scan.deleteByKeysDeferred(s, tableDir, raw))
+        if (maxStaleFraction > 0 &&
+            Scan.manifestStaleness(s, tableDir) > maxStaleFraction)
+          retryLease(maxAttempts)(Compaction.compactSharded(s, tableDir))
       }
-      .start()
-  }
+    }
 
   /** Watermarked windowed aggregation over an ODS-shaped stream: events per
     * (event-time window × magnitude category). Late data beyond the

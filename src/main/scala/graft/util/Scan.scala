@@ -225,6 +225,22 @@ object Scan {
       c.sidecarSchema((new Path(dir).toString, name)) = df.schema
   }
 
+  /** Settle concurrent sidecar swaps (`frames(i)` was swapped into
+    * sidecar `name` by the future behind `done(i)`): a swap that landed
+    * wrote exactly its frame, so its schema is noted; a FAILED swap may
+    * have left either version on disk, so its entry is invalidated and
+    * the next construction re-infers. Then the first failure rethrows. */
+  private def settleSidecarSwaps(dir: String,
+      frames: Seq[(String, DataFrame)],
+      done: Seq[scala.util.Try[Unit]]): Unit = {
+    frames.zip(done).foreach {
+      case ((name, df), scala.util.Success(_)) =>
+        noteSidecarSchema(dir, name, df)
+      case ((name, _), _) => invalidateSidecarSchema(dir, name)
+    }
+    done.collectFirst { case scala.util.Failure(e) => throw e }
+  }
+
   /** Construct a sidecar read, memoizing the sidecar's SCHEMA per verb
     * chain so repeat constructions skip parquet schema inference. The
     * data itself stays a fresh lazy frame every time. */
@@ -763,12 +779,9 @@ object Scan {
           val done = folds.map(f => scala.util.Try(
             Await.result(f, SidecarAwait)))
           // the folds rewrote both sidecars (and may have ADDED
-          // `_stale_rows` to a pre-staleness manifest) — the on-disk
-          // schemas are now exactly the written frames'
-          noteSidecarSchema(dir, StatsSidecar, merged)
-          mergedBloom.foreach(mb =>
-            noteSidecarSchema(dir, BloomSidecar, mb))
-          done.collectFirst { case scala.util.Failure(e) => throw e }
+          // `_stale_rows` to a pre-staleness manifest)
+          settleSidecarSwaps(dir, (StatsSidecar -> merged) +:
+            mergedBloom.map(BloomSidecar -> _).toSeq, done)
         }
         // 3. data lands last — the manifests already cover it; one file
         // per touched shard per batch (shard-keyed exchange), so file
@@ -785,32 +798,21 @@ object Scan {
     * its CURRENT files — the maintenance call after any rewrite that
     * bypassed [[writeSharded]] (and the healer for the recovery window
     * documented on [[graft.dw.Merge.atomicOverwriteDir]]). Stats columns
-    * and bloom parameters are recovered from the existing sidecars when
-    * not passed — a refresh never silently changes what the manifest
-    * covers.
+    * are recovered from the existing sidecars when not passed, and the
+    * bloom geometry ALWAYS is ([[bloomConfigOf]] — the meta sidecar, or
+    * the bloom sidecar of a pre-meta table): the delete paths probe with
+    * that geometry, so bits rebuilt with any other m/k would silently
+    * miss rows. A refresh never changes what the manifest covers.
     */
   def refreshManifests(spark: SparkSession, dir: String,
-      statCols: Seq[String] = Nil, shardCol: String = "shard",
-      bloomKeyCol: Option[String] = None, bloomM: Int = 4096,
-      bloomK: Int = 3): Unit =
+      statCols: Seq[String] = Nil, shardCol: String = "shard"): Unit =
       withSidecarCtx { withWriterLease(spark, dir) {
-    val meta = readMeta(spark, dir)
     val sc =
       if (statCols.nonEmpty) statCols
       else statColsOf(spark, dir)
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val bloomCfg = bloomKeyCol.map((_, bloomM, bloomK))
-      .orElse(meta.flatMap(m =>
-        m.bloomKey.map((_, m.bloomM, m.bloomK))))
-      .orElse {
-        if (!fs.exists(new Path(s"$dir/$BloomSidecar"))) None
-        else {
-          val r = bloomManifest(spark, dir)
-            .select("key_col", "m", "k").limit(1).head()
-          Some((r.getString(0), r.getInt(1), r.getInt(2)))
-        }
-      }
+    val bloomCfg = bloomConfigOf(spark, dir)
     // each sidecar swaps independently (sidecar paths are `_`-prefixed,
     // so their own __swap_new dirs stay invisible to table readers);
     // the declared-schema read null-fills evolved columns in old files
@@ -861,9 +863,8 @@ object Scan {
           s"$dir/$BloomSidecar")))
       val done = swaps.map(f => scala.util.Try(
         Await.result(f, SidecarAwait)))
-      noteSidecarSchema(dir, StatsSidecar, stats)
-      mb.foreach(df => noteSidecarSchema(dir, BloomSidecar, df))
-      done.collectFirst { case scala.util.Failure(e) => throw e }
+      settleSidecarSwaps(dir, (StatsSidecar -> stats) +:
+        mb.map(BloomSidecar -> _).toSeq, done)
     }
     logEntry(spark, dir, "refresh", s"stat_cols=${sc.mkString("+")}")
   } }
@@ -987,8 +988,9 @@ object Scan {
     }
     // the bloom future is awaited even when the stats pass THROWS — no
     // orphaned job keeps writing into the table dir while the caller
-    // unwinds; the stats failure stays primary, a bloom-only failure
-    // surfaces as its own. Finite timeout: see [[SidecarAwait]].
+    // unwinds; the stats failure stays primary and carries a bloom
+    // failure as suppressed, a bloom-only failure surfaces as its own.
+    // Finite timeout: see [[SidecarAwait]].
     var primary: Throwable = null
     try {
       graft.ext.Corpus.shardStats(back, shardCol, statCols)
@@ -997,7 +999,10 @@ object Scan {
     } catch { case t: Throwable => primary = t; throw t }
     finally bloomFut.foreach { f =>
       try scala.concurrent.Await.result(f, SidecarAwait)
-      catch { case t: Throwable => if (primary == null) throw t }
+      catch {
+        case t: Throwable =>
+          if (primary == null) throw t else primary.addSuppressed(t)
+      }
     }
   }
 
@@ -1704,9 +1709,8 @@ object Scan {
           df, s"$dir/$BloomSidecar")))
       val done = swaps.map(f => scala.util.Try(
         Await.result(f, SidecarAwait)))
-      noteSidecarSchema(dir, StatsSidecar, statsDf)
-      bloomDf.foreach(df => noteSidecarSchema(dir, BloomSidecar, df))
-      done.collectFirst { case scala.util.Failure(e) => throw e }
+      settleSidecarSwaps(dir, (StatsSidecar -> statsDf) +:
+        bloomDf.map(BloomSidecar -> _).toSeq, done)
     }
     // deletion-vector entries for the rewritten shards are now applied
     // physically (every rewrite path computes kept rows DV-filtered —
@@ -2165,9 +2169,9 @@ object Scan {
         drop(new Path(s"$dir/${b}__swap_new"))
         drop(new Path(s"$dir/${b}__swap_old"))
       }
-      // a promoted meta/schema swap changed what the sidecars say
-      if (bases.exists(b => b == MetaSidecar || b == SchemaSidecar))
-        invalidateSidecarCtx(dir)
+      // a promoted swap of ANY sidecar (meta, schema, stats, bloom, dv)
+      // changed what the sidecars say
+      if (bases.nonEmpty) invalidateSidecarCtx(dir)
     }
     // history-log truncation: keep the newest LogKeep entries (a
     // streaming mount writes one per batch — unbounded without this);

@@ -734,6 +734,91 @@ class ScanSpec extends SparkSpec {
     assert(Scan.readMeta(spark, dir).get.nShards === Some(10))
   }
 
+  test("sidecar memo: a FAILED manifest swap invalidates the chain's " +
+    "memoized sidecar schema instead of recording the unwritten frame's") {
+    val dir = freshDir()
+    publish(dir)
+    // a pre-staleness stats manifest (no `_stale_rows`) whose shard-0
+    // row count sits at Long.MaxValue: the append's additive n_rows fold
+    // overflows (ANSI arithmetic) inside the stats swap's write, so the
+    // swap fails and the old manifest stays on disk
+    val statsPath = s"$dir/${Scan.StatsSidecar}"
+    graft.dw.Merge.atomicOverwrite(spark, spark.read.parquet(statsPath)
+      .drop("_stale_rows")
+      .withColumn("n_rows", when(col("shard") === 0, lit(Long.MaxValue))
+        .otherwise(col("n_rows"))), statsPath)
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try Scan.withSidecarCtx {
+      assert(!Scan.statsManifest(spark, dir).columns
+        .contains("_stale_rows"))
+      intercept[Exception] {
+        Scan.appendSharded(spark,
+          Seq((5000L, 42L, 420L, "t0", 0, 42L)).toDF("event_id",
+            "user_id", "ts_us", "event_type", "shard", "zvalue"),
+          dir, "event_id")
+      }
+      assert(!spark.read.parquet(statsPath).columns
+        .contains("_stale_rows"))
+      // the chain's next read describes the manifest ON DISK
+      assert(!Scan.statsManifest(spark, dir).columns
+        .contains("_stale_rows"))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  test("sidecar memo: vacuum promoting ANY sidecar's completed swap " +
+    "(here stats) invalidates the chain's memo") {
+    val dir = freshDir()
+    publish(dir)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val statsPath = s"$dir/${Scan.StatsSidecar}"
+    Scan.withSidecarCtx {
+      assert(!Scan.statsManifest(spark, dir).columns.contains("score_min"))
+      // the crash window between a stats swap's renames: a complete,
+      // WIDER version in `__swap_new` and no base
+      spark.read.parquet(statsPath).withColumn("score_min", lit(0L))
+        .write.parquet(statsPath + "__swap_new")
+      fs.delete(new org.apache.hadoop.fs.Path(statsPath), true)
+      Scan.vacuumTable(spark, dir)
+      assert(fs.exists(new org.apache.hadoop.fs.Path(statsPath)))
+      assert(Scan.statsManifest(spark, dir).columns.contains("score_min"))
+    }
+  }
+
+  test("refreshManifests rebuilds bloom bits with the table's OWN " +
+    "geometry (meta), so a delete probing with it still finds its rows") {
+    val dir = freshDir()
+    Scan.writeSharded(spark, laid, dir,
+      statCols = Seq("user_id", "ts_us"), sortCol = Some("zvalue"),
+      bloomKeyCol = Some("user_id"), bloomM = 1024, bloomK = 2)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/${Scan.BloomSidecar}"),
+      true)
+    Scan.refreshManifests(spark, dir)
+    val b = Scan.bloomManifest(spark, dir).head()
+    assert(b.getAs[Int]("m") === 1024 && b.getAs[Int]("k") === 2)
+    Scan.deleteByKeys(spark, dir, Seq(777L))
+    assert(spark.read.parquet(dir).filter(col("user_id") === 777L)
+      .count() === 0L)
+    assert(spark.read.parquet(dir).count() === 999L)
+  }
+
+  test("writeSharded: a bloom-pass failure rides the stats-pass failure " +
+    "as a suppressed exception instead of being dropped") {
+    val dir = freshDir()
+    val e = intercept[Exception] {
+      Scan.writeSharded(spark, laid, dir, statCols = Seq("no_such_stat"),
+        bloomKeyCol = Some("no_such_key"))
+    }
+    // the stats failure stays primary; Spark may attach its own
+    // stack-trace carrier, so count the suppressed bloom failure itself
+    assert(e.getMessage.contains("no_such_stat"))
+    assert(e.getSuppressed.count(s =>
+      String.valueOf(s.getMessage).contains("no_such_key")) === 1)
+  }
+
   test("writer lease: a second mutator aborts LOUDLY while the lease " +
     "is held, succeeds after release, and a crashed writer's expired " +
     "lease is broken — never a silent last-swap-wins") {
