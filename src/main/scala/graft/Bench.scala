@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
   /** Materialize the FULL result — every projected column and the final
     * sort — via the noop sink. A bare `df.count()` lets Catalyst's
@@ -96,54 +96,10 @@ object Bench {
     val load0 = loadavg()
     val steal0 = stealTicks()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // see GraftSession: coalesce tiny exchanges to the advisory size
-      // instead of pinning every stage at `cpus` tasks
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // floor of 8: see GraftSession — byte-based coalescing starved a
-      // compute-dense candidate shuffle down to one task at sf1
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", "8")
-      // start exchanges wide and let AQE coalesce DOWN to the advisory
-      // size: see GraftSession — a fixed cpus-sized partition count made
-      // partitions grow with the data (measured 1.7x on the 100x probe's
-      // gram shuffle), while a flat 256 paid ~3.8 s per warehouse chain at
-      // sf0.1 (round-10/11 A/B). Derived from the input footprint —
-      // 32 at sf0.1, 256 at sf10 — env-overridable for A/B attribution.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTS",
-          graft.util.GraftSession.initialPartitions(
-            graft.util.GraftSession.dirBytes(sfDir), cpus.toInt).toString))
-      // single-JVM local run: the executor IS the driver, so heartbeat
-      // eviction is pure downside — under full 32-thread load at sf1 the
-      // heartbeater starved past the 120 s default, HeartbeatReceiver
-      // evicted the local executor, and the fork died with exit 56
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "800s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
+    val spark = graft.util.GraftSession.forData(sfDir)
     // SPARK_GRAFT_ONLY=a,b,c runs a subset — for iterating on one query and
     // for the sf1 scale probe (BASELINE.md) without paying the full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val queries = only match {
-      case Some(names) =>
-        // a misspelled name must not yield a silent empty suite (bench.json
-        // with total 0 reads as a suspiciously fast valid run)
-        val unknown = names -- SparkEntry.queries.keySet
-        if (unknown.nonEmpty)
-          System.err.println(s"[bench] WARNING: unknown SPARK_GRAFT_ONLY names: ${unknown.toSeq.sorted.mkString(",")}")
-        val qs = SparkEntry.queries.filter { case (n, _) => names(n) }
-        require(qs.nonEmpty, s"SPARK_GRAFT_ONLY matched no queries: ${names.toSeq.sorted.mkString(",")}")
-        qs
-      case None => SparkEntry.queries
-    }
+    val queries = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val pretouchOome =
       if (sys.env.getOrElse("SPARK_GRAFT_PRETOUCH", "1") != "0") preTouchHeap()
       else false
@@ -159,21 +115,12 @@ object Bench {
     val runs = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     // per-query exchange-width overrides (SparkEntry.initialParts): applied
     // around BOTH the warm-ups and the timed reps, restored to the session
-    // default after — AQE reads the conf at stage execution, so setting it
-    // here (not inside the lazy query fn) is what actually takes effect
-    val partsKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val defaultParts = spark.conf.get(partsKey)
-    // SPARK_GRAFT_INITIAL_PARTS wins over the per-query map: an A/B run
-    // requesting a width must actually measure it, including for the
-    // queries the map covers (round-12 advice — the override silently
-    // measured 256 vs 256 for exactly the x96/x99/x137/x138 family)
-    val envParts = sys.env.contains("SPARK_GRAFT_INITIAL_PARTS")
+    // default after
+    val defaultParts =
+      spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
     val loads = scala.collection.mutable.LinkedHashMap[String, Seq[String]]()
     val results = queries.map { case (name, fn) =>
-      SparkEntry.initialParts.get(name) match {
-        case Some(n) if !envParts => spark.conf.set(partsKey, n.toString)
-        case _ => spark.conf.set(partsKey, defaultParts)
-      }
+      SparkEntry.setInitialParts(spark, name, defaultParts)
       // Untimed warm-up run IMMEDIATELY before the query's timed reps — a
       // single suite-level warm-up pass decayed by the time a late query's
       // reps ran (JIT code cache evicted, file cache cold, previous

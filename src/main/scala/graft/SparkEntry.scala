@@ -42,4 +42,36 @@ object SparkEntry {
     "x99_hybrid_rrf" -> 256,
     "x137_lm_backoff_score" -> 256,
     "x138_lm_incr" -> 256)
+
+  /** Set the session's `initialPartitionNum` for query `name`: its
+    * [[initialParts]] entry, else `default`. SPARK_GRAFT_INITIAL_PARTS
+    * wins over the per-query map: an A/B run requesting a width must
+    * actually measure it, including for the queries the map covers
+    * (round-12 advice — the override silently measured 256 vs 256 for
+    * exactly the x96/x99/x137/x138 family). AQE reads the conf at stage
+    * execution, so setting it before the query runs is what takes effect.
+    */
+  def setInitialParts(spark: SparkSession, name: String, default: String): Unit =
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+      initialParts.get(name).filterNot(_ => sys.env.contains("SPARK_GRAFT_INITIAL_PARTS"))
+        .fold(default)(_.toString))
+
+  /** The queries a driver main runs: those named in `only` (the comma
+    * list of SPARK_GRAFT_ONLY), or all of them when it is unset. Unknown
+    * names are reported through `warn`, and a list naming no query
+    * throws: a misspelled name must not yield a silent empty suite
+    * (bench.json with total 0 reads as a suspiciously fast valid run).
+    */
+  def select(only: Option[String],
+      warn: String => Unit = System.err.println): Map[String, Q] =
+    only.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet) match {
+      case Some(names) =>
+        val unknown = names -- queries.keySet
+        if (unknown.nonEmpty)
+          warn(s"WARNING: unknown SPARK_GRAFT_ONLY names: ${unknown.toSeq.sorted.mkString(",")}")
+        val qs = queries.filter { case (n, _) => names(n) }
+        require(qs.nonEmpty, s"SPARK_GRAFT_ONLY matched no queries: ${names.toSeq.sorted.mkString(",")}")
+        qs
+      case None => queries
+    }
 }

@@ -50,55 +50,33 @@ object Verify {
     failed.toMap
   }
 
+  /** JSON string literal of `s`. Escapes backslash, quote, and ALL control
+    * chars (<0x20) — a tab or CR in builder-authored SQL would otherwise
+    * make the driver's json.load fail and silently zero the round's
+    * correctness.
+    */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // see GraftSession: coalesce tiny exchanges to the advisory size,
-      // floored at 8 tasks for compute-dense narrow shuffles
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", "8")
-      // see GraftSession: initial partitions input-footprint-derived, AQE
-      // coalesces down — partition size must not grow with the data
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.util.GraftSession.initialPartitions(
-          graft.util.GraftSession.dirBytes(sfDir), cpus.toInt).toString)
-      // single-JVM local run (see Bench): under full thread load the
-      // heartbeater can starve past the default, HeartbeatReceiver evicts
-      // the local executor, and the fork dies with exit 56
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "800s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.GraftSession.forData(sfDir)
     // SPARK_GRAFT_ONLY=a,b,c dumps a subset — local iteration on one query
     // without paying the full suite (driver runs without it → full dump)
-    val queries = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .map(names => SparkEntry.queries.filter { case (n, _) => names(n) })
-      .getOrElse(SparkEntry.queries)
+    val queries = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val failed = dumpQueries(spark, sfDir, outDir, queries)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/errors.json"),
-      failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+      failed.map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}"))
     spark.stop()
     // deliberately exit 0 even on per-query failures: round 7's bench showed
     // the driver discards the ENTIRE artifact on rc≠0 (parsed=null) — the

@@ -1974,7 +1974,8 @@ object Corpus {
     *    zero, the top interleaved bits would be the wide dimension
     *    alone, and the curve would degenerate to a 1-D sort on it
     *    (measured: the unscaled layout pruned NOTHING on the narrow
-    *    dimension — ZorderProbe);
+    *    dimension — BASELINE.md, "Round 13 — ZorderProbe: measured 2-d
+    *    skipping");
     *  - `zvalue`: bit-interleave of the two cells (x even bits, y odd
     *    bits), unrolled into `2·bits` shift/mask terms inside one
     *    codegen'd projection;

@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   *  3. per-slice counts/minima (a tiny `partitions × groups` aggregate)
   *     prefix-summed and broadcast back turn local ranks into global ones.
   *
-  * Measured (`graft.RanksProbe`, 1 M rows): the earlier window-based
-  * two-pass shuffled the corpus THREE times — the range exchange was built
+  * Measured (BASELINE.md, "Round 11 — Ranks.byValue", 1 M rows; pinned
+  * at 10 k rows by ProbeSpec): the earlier window-based two-pass
+  * shuffled the corpus THREE times — the range exchange was built
   * once per consumer (column pruning gives the two branches different
   * payloads, so ReuseExchange never fires) plus a hash exchange the
   * `row_number` window demanded because Catalyst cannot know

@@ -725,8 +725,9 @@ object Similarity {
     * folds are order-independent and the sqrt/division per score are the
     * only (correctly-rounded) IEEE ops, bit-identical across engines.
     * Recall = JL distortion (priced by x130) ∘ IVF cell loss (priced by
-    * x122); [[graft.JlRouteProbe]] measures the composed number against
-    * the full-dim exact baseline.
+    * x122); BASELINE.md, "Round 10 — JL+IVF production composition
+    * (x131)", records the composed number against the full-dim exact
+    * baseline.
     */
   def jlIvfTopK(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       outDims: Int, inDims: Int, nCells: Int, nprobe: Int = 1): DataFrame =

@@ -238,8 +238,9 @@ object TextAnalysis {
     * unchanged (it never touches the corpus again).
     *
     * The loop itself runs at PRODUCTION settings (30–50k merges over a
-    * 65k vocab, `graft.BpeTrainProbe` prices it): Sennrich's
-    * incremental structures, not a per-round recount —
+    * 65k vocab, priced in BASELINE.md, "BPE training at production
+    * settings"): Sennrich's incremental structures, not a per-round
+    * recount —
     *
     *  - `stats`: current weighted count per adjacent pair;
     *  - `indices`: pair → (word → #positions), so a merge touches ONLY

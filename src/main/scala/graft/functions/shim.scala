@@ -24,6 +24,14 @@ object shim {
     spark.sessionState.catalog.defaultTablePath(
       spark.sessionState.sqlParser.parseTableIdentifier(table)).toString
 
+  /** Block until the listener bus has delivered every event posted so far
+    * (Spark-private `LiveListenerBus.waitUntilEmpty`): the deterministic
+    * barrier a listener's counters need before they are read. Fixed sleeps
+    * under-counted under load (round-11 advice).
+    */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
+
   /** Whether `df` is currently registered in the session's cache manager
     * (i.e. persisted and not yet unpersisted/cleared). */
   def isCacheRegistered(df: org.apache.spark.sql.DataFrame): Boolean = {

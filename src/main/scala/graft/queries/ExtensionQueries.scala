@@ -45,9 +45,9 @@ object ExtensionQueries {
     * shard-partitioned WITH its stats + bloom manifests (one atomic
     * swap, [[graft.util.Scan.writeSharded]]), and return the table path
     * plus the deterministic mid-~10% predicate bounds on each dimension
-    * (the ZorderProbe selectivity, integer arithmetic mirrored exactly
-    * by the oracle). Idempotent: both queries rebuild the same bytes,
-    * so their order never matters.
+    * (the selectivity of BASELINE.md, "Round 13 — ZorderProbe", integer
+    * arithmetic mirrored exactly by the oracle). Idempotent: both
+    * queries rebuild the same bytes, so their order never matters.
     */
   private def PrunedTableBuild(s: org.apache.spark.sql.SparkSession,
       dir: String): (String, (Long, Long), (Long, Long)) = {
@@ -1424,8 +1424,9 @@ object ExtensionQueries {
     // (doc_id % 10 = 7 as the arrival), so per-run work is ∝ batch grams
     // — the corpus gram universe is never materialized (the batch form's
     // distinct() pays 59.4 s at 100×; this form's probe stage stays
-    // near-flat, X135bProbe). φ still reads TOTAL corpus mass from the
-    // sketch itself, so verdicts match the batch form on shared grams.
+    // near-flat, BASELINE.md "Round 11 — x135b"). φ still reads TOTAL
+    // corpus mass from the sketch itself, so verdicts match the batch
+    // form on shared grams.
     "x135b_cms_hh_probe" -> ((s, dir) => {
       val d = Tables(s, dir, "documents")
       // persisted: the sketch feeds the broadcast estimate build AND the

@@ -46,6 +46,55 @@ object GraftSession {
     walk(new java.io.File(path))
   }
 
+  /** The conf the driver mains ([[graft.Bench]], [[graft.Verify]],
+    * [[graft.Probe]]) run the queries under, so the program Bench times
+    * is the one Verify checks and Probe profiles. Pure: the mains read
+    * the environment and pass it in. Unlike [[local]], it installs no
+    * `GraftExtensions`.
+    *
+    * `initialParts` pins the AQE start-partition count (an A/B run's
+    * SPARK_GRAFT_INITIAL_PARTS); otherwise it is derived from the input
+    * footprint by [[initialPartitions]].
+    */
+  def dataConf(sfDir: String, cpus: Int, initialParts: Option[Int] = None)
+      : Map[String, String] = Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    // see `local`: coalesce tiny exchanges to the advisory size instead of
+    // pinning every stage at `cpus` tasks, floored at 8 tasks for
+    // compute-dense narrow shuffles
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+    "spark.sql.adaptive.coalescePartitions.minPartitionNum" -> "8",
+    // start exchanges wide and let AQE coalesce DOWN to the advisory size:
+    // a fixed cpus-sized count made partitions grow with the data
+    // (measured 1.7x on the 100x probe's gram shuffle), while a flat 256
+    // paid ~3.8 s per warehouse chain at sf0.1 (round-10/11 A/B) —
+    // 32 starts at sf0.1, 256 at sf10
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+      initialParts.getOrElse(initialPartitions(dirBytes(sfDir), cpus)).toString,
+    // single-JVM local run: the executor IS the driver, so heartbeat
+    // eviction is pure downside — under full 32-thread load at sf1 the
+    // heartbeater starved past the 120 s default, HeartbeatReceiver
+    // evicted the local executor, and the fork died with exit 56
+    "spark.executor.heartbeatInterval" -> "60s",
+    "spark.network.timeout" -> "800s",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false")
+
+  /** A driver main's session: [[dataConf]] with SPARK_GRAFT_CPUS (default
+    * 4) and SPARK_GRAFT_INITIAL_PARTS from the environment, logging at
+    * SPARK_GRAFT_LOGLEVEL (default WARN).
+    */
+  def forData(sfDir: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .config(dataConf(sfDir, sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
+        sys.env.get("SPARK_GRAFT_INITIAL_PARTS").map(_.toInt)))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
+    spark
+  }
+
   def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")

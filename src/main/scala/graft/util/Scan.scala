@@ -42,7 +42,8 @@ import org.apache.spark.sql.functions._
   * every lakehouse reader performs, bounded by shard count, never by data.
   * The data read is `|candidate shards| / |shards|` of the corpus; with a
   * z-ordered layout underneath, a d-dimensional predicate keeps that
-  * fraction small on EVERY clustered dimension (measured: ZorderProbe).
+  * fraction small on EVERY clustered dimension (measured: BASELINE.md,
+  * "Round 13 — ZorderProbe: measured 2-d skipping").
   */
 object Scan {
 
