@@ -1,8 +1,12 @@
 package graft.dw
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Dimension construction: distinct natural keys → dense sequential
   * surrogate IDs in sort order; delta loads continue from the current max.
@@ -20,6 +24,13 @@ import org.apache.spark.sql.functions._
   * over fact rows. NULL sorts first, making the engine strictly more defined
   * than the reference (Python `sorted()` raises on None among strings,
   * SURVEY §1.4/§7.4.5).
+  *
+  * Delta extension is the reference's own shape, on the driver:
+  * `enumerate(sorted(new values), start=max+1)` over the collected existing
+  * dimension and the collected new value tuples ([[extendRows]]). A bounded
+  * dimension is already pulled whole to the driver by the broadcast join
+  * that consumes it, so numbering its handful of new values there costs no
+  * Spark job; [[extendRows]] uses [[build]]'s order, so both number alike.
   */
 object DimBuilder {
 
@@ -57,31 +68,56 @@ object DimBuilder {
     */
   val DefaultMaxDimRows: Long = 10000000L
 
-  /** Null-safe multi-column anti join (J4): Python's `value not in dict`
-    * treats None as an ordinary key, so NULL dimension values must compare
-    * equal — SQL `=` would re-insert a NULL row on every delta. `<=>` keeps
-    * the anti join exact AND still hash-joinable (null-safe equality is a
-    * valid equi-join key for broadcast/shuffled hash).
+  /** Delta extension (`dw2_delta_load2.py:173-187`) on the driver:
+    * `existing` rows are `id +: key values`, `values` rows are key tuples in
+    * the same column order. Tuples absent from `existing` (null-safe: a
+    * NULL value matches a NULL value, as Python's `value not in dict` does)
+    * get ids continuing after the existing max, in [[build]]'s window order
+    * (ascending, NULLs first, strings by UTF-8 bytes as Spark compares
+    * them). Returns only the NEW rows, as `id +: keys` (the reference
+    * appends them to the table). The [[build]] bound holds over existing
+    * plus new rows.
     */
-  def antiJoinNullSafe(left: DataFrame, right: DataFrame, cols: Seq[String]): DataFrame = {
-    val r = right.select(cols.map(c => col(c).as(s"__r_$c")): _*)
-    val cond = cols.map(c => left(c) <=> r(s"__r_$c")).reduce(_ && _)
-    left.join(r, cond, "left_anti")
+  def extendRows(existing: Seq[Row], values: Iterable[Row],
+      maxDimRows: Long = DefaultMaxDimRows): Seq[Row] = {
+    val known = existing.iterator.map(_.toSeq.tail).toSet
+    val maxId = existing.iterator.map(_.getAs[Number](0).longValue).foldLeft(0L)(math.max)
+    val fresh = values.iterator.map(_.toSeq).filterNot(known).toSeq.distinct
+      .sorted(ascNullsFirst)
+    require(existing.size + fresh.size <= maxDimRows,
+      s"DimBuilder.extendRows: dimension exceeds maxDimRows=$maxDimRows rows" +
+        " — delta extension numbers BOUNDED dims on the driver; raise" +
+        " maxDimRows only if that cardinality is intended")
+    fresh.zipWithIndex.map { case (k, i) => Row.fromSeq((maxId + 1L + i) +: k) }
   }
 
-  /** Delta extension (`dw2_delta_load2.py:173-187`): values absent from the
-    * existing dimension get IDs continuing after `maxExistingId`. Returns
-    * only the NEW rows (the reference appends them to the table).
+  /** Spark's `asc_nulls_first` over a key tuple: column by column, NULL
+    * first, strings by their UTF-8 bytes (Spark's binary collation — not
+    * Java's UTF-16 `compareTo`, which orders supplementary-plane characters
+    * differently), other values by their natural order.
+    */
+  private val ascNullsFirst: Ordering[Seq[Any]] = (a, b) =>
+    a.iterator.zip(b.iterator).map {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x: String, y: String) =>
+        UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+      case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
+    }.find(_ != 0).getOrElse(0)
+
+  /** [[extendRows]] over DataFrames: the distinct `keyCols` tuples of `src`
+    * (named `outCols`) absent from `existing`, numbered after its max
+    * `idCol`, as a local relation of the new rows only.
     */
   def extend(existing: DataFrame, src: DataFrame, keyCols: Seq[Column],
       outCols: Seq[String], idCol: String): DataFrame = {
-    val maxId = existing.agg(max(col(idCol))).first() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
-    val fresh = antiJoinNullSafe(
-      src.select(keyCols.zip(outCols).map { case (c, n) => c.as(n) }: _*).distinct(),
-      existing, outCols)
-    build(fresh, outCols.map(col), outCols, idCol, startId = maxId + 1L)
+    val values = src.select(keyCols.zip(outCols).map { case (c, n) => c.as(n) }: _*)
+      .distinct()
+    val rows = extendRows(
+      existing.select((idCol +: outCols).map(col): _*).collect().toSeq,
+      values.collect().toSeq)
+    src.sparkSession.createDataFrame(rows.asJava,
+      StructType(StructField(idCol, LongType) +: values.schema.fields))
   }
 }

@@ -1,5 +1,6 @@
 package graft.dw
 
+import graft.schemas.Schemas
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,16 +30,34 @@ object FactBuilder {
   private def depthName: Column = coalesce(col("LB_depthCategory"), lit("Shallow"))
 
   /** All six dimensions from the enriched ODS (`dw_full_load2.py:102-182`). */
-  def buildDims(ods: DataFrame): Dims = Dims(
-    network = DimBuilder.build(ods, Seq(col("LB_net")), Seq("LB_NetworkSymbol"), "ID_Network_ID"),
-    regionCountry = DimBuilder.build(ods, Seq(col("LB_Region"), col("LB_Country")),
-      Seq("LB_Region", "LB_Country"), "ID_RegionCountry_ID"),
-    seismicType = DimBuilder.build(ods, Seq(col("LB_type")), Seq("LB_type"), "ID_type_ID"),
-    magCategory = DimBuilder.build(ods, Seq(magName), Seq("LB_magCategoryName"), "ID_magCategory_ID")
-      .withColumn("LB_magCategoryDescription", DateDim.magDescription(col("LB_magCategoryName"))),
-    depthCategory = DimBuilder.build(ods, Seq(depthName), Seq("LB_depthCategoryName"), "ID_depthCategory_ID")
-      .withColumn("LB_depthCategoryDescription", DateDim.depthDescription(col("LB_depthCategoryName"))),
-    date = DateDim.build(ods, to_timestamp(col("DT_time"), "yyyy-MM-dd HH:mm:ss")))
+  def buildDims(ods: DataFrame): Dims = {
+    def numbered(name: String): DataFrame = {
+      val cols = Schemas.dim(name).fieldNames.toSeq
+      DimBuilder.build(ods, dimValues(name), cols.tail, cols.head)
+    }
+    Dims(numbered("T_DIM_Network"), numbered("T_DIM_RegionCountry"),
+      numbered("T_DIM_Seismic_Activity_Type"), numbered("T_DIM_magCategory"),
+      numbered("T_DIM_depthCategory"),
+      DateDim.build(ods, to_timestamp(col("DT_time"), "yyyy-MM-dd HH:mm:ss")))
+  }
+
+  /** One dimension's row over enriched-ODS rows, as columns named and
+    * ordered like the dimension table's own: the key tuple of a
+    * surrogate-keyed dimension (the values [[buildDims]] numbers), or the
+    * whole row of the date dimension, whose id is intrinsic (NULL for a row
+    * without a parseable time).
+    */
+  def dimValues(name: String): Seq[Column] = name match {
+    case "T_DIM_Network" => Seq(col("LB_net").as("LB_NetworkSymbol"))
+    case "T_DIM_RegionCountry" => Seq(col("LB_Region"), col("LB_Country"))
+    case "T_DIM_Seismic_Activity_Type" => Seq(col("LB_type"))
+    case "T_DIM_magCategory" => Seq(magName.as("LB_magCategoryName"),
+      DateDim.magDescription(magName).as("LB_magCategoryDescription"))
+    case "T_DIM_depthCategory" => Seq(depthName.as("LB_depthCategoryName"),
+      DateDim.depthDescription(depthName).as("LB_depthCategoryDescription"))
+    case "T_DIM_date" =>
+      DateDim.attrs(to_timestamp(col("DT_time"), "yyyy-MM-dd HH:mm:ss").cast("date"))
+  }
 
   /** P14/J1 — fact assembly (`dw_full_load2.py:185-230`): five broadcast
     * null-safe left-outer dim joins, date key derived directly from

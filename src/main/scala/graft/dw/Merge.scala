@@ -3,6 +3,7 @@ package graft.dw
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** Upsert (MERGE) over plain parquet tables.
   *
@@ -128,11 +129,14 @@ object Merge {
   /** Full MERGE stage: read table, upsert staged batch, swap. The staged
     * batch is cached for the write: [[upsert]] consumes it twice (anti-join
     * keys + union payload) and its lineage is typically a multi-join build.
+    * `schema`, when given, is the table's declared schema: the read skips
+    * the footer-inference job.
     */
   def mergeInto(spark: SparkSession, tablePath: String, staged: DataFrame,
-      key: String = "ID_Event", preSwap: () => Unit = () => ()): Unit = {
+      key: String = "ID_Event", preSwap: () => Unit = () => (),
+      schema: Option[StructType] = None): Unit = {
     recover(spark, tablePath) // the read below must see a post-crash-complete table
-    val existing = spark.read.parquet(tablePath)
+    val existing = schema.fold(spark.read)(spark.read.schema).parquet(tablePath)
     val s = staged.persist()
     try atomicOverwrite(spark, upsert(existing, s, key), tablePath, preSwap)
     finally s.unpersist(blocking = false)

@@ -32,6 +32,24 @@ object shim {
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
 
+  /** A copy of the calling thread's Spark local properties (job group,
+    * scheduler pool, SQL execution ids; Spark-private
+    * `SparkContext.getLocalProperties`).
+    */
+  def localProperties(spark: org.apache.spark.sql.SparkSession): java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(spark.sparkContext.getLocalProperties)
+
+  /** Run `body` with `props` as this thread's Spark local properties, then
+    * restore the thread's own.
+    */
+  def withLocalProperties[T](spark: org.apache.spark.sql.SparkSession,
+      props: java.util.Properties)(body: => T): T = {
+    val sc = spark.sparkContext
+    val saved = sc.getLocalProperties
+    sc.setLocalProperties(props)
+    try body finally sc.setLocalProperties(saved)
+  }
+
   /** Whether `df` is currently registered in the session's cache manager
     * (i.e. persisted and not yet unpersisted/cleared). */
   def isCacheRegistered(df: org.apache.spark.sql.DataFrame): Boolean = {

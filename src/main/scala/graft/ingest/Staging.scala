@@ -138,6 +138,7 @@ object Staging {
       rejectedPath: String, jobId: String, insertionTs: String): RunMetrics = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
+    import graft.util.SparkFuture
     import org.apache.spark.sql.{Encoders, Observation}
     val file = latestFile(spark, rawPattern)
     val fileName = file.split('/').last
@@ -159,12 +160,12 @@ object Staging {
       // the two channel writes share only the cached parse — concurrent jobs
       implicit val ec: ExecutionContext = ExecutionContext.global
       Await.result(Future.sequence(Seq(
-        Future {
+        SparkFuture(spark) {
           finalizeStg(split.accepted, jobId, fileName, insertionTs)
             .observe(obsW, count(lit(1)).as("rows_written"))
             .write.mode("overwrite").parquet(stgPath)
         },
-        Future {
+        SparkFuture(spark) {
           // repartition(1), not coalesce(1): coalesce would collapse the
           // whole filter stage to one task; this filters wide and shuffles
           // only the handful of rejected lines to the single writer

@@ -4,14 +4,17 @@ import java.sql.Timestamp
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 
 import graft.archive.Archive
 import graft.dw.{DimBuilder, FactBuilder, Merge}
 import graft.ingest.Staging
 import graft.ods.{OdsTransform, PlaceParser}
+import graft.schemas.Schemas
+import graft.util.SparkFuture
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{collect_set, count, lit, struct}
 
 /** Warehouse layout: one parquet directory per layer table, mirroring the
   * reference's BigQuery datasets (STG_ds / ODS_ds / DW_ds, SURVEY §1.2).
@@ -53,25 +56,6 @@ object Controller {
     val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
-
-  private[pipeline] def dimKeys(name: String): Seq[String] = name match {
-    case "T_DIM_Network" => Seq("LB_NetworkSymbol")
-    case "T_DIM_RegionCountry" => Seq("LB_Region", "LB_Country")
-    case "T_DIM_Seismic_Activity_Type" => Seq("LB_type")
-    case "T_DIM_magCategory" => Seq("LB_magCategoryName", "LB_magCategoryDescription")
-    case "T_DIM_depthCategory" => Seq("LB_depthCategoryName", "LB_depthCategoryDescription")
-    case "T_DIM_date" => Seq("DT_date", "LB_DayOfWeek", "ID_DayOfWeekNb",
-      "ID_WeekNb", "LB_MonthName", "ID_MonthNb", "ID_Quarter", "ID_Year")
-  }
-
-  private[pipeline] def dimId(name: String): String = name match {
-    case "T_DIM_Network" => "ID_Network_ID"
-    case "T_DIM_RegionCountry" => "ID_RegionCountry_ID"
-    case "T_DIM_Seismic_Activity_Type" => "ID_type_ID"
-    case "T_DIM_magCategory" => "ID_magCategory_ID"
-    case "T_DIM_depthCategory" => "ID_depthCategory_ID"
-    case "T_DIM_date" => "ID_date_ID"
-  }
 }
 
 /** The full-load chain: STG → ODS → place parse → DW truncate-reload →
@@ -98,7 +82,8 @@ object FullLoad {
     // On a cluster this is the same standard overlap of sibling jobs'
     // scheduling fixed costs; restartability is unchanged — every layer is
     // still on disk when run() returns.
-    val ods = OdsTransform.toOds(spark.read.parquet(wh.stg), insertionTs).persist()
+    val ods = OdsTransform.toOds(spark.read.schema(Schemas.stg).parquet(wh.stg),
+      insertionTs).persist()
     val tOds = PlaceParser.parsePlaces(ods, states, insertionTs).persist()
     val dims = FactBuilder.buildDims(tOds)
     val byName = Map(
@@ -120,16 +105,16 @@ object FullLoad {
         // the staging metrics record is a metadata-sized append with no
         // reader in this chain — it overlaps the layer writes instead of
         // serializing between stage 1 and stage 2
-        Future(RunLog.append(spark, wh.runLog, jobId, "staging",
+        SparkFuture(spark)(RunLog.append(spark, wh.runLog, jobId, "staging",
           stgMetrics.counters, insertionTs)) +:
-        Future(ods.write.mode("overwrite").parquet(wh.ods)) +:
-        Future(tOds.observe(obsTOds, count(lit(1)).as("n"))
+        SparkFuture(spark)(ods.write.mode("overwrite").parquet(wh.ods)) +:
+        SparkFuture(spark)(tOds.observe(obsTOds, count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(wh.tOds)) +:
-        Future(FactBuilder.buildFact(tOds, dims, jobId, insertionTs)
+        SparkFuture(spark)(FactBuilder.buildFact(tOds, dims, jobId, insertionTs)
           .observe(obsFact, count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(wh.fact)) +:
         byName.toSeq.map { case (name, df) =>
-          Future(df.write.mode("overwrite").parquet(wh.dim(name)))
+          SparkFuture(spark)(df.write.mode("overwrite").parquet(wh.dim(name)))
         }), Duration.Inf)
       RunLog.append(spark, wh.runLog, jobId, "full_load", Map(
         "rows_tods_written" -> obsTOds.get("n").asInstanceOf[Long],
@@ -153,7 +138,7 @@ object FullLoad {
   */
 object DeltaLoad {
 
-  import Controller.{dimId, dimKeys, exists}
+  import Controller.exists
 
   def run(spark: SparkSession, rawPattern: String, states: DataFrame,
       wh: Warehouse, jobId: String, insertionTs: Timestamp): Unit = {
@@ -177,7 +162,7 @@ object DeltaLoad {
     // overlap with the heavy stages and closes only the append-vs-append
     // window (FullLoad gets the same ordering from its Future.sequence).
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val stgLog = Future(RunLog.append(spark, wh.runLog, jobId, "staging",
+    val stgLog = SparkFuture(spark)(RunLog.append(spark, wh.runLog, jobId, "staging",
       stgMetrics.counters, insertionTs))
 
     warehouseStages(spark, states, wh, jobId, insertionTs,
@@ -207,6 +192,15 @@ object DeltaLoad {
     * warehoused) skips dim extension and the fact MERGE outright — no
     * full-fact rewrite for a no-op batch.
     *
+    * Job shape: a 100-event delta is dominated by per-job cost, not data,
+    * so no job here exists only to answer a small question. Every table is
+    * read with its declared schema (no footer-inference job per read); one
+    * aggregate over the slice yields its row count and every dimension's
+    * distinct value tuples; each existing dimension is collected once (the
+    * broadcast joins would pull it whole to the driver anyway) and extended
+    * there by [[DimBuilder.extendRows]]; an extension with no new values
+    * appends nothing.
+    *
     * Replay safety (crash / streaming foreachBatch retry): the batch's
     * commits are ORDERED — dim appends, then the fact swap (the dim await
     * is [[Merge.atomicOverwrite]]'s `preSwap` barrier, so a visible fact
@@ -215,15 +209,15 @@ object DeltaLoad {
     * stage 4; the commit itself is a metadata-only rename).
     * Because the delta slice is derived from T_ODS, a rerun after a crash
     * anywhere before that final append recomputes the SAME slice (T_ODS
-    * unchanged) and re-runs stage 4 idempotently: dim extension anti-joins
-    * find already-appended values (their committed surrogate ids are
-    * reused, max-key continuation is stable), the MERGE re-upserts the
-    * same keys, and only then does T_ODS absorb the slice. A crash after
-    * the T_ODS append means everything else already committed — the rerun's
-    * slice is empty and the batch is a no-op. The ODS append is
-    * independently idempotent (key-deduped against its own table) and free
-    * to overlap. `failpoint` is a test hook injecting crashes at the
-    * commit boundaries; production callers leave the default no-op.
+    * unchanged) and re-runs stage 4 idempotently: dim extension finds
+    * already-appended values (their committed surrogate ids are reused,
+    * max-key continuation is stable), the MERGE re-upserts the same keys,
+    * and only then does T_ODS absorb the slice. A crash after the T_ODS
+    * append means everything else already committed — the rerun's slice is
+    * empty and the batch is a no-op. The ODS append is independently
+    * idempotent (key-deduped against its own table) and free to overlap.
+    * `failpoint` is a test hook injecting crashes at the commit boundaries;
+    * production callers leave the default no-op.
     */
   /** `preRunLog` runs immediately before this batch's closing RunLog
     * append — the batch caller parks its concurrent 'staging' log append
@@ -243,9 +237,10 @@ object DeltaLoad {
     // any of its cached blocks were evicted before the append job ran.
     // Checkpointing the narrow ID list freezes the pre-append view at a
     // fraction of the cost of checkpointing the slice itself.
-    val freshOds = OdsTransform.toOds(spark.read.parquet(wh.stg), insertionTs)
-      .dropDuplicates("ID_Event").persist()
-    val tOdsIds = spark.read.parquet(wh.tOds).select("ID_Event").localCheckpoint()
+    val freshOds = OdsTransform.toOds(spark.read.schema(Schemas.stg).parquet(wh.stg),
+      insertionTs).dropDuplicates("ID_Event").persist()
+    val tOdsIds = spark.read.schema(Schemas.tOds).parquet(wh.tOds).select("ID_Event")
+      .localCheckpoint()
     val delta = OdsTransform.dedupeAgainstExisting(
         PlaceParser.parsePlaces(freshOds, states, insertionTs), tOdsIds)
       .persist()
@@ -255,9 +250,9 @@ object DeltaLoad {
     // background, overlapping all of stage 4. A5 — the appended-row count
     // rides the write via observe.
     val obsOds = Observation()
-    val odsAppend = Future {
+    val odsAppend = SparkFuture(spark) {
       OdsTransform.dedupeAgainstExisting(freshOds,
-          spark.read.parquet(wh.ods).select("ID_Event"))
+          spark.read.schema(Schemas.ods).parquet(wh.ods).select("ID_Event"))
         .observe(obsOds, count(lit(1)).as("n"))
         .write.mode("append").parquet(wh.ods)
     }
@@ -266,8 +261,11 @@ object DeltaLoad {
     val background = scala.collection.mutable.ArrayBuffer[Future[Unit]](odsAppend)
     try {
       // stage 4 — incremental dims (max-key continuation) + fact MERGE,
-      // all from the delta slice
-      if (!delta.isEmpty) {
+      // all from the delta slice. One aggregate over it: the row count and,
+      // per dimension, the distinct value tuples (in dimension column order)
+      val summary = delta.agg(count(lit(1)), wh.dimNames.map(name =>
+        collect_set(struct(FactBuilder.dimValues(name): _*))): _*).head()
+      if (summary.getLong(0) > 0) {
         // Pre-write the T_ODS slice to a pending dir CONCURRENTLY with the
         // stage-4 builds; the pending dir is invisible to T_ODS readers, so
         // replay ordering is preserved while the heavy write overlaps the
@@ -275,66 +273,54 @@ object DeltaLoad {
         // rename below (Merge.commitAppend) is the post-merge commit.
         val pendingTOds = s"${wh.tOds}__pending"
         val obsTOds = Observation()
-        val tOdsStage = Future {
+        val tOdsStage = SparkFuture(spark) {
           delta.observe(obsTOds, count(lit(1)).as("n"))
             .write.mode("overwrite").parquet(pendingTOds)
         }
         background += tOdsStage
-        val dims = FactBuilder.buildDims(delta) // value columns only matter below
-        // each dim's extend runs as a concurrent job (same rationale as
-        // FullLoad stage 4). Each chain computes its handful of NEW rows,
-        // snapshots them with an eager localCheckpoint (same recache-by-path
-        // reasoning as the delta slice: the frame must survive its own
-        // append), and returns the post-extension dimension as existing ∪
-        // fresh IN MEMORY — content-identical to the post-append table.
-        // The appends themselves START only at the merge's preSwap barrier,
-        // AFTER the staged-fact tmp write has fully executed: `existing` is
-        // a lazy scan of the dim path, so an append committing while the
-        // fact build is still listing that path would make existing ∪ fresh
-        // carry the new row TWICE — join multiplication, duplicate fact
-        // rows (a real race, seen under full-suite load). Deferring the
-        // tiny localCheckpoint'd appends to the barrier closes the window
-        // at ~ms cost and keeps the commit order unchanged: dims durable
-        // before the new fact version becomes visible.
-        val chains = Await.result(Future.sequence(wh.dimNames.map { name =>
-          Future {
-            val existing = spark.read.parquet(wh.dim(name))
-            val src = name match {
-              case "T_DIM_Network" => dims.network
-              case "T_DIM_RegionCountry" => dims.regionCountry
-              case "T_DIM_Seismic_Activity_Type" => dims.seismicType
-              case "T_DIM_magCategory" => dims.magCategory
-              case "T_DIM_depthCategory" => dims.depthCategory
-              case "T_DIM_date" => dims.date
-            }
-            // date-dim IDs are intrinsic (yyyymmdd, dw2_delta_load2.py:329-333):
-            // new dates append as-is; surrogate-keyed dims continue from max id
+        // each existing dim is collected once (concurrent jobs) and extended
+        // on the driver. Date-dim IDs are intrinsic (yyyymmdd,
+        // dw2_delta_load2.py:329-333): new dates append as-is; surrogate-keyed
+        // dims continue from max id. The post-extension dims are local
+        // relations of existing ∪ fresh rows — content-identical to the
+        // post-append tables, and free of any scan of the dim paths, so the
+        // appends below cannot race a reader of those paths.
+        val existing = Await.result(Future.sequence(wh.dimNames.map(name =>
+          SparkFuture(spark)(spark.read.schema(Schemas.dim(name))
+            .parquet(wh.dim(name)).collect().toSeq))), Duration.Inf)
+        val extended = wh.dimNames.zip(existing).zipWithIndex.map {
+          case ((name, rows), i) =>
+            val values = summary.getSeq[Row](i + 1)
             val fresh =
-              (if (name == "T_DIM_date")
-                DimBuilder.antiJoinNullSafe(src, existing, Seq("ID_date_ID"))
-              else DimBuilder.extend(existing, src,
-                dimKeys(name).map(col), dimKeys(name), dimId(name)))
-                .localCheckpoint()
-            (name, existing.unionByName(fresh), fresh)
-          }
-        }), Duration.Inf)
-        val full = chains.map(c => c._1 -> c._2).toMap
+              if (name == "T_DIM_date") {
+                val ids = rows.map(_.get(0)).toSet
+                values.filter(r => !r.isNullAt(0) && !ids(r.get(0)))
+              } else DimBuilder.extendRows(rows, values)
+            (name, rows, fresh)
+        }
+        def local(name: String, rows: Seq[Row]): DataFrame =
+          spark.createDataFrame(rows.asJava, Schemas.dim(name))
+        val full = extended.map { case (name, rows, fresh) =>
+          name -> local(name, rows ++ fresh)
+        }.toMap
         val staged = FactBuilder.buildFact(delta,
           FactBuilder.Dims(full("T_DIM_Network"), full("T_DIM_RegionCountry"),
             full("T_DIM_Seismic_Activity_Type"), full("T_DIM_magCategory"),
             full("T_DIM_depthCategory"), full("T_DIM_date")),
           jobId, insertionTs)
-        Merge.mergeInto(spark, wh.fact, staged, preSwap = () => {
-          // barrier: start the six dim appends (fact tmp write is complete,
-          // no reader of the dim paths is in flight) and require them + the
-          // ODS append durable before the swap
-          val appends = chains.map { case (name, _, fresh) =>
-            Future(fresh.write.mode("append").parquet(wh.dim(name)))
-          }
-          background ++= appends
-          Await.result(Future.sequence(odsAppend +: appends), Duration.Inf)
-          failpoint("pre-fact-swap") // dims committed, fact not yet visible
-        })
+        Merge.mergeInto(spark, wh.fact, staged, schema = Some(Schemas.factEvents),
+          preSwap = () => {
+            // barrier: append each dim's new rows (a dim with none appends
+            // nothing) and require them + the ODS append durable before the
+            // swap
+            val appends = extended.collect { case (name, _, fresh) if fresh.nonEmpty =>
+              SparkFuture(spark)(local(name, fresh).write.mode("append")
+                .parquet(wh.dim(name)))
+            }
+            background ++= appends
+            Await.result(Future.sequence(odsAppend +: appends), Duration.Inf)
+            failpoint("pre-fact-swap") // dims committed, fact not yet visible
+          })
         failpoint("post-merge") // fact visible, T_ODS commit not yet run
         // stage 3 — T_ODS absorbs the slice LAST: this is the commit that
         // makes the batch invisible to a replay, so everything the slice

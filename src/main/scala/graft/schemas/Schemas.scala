@@ -7,7 +7,10 @@ import org.apache.spark.sql.types._
   * The reference keeps schemas external (BigQuery tables written with
   * `schema=None` + `CREATE_NEVER`, e.g. `Full Load Scripts/ods_full_load2.py:163-168`);
   * the shapes below are the ones its rows implicitly carry. We declare them
-  * explicitly so every layer write is schema-validated.
+  * explicitly: the delta chain reads every warehouse table with its declared
+  * schema (no footer inference), and PipelineSpec checks that every table
+  * the full and delta loads write reads back with exactly these names and
+  * types.
   */
 object Schemas {
 
@@ -62,6 +65,11 @@ object Schemas {
     StructField("_LB_job_execution_id", StringType),
     StructField("_LB_data_source", StringType)))
 
+  /** T_ODS layer: the ODS rows with region and country filled in by the
+    * place parse (`parse_country_ods_full_load2.py`), same columns and types.
+    */
+  val tOds: StructType = ods
+
   /** US-states lookup — `Full Load Scripts/parse_country_ods_full_load2.py:97-100`. */
   val usStates: StructType = StructType(Seq(
     StructField("State", StringType),
@@ -103,6 +111,16 @@ object Schemas {
     StructField("ID_MonthNb", IntegerType),
     StructField("ID_Quarter", IntegerType),
     StructField("ID_Year", IntegerType)))
+
+  /** The declared schema of each warehouse dimension table, by table name. */
+  def dim(name: String): StructType = name match {
+    case "T_DIM_Network" => dimNetwork
+    case "T_DIM_RegionCountry" => dimRegionCountry
+    case "T_DIM_Seismic_Activity_Type" => dimType
+    case "T_DIM_magCategory" => dimMagCategory
+    case "T_DIM_depthCategory" => dimDepthCategory
+    case "T_DIM_date" => dimDate
+  }
 
   /** Fact table — `dw_full_load2.py:195-218`. */
   val factEvents: StructType = StructType(Seq(

@@ -541,7 +541,7 @@ object Scan {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
         val futs: Seq[Future[Unit]] = Seq(
-          Future(writeMeta(spark, tmp, TableMeta(statCols, shardCol,
+          SparkFuture(spark)(writeMeta(spark, tmp, TableMeta(statCols, shardCol,
             sortCol, bloomKeyCol, bloomM, bloomK, zTotalBits,
             nShards))),
           // 0-row schema sidecar: a delete can legally empty EVERY
@@ -551,7 +551,7 @@ object Scan {
           // rebuild schema-safe). Built as an empty LocalRelation so
           // the write never plans (or risks executing) the layout
           // lineage behind `laid`.
-          Future(spark.createDataFrame(
+          SparkFuture(spark)(spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               laid.schema)
             .coalesce(1).write.mode("overwrite")
@@ -560,7 +560,7 @@ object Scan {
           // bounds = the frozen frame): persisted with the meta,
           // before the data
           dicts.toSeq.map { case (c, d) =>
-            Future(d.coalesce(1).write.mode("overwrite")
+            SparkFuture(spark)(d.coalesce(1).write.mode("overwrite")
               .parquet(s"$tmp/$DictSidecar/col=$c"))
           }
         // await each INDIVIDUALLY (not a fail-fast Future.sequence) so a
@@ -770,12 +770,12 @@ object Scan {
         // Both frames were CONSTRUCTED on this thread (the sidecar memo
         // is thread-local); the futures only execute the swaps.
         locally {
-          import scala.concurrent.{Await, Future}
+          import scala.concurrent.Await
           import scala.concurrent.ExecutionContext.Implicits.global
           val folds = Seq(
-            Future(graft.dw.Merge.atomicOverwrite(spark, merged,
+            SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, merged,
               s"$dir/$StatsSidecar"))) ++
-            mergedBloom.map(mb => Future(graft.dw.Merge.atomicOverwrite(
+            mergedBloom.map(mb => SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(
               spark, mb, s"$dir/$BloomSidecar")))
           val done = folds.map(f => scala.util.Try(
             Await.result(f, SidecarAwait)))
@@ -851,16 +851,16 @@ object Scan {
     // max(stats, bloom) instead of the sum; both frames constructed on
     // this thread (thread-local sidecar memo), futures only execute
     locally {
-      import scala.concurrent.{Await, Future}
+      import scala.concurrent.Await
       import scala.concurrent.ExecutionContext.Implicits.global
       val mb = bloomCfg.map { case (kc, m, k) =>
         graft.ext.Corpus.bloomBitsTable(back, shardCol, kc, m, k)
           .withColumn("key_col", lit(kc))
       }
       val swaps = Seq(
-        Future(graft.dw.Merge.atomicOverwrite(spark, stats,
+        SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, stats,
           s"$dir/$StatsSidecar"))) ++
-        mb.map(df => Future(graft.dw.Merge.atomicOverwrite(spark, df,
+        mb.map(df => SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, df,
           s"$dir/$BloomSidecar")))
       val done = swaps.map(f => scala.util.Try(
         Await.result(f, SidecarAwait)))
@@ -931,11 +931,11 @@ object Scan {
     // independent sidecar swaps, concurrent (§2.6) — same shape and
     // rationale as [[refreshManifests]]; frames built on this thread
     locally {
-      import scala.concurrent.{Await, Future}
+      import scala.concurrent.Await
       import scala.concurrent.ExecutionContext.Implicits.global
       val statsSwap = {
         val df = fresh.fold(keep)(keep.unionByName(_))
-        Future(graft.dw.Merge.atomicOverwrite(spark, df,
+        SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, df,
           s"$dir/$StatsSidecar"))
       }
       val bloomSwap =
@@ -947,7 +947,7 @@ object Scan {
             graft.ext.Corpus.bloomBitsTable(r, shardCol, kc, m, k)
               .withColumn("key_col", lit(kc)))
           val df = nb.fold(ob)(ob.unionByName(_))
-          Future(graft.dw.Merge.atomicOverwrite(spark, df,
+          SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, df,
             s"$dir/$BloomSidecar"))
         }
       val done = (Seq(statsSwap) ++ bloomSwap).map(f =>
@@ -980,9 +980,8 @@ object Scan {
     // per row where the distinct-first form hashes per distinct key) —
     // two well-shaped passes overlapped beat one mis-shaped pass.
     val bloomFut = bloomKeyCol.map { kc =>
-      import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
-      Future(graft.ext.Corpus.bloomBitsTable(back, shardCol, kc,
+      SparkFuture(spark)(graft.ext.Corpus.bloomBitsTable(back, shardCol, kc,
           bloomM, bloomK)
         .withColumn("key_col", lit(kc))
         .write.mode("overwrite").parquet(s"$tableDir/$BloomSidecar"))
@@ -1702,11 +1701,11 @@ object Scan {
     // sidecar outputs — concurrent (§2.6), pays max() not the sum;
     // frames built on this thread, futures only execute the swaps
     locally {
-      import scala.concurrent.{Await, Future}
+      import scala.concurrent.Await
       import scala.concurrent.ExecutionContext.Implicits.global
-      val swaps = Seq(Future(graft.dw.Merge.atomicOverwrite(spark,
+      val swaps = Seq(SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark,
           statsDf, s"$dir/$StatsSidecar"))) ++
-        bloomDf.map(df => Future(graft.dw.Merge.atomicOverwrite(spark,
+        bloomDf.map(df => SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark,
           df, s"$dir/$BloomSidecar")))
       val done = swaps.map(f => scala.util.Try(
         Await.result(f, SidecarAwait)))

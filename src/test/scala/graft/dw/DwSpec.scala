@@ -3,7 +3,9 @@ package graft.dw
 import graft.SparkSpec
 import graft.ingest.Staging
 import graft.ods.{OdsTransform, PlaceParser}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 class DwSpec extends SparkSpec {
   import spark.implicits._
@@ -114,5 +116,37 @@ class DwSpec extends SparkSpec {
     // idempotency: applying the same staged batch twice is a no-op
     Merge.mergeInto(spark, path, staged)
     assert(spark.read.parquet(path).count() === 3)
+  }
+
+  test("one numbering: driver-side extendRows equals build's window numbering from max + 1") {
+    val smile = "\uD83D\uDE00" // U+1F600, a surrogate pair in UTF-16
+    val fullwidthA = "\uFF21"   // U+FF21: above the surrogates in UTF-16, below U+1F600 in UTF-8
+    assert(fullwidthA.compareTo(smile) > 0) // the two orders really differ here
+    // ids need not be dense: continuation is from the max
+    val existing = Seq(Row(1L, "m", "x"), Row(2L, null, "x"), Row(7L, "\u00e9", null))
+    val values = Seq[(String, String)]((null, null), (null, "x"), ("", ""), ("", null),
+      ("A", "a"), ("a", "A"), ("a", "a"), ("\u00e9", null), ("\u00e9", "\u00e9"),
+      (fullwidthA, "x"), (smile, "x"), ("z", smile), ("z", fullwidthA), ("m", "x"),
+      ("a", "a")).map { case (a, b) => Row(a, b) }
+    val fresh = DimBuilder.extendRows(existing, values)
+    val known = existing.map(_.toSeq.tail).toSet
+    val newValues = values.filterNot(r => known(r.toSeq)).distinct
+    val windowed = DimBuilder.build(
+      spark.createDataFrame(java.util.Arrays.asList(newValues: _*), StructType(Seq(
+        StructField("a", StringType), StructField("b", StringType)))),
+      Seq($"a", $"b"), Seq("a", "b"), "id", startId = 8L).collect().toSeq
+    def tuples(rows: Seq[Row]) =
+      rows.map(r => (r.getLong(0), Option(r.getString(1)), Option(r.getString(2)))).sortBy(_._1)
+    assert(tuples(fresh) === tuples(windowed))
+    assert(fresh.map(_.getLong(0)).sorted === (8L until 8L + newValues.size))
+    val id = fresh.map(r => (r.getString(1), r.getString(2)) -> r.getLong(0)).toMap
+    assert(id((null, null)) === 8L)
+    assert(id((fullwidthA, "x")) < id((smile, "x")))
+    // the maxDimRows bound counts existing plus new rows
+    assert(DimBuilder.extendRows(existing, values,
+      maxDimRows = existing.size + newValues.size).size === newValues.size)
+    val e = intercept[IllegalArgumentException](DimBuilder.extendRows(existing, values,
+      maxDimRows = existing.size + newValues.size - 1))
+    assert(e.getMessage.contains("maxDimRows"))
   }
 }

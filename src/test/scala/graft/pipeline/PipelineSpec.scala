@@ -3,9 +3,15 @@ package graft.pipeline
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.archive.Archive
+import graft.schemas.Schemas
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.shim
+import org.apache.spark.sql.types.StructType
 
 /** Golden end-to-end pipeline test (SURVEY §5.4): full load on the USGS
   * fixture, then a delta on top, asserting layer contents, surrogate-key
@@ -157,5 +163,96 @@ class PipelineSpec extends SparkSpec {
     assert(metric("job-delta", "delta_load", "rows_tods_appended")
       === spark.read.parquet(wh.tOds).count() - tOdsBefore)
     assert(metric("job-delta", "delta_load", "rows_tods_appended") === 1L)
+  }
+
+  private val novelLine = "2024-08-02T09:30:00.000Z,48.0,7.8,12.0,4.2,ml,30,60,0.2,0.1," +
+    "zz,ev_new,2024-08-02T10:00:00.000Z,\"13 km E of Freiburg, Germany\"," +
+    "earthquake,0.8,3.0,0.1,12,reviewed,zz,zz"
+
+  /** Land a delta file of the fixture header plus `rows`. */
+  private def landDelta(raw: String, name: String, rows: String*): Unit = {
+    val header = Files.readAllLines(Paths.get(resource("usgs_sample.csv"))).get(0)
+    Files.write(Paths.get(raw, name), (header +: rows).asJava)
+  }
+
+  /** The local properties of every Spark job started while `body` ran, as
+    * delivered to a listener.
+    */
+  private def jobsDuring(body: => Unit): Seq[java.util.Properties] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).getOrElse(new java.util.Properties()))
+    }
+    shim.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      shim.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq
+  }
+
+  test("declared schemas: every table FullLoad and DeltaLoad write infers to its Schemas shape") {
+    val (raw, wh) = setup()
+    Controller.run(spark, s"$raw/*.csv", states, wh, "job-full", ts)
+    landDelta(raw, "all_day_20240802-120000.csv", novelLine)
+    Controller.run(spark, s"$raw/*.csv", states, wh, "job-delta", ts2)
+    def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
+    val declared = Seq(wh.stg -> Schemas.stg, wh.ods -> Schemas.ods,
+      wh.tOds -> Schemas.tOds, wh.fact -> Schemas.factEvents) ++
+      wh.dimNames.map(n => wh.dim(n) -> Schemas.dim(n))
+    declared.foreach { case (path, schema) =>
+      assert(shape(spark.read.parquet(path).schema) === shape(schema), path)
+    }
+  }
+
+  test("a delta with no new dimension values appends no part file to any dim") {
+    val (raw, wh) = setup()
+    Controller.run(spark, s"$raw/*.csv", states, wh, "job-full", ts)
+    def parts(name: String): Int = new java.io.File(wh.dim(name)).listFiles()
+      .count(_.getName.startsWith("part-"))
+    val before = wh.dimNames.map(n => n -> parts(n)).toMap
+    // a new event (new time, so a new key) whose network, region, type,
+    // categories and Bucharest date all exist already
+    val lines = Files.readAllLines(Paths.get(resource("usgs_sample.csv")))
+    landDelta(raw, "all_day_20240802-120000.csv",
+      lines.get(1).replace("2024-07-01T12:00:00.000Z", "2024-07-01T12:01:00.000Z"))
+    val factBefore = spark.read.parquet(wh.fact).count()
+    Controller.run(spark, s"$raw/*.csv", states, wh, "job-delta", ts2)
+    assert(spark.read.parquet(wh.fact).count() === factBefore + 1)
+    assert(wh.dimNames.map(n => n -> parts(n)).toMap === before)
+  }
+
+  test("pool-thread jobs run under the caller's Spark local properties") {
+    val (raw, wh) = setup()
+    val key = "graft.spec.caller"
+    val sc = spark.sparkContext
+    def tags(run: String)(body: => Unit): Set[String] = {
+      sc.setLocalProperty(key, run)
+      try jobsDuring(body).map(p => String.valueOf(p.getProperty(key))).toSet
+      finally sc.setLocalProperty(key, null)
+    }
+    // the pool workers the full load creates must not carry its properties
+    // into the delta's jobs
+    assert(tags("full")(Controller.run(spark, s"$raw/*.csv", states, wh,
+      "job-full", ts)) === Set("full"))
+    landDelta(raw, "all_day_20240802-120000.csv", novelLine)
+    assert(tags("delta")(Controller.run(spark, s"$raw/*.csv", states, wh,
+      "job-delta", ts2)) === Set("delta"))
+  }
+
+  // The delta chain's per-job cost outweighs its data work at this size, so
+  // its job count is pinned: 74 jobs before the tables were read with their
+  // declared schemas and the dims extended from one aggregate, 38 after.
+  test("job count: one fixture delta runs in at most 40 Spark jobs") {
+    val (raw, wh) = setup()
+    Controller.run(spark, s"$raw/*.csv", states, wh, "job-full", ts)
+    landDelta(raw, "all_day_20240802-120000.csv", novelLine)
+    val jobs = jobsDuring(Controller.run(spark, s"$raw/*.csv", states, wh,
+      "job-delta", ts2)).size
+    info(s"jobs per delta: $jobs")
+    assert(jobs <= 40)
   }
 }
