@@ -2292,10 +2292,24 @@ object Corpus {
     * mirrorable in SQL, and reused by [[graft.util.Scan]] so a probe
     * computed anywhere agrees with the persisted index bit-for-bit). */
   private[graft] def bloomPositions(key: Column, m: Int, k: Int): Column =
-    array((0 until k).map { j =>
-      conv(substring(md5(concat(lit("bloom|"), key.cast("string"))),
-        1 + 8 * j, 8), 16, 10).cast("long") % m
-    }: _*)
+    array((0 until k).map(j => bloomHash(key, j) % m): _*)
+
+  /** [[bloomPositions]] with the geometry taken per row from the columns
+    * `m` and `k` (1 ≤ k ≤ [[BloomMaxK]]): a bloom manifest row probes
+    * with the geometry its own bits were built with, so no separate
+    * read of the geometry is needed. */
+  private[graft] def bloomPositions(key: Column, m: Column,
+      k: Column): Column =
+    slice(array((0 until BloomMaxK).map(j => bloomHash(key, j) % m): _*),
+      lit(1), k)
+
+  /** Hash `j` of a key: the `j`-th 32-bit md5 slice of `"bloom|<key>"`. */
+  private def bloomHash(key: Column, j: Int): Column =
+    conv(substring(md5(concat(lit("bloom|"), key.cast("string"))),
+      1 + 8 * j, 8), 16, 10).cast("long")
+
+  /** The most hashes a key takes: four 32-bit slices of one md5. */
+  private[graft] val BloomMaxK = 4
 
   /** The per-shard bloom BIT TABLE behind [[bloomShardIndex]] — `shard`,
     * `n_keys` (distinct keys in the shard), `_bits` (the sorted set bit
@@ -2307,7 +2321,8 @@ object Corpus {
     */
   def bloomBitsTable(df: DataFrame, shardCol: String, keyCol: String,
       m: Int = 4096, k: Int = 3): DataFrame = {
-    require(m > 0 && k >= 1 && k <= 4, "need m > 0 and 1 <= k <= 4")
+    require(m > 0 && k >= 1 && k <= BloomMaxK,
+      s"need m > 0 and 1 <= k <= $BloomMaxK")
     // keys hash NATIVE-typed through bloomPositions' string form —
     // integral keys give the same digits they always did, and string
     // keys (language, source — the predicates real curation scans

@@ -115,18 +115,8 @@ object Compaction {
     // (recovery-window tables may hold ONLY meta + data — the heal
     // path), sidecar sniffing otherwise (pre-meta tables)
     val meta = Scan.readMeta(spark, dir)
-    val statCols = meta.map(_.statCols).getOrElse(
-      spark.read.parquet(s"$dir/${Scan.StatsSidecar}")
-        .columns.toSeq.filter(_.endsWith("_min")).map(_.dropRight(4)))
-    val bloomCfg = meta.map(m => m.bloomKey.map((_, m.bloomM, m.bloomK)))
-      .getOrElse {
-        if (!fs.exists(new Path(s"$dir/${Scan.BloomSidecar}"))) None
-        else {
-          val r = spark.read.parquet(s"$dir/${Scan.BloomSidecar}")
-            .select("key_col", "m", "k").limit(1).head()
-          Some((r.getString(0), r.getInt(1), r.getInt(2)))
-        }
-      }
+    val statCols = Scan.statColsOf(spark, dir)
+    val bloomCfg = Scan.bloomConfigOf(spark, dir)
     val sort = sortCol.orElse(meta.flatMap(_.sortCol))
     // dict sidecars (frozen string-dim frames) must survive the swap:
     // materialize them off the old directory before it is replaced

@@ -166,31 +166,24 @@ object Scan {
   private val jvmLeases =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
 
-  // PER-VERB-CHAIN sidecar-config memo (guide §6 — the driver constant
-  // IS the mutation family's floor: VERDICT r16 measured x161 at 4.1 s
-  // wall vs 1.5 s summed job time). The 1-row meta sidecar and the 0-row
-  // schema sidecar are read-only during every mutation chain — only the
-  // evolve verbs and whole-table republishes change them — yet a single
-  // upsert re-reads them ~8×, and each readMeta is a parquet listing +
-  // footer read plus a collect-limit-1 JOB (~20–50 ms of driver time).
+  // PER-VERB-CHAIN config memo (guide §6 — the driver constant IS the
+  // mutation family's floor: VERDICT r16 measured x161 at 4.1 s wall vs
+  // 1.5 s summed job time). The 1-row meta sidecar and the 0-row schema
+  // sidecar are read-only during every mutation chain — only the evolve
+  // verbs and whole-table republishes change them — yet a single upsert
+  // consults them ~8×, and each readMeta is a collect-limit-1 JOB.
   // Every public verb opens a scope here; within it readMeta /
   // tableSchemaOf memoize per table dir, and the few sites that WRITE
   // either sidecar invalidate the entry. The scope dies with the
   // outermost verb on this thread — nothing is cached across calls, let
-  // alone across queries or runs.
+  // alone across queries or runs. Sidecar SCHEMAS are not memoized:
+  // every construction reads the footer on disk ([[readSidecarPath]]),
+  // which costs no job.
   private final class SidecarCtx {
     val meta = scala.collection.mutable.Map.empty[String,
       Option[TableMeta]]
     val schema = scala.collection.mutable.Map.empty[String,
       Option[org.apache.spark.sql.types.StructType]]
-    // (table dir, sidecar name) → that sidecar's parquet schema, so
-    // repeat constructions within one chain skip schema INFERENCE —
-    // a ~25 ms job per `spark.read.parquet` (x175 profile). The FRAME
-    // is never cached (files legally change mid-chain); every write to
-    // a sidecar invalidates its entry (the append fold can ADD
-    // `_stale_rows`, an evolve adds envelope columns).
-    val sidecarSchema = scala.collection.mutable.Map.empty[
-      (String, String), org.apache.spark.sql.types.StructType]
   }
   private val sidecarCtx = new ThreadLocal[SidecarCtx]
 
@@ -207,57 +200,92 @@ object Scan {
       val k = new Path(dir).toString
       c.meta.remove(k)
       c.schema.remove(k)
-      c.sidecarSchema.filterInPlace { case ((d, _), _) => d != k }
     }
   }
 
-  private def invalidateSidecarSchema(dir: String, name: String): Unit = {
-    val c = sidecarCtx.get
-    if (c != null) c.sidecarSchema.remove((new Path(dir).toString, name))
-  }
+  /** Await concurrent sidecar swaps EACH individually (not a fail-fast
+    * `Future.sequence`), so none is still writing when the caller
+    * unwinds, then rethrow the first failure. Finite timeout: see
+    * [[SidecarAwait]]. */
+  private def settleSidecarSwaps(
+      swaps: Seq[scala.concurrent.Future[Unit]]): Unit =
+    swaps.map(f => scala.util.Try(
+      scala.concurrent.Await.result(f, SidecarAwait)))
+      .collectFirst { case scala.util.Failure(e) => throw e }
 
-  /** After a sidecar WRITE whose frame we just built, the on-disk schema
-    * IS that frame's schema — record it instead of forcing the next
-    * construction to re-infer (each re-inference is a job). */
-  private def noteSidecarSchema(dir: String, name: String,
-      df: DataFrame): Unit = {
-    val c = sidecarCtx.get
-    if (c != null)
-      c.sidecarSchema((new Path(dir).toString, name)) = df.schema
-  }
-
-  /** Settle concurrent sidecar swaps (`frames(i)` was swapped into
-    * sidecar `name` by the future behind `done(i)`): a swap that landed
-    * wrote exactly its frame, so its schema is noted; a FAILED swap may
-    * have left either version on disk, so its entry is invalidated and
-    * the next construction re-infers. Then the first failure rethrows. */
-  private def settleSidecarSwaps(dir: String,
-      frames: Seq[(String, DataFrame)],
-      done: Seq[scala.util.Try[Unit]]): Unit = {
-    frames.zip(done).foreach {
-      case ((name, df), scala.util.Success(_)) =>
-        noteSidecarSchema(dir, name, df)
-      case ((name, _), _) => invalidateSidecarSchema(dir, name)
+  /** The Spark schema of the parquet directory `path`, from ONE footer
+    * read on the driver: list the directory, open its first part file
+    * and parse the row schema Spark's writer stores under
+    * [[SparkRowMetadata]] — the schema `spark.read.parquet(path)` would
+    * infer, nullable as a file source reads it, without the inference
+    * job. None when there is no such file or key (a missing directory,
+    * a footer another writer produced); the caller then infers. */
+  private[graft] def footerSchema(spark: SparkSession,
+      path: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val part =
+      try p.getFileSystem(conf).listStatus(p).iterator
+        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith("."))
+        .minByOption(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => None }
+    part.flatMap { st =>
+      val opts = HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        .build()
+      val json = scala.util.Try {
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+          opts)
+        try r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(SparkRowMetadata)
+        finally r.close()
+      }.toOption.flatMap(Option(_))
+      json.flatMap(j => scala.util.Try(
+        org.apache.spark.sql.types.DataType.fromJson(j)).toOption)
+        .collect { case sc: org.apache.spark.sql.types.StructType =>
+          asNullable(sc).asInstanceOf[org.apache.spark.sql.types.StructType]
+        }
     }
-    done.collectFirst { case scala.util.Failure(e) => throw e }
   }
 
-  /** Construct a sidecar read, memoizing the sidecar's SCHEMA per verb
-    * chain so repeat constructions skip parquet schema inference. The
-    * data itself stays a fresh lazy frame every time. */
+  /** The footer key under which Spark's parquet writer stores the row
+    * schema as JSON. */
+  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** `dt` with every field, array element and map value nullable — the
+    * form a file-source read reports whatever the writer declared. */
+  private def asNullable(
+      dt: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = asNullable(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(asNullable(e), containsNull = true)
+      case MapType(k, v, _) =>
+        MapType(asNullable(k), asNullable(v), valueContainsNull = true)
+      case other => other
+    }
+  }
+
+  /** Construct a read of the parquet directory `path` with its footer
+    * schema ([[footerSchema]]), so the construction starts no Spark job;
+    * Spark infers only when the footer carries no Spark schema, and a
+    * missing directory fails exactly as a plain `spark.read.parquet`
+    * does. The data stays a fresh lazy frame every time. */
+  private[graft] def readSidecarPath(spark: SparkSession,
+      path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(sc =>
+      spark.read.schema(sc).parquet(path))
+
   private def readSidecar(spark: SparkSession, dir: String,
-      name: String): DataFrame = {
-    val path = s"$dir/$name"
-    val c = sidecarCtx.get
-    if (c == null) spark.read.parquet(path)
-    else c.sidecarSchema.get((new Path(dir).toString, name)) match {
-      case Some(sc) => spark.read.schema(sc).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        c.sidecarSchema((new Path(dir).toString, name)) = df.schema
-        df
-    }
-  }
+      name: String): DataFrame =
+    readSidecarPath(spark, s"$dir/$name")
 
   /** CONCURRENT-WRITER SAFETY — the asserted writer lease every mutation
     * of a sharded table runs under. Two simultaneous mutators (an
@@ -494,7 +522,7 @@ object Scan {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("col="))
       .map { s =>
         val c = s.getPath.getName.stripPrefix("col=")
-        c -> spark.read.parquet(s.getPath.toString)
+        c -> readSidecarPath(spark, s.getPath.toString)
       }.toMap
   }
 
@@ -536,11 +564,11 @@ object Scan {
       // serially), and ALL awaited before the data write starts so the
       // meta/dicts/schema-before-data crash-safety ordering holds:
       // recover promotes on the DATA write's _SUCCESS, so every
-      // recoverable state still carries its configuration
+      // recoverable state still carries its configuration; a failed
+      // sidecar unwinds only once its siblings stopped writing into tmp
       locally {
-        import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
-        val futs: Seq[Future[Unit]] = Seq(
+        settleSidecarSwaps(Seq(
           SparkFuture(spark)(writeMeta(spark, tmp, TableMeta(statCols, shardCol,
             sortCol, bloomKeyCol, bloomM, bloomK, zTotalBits,
             nShards))),
@@ -562,17 +590,7 @@ object Scan {
           dicts.toSeq.map { case (c, d) =>
             SparkFuture(spark)(d.coalesce(1).write.mode("overwrite")
               .parquet(s"$tmp/$DictSidecar/col=$c"))
-          }
-        // await each INDIVIDUALLY (not a fail-fast Future.sequence) so a
-        // failed sidecar never unwinds while siblings still write into
-        // tmp — tmp is quiescent when the error-path cleanup runs; the
-        // FIRST failure is rethrown after the drain. Finite timeout,
-        // bounded under the lease term: a hung sidecar write must fail
-        // the publish loudly before the lease expires and a second
-        // writer breaks it.
-        val done = futs.map(f => scala.util.Try(
-          Await.result(f, SidecarAwait)))
-        done.collectFirst { case scala.util.Failure(e) => throw e }
+          })
       }
       val parted = laid.repartition(col(shardCol))
       val sorted = sortCol.fold(parted)(c =>
@@ -690,12 +708,8 @@ object Scan {
         val kc = bloomConfigOf(spark, dir).map(_._1).getOrElse(
           sys.error(s"appendSharded: $dir has a deletion-vector " +
             "sidecar but no recoverable bloom config"))
-        val dv = dvManifest(spark, dir)
-          .select(col("shard").cast("int").as("_dv_shard"),
-            col("key").as("_dv_key"))
-        val collisions = b0.join(broadcast(dv),
-          b0(shardCol).cast("int") === col("_dv_shard") &&
-            b0(kc) === col("_dv_key"), "left_semi").count()
+        val collisions =
+          joinDv(spark, dir, b0, shardCol, kc, "left_semi").count()
         require(collisions == 0L,
           s"appendSharded: $collisions batch rows collide with " +
             "pending deletion-vector entries — apply the vector " +
@@ -767,22 +781,13 @@ object Scan {
         // here leaves envelopes/bit sets wider-never-narrower (one fold
         // landed, neither landed — either way the manifests still cover
         // every landed row, because the batch has not landed).
-        // Both frames were CONSTRUCTED on this thread (the sidecar memo
-        // is thread-local); the futures only execute the swaps.
         locally {
-          import scala.concurrent.Await
           import scala.concurrent.ExecutionContext.Implicits.global
-          val folds = Seq(
+          settleSidecarSwaps(Seq(
             SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, merged,
               s"$dir/$StatsSidecar"))) ++
             mergedBloom.map(mb => SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(
-              spark, mb, s"$dir/$BloomSidecar")))
-          val done = folds.map(f => scala.util.Try(
-            Await.result(f, SidecarAwait)))
-          // the folds rewrote both sidecars (and may have ADDED
-          // `_stale_rows` to a pre-staleness manifest)
-          settleSidecarSwaps(dir, (StatsSidecar -> merged) +:
-            mergedBloom.map(BloomSidecar -> _).toSeq, done)
+              spark, mb, s"$dir/$BloomSidecar"))))
         }
         // 3. data lands last — the manifests already cover it; one file
         // per touched shard per batch (shard-keyed exchange), so file
@@ -827,12 +832,7 @@ object Scan {
     val masked: Option[DataFrame] =
       if (!fs.exists(new Path(s"$dir/$DvSidecar"))) None
       else bloomCfg.map { case (kc, _, _) =>
-        val dv = dvManifest(spark, dir)
-          .select(col("shard").cast("int").as("_dv_shard"),
-            col("key").as("_dv_key"))
-        back.join(broadcast(dv),
-          back(shardCol).cast("int") === col("_dv_shard") &&
-            back(kc) === col("_dv_key"), "left_semi")
+        joinDv(spark, dir, back, shardCol, kc, "left_semi")
           .groupBy(col(shardCol).cast("int").as(shardCol))
           .agg(count(lit(1)).as("_masked_rows"))
       }
@@ -848,24 +848,18 @@ object Scan {
     }
     // the two sidecar swaps are independent full-table aggregations
     // with distinct outputs — concurrent (§2.6), the refresh pays
-    // max(stats, bloom) instead of the sum; both frames constructed on
-    // this thread (thread-local sidecar memo), futures only execute
+    // max(stats, bloom) instead of the sum
     locally {
-      import scala.concurrent.Await
       import scala.concurrent.ExecutionContext.Implicits.global
       val mb = bloomCfg.map { case (kc, m, k) =>
         graft.ext.Corpus.bloomBitsTable(back, shardCol, kc, m, k)
           .withColumn("key_col", lit(kc))
       }
-      val swaps = Seq(
+      settleSidecarSwaps(Seq(
         SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, stats,
           s"$dir/$StatsSidecar"))) ++
         mb.map(df => SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, df,
-          s"$dir/$BloomSidecar")))
-      val done = swaps.map(f => scala.util.Try(
-        Await.result(f, SidecarAwait)))
-      settleSidecarSwaps(dir, (StatsSidecar -> stats) +:
-        mb.map(BloomSidecar -> _).toSeq, done)
+          s"$dir/$BloomSidecar"))))
     }
     logEntry(spark, dir, "refresh", s"stat_cols=${sc.mkString("+")}")
   } }
@@ -900,12 +894,7 @@ object Scan {
     val masked: Option[DataFrame] = raw.flatMap { r =>
       if (!hasDv) None
       else bloomConfigOf(spark, dir).map { case (kc, _, _) =>
-        val dv = dvManifest(spark, dir)
-          .select(col("shard").cast("int").as("_dv_shard"),
-            col("key").as("_dv_key"))
-        r.join(broadcast(dv),
-          r(shardCol).cast("int") === col("_dv_shard") &&
-            r(kc) === col("_dv_key"), "left_semi")
+        joinDv(spark, dir, r, shardCol, kc, "left_semi")
           .groupBy(col(shardCol).cast("int").as("_m_shard"))
           .agg(count(lit(1)).as("_masked_rows"))
       }
@@ -929,9 +918,8 @@ object Scan {
       }
     }
     // independent sidecar swaps, concurrent (§2.6) — same shape and
-    // rationale as [[refreshManifests]]; frames built on this thread
+    // rationale as [[refreshManifests]]
     locally {
-      import scala.concurrent.Await
       import scala.concurrent.ExecutionContext.Implicits.global
       val statsSwap = {
         val df = fresh.fold(keep)(keep.unionByName(_))
@@ -950,13 +938,7 @@ object Scan {
           SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, df,
             s"$dir/$BloomSidecar"))
         }
-      val done = (Seq(statsSwap) ++ bloomSwap).map(f =>
-        scala.util.Try(Await.result(f, SidecarAwait)))
-      // the written frames' schemas are now on disk; the bloom swap is
-      // conditional, so only note it when it ran
-      invalidateSidecarSchema(dir, StatsSidecar)
-      if (bloomSwap.isDefined) invalidateSidecarSchema(dir, BloomSidecar)
-      done.collectFirst { case scala.util.Failure(e) => throw e }
+      settleSidecarSwaps(statsSwap +: bloomSwap.toSeq)
     }
     logEntry(spark, dir, "refresh_shards", s"shards=${shards.size}")
   } }
@@ -1044,8 +1026,9 @@ object Scan {
     * expression that built the index ([[graft.ext.Corpus
     * .bloomPositions]]), so probe and index can never disagree on the
     * hash family; keys are native-typed (string keys hash their own
-    * bytes, integral keys the digits they always did). Driver-side
-    * filter-collect over the shards-sized manifest.
+    * bytes, integral keys the digits they always did), under each
+    * manifest row's own (m, k). Driver-side filter-collect over the
+    * shards-sized manifest.
     */
   def candidateShardsByKey(bloom: DataFrame, key: Any,
       shardCol: String = "shard"): Seq[Int] =
@@ -1064,43 +1047,29 @@ object Scan {
     * join shape is flat in the key count and stays shards-bounded on
     * the scan side. */
   def candidateShardsByKeys(bloom: DataFrame, keys: Seq[Any],
-      shardCol: String = "shard"): Seq[Int] =
-    candidateShardsByKeysCfg(bloom, keys, None, shardCol)
-
-  /** [[candidateShardsByKeys]] with the bloom geometry supplied by the
-    * caller (from the 1-row meta sidecar): skips the manifest's own
-    * (m, k) probe — one collect-limit-1 job per verb call that the
-    * mutation verbs, which already hold the config, need not pay. An
-    * empty manifest still yields no candidates (the coverage
-    * filter-collect over zero rows returns nothing). */
-  private[graft] def candidateShardsByKeysCfg(bloom: DataFrame,
-      keys: Seq[Any], mkKnown: Option[(Int, Int)],
       shardCol: String = "shard"): Seq[Int] = {
     require(keys.nonEmpty, "need at least one key")
-    val (m, k) = mkKnown.getOrElse {
-      // a zero-row manifest (every shard emptied) has no candidates
-      val cfg0 = bloom.select("m", "k").limit(1).collect().headOption
-      if (cfg0.isEmpty) return Nil
-      (cfg0.get.getInt(0), cfg0.get.getInt(1))
-    }
-    if (keys.size <= 64) {
-      val covered = keys.map { key =>
-        size(array_except(graft.ext.Corpus.bloomPositions(lit(key), m,
-          k), col("_bits"))) === 0
-      }.reduce(_ || _)
-      bloom.filter(covered).select(col(shardCol).cast("int"))
-        .collect().map(_.getInt(0)).toSeq.sorted
-    } else {
-      val spark = bloom.sparkSession
-      val keysDf = spark.range(1).select(
-        explode(array(keys.map(lit(_)): _*)).as("_probe_key"))
-      bloom.join(broadcast(keysDf),
-        size(array_except(graft.ext.Corpus.bloomPositions(
-          col("_probe_key"), m, k), col("_bits"))) === 0, "left_semi")
-        .select(col(shardCol).cast("int"))
-        .collect().map(_.getInt(0)).toSeq.sorted
-    }
+    val matched =
+      if (keys.size <= 64)
+        bloom.filter(keys.map(key => bloomCovers(lit(key))).reduce(_ || _))
+      else {
+        val keysDf = bloom.sparkSession.range(1).select(
+          explode(array(keys.map(lit(_)): _*)).as("_probe_key"))
+        bloom.join(broadcast(keysDf), bloomCovers(col("_probe_key")),
+          "left_semi")
+      }
+    matched.select(col(shardCol).cast("int"))
+      .collect().map(_.getInt(0)).toSeq.sorted
   }
+
+  /** Whether a bloom manifest row's bit set covers every position of
+    * `key`, computed with the row's OWN `m` and `k` columns — the
+    * geometry its bits were built with — so the coverage pass needs no
+    * separate geometry read, and a zero-row manifest (every shard
+    * emptied) simply yields no candidates. */
+  private def bloomCovers(key: Column): Column =
+    size(array_except(graft.ext.Corpus.bloomPositions(key, col("m"),
+      col("k")), col("_bits"))) === 0
 
   /** SCHEMA EVOLUTION — add a column WITHOUT republishing the table
     * (at 100 TB an add-column must be a metadata operation): the
@@ -1140,13 +1109,12 @@ object Scan {
           .withColumn(s"${colName}_ndv", lit(0L))
         graft.dw.Merge.atomicOverwrite(spark, widened,
           s"$dir/$StatsSidecar")
-        invalidateSidecarSchema(dir, StatsSidecar)
       }
     }
     // 2. declared schema gains the column — from here every read
     // null-fills it for pre-evolution files
     if (!schema.fieldNames.contains(colName)) {
-      val widened = spark.read.parquet(s"$dir/$SchemaSidecar")
+      val widened = readSidecar(spark, dir, SchemaSidecar)
         .withColumn(colName, lit(null).cast(dataType))
       graft.dw.Merge.atomicOverwrite(spark, widened,
         s"$dir/$SchemaSidecar")
@@ -1229,11 +1197,10 @@ object Scan {
     if (manCols.nonEmpty) {
       graft.dw.Merge.atomicOverwrite(spark, man.drop(manCols: _*),
         s"$dir/$StatsSidecar")
-      invalidateSidecarSchema(dir, StatsSidecar)
     }
     // 3. declared schema narrows — reads project the column away
     graft.dw.Merge.atomicOverwrite(spark,
-      spark.read.parquet(s"$dir/$SchemaSidecar").drop(colName),
+      readSidecar(spark, dir, SchemaSidecar).drop(colName),
       s"$dir/$SchemaSidecar")
     invalidateSidecarCtx(dir) // the declared schema just changed
     logEntry(spark, dir, "evolve_drop", s"col=$colName")
@@ -1283,13 +1250,13 @@ object Scan {
     require(keys.nonEmpty, "need at least one key")
     graft.dw.Merge.recover(spark, dir)
     recoverPendingDelete(spark, dir, shardCol)
-    val (keyCol, m, k) = bloomConfigOf(spark, dir).getOrElse(sys.error(
+    val (keyCol, _, _) = bloomConfigOf(spark, dir).getOrElse(sys.error(
       s"deleteByKeys: $dir has no recoverable bloom config"))
     // an empty bloom manifest (every shard previously emptied) yields
     // no candidates from the coverage filter itself — no separate
-    // isEmpty probe job; the known (m, k) skips the geometry probe too
-    val cands = candidateShardsByKeysCfg(bloomManifest(spark, dir),
-      keys, Some((m, k)), shardCol)
+    // isEmpty probe job
+    val cands = candidateShardsByKeys(bloomManifest(spark, dir), keys,
+      shardCol)
     val matchPred =
       if (keys.size == 1) col(keyCol) === lit(keys.head)
       else col(keyCol).isin(keys: _*)
@@ -1344,13 +1311,12 @@ object Scan {
     require(keys.nonEmpty, "need at least one key")
     graft.dw.Merge.recover(spark, dir)
     recoverPendingDelete(spark, dir, shardCol)
-    val (keyCol, m, k) = bloomConfigOf(spark, dir).getOrElse(sys.error(
+    val (keyCol, _, _) = bloomConfigOf(spark, dir).getOrElse(sys.error(
       s"deleteByKeysDeferred: $dir has no recoverable bloom config — " +
         "deletion vectors key on the bloom column"))
-    // empty manifest → no candidates from the coverage filter; known
-    // (m, k) skips the geometry probe (see deleteByKeys)
-    val cands = candidateShardsByKeysCfg(bloomManifest(spark, dir),
-      keys, Some((m, k)), shardCol)
+    // empty manifest → no candidates from the coverage filter
+    val cands = candidateShardsByKeys(bloomManifest(spark, dir), keys,
+      shardCol)
     if (cands.isEmpty) return (cands, Nil, 0L)
     val matchPred =
       if (keys.size == 1) col(keyCol) === lit(keys.head)
@@ -1377,7 +1343,6 @@ object Scan {
             .distinct())
       graft.dw.Merge.atomicOverwrite(spark, newDv.coalesce(1),
         s"$dir/$DvSidecar")
-      invalidateSidecarSchema(dir, DvSidecar)
       // advisory staleness fold: masked rows are manifest looseness,
       // exactly like append-folded rows — the compaction trigger. The
       // per-shard bumps join in as a FLAT shards-sized frame: a nested
@@ -1398,7 +1363,6 @@ object Scan {
             coalesce(oldStale, lit(0L)) + coalesce(col("_b_n"), lit(0L)))
           .drop("_b_shard", "_b_n"),
         s"$dir/$StatsSidecar")
-      invalidateSidecarSchema(dir, StatsSidecar)
       logEntry(spark, dir, "delete_deferred",
         s"keys=${keys.size} masked=$removed shards=${touched.size}")
       (cands, touched, removed)
@@ -1423,18 +1387,20 @@ object Scan {
     if (!fs.exists(new Path(s"$dir/$DvSidecar"))) return (Nil, 0L)
     graft.dw.Merge.recover(spark, dir)
     recoverPendingDelete(spark, dir, shardCol)
-    val dvShards = existingShards(fs, dir,
-      dvManifest(spark, dir)
-        .select(col("shard").cast("int")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted, shardCol)
+    val named = dvManifest(spark, dir)
+      .select(col("shard").cast("int")).distinct()
+      .collect().map(_.getInt(0)).toSeq.sorted
+    val dvShards = existingShards(fs, dir, named, shardCol)
     if (dvShards.isEmpty) {
       fs.delete(new Path(s"$dir/$DvSidecar"), true)
       return (Nil, 0L)
     }
+    // rows the vector masks, counted in one pass over the DV shards
     val raw = readShardsRaw(spark, dir, dvShards, shardCol)
-    val kept = applyDv(spark, dir, raw, shardCol)
-    val removed = raw.count() - kept.count()
-    rewriteShards(spark, dir, dvShards, shardCol, sortCol)
+    val removed = joinDv(spark, dir, raw, shardCol, dvKeyCol(spark, dir),
+      "left_semi").count()
+    rewriteShards(spark, dir, dvShards, shardCol, sortCol,
+      dvShards = Some(named))
     logEntry(spark, dir, "dv_apply",
       s"removed=$removed shards=${dvShards.size}")
     (dvShards, removed)
@@ -1448,11 +1414,13 @@ object Scan {
     * delete family — [[applyPendingDelete]] then recomputes exactly
     * the touched shards' manifest rows and zeroes their staleness,
     * untouched shards' files and manifest rows pass through
-    * bit-stable. Work ∝ the named shards, never the table. */
+    * bit-stable. Work ∝ the named shards, never the table. `dvShards`:
+    * see [[applyPendingDelete]]. */
   private[graft] def rewriteShards(spark: SparkSession, dir: String,
       shards: Seq[Int], shardCol: String = "shard",
       sortCol: Option[String] = None,
-      maxRecordsPerFile: Long = 0L): Unit = {
+      maxRecordsPerFile: Long = 0L,
+      dvShards: Option[Seq[Int]] = None): Unit = {
     if (shards.isEmpty) return
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -1476,7 +1444,7 @@ object Scan {
     out.write((s"kept:${withRows.mkString(",")}" +
       s"|emptied:${emptied.mkString(",")}").getBytes("UTF-8"))
     out.close()
-    applyPendingDelete(spark, dir, shardCol, withRows, emptied)
+    applyPendingDelete(spark, dir, shardCol, withRows, emptied, dvShards)
   }
 
   /** MERGE (upsert) on a sharded z-ordered table, routed BY THE INDEX —
@@ -1628,9 +1596,12 @@ object Scan {
     * content is the final state (a kept shard whose pending dir is
     * already consumed is skipped, never re-deleted), emptied-shard
     * deletes are no-ops when re-applied, and the manifest recompute
-    * reads the post-swap files. */
+    * reads the post-swap files. `dvShards`, when the caller holds it, is
+    * every shard the deletion vector names (collected under the same
+    * lease). */
   private def applyPendingDelete(spark: SparkSession, dir: String,
-      shardCol: String, kept: Seq[Int], emptied: Seq[Int]): Unit = {
+      shardCol: String, kept: Seq[Int], emptied: Seq[Int],
+      dvShards: Option[Seq[Int]] = None): Unit = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val touched = (kept ++ emptied).sorted
@@ -1698,19 +1669,13 @@ object Scan {
         newBloom.fold(keepBloom)(keepBloom.unionByName(_))
       }
     // the two rebuilds read the SAME post-swap files into distinct
-    // sidecar outputs — concurrent (§2.6), pays max() not the sum;
-    // frames built on this thread, futures only execute the swaps
+    // sidecar outputs — concurrent (§2.6), pays max() not the sum
     locally {
-      import scala.concurrent.Await
       import scala.concurrent.ExecutionContext.Implicits.global
-      val swaps = Seq(SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark,
+      settleSidecarSwaps(Seq(SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark,
           statsDf, s"$dir/$StatsSidecar"))) ++
         bloomDf.map(df => SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark,
-          df, s"$dir/$BloomSidecar")))
-      val done = swaps.map(f => scala.util.Try(
-        Await.result(f, SidecarAwait)))
-      settleSidecarSwaps(dir, (StatsSidecar -> statsDf) +:
-        bloomDf.map(BloomSidecar -> _).toSeq, done)
+          df, s"$dir/$BloomSidecar"))))
     }
     // deletion-vector entries for the rewritten shards are now applied
     // physically (every rewrite path computes kept rows DV-filtered —
@@ -1721,10 +1686,12 @@ object Scan {
     if (fs.exists(new Path(s"$dir/$DvSidecar"))) {
       val rest = dvManifest(spark, dir)
         .filter(!col("shard").cast("int").isin(touched: _*))
-      if (rest.isEmpty) fs.delete(new Path(s"$dir/$DvSidecar"), true)
+      // a caller holding the vector's shard set answers emptiness
+      // without the probe job
+      val restEmpty = dvShards.fold(rest.isEmpty)(_.forall(touched.contains))
+      if (restEmpty) fs.delete(new Path(s"$dir/$DvSidecar"), true)
       else graft.dw.Merge.atomicOverwrite(spark, rest.coalesce(1),
         s"$dir/$DvSidecar")
-      invalidateSidecarSchema(dir, DvSidecar)
     }
     // the pending area must by now be fully consumed for kept shards: a
     // shard dir still present there but NOT in the kept list means the
@@ -1870,17 +1837,26 @@ object Scan {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(s"$dir/$DvSidecar"))) df
-    else {
-      val kc = bloomConfigOf(spark, dir).map(_._1).getOrElse(sys.error(
-        s"$dir has a deletion-vector sidecar but no recoverable bloom " +
-          "config — the DV keys are bloom-key-typed by construction"))
-      val dv = dvManifest(spark, dir)
-        .select(col("shard").cast("int").as("_dv_shard"),
-          col("key").as("_dv_key"))
-      df.join(broadcast(dv),
-        df(shardCol).cast("int") === col("_dv_shard") &&
-          df(kc) === col("_dv_key"), "left_anti")
-    }
+    else joinDv(spark, dir, df, shardCol, dvKeyCol(spark, dir), "left_anti")
+  }
+
+  /** The column a table's deletion-vector keys match: its bloom key. */
+  private def dvKeyCol(spark: SparkSession, dir: String): String =
+    bloomConfigOf(spark, dir).map(_._1).getOrElse(sys.error(
+      s"$dir has a deletion-vector sidecar but no recoverable bloom " +
+        "config — the DV keys are bloom-key-typed by construction"))
+
+  /** `df` semi- or anti-joined (`how`) against the table's
+    * deletion-vector (shard, key) pairs on (`shardCol`, `kc`): a
+    * broadcast join, the vector being takedown-sized. */
+  private def joinDv(spark: SparkSession, dir: String, df: DataFrame,
+      shardCol: String, kc: String, how: String): DataFrame = {
+    val dv = dvManifest(spark, dir)
+      .select(col("shard").cast("int").as("_dv_shard"),
+        col("key").as("_dv_key"))
+    df.join(broadcast(dv),
+      df(shardCol).cast("int") === col("_dv_shard") &&
+        df(kc) === col("_dv_key"), how)
   }
 
   /** The table's deletion vector as (shard, key) pairs — empty frame
@@ -1913,7 +1889,10 @@ object Scan {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(s"$dir/$SchemaSidecar"))) None
-    else Some(spark.read.parquet(s"$dir/$SchemaSidecar").schema)
+    else {
+      val path = s"$dir/$SchemaSidecar"
+      footerSchema(spark, path).orElse(Some(spark.read.parquet(path).schema))
+    }
   }
 
   /** Full-table read under the declared schema (see [[tableSchemaOf]]);
@@ -1933,7 +1912,7 @@ object Scan {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new Path(s"$dir/$SchemaSidecar")))
-      spark.read.parquet(s"$dir/$SchemaSidecar").filter(lit(false))
+      readSidecar(spark, dir, SchemaSidecar).filter(lit(false))
     else spark.read.parquet(dir).filter(lit(false))
   }
 
@@ -1961,12 +1940,10 @@ object Scan {
     */
   def readPrunedByKey(spark: SparkSession, dir: String, keyCol: String,
       key: Any, shardCol: String = "shard"): DataFrame = withSidecarCtx {
-    // the bloom manifest's own (m, k) probe is KEPT here (unlike the
-    // mutation verbs, which already hold the meta): swapping it for a
-    // meta read measured consistently slightly SLOWER on x167 (+4–6%
-    // across three interleaved A/Bs at two scales) — the meta read is
-    // exists-probe + footer + collect where the geometry probe rides
-    // the manifest the coverage filter reads anyway
+    // two jobs on a hit, one on a miss: the coverage pass reads each
+    // manifest row's own (m, k) (no geometry probe, no meta read), the
+    // sidecar schemas come from footers, and an empty candidate set
+    // reads the declared-schema empty frame
     val cands = candidateShardsByKey(bloomManifest(spark, dir), key,
       shardCol)
     readShards(spark, dir, cands, shardCol)
@@ -2048,16 +2025,17 @@ object Scan {
       shardCol: String = "shard"): DataFrame = withSidecarCtx {
     require(ranges.nonEmpty || keys.nonEmpty,
       "need at least one predicate (ranges and/or keys)")
-    // FUSED planning: bloom key/m/k come from the 1-row meta sidecar
-    // (the index knows what it indexes), and both shards-sized sidecar
+    // FUSED planning: the bloom key comes from the 1-row meta sidecar
+    // (the index knows what it indexes), (m, k) from each bloom row,
+    // and both shards-sized sidecar
     // filters run as ONE job — a union, not a join (no exchange), with
     // the set intersection done driver-side over the collected rows.
     // One manifest pass + one collect where the naive plan paid two
     // sidecar collects plus a key_col probe; the fixed planning cost is
     // what dominates a well-pruned read, so it is the term to halve.
-    val keyed = if (keys.isEmpty) None else Some(
+    val keyCol = if (keys.isEmpty) None else Some(
       bloomConfigOf(spark, dir).getOrElse(sys.error(
-        s"readPruned: $dir has no bloom index for a key predicate")))
+        s"readPruned: $dir has no bloom index for a key predicate"))._1)
     val statsSide =
       if (ranges.isEmpty) None
       else {
@@ -2075,12 +2053,9 @@ object Scan {
     val bigList = keys.size > 64
     val bloomSide =
       if (bigList) None
-      else keyed.map { case (_, m, k) =>
-        val covered = keys.map { key =>
-          size(array_except(graft.ext.Corpus.bloomPositions(lit(key), m,
-            k), col("_bits"))) === 0
-        }.reduce(_ || _)
-        bloomManifest(spark, dir).filter(covered)
+      else keyCol.map { _ =>
+        bloomManifest(spark, dir)
+          .filter(keys.map(key => bloomCovers(lit(key))).reduce(_ || _))
           .select(col("shard").cast("int").as("_shard"),
             lit(1).as("_side"))
       }
@@ -2094,9 +2069,8 @@ object Scan {
     def side(s: Int): Seq[Int] =
       rows.filter(_.getInt(1) == s).map(_.getInt(0)).toSeq.sorted
     val bloomCands: Option[Seq[Int]] =
-      if (bigList) Some(candidateShardsByKeysCfg(
-        bloomManifest(spark, dir), keys,
-        keyed.map { case (_, m, k) => (m, k) }, shardCol))
+      if (bigList) Some(candidateShardsByKeys(bloomManifest(spark, dir),
+        keys, shardCol))
       else if (bloomSide.isDefined) Some(side(1))
       else None
     val cands = (statsSide, bloomCands) match {
@@ -2107,7 +2081,7 @@ object Scan {
     }
     val residual = (ranges.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
-    } ++ keyed.map { case (kc, _, _) =>
+    } ++ keyCol.map { kc =>
       if (keys.size == 1) col(kc) === lit(keys.head)
       else col(kc).isin(keys: _*)
     }).reduce(_ && _)

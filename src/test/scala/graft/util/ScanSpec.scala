@@ -3,7 +3,9 @@ package graft.util
 import java.nio.file.Files
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.shim
 
 /** Manifest-pruned reads: transparency vs the full scan, candidate
   * enumeration = the files actually opened, atomic publish of data +
@@ -1332,5 +1334,160 @@ class ScanSpec extends SparkSpec {
       Scan.evolveDropColumn(spark, dir, "user_id")) // bloom key
     intercept[IllegalArgumentException](
       Scan.evolveDropColumn(spark, dir, "shard"))
+  }
+
+  // ---- driver cost per verb ----
+
+  /** The number of Spark jobs started while `body` ran, counted by a
+    * listener between two listener-bus drains. */
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    shim.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      shim.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("job count: on a 16-shard bloom table a lookup hit runs in at " +
+    "most 2 Spark jobs, a miss in 1, a takedown (mask + apply) in 27") {
+    val dir = freshDir()
+    Scan.writeSharded(spark, (0L until 1600L).map(i =>
+        (i, i, 10L * i, s"t${i % 3}", (i / 100).toInt, i))
+      .toDF("event_id", "user_id", "ts_us", "event_type", "shard",
+        "zvalue"), dir,
+      statCols = Seq("user_id", "ts_us"), sortCol = Some("zvalue"),
+      bloomKeyCol = Some("user_id"), nShards = Some(16))
+    // a miss the bloom rules out in every shard (no false positive)
+    val miss = 5000000L
+    assert(Scan.candidateShardsByKey(Scan.bloomManifest(spark, dir),
+      miss).isEmpty)
+    val hit = jobsDuring {
+      assert(Scan.readPrunedByKey(spark, dir, "user_id", 777L)
+        .select("event_id").collect().map(_.getLong(0)).toSeq ===
+        Seq(777L))
+    }
+    val missed = jobsDuring {
+      assert(Scan.readPrunedByKey(spark, dir, "user_id", miss)
+        .collect().isEmpty)
+    }
+    // four keys, one in each of four shards
+    val keys = Seq(150L, 550L, 950L, 1350L)
+    val takedown = jobsDuring {
+      assert(Scan.deleteByKeysDeferred(spark, dir, keys)._3 === 4L)
+      assert(Scan.applyDeletionVectors(spark, dir) ===
+        ((Seq(1, 5, 9, 13), 4L)))
+    }
+    assert(spark.read.parquet(dir).count() === 1596L)
+    info(s"jobs: lookup hit $hit, miss $missed, takedown $takedown")
+    assert(hit <= 2, s"lookup hit ran $hit jobs")
+    assert(missed <= 1, s"lookup miss ran $missed jobs")
+    assert(takedown <= 27, s"takedown ran $takedown jobs")
+  }
+
+  test("property: every sidecar's footer schema equals the schema " +
+    "spark.read.parquet infers, across the folds and evolutions that " +
+    "rewrite it") {
+    val dir = freshDir()
+    Scan.writeSharded(spark, laid, dir,
+      statCols = Seq("user_id", "ts_us"), sortCol = Some("zvalue"),
+      bloomKeyCol = Some("user_id"),
+      dicts = Map("event_type" -> Seq(("t0", 0L), ("t1", 1L), ("t2", 2L))
+        .toDF("value", "rank")))
+    def same(path: String): Unit = {
+      val inferred = spark.read.parquet(path).schema
+      assert(Scan.footerSchema(spark, path) === Some(inferred), path)
+      assert(Scan.readSidecarPath(spark, path).schema === inferred, path)
+    }
+    def sidecars(): Unit =
+      Seq(Scan.StatsSidecar, Scan.BloomSidecar, Scan.MetaSidecar,
+        Scan.SchemaSidecar, s"${Scan.DictSidecar}/col=event_type")
+        .foreach(n => same(s"$dir/$n"))
+    sidecars()
+    // a pre-staleness stats manifest, then the append fold that adds
+    // `_stale_rows` back
+    val statsPath = s"$dir/${Scan.StatsSidecar}"
+    graft.dw.Merge.atomicOverwrite(spark,
+      spark.read.parquet(statsPath).drop("_stale_rows"), statsPath)
+    same(statsPath)
+    Scan.appendSharded(spark,
+      Seq((5000L, 2000L, 20000L, "t1", 9, 2000L)).toDF("event_id",
+        "user_id", "ts_us", "event_type", "shard", "zvalue"),
+      dir, "event_id")
+    assert(spark.read.parquet(statsPath).columns.contains("_stale_rows"))
+    sidecars()
+    Scan.deleteByKeysDeferred(spark, dir, Seq(250L, 777L))
+    same(s"$dir/${Scan.DvSidecar}")
+    sidecars()
+    // the 0-row declared-schema sidecar through both evolutions
+    Scan.evolveAddColumn(spark, dir, "score",
+      org.apache.spark.sql.types.DoubleType)
+    sidecars()
+    assert(Scan.tableSchemaOf(spark, dir).get ===
+      spark.read.parquet(s"$dir/${Scan.SchemaSidecar}").schema)
+    Scan.evolveDropColumn(spark, dir, "ts_us")
+    sidecars()
+    assert(!Scan.tableSchemaOf(spark, dir).get.fieldNames
+      .contains("ts_us"))
+    // a missing sidecar fails as a plain read does
+    val missing = s"$dir/_graft_none"
+    assert(Scan.footerSchema(spark, missing).isEmpty)
+    val plain = intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(missing))
+    val viaFooter = intercept[org.apache.spark.sql.AnalysisException](
+      Scan.readSidecarPath(spark, missing))
+    assert(viaFooter.getCondition === plain.getCondition)
+  }
+
+  test("property: per-row bloom geometry names the same candidates as " +
+    "the fixed-geometry positions, for k = 1..4, several m, long and " +
+    "string keys, inline and broadcast-join key lists") {
+    val longs = laid.select(col("shard"), col("user_id").as("key"))
+    val strings = laid.select(col("shard"),
+      concat(lit("doc-"), col("user_id")).as("key"))
+    val longProbe: Seq[Any] =
+      (0L until 1000L by 17L) ++ (5000L until 5050L) // 59 present, 50 not
+    val stringProbe: Seq[Any] = longProbe.map(k => s"doc-$k")
+    // every k, each with a different m (and the second geometry below)
+    val geometries = Seq((1, 64), (2, 1000), (3, 4096), (4, 512))
+    for {
+      (df, probe) <- Seq((longs, longProbe), (strings, stringProbe))
+      (k, m) <- geometries
+    } {
+      // two geometries in one manifest: shards 0–4 as (m, k), 5–9 as
+      // (m + 37, 5 - k), so each row must probe with its own
+      val k2 = graft.ext.Corpus.BloomMaxK + 1 - k
+      val bloom = graft.ext.Corpus.bloomBitsTable(
+          df.filter(col("shard") < 5), "shard", "key", m, k)
+        .unionByName(graft.ext.Corpus.bloomBitsTable(
+          df.filter(col("shard") >= 5), "shard", "key", m + 37, k2))
+        .persist()
+      try {
+        def reference(keys: Seq[Any]): Seq[Int] = {
+          def half(rows: Column, mm: Int, kk: Int) =
+            bloom.filter(rows).filter(keys.map(key => size(array_except(
+              graft.ext.Corpus.bloomPositions(lit(key), mm, kk),
+              col("_bits"))) === 0).reduce(_ || _))
+          half(col("shard") < 5, m, k)
+            .unionByName(half(col("shard") >= 5, m + 37, k2))
+            .select(col("shard").cast("int")).collect()
+            .map(_.getInt(0)).toSeq.sorted
+        }
+        val inline = probe.take(40)
+        assert(Scan.candidateShardsByKeys(bloom, inline) ===
+          reference(inline), s"inline m=$m k=$k")
+        assert(probe.size > 64)
+        assert(Scan.candidateShardsByKeys(bloom, probe) ===
+          reference(probe), s"join m=$m k=$k")
+      } finally bloom.unpersist()
+    }
   }
 }
