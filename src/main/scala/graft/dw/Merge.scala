@@ -5,20 +5,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-/** Upsert (MERGE) over plain parquet tables.
+/** Upsert (MERGE) and append commits over plain parquet tables.
   *
   * Reference behavior: `Delta Load Scripts/dw2_delta_load2.py:101-131` —
   * BigQuery `MERGE ... WHEN MATCHED THEN UPDATE (all columns) WHEN NOT
   * MATCHED THEN INSERT ROW` keyed on `ID_Event`, fed from a transient
   * staging table (`:388-404`).
   *
-  * Spark-first shape: `MERGE` with update-all-columns ≡ "keep existing rows
-  * whose key is absent from staged, then append all staged rows" — one
-  * left-anti join plus a union, both shuffle-free when the staged side
-  * broadcasts (the delta batch is small; at scale AQE picks a shuffled hash
-  * join). Atomicity comes from write-new-then-swap; the single-writer
-  * assumption mirrors the reference's `max_active_runs=1`
-  * (`load_controller_DAG.py:20`).
+  * The delta chain does not rewrite the fact through [[mergeInto]]: its
+  * staged rows are already deduped against T_ODS, whose key set equals
+  * the fact's, so the matched branch is reachable only on a replay after
+  * a crash between the fact commit and the T_ODS commit. The chain
+  * anti-joins the staged rows against the fact's keys, pre-writes the
+  * rest to a pending dir and publishes it with [[commitAppend]] — a
+  * blind append, with no rewrite of rows already in the table
+  * ([[graft.pipeline.DeltaLoad.warehouseStages]]).
+  *
+  * [[mergeInto]] is the general MERGE for a staged batch that may update
+  * existing keys: "keep existing rows whose key is absent from staged,
+  * then append all staged rows" — one left-anti join plus a union,
+  * shuffle-free when the staged side broadcasts, rewritten through the
+  * [[atomicOverwrite]] swap. Atomicity comes from write-new-then-swap (or
+  * per-file renames for an append); the single-writer assumption mirrors
+  * the reference's `max_active_runs=1` (`load_controller_DAG.py:20`).
   */
 object Merge {
 

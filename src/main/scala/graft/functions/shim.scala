@@ -24,6 +24,14 @@ object shim {
     spark.sessionState.catalog.defaultTablePath(
       spark.sessionState.sqlParser.parseTableIdentifier(table)).toString
 
+  /** The session's file-split costs as Spark's split planner reads them:
+    * (`spark.sql.files.maxPartitionBytes`, `spark.sql.files.openCostInBytes`).
+    */
+  def fileSplitCosts(spark: org.apache.spark.sql.SparkSession): (Long, Long) = {
+    val conf = spark.sessionState.conf
+    (conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+  }
+
   /** Block until the listener bus has delivered every event posted so far
     * (Spark-private `LiveListenerBus.waitUntilEmpty`): the deterministic
     * barrier a listener's counters need before they are read. Fixed sleeps

@@ -11,7 +11,7 @@ import graft.dw.{DimBuilder, FactBuilder, Merge}
 import graft.ingest.Staging
 import graft.ods.{OdsTransform, PlaceParser}
 import graft.schemas.Schemas
-import graft.util.SparkFuture
+import graft.util.{Compaction, SparkFuture}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{collect_set, count, lit, struct}
@@ -132,7 +132,7 @@ object FullLoad {
 }
 
 /** The delta chain: STG truncate → ODS append (key dedup) → T_ODS append
-  * (key dedup) → dim extension + fact MERGE → archive
+  * (key dedup) → dim extension + fact append → archive
   * (`load_controller_DAG.py:188`; stages per `Delta Load Scripts`).
   * A delta into an empty warehouse degenerates to a full load.
   */
@@ -142,7 +142,7 @@ object DeltaLoad {
 
   def run(spark: SparkSession, rawPattern: String, states: DataFrame,
       wh: Warehouse, jobId: String, insertionTs: Timestamp): Unit = {
-    // a crash mid-MERGE-swap must not masquerade as an empty warehouse —
+    // a crash mid-compaction-swap must not masquerade as an empty warehouse —
     // that would silently rebuild from only the newest landing file
     Merge.recover(spark, wh.fact)
     if (!exists(spark, wh.fact)) {
@@ -173,7 +173,7 @@ object DeltaLoad {
     Archive.archiveMatching(spark, rawPattern, wh.archive)
   }
 
-  /** Delta stages 2–4 (ODS/T_ODS appends, dim extension, fact MERGE),
+  /** Delta stages 2–4 (ODS/T_ODS appends, dim extension, fact append),
     * reading the already-truncate-written STG layer. Shared verbatim by the
     * batch chain above and the streaming per-micro-batch delta
     * ([[graft.streaming.DeltaStream.startDeltaLoad]]), so both paths have
@@ -185,12 +185,18 @@ object DeltaLoad {
     * dates present only in older rows are already in the dimension tables
     * by induction (the full load built them from the whole table, every
     * delta extends them), so extending from the slice yields the same new
-    * rows the full re-scan would, at delta cost instead of table cost; fact
-    * rows for old events are untouched by the MERGE's anti-join, exactly
-    * the reference's `WHEN MATCHED` contract (`dw2_delta_load2.py:101-131`
-    * updates only staged keys). An empty delta (every landed event already
-    * warehoused) skips dim extension and the fact MERGE outright — no
-    * full-fact rewrite for a no-op batch.
+    * rows the full re-scan would, at delta cost instead of table cost. The
+    * fact is APPENDED to, not rewritten: the reference's MERGE on
+    * `ID_Event` (`dw2_delta_load2.py:101-131`) updates matched keys and
+    * inserts the rest, but the slice is already deduped against T_ODS,
+    * whose key set equals the fact's (the full load writes the fact from
+    * T_ODS; every delta appends the same slice to both). So outside a
+    * replay no staged key is in the fact, and the batch writes only its
+    * own rows — a cost that grows with the delta, not with the history
+    * (Delta Lake's blind-append commit, Iceberg's fast append). Each append
+    * adds files; [[Compaction.compactIfFragmented]] rewrites the fact once
+    * their open cost outweighs a split. An empty delta (every landed event
+    * already warehoused) skips dim extension and the fact append outright.
     *
     * Job shape: a 100-event delta is dominated by per-job cost, not data,
     * so no job here exists only to answer a small question. Every table is
@@ -202,20 +208,26 @@ object DeltaLoad {
     * appends nothing.
     *
     * Replay safety (crash / streaming foreachBatch retry): the batch's
-    * commits are ORDERED — dim appends, then the fact swap (the dim await
-    * is [[Merge.atomicOverwrite]]'s `preSwap` barrier, so a visible fact
-    * never references unwritten dim ids), then the T_ODS commit LAST (its
-    * parquet bytes are pre-written to an invisible pending dir during
-    * stage 4; the commit itself is a metadata-only rename).
+    * commits are ORDERED — dim appends, then the fact commit (a visible
+    * fact never references unwritten dim ids), then the T_ODS commit LAST.
+    * The fact's and T_ODS's parquet bytes are pre-written to invisible
+    * pending dirs during stage 4; each commit is a metadata-only rename
+    * ([[Merge.commitAppend]]).
     * Because the delta slice is derived from T_ODS, a rerun after a crash
-    * anywhere before that final append recomputes the SAME slice (T_ODS
+    * anywhere before that final commit recomputes the SAME slice (T_ODS
     * unchanged) and re-runs stage 4 idempotently: dim extension finds
     * already-appended values (their committed surrogate ids are reused,
-    * max-key continuation is stable), the MERGE re-upserts the same keys,
-    * and only then does T_ODS absorb the slice. A crash after the T_ODS
-    * append means everything else already committed — the rerun's slice is
-    * empty and the batch is a no-op. The ODS append is independently
-    * idempotent (key-deduped against its own table) and free to overlap.
+    * max-key continuation is stable), the fact append anti-joins the
+    * staged rows against the fact's keys — the one place MERGE's matched
+    * branch is reachable: after a crash at `post-merge` the fact already
+    * holds the slice, the staged rows are identical, and nothing is
+    * appended twice — and only then does T_ODS absorb the slice. A stale
+    * pending dir from a crashed run is overwritten, never committed. A
+    * crash after the T_ODS commit means everything else already committed
+    * — the rerun's slice is empty and the batch is a no-op; a crash inside
+    * the fact compaction that follows it is healed by [[Merge.recover]].
+    * The ODS append is independently idempotent (key-deduped against its
+    * own table) and free to overlap.
     * `failpoint` is a test hook injecting crashes at the commit boundaries;
     * production callers leave the default no-op.
     */
@@ -260,7 +272,7 @@ object DeltaLoad {
     // so a stage-4 failure can't leave a zombie job racing a same-JVM retry
     val background = scala.collection.mutable.ArrayBuffer[Future[Unit]](odsAppend)
     try {
-      // stage 4 — incremental dims (max-key continuation) + fact MERGE,
+      // stage 4 — incremental dims (max-key continuation) + fact append,
       // all from the delta slice. One aggregate over it: the row count and,
       // per dimension, the distinct value tuples (in dimension column order)
       val summary = delta.agg(count(lit(1)), wh.dimNames.map(name =>
@@ -268,8 +280,8 @@ object DeltaLoad {
       if (summary.getLong(0) > 0) {
         // Pre-write the T_ODS slice to a pending dir CONCURRENTLY with the
         // stage-4 builds; the pending dir is invisible to T_ODS readers, so
-        // replay ordering is preserved while the heavy write overlaps the
-        // merge instead of serializing after it. Only the metadata-only
+        // replay ordering is preserved while the write overlaps the fact
+        // build instead of serializing after it. Only the metadata-only
         // rename below (Merge.commitAppend) is the post-merge commit.
         val pendingTOds = s"${wh.tOds}__pending"
         val obsTOds = Observation()
@@ -308,19 +320,38 @@ object DeltaLoad {
             full("T_DIM_Seismic_Activity_Type"), full("T_DIM_magCategory"),
             full("T_DIM_depthCategory"), full("T_DIM_date")),
           jobId, insertionTs)
-        Merge.mergeInto(spark, wh.fact, staged, schema = Some(Schemas.factEvents),
-          preSwap = () => {
-            // barrier: append each dim's new rows (a dim with none appends
-            // nothing) and require them + the ODS append durable before the
-            // swap
-            val appends = extended.collect { case (name, _, fresh) if fresh.nonEmpty =>
-              SparkFuture(spark)(local(name, fresh).write.mode("append")
-                .parquet(wh.dim(name)))
-            }
-            background ++= appends
-            Await.result(Future.sequence(odsAppend +: appends), Duration.Inf)
-            failpoint("pre-fact-swap") // dims committed, fact not yet visible
-          })
+        // fact — a keyed append, pre-written to a pending dir while the dim
+        // appends run. The slice is already deduped against T_ODS, whose key
+        // set equals the fact's, so the anti-join against the fact's key
+        // column drops rows only on a replay after a crash at post-merge.
+        Merge.recover(spark, wh.fact)
+        val pendingFact = s"${wh.fact}__pending"
+        val factFiles = Compaction.appendFiles(spark, wh.fact, summary.getLong(0))
+        val obsFact = Observation()
+        val factStage = SparkFuture(spark) {
+          OdsTransform.dedupeAgainstExisting(staged,
+              spark.read.schema(Schemas.factEvents).parquet(wh.fact))
+            .coalesce(factFiles).observe(obsFact, count(lit(1)).as("n"))
+            .write.mode("overwrite").parquet(pendingFact)
+        }
+        background += factStage
+        // barrier: append each dim's new rows (a dim with none appends
+        // nothing) and require them + the ODS append durable before the
+        // fact commit
+        val appends = extended.collect { case (name, _, fresh) if fresh.nonEmpty =>
+          SparkFuture(spark)(local(name, fresh).write.mode("append")
+            .parquet(wh.dim(name)))
+        }
+        background ++= appends
+        Await.result(Future.sequence(odsAppend +: appends), Duration.Inf)
+        failpoint("pre-fact-swap") // dims committed, fact not yet visible
+        Await.result(factStage, Duration.Inf)
+        if (obsFact.get("n").asInstanceOf[Long] > 0)
+          Merge.commitAppend(spark, pendingFact, wh.fact)
+        else {
+          val p = new Path(pendingFact)
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+        }
         failpoint("post-merge") // fact visible, T_ODS commit not yet run
         // stage 3 — T_ODS absorbs the slice LAST: this is the commit that
         // makes the batch invisible to a replay, so everything the slice
@@ -328,6 +359,10 @@ object DeltaLoad {
         // the pending dir during stage 4; only the rename happens here.
         Await.result(tOdsStage, Duration.Inf)
         Merge.commitAppend(spark, pendingTOds, wh.tOds)
+        // every append adds files to the fact; the size rule rewrites it
+        // through the swap once their open cost outweighs a split. A kill
+        // between the swap's renames is healed by the next run's recover.
+        Compaction.compactIfFragmented(spark, wh.fact)
         Await.result(odsAppend, Duration.Inf)
         preRunLog()
         // A5 — all three observed writes are durable; persist the run record

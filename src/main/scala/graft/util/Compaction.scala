@@ -1,7 +1,8 @@
 package graft.util
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.shim
 
 /** Small-file compaction — the table-maintenance pass every long-running
   * ingest loop needs: streaming micro-batches and delta appends
@@ -32,14 +33,10 @@ object Compaction {
       sortCols: Seq[String] = Nil): (Int, Int) = {
     require(targetBytes > 0, "need targetBytes > 0")
     graft.dw.Merge.recover(spark, dir)
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs.listStatus(p).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
-        && !s.getPath.getName.startsWith("."))
-    val bytes = dataFiles.map(_.getLen).sum
-    val nBefore = dataFiles.size
-    val nTarget = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+    val files = dataFiles(spark, dir)
+    val bytes = files.map(_.getLen).sum
+    val nBefore = files.size
+    val nTarget = filesFor(bytes.toDouble, targetBytes)
     if (nBefore <= nTarget) return (nBefore, nBefore)
     val df = spark.read.parquet(dir)
     val laid =
@@ -49,6 +46,56 @@ object Compaction {
         .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
     graft.dw.Merge.atomicOverwrite(spark, laid, dir)
     (nBefore, nTarget)
+  }
+
+  /** [[compact]] under a size rule instead of a schedule, for a table
+    * that grows by appends (the fact under delta loads): compacts when
+    * files × `spark.sql.files.openCostInBytes` >
+    * `spark.sql.files.maxPartitionBytes` + bytes — when the per-file cost
+    * Spark's own split planner charges outweighs one split beyond the
+    * data itself. The table then carries at most about
+    * maxPartitionBytes / openCostInBytes files more than its bytes need,
+    * and is rewritten to ⌈bytes / maxPartitionBytes⌉ files. Returns
+    * [[compact]]'s counts, or None when the rule does not fire.
+    */
+  def compactIfFragmented(spark: SparkSession, dir: String): Option[(Int, Int)] = {
+    graft.dw.Merge.recover(spark, dir)
+    val files = dataFiles(spark, dir)
+    val (maxSplit, openCost) = shim.fileSplitCosts(spark)
+    if (files.size * openCost > maxSplit + files.map(_.getLen).sum)
+      Some(compact(spark, dir, targetBytes = maxSplit))
+    else None
+  }
+
+  /** Files an append of `rows` rows to the parquet table at `dir` should
+    * write: ⌈rows × the table's on-disk bytes per row /
+    * `spark.sql.files.maxPartitionBytes`⌉, at least 1. Bytes per row come
+    * from the largest data file's footer, one driver-side read and no
+    * Spark job; 1 file when the table holds no rows to measure.
+    */
+  def appendFiles(spark: SparkSession, dir: String, rows: Long): Int = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    dataFiles(spark, dir).maxByOption(_.getLen).fold(1) { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      val fileRows = try r.getRecordCount finally r.close()
+      if (fileRows == 0) 1
+      else filesFor(rows * st.getLen.toDouble / fileRows,
+        shim.fileSplitCosts(spark)._1)
+    }
+  }
+
+  private def filesFor(bytes: Double, targetBytes: Long): Int =
+    math.max(1, math.ceil(bytes / targetBytes).toInt)
+
+  /** The parquet data files directly under `dir` (sidecars, `_SUCCESS`
+    * and hidden files excluded). */
+  private def dataFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
+        && !s.getPath.getName.startsWith("."))
   }
 
   /** Compaction for a SHARD-PARTITIONED table with manifest sidecars

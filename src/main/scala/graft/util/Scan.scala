@@ -612,8 +612,8 @@ object Scan {
         s"$tmp/$shardCol=__HIVE_DEFAULT_PARTITION__")),
         s"writeSharded: rows with NULL $shardCol — route unroutable " +
           "(NULL-dimension) rows explicitly before publishing")
-      writeManifests(spark, tmp, statCols, shardCol, bloomKeyCol,
-        bloomM, bloomK)
+      writeManifests(spark, tmp, laid.schema, statCols, shardCol,
+        bloomKeyCol, bloomM, bloomK)
     }
     // the swap replaced the whole table — a caller's chain (compact,
     // re-shard) must re-read meta/schema from the NEW version
@@ -944,9 +944,14 @@ object Scan {
   } }
 
   private def writeManifests(spark: SparkSession, tableDir: String,
+      schema: org.apache.spark.sql.types.StructType,
       statCols: Seq[String], shardCol: String,
       bloomKeyCol: Option[String], bloomM: Int, bloomK: Int): Unit = {
-    val back = spark.read.parquet(tableDir)
+    // the written files' schema is known from the frame, so the read
+    // starts no partition-discovery inference job
+    val back = writtenSchema(spark, tableDir, schema, shardCol)
+      .fold(spark.read.parquet(tableDir))(sc =>
+        spark.read.schema(sc).parquet(tableDir))
     // `_stale_rows` = rows folded in by [[appendSharded]] since the
     // stats were last computed EXACTLY from files — the measurable
     // staleness signal (0 here: this manifest IS exact). NDV looseness
@@ -986,6 +991,29 @@ object Scan {
           if (primary == null) throw t else primary.addSuppressed(t)
       }
     }
+  }
+
+  /** The schema `spark.read.parquet(dir)` infers for a table written
+    * from a frame of `schema` partitioned by `shardCol`: the other columns
+    * in frame order, nullable as a file source reads them, then `shardCol`
+    * typed as partition discovery types its directory values — int when
+    * every value fits one, else long. None when a value is not integral;
+    * the caller then infers. Lists `dir` only; no Spark job. */
+  private def writtenSchema(spark: SparkSession, dir: String,
+      schema: org.apache.spark.sql.types.StructType,
+      shardCol: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+    val p = new Path(dir)
+    val values = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(s"$shardCol=")).map(_.stripPrefix(s"$shardCol="))
+    val shardType =
+      if (values.forall(_.toIntOption.isDefined)) Some(IntegerType)
+      else if (values.forall(_.toLongOption.isDefined)) Some(LongType)
+      else None
+    shardType.map(t => StructType(
+      asNullable(StructType(schema.filterNot(_.name == shardCol)))
+        .asInstanceOf[StructType].fields :+ StructField(shardCol, t)))
   }
 
   def statsManifest(spark: SparkSession, dir: String): DataFrame =

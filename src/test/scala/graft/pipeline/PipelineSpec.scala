@@ -255,4 +255,99 @@ class PipelineSpec extends SparkSpec {
     info(s"jobs per delta: $jobs")
     assert(jobs <= 40)
   }
+
+  /** The invariant the delta's fact append rests on: the fact holds
+    * exactly T_ODS's keys, each once. */
+  private def assertFactKeysAreTOds(wh: Warehouse, after: String): Unit = {
+    val fact = spark.read.parquet(wh.fact).select("ID_Event").as[Long].collect()
+    val tOds = spark.read.parquet(wh.tOds).select("ID_Event").as[Long].collect()
+    assert(fact.length === fact.distinct.length, s"$after: a fact ID_Event repeats")
+    assert(fact.toSet === tOds.toSet, s"$after: fact keys differ from T_ODS keys")
+  }
+
+  /** A new event: the novel fixture line at its own minute. */
+  private def freshEvent(minute: Int): String =
+    novelLine.replace("2024-08-02T09:30:00.000Z", f"2024-08-02T10:$minute%02d:00.000Z")
+
+  test("after a full load and every delta the fact's ID_Event set is " +
+    "T_ODS's, with no key repeated") {
+    val (raw, wh) = setup()
+    Controller.run(spark, s"$raw/*.csv", states, wh, "job-full", ts)
+    assertFactKeysAreTOds(wh, "full load")
+    landDelta(raw, "all_day_20240802-120000.csv", novelLine)
+    Controller.run(spark, s"$raw/*.csv", states, wh, "job-delta", ts2)
+    assertFactKeysAreTOds(wh, "first delta")
+    // re-reports of a full-load event and of the first delta's event,
+    // beside one new event
+    val lines = Files.readAllLines(Paths.get(resource("usgs_sample.csv")))
+    landDelta(raw, "all_day_20240803-120000.csv", lines.get(1), novelLine,
+      freshEvent(1))
+    val factBefore = spark.read.parquet(wh.fact).count()
+    Controller.run(spark, s"$raw/*.csv", states, wh, "job-delta2", ts2)
+    assert(spark.read.parquet(wh.fact).count() === factBefore + 1)
+    assertFactKeysAreTOds(wh, "second delta")
+  }
+
+  test("the delta compacts the fact once its files' open cost outweighs " +
+    "a split, and the next delta heals a kill between the compaction's " +
+    "swap renames") {
+    val (raw, wh) = setup()
+    Controller.run(spark, s"$raw/*.csv", states, wh, "job-full", ts)
+    def dataFiles(dir: String): Seq[java.io.File] = new java.io.File(dir)
+      .listFiles().toSeq.filter(_.getName.startsWith("part-"))
+    def rows(dir: String): Set[String] = {
+      val df = spark.read.parquet(dir)
+      df.select(df.columns.sorted.toIndexedSeq.map(col): _*).collect().map(_.toString).toSet
+    }
+    val maxSplit = 256L << 10
+    val openCost = 64L << 10
+    spark.conf.set("spark.sql.files.maxPartitionBytes", maxSplit)
+    spark.conf.set("spark.sql.files.openCostInBytes", openCost)
+    try {
+      // each delta appends one event and, under these costs, grows the fact
+      // by one file until the rule fires
+      var compactedAt = 0
+      var delta = 0
+      while (compactedAt == 0 && delta < 8) {
+        delta += 1
+        val filesBefore = dataFiles(wh.fact).size
+        val before = rows(wh.fact)
+        landDelta(raw, f"all_day_202408${delta + 2}%02d-120000.csv", freshEvent(delta))
+        Controller.run(spark, s"$raw/*.csv", states, wh, s"job-delta$delta", ts2)
+        val after = rows(wh.fact)
+        assert(after.size === before.size + 1 && before.subsetOf(after))
+        assertFactKeysAreTOds(wh, s"delta $delta")
+        val files = dataFiles(wh.fact)
+        val bytes = files.map(_.length).sum
+        if (files.size <= filesBefore) {
+          compactedAt = delta
+          // bytes / maxSplit rounded up: one file at this size
+          assert(files.size === math.ceil(bytes.toDouble / maxSplit).toInt)
+        } else {
+          assert(files.size === filesBefore + 1)
+          assert(files.size * openCost <= maxSplit + bytes,
+            s"${files.size} files outgrew the rule")
+        }
+      }
+      assert(compactedAt > 0, "the size rule never fired")
+      info(s"compacted at delta $compactedAt")
+
+      // a kill between the compaction's two renames: no table dir, the
+      // previous version in __swap_old, the complete rewrite in __swap_new
+      val committed = rows(wh.fact)
+      Files.move(Paths.get(wh.fact), Paths.get(wh.fact + "__swap_old"))
+      spark.read.parquet(wh.fact + "__swap_old").coalesce(1)
+        .write.parquet(wh.fact + "__swap_new")
+      landDelta(raw, "all_day_20240830-120000.csv", freshEvent(59))
+      Controller.run(spark, s"$raw/*.csv", states, wh, "job-heal", ts2)
+      val healed = rows(wh.fact)
+      assert(healed.size === committed.size + 1 && committed.subsetOf(healed))
+      assertFactKeysAreTOds(wh, "healing delta")
+      assert(!Files.exists(Paths.get(wh.fact + "__swap_old")))
+      assert(!Files.exists(Paths.get(wh.fact + "__swap_new")))
+    } finally {
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      spark.conf.unset("spark.sql.files.openCostInBytes")
+    }
+  }
 }

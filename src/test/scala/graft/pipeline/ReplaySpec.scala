@@ -107,4 +107,34 @@ class ReplaySpec extends SparkSpec {
     runStages(wh) // foreachBatch re-delivery of a fully-committed batch
     assert(snapshot(wh) === control)
   }
+
+  // `snapshot` compares sets of rows, so a fact row appended twice would
+  // still equal the control; this case counts rows and keys instead
+  test("replay appends no fact row twice, and a stale pending fact dir is " +
+    "overwritten, not committed") {
+    val controlRows = {
+      val wh = setup()
+      runStages(wh)
+      spark.read.parquet(wh.fact).count()
+    }
+    def assertNoDuplicates(wh: Warehouse, label: String): Unit = {
+      val fact = spark.read.parquet(wh.fact)
+      assert(fact.count() === controlRows, label)
+      assert(fact.select("ID_Event").distinct().count() === controlRows, label)
+    }
+    Seq("pre-fact-swap", "post-merge").foreach { fp =>
+      val wh = setup()
+      intercept[RuntimeException](runStages(wh, Some(fp)))
+      runStages(wh)
+      assertNoDuplicates(wh, s"replay after a crash at $fp")
+      assert(snapshot(wh) === control)
+    }
+    // a pending dir left by an earlier crashed run, holding a copy of every
+    // fact row: committing it would duplicate the whole fact
+    val wh = setup()
+    spark.read.parquet(wh.fact).write.parquet(s"${wh.fact}__pending")
+    runStages(wh)
+    assertNoDuplicates(wh, "stale pending dir")
+    assert(snapshot(wh) === control)
+  }
 }

@@ -45,6 +45,40 @@ class CompactionSpec extends SparkSpec {
     assert(dataFiles(dir).map(_.getName).toSet === names) // no rewrite
   }
 
+  test("compactIfFragmented: fires only when the files' open cost " +
+    "outweighs a split beyond the bytes, and rewrites to " +
+    "ceil(bytes / maxPartitionBytes) files with the rows unchanged") {
+    val dir = freshDir()
+    val df = (1L to 5000L).map(i => (i, s"row $i")).toDF("id", "v")
+    df.repartition(40).write.parquet(dir)
+    val maxSplit = 16L << 10
+    val openCost = 8L << 10
+    val before = spark.read.parquet(dir).as[(Long, String)].collect().toSeq
+    val bytes = dataFiles(dir).map(_.length).sum
+    assert(40 * openCost > maxSplit + bytes) // the rule's premise here
+    val target = math.ceil(bytes.toDouble / maxSplit).toInt
+    spark.conf.set("spark.sql.files.maxPartitionBytes", maxSplit)
+    spark.conf.set("spark.sql.files.openCostInBytes", openCost)
+    try {
+      assert(Compaction.compactIfFragmented(spark, dir) === Some((40, target)))
+      assert(target > 1 && dataFiles(dir).size === target)
+      assert(spark.read.parquet(dir).as[(Long, String)].collect().toSeq.sorted ===
+        before.sorted)
+      // compacted: the open cost no longer outweighs a split
+      val names = dataFiles(dir).map(_.getName).toSet
+      assert(Compaction.compactIfFragmented(spark, dir) === None)
+      assert(dataFiles(dir).map(_.getName).toSet === names)
+    } finally {
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      spark.conf.unset("spark.sql.files.openCostInBytes")
+    }
+    // at the default costs (128 MB splits, 4 MB per file) 32 small files
+    // stay as they are
+    val small = freshDir()
+    df.repartition(32).write.parquet(small)
+    assert(Compaction.compactIfFragmented(spark, small) === None)
+  }
+
   test("reshardSharded: pruned reads are transparent across a shard-" +
     "count change — same rows, new candidate enumeration, manifests " +
     "and meta rebuilt in the swap") {

@@ -1490,4 +1490,36 @@ class ScanSpec extends SparkSpec {
       } finally bloom.unpersist()
     }
   }
+
+  test("job count: a 16-shard publish (writeSharded) runs in at most 10 " +
+    "Spark jobs, and its stats and bloom sidecars keep the schemas " +
+    "inferred from the written files give them") {
+    // names and types; a read-back file reports every field nullable
+    def shape(sc: org.apache.spark.sql.types.StructType) = sc.catalogString
+    // an int and a long shard column: partition discovery types both int
+    Seq(col("shard"), col("shard").cast("long")).foreach { shardCol =>
+      val dir = freshDir()
+      val rows = (0L until 1600L).map(i =>
+          (i, i, 10L * i, s"t${i % 3}", (i / 100).toInt, i))
+        .toDF("event_id", "user_id", "ts_us", "event_type", "shard",
+          "zvalue").withColumn("shard", shardCol)
+      val jobs = jobsDuring(Scan.writeSharded(spark, rows, dir,
+        statCols = Seq("user_id", "ts_us"), sortCol = Some("zvalue"),
+        bloomKeyCol = Some("user_id"), bloomM = 2048, bloomK = 2,
+        nShards = Some(16)))
+      info(s"writeSharded (shard ${rows.schema("shard").dataType}): $jobs jobs")
+      assert(jobs <= 10, s"writeSharded ran $jobs jobs")
+      val files = spark.read.parquet(dir)
+      assert(files.schema("shard").dataType ===
+        org.apache.spark.sql.types.IntegerType)
+      assert(shape(spark.read.parquet(s"$dir/${Scan.StatsSidecar}").schema) ===
+        shape(graft.ext.Corpus.shardStats(files, "shard",
+          Seq("user_id", "ts_us")).withColumn("_stale_rows", lit(0L)).schema))
+      assert(shape(spark.read.parquet(s"$dir/${Scan.BloomSidecar}").schema) ===
+        shape(graft.ext.Corpus.bloomBitsTable(files, "shard", "user_id",
+          2048, 2).withColumn("key_col", lit("user_id")).schema))
+      assert(Scan.readPrunedByKey(spark, dir, "user_id", 777L)
+        .select("event_id").collect().map(_.getLong(0)).toSeq === Seq(777L))
+    }
+  }
 }
