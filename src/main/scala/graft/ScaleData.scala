@@ -91,10 +91,16 @@ object ScaleData {
     }.reduce(_ unionByName _)
   }
 
+  /** `runMain graft.ScaleData <srcSfDir> <outDir> <factor>`: writes
+    * `factor`× copies of the sf dir's tables under `outDir`. */
   def main(args: Array[String]): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    val out = sys.env.getOrElse("SPARK_GRAFT_OUT", "target/sf1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
+    if (args.length != 3 || args(2).toIntOption.forall(_ < 1)) {
+      System.err.println(
+        "usage: graft.ScaleData <srcSfDir> <outDir> <factor (integer >= 1)>")
+      sys.exit(2)
+    }
+    val Array(src, out, f) = args
+    val factor = f.toInt
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)

@@ -130,7 +130,7 @@ object Compaction {
       shardCol: String = "shard",
       sortCol: Option[String] = None,
       maxRecordsPerFile: Long = 0L): (Int, Int) =
-      Scan.withSidecarCtx { Scan.withWriterLease(spark, dir) {
+      Scan.withWriterLease(spark, dir) {
     graft.dw.Merge.recover(spark, dir)
     Scan.recoverPendingDelete(spark, dir, shardCol)
     // merge-on-read contract: compaction is where deferred deletes
@@ -187,7 +187,7 @@ object Compaction {
         maxRecordsPerFile, dicts)
     } finally dicts.values.foreach(_.unpersist())
     (nBefore, shardDirs.size)
-      } }
+      }
 
   /** TARGETED compaction — rewrite ONLY the shards whose data-file
     * count exceeds `maxFilesPerShard`, through the pending/`_COMMIT`
@@ -211,7 +211,7 @@ object Compaction {
       maxFilesPerShard: Int = 1, shardCol: String = "shard",
       sortCol: Option[String] = None,
       maxRecordsPerFile: Long = 0L): (Seq[Int], Int) =
-      Scan.withSidecarCtx { Scan.withWriterLease(spark, dir) {
+      Scan.withWriterLease(spark, dir) {
     require(maxFilesPerShard >= 1, "need maxFilesPerShard >= 1")
     graft.dw.Merge.recover(spark, dir)
     Scan.recoverPendingDelete(spark, dir, shardCol)
@@ -234,7 +234,7 @@ object Compaction {
     Scan.logEntry(spark, dir, "compact_targeted",
       s"shards=${shards.size} files_before=${breaching.map(_._2).sum}")
     (shards, breaching.map(_._2).sum)
-      } }
+      }
 
   /** SHARD-COUNT EVOLUTION — the re-layout a growing table eventually
     * needs: `nShards` is frozen at publication and appends preserve it,
@@ -259,7 +259,7 @@ object Compaction {
   def reshardSharded(spark: SparkSession, dir: String, newNShards: Int,
       shardCol: String = "shard", zvalueCol: String = "zvalue")
       : (Int, Int) =
-      Scan.withSidecarCtx { Scan.withWriterLease(spark, dir) {
+      Scan.withWriterLease(spark, dir) {
     require(newNShards >= 1, "need newNShards >= 1")
     graft.dw.Merge.recover(spark, dir)
     Scan.recoverPendingDelete(spark, dir, shardCol)
@@ -287,6 +287,6 @@ object Compaction {
         dicts = dicts)
     } finally dicts.values.foreach(_.unpersist())
     (oldN, newNShards)
-  } }
+  }
 }
 

@@ -166,43 +166,6 @@ object Scan {
   private val jvmLeases =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
 
-  // PER-VERB-CHAIN config memo (guide §6 — the driver constant IS the
-  // mutation family's floor: VERDICT r16 measured x161 at 4.1 s wall vs
-  // 1.5 s summed job time). The 1-row meta sidecar and the 0-row schema
-  // sidecar are read-only during every mutation chain — only the evolve
-  // verbs and whole-table republishes change them — yet a single upsert
-  // consults them ~8×, and each readMeta is a collect-limit-1 JOB.
-  // Every public verb opens a scope here; within it readMeta /
-  // tableSchemaOf memoize per table dir, and the few sites that WRITE
-  // either sidecar invalidate the entry. The scope dies with the
-  // outermost verb on this thread — nothing is cached across calls, let
-  // alone across queries or runs. Sidecar SCHEMAS are not memoized:
-  // every construction reads the footer on disk ([[readSidecarPath]]),
-  // which costs no job.
-  private final class SidecarCtx {
-    val meta = scala.collection.mutable.Map.empty[String,
-      Option[TableMeta]]
-    val schema = scala.collection.mutable.Map.empty[String,
-      Option[org.apache.spark.sql.types.StructType]]
-  }
-  private val sidecarCtx = new ThreadLocal[SidecarCtx]
-
-  private[graft] def withSidecarCtx[T](body: => T): T =
-    if (sidecarCtx.get != null) body // re-entrant: inner verbs share it
-    else {
-      sidecarCtx.set(new SidecarCtx)
-      try body finally sidecarCtx.remove()
-    }
-
-  private def invalidateSidecarCtx(dir: String): Unit = {
-    val c = sidecarCtx.get
-    if (c != null) {
-      val k = new Path(dir).toString
-      c.meta.remove(k)
-      c.schema.remove(k)
-    }
-  }
-
   /** Await concurrent sidecar swaps EACH individually (not a fail-fast
     * `Future.sequence`), so none is still writing when the caller
     * unwinds, then rethrow the first failure. Finite timeout: see
@@ -227,14 +190,7 @@ object Scan {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val part =
-      try p.getFileSystem(conf).listStatus(p).iterator
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .minByOption(_.getPath.getName)
-      catch { case _: java.io.FileNotFoundException => None }
-    part.flatMap { st =>
+    firstPartFile(spark, path).flatMap { st =>
       val opts = HadoopReadOptions.builder(conf)
         .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS)
         .build()
@@ -251,6 +207,20 @@ object Scan {
           asNullable(sc).asInstanceOf[org.apache.spark.sql.types.StructType]
         }
     }
+  }
+
+  /** The first data file, in name order, of the parquet directory
+    * `path` (`_`- and `.`-prefixed names are not data); None when the
+    * directory is missing or holds no data file. One listing. */
+  private def firstPartFile(spark: SparkSession,
+      path: String): Option[org.apache.hadoop.fs.FileStatus] = {
+    val p = new Path(path)
+    try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).iterator
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .minByOption(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** The footer key under which Spark's parquet writer stores the row
@@ -415,67 +385,70 @@ object Scan {
       bloomM: Int, bloomK: Int, zTotalBits: Option[Int],
       nShards: Option[Int])
 
-  /** The meta sidecar's schema is FIXED by construction ([[writeMeta]]
-    * always writes these eight columns) — supplying it to the read
-    * skips parquet schema inference, which is a ~25 ms Spark JOB per
-    * `spark.read.parquet` construction (measured in the x175 job
-    * profile); the 1-row collect is then the chain's only meta job. */
-  private val MetaSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("stat_cols",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType)),
-    org.apache.spark.sql.types.StructField("shard_col",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("sort_col",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("bloom_key",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("bloom_m",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("bloom_k",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("z_total_bits",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("n_shards",
-      org.apache.spark.sql.types.IntegerType)))
-
-  private def writeMeta(spark: SparkSession, tableDir: String,
-      meta: TableMeta): Unit = {
+  /** `meta` as the sidecar's one-row, one-partition frame. */
+  private def metaFrame(spark: SparkSession, meta: TableMeta): DataFrame = {
     import spark.implicits._
     Seq((meta.statCols, meta.shardCol, meta.sortCol, meta.bloomKey,
         meta.bloomM, meta.bloomK, meta.zTotalBits, meta.nShards))
       .toDF("stat_cols", "shard_col", "sort_col", "bloom_key",
         "bloom_m", "bloom_k", "z_total_bits", "n_shards")
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"$tableDir/$MetaSidecar")
   }
 
+  private def writeMeta(spark: SparkSession, tableDir: String,
+      meta: TableMeta): Unit =
+    metaFrame(spark, meta).write.mode("overwrite")
+      .parquet(s"$tableDir/$MetaSidecar")
+
+  /** The table's [[TableMeta]], read on the driver with no Spark job:
+    * the sidecar's one row is decoded from its part file's first row
+    * group with parquet's example record reader (the meta is
+    * [[writeMeta]]'s eight columns; an absent optional value has no
+    * repetition). The file is opened under the session's Hadoop
+    * configuration: `ParquetReader.builder(…, path)` would build and
+    * parse a fresh default `Configuration` (~100 KB of XML) per read.
+    * None when the table has no meta sidecar; a sidecar directory
+    * without that row fails. */
   private[graft] def readMeta(spark: SparkSession,
       dir: String): Option[TableMeta] = {
-    val c = sidecarCtx.get
-    if (c == null) readMetaNow(spark, dir)
-    else c.meta.getOrElseUpdate(new Path(dir).toString,
-      readMetaNow(spark, dir))
-  }
-
-  private def readMetaNow(spark: SparkSession,
-      dir: String): Option[TableMeta] = {
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$dir/$MetaSidecar"))) None
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.ColumnIOFactory
+    val path = s"$dir/$MetaSidecar"
+    val conf = spark.sparkContext.hadoopConfiguration
+    if (!new Path(path).getFileSystem(conf).exists(new Path(path))) None
     else {
-      val r = spark.read.schema(MetaSchema)
-        .parquet(s"$dir/$MetaSidecar").head()
-      def optInt(c: String) =
-        if (r.isNullAt(r.fieldIndex(c))) None
-        else Some(r.getAs[Int](c))
-      def optStr(c: String) = Option(r.getAs[String](c))
-      Some(TableMeta(r.getAs[scala.collection.Seq[String]]("stat_cols")
-          .toSeq,
-        r.getAs[String]("shard_col"), optStr("sort_col"),
-        optStr("bloom_key"), r.getAs[Int]("bloom_m"),
-        r.getAs[Int]("bloom_k"), optInt("z_total_bits"),
-        optInt("n_shards")))
+      val part = firstPartFile(spark, path).getOrElse(sys.error(
+        s"$path: meta sidecar without a data file"))
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(part, conf),
+        HadoopReadOptions.builder(conf).build())
+      val row = try {
+        val schema = r.getFooter.getFileMetaData.getSchema
+        Option(r.readNextRowGroup()).flatMap(rows => Option(
+          new ColumnIOFactory().getColumnIO(schema).getRecordReader[Group](
+            rows, new GroupRecordConverter(schema)).read()))
+      } finally r.close()
+      val g = row.getOrElse(sys.error(s"$path: meta sidecar without a row"))
+      def opt[T](f: String)(get: Int => T): Option[T] = {
+        val i = g.getType.getFieldIndex(f)
+        if (g.getFieldRepetitionCount(i) == 0) None else Some(get(i))
+      }
+      def str(f: String) = opt(f)(g.getString(_, 0))
+      def int(f: String) = opt(f)(g.getInteger(_, 0))
+      // Spark's 3-level LIST: stat_cols → repeated group → element
+      val statCols = opt("stat_cols")(g.getGroup(_, 0))
+        .fold(Seq.empty[String]) { list =>
+          (0 until list.getFieldRepetitionCount(0)).map { i =>
+            val e = list.getGroup(0, i)
+            if (e.getFieldRepetitionCount(0) == 0) null else e.getString(0, 0)
+          }
+        }
+      Some(TableMeta(statCols, str("shard_col").orNull, str("sort_col"),
+        str("bloom_key"), int("bloom_m").getOrElse(0),
+        int("bloom_k").getOrElse(0), int("z_total_bits"), int("n_shards")))
     }
   }
 
@@ -549,7 +522,6 @@ object Scan {
       maxRecordsPerFile: Long = 0L,
       dicts: Map[String, DataFrame] = Map.empty): Unit = {
     require(statCols.nonEmpty, "need at least one stats column")
-    withSidecarCtx {
     withWriterLease(spark, dir) {
     graft.dw.Merge.atomicOverwriteDir(spark, dir) { tmp =>
       // meta FIRST: recover promotes on the DATA write's _SUCCESS, so
@@ -615,13 +587,9 @@ object Scan {
       writeManifests(spark, tmp, laid.schema, statCols, shardCol,
         bloomKeyCol, bloomM, bloomK)
     }
-    // the swap replaced the whole table — a caller's chain (compact,
-    // re-shard) must re-read meta/schema from the NEW version
-    invalidateSidecarCtx(dir)
     logEntry(spark, dir, "publish",
       s"shards=${nShards.getOrElse(-1)} stat_cols=${statCols.mkString("+")}" +
         bloomKeyCol.fold("")(k => s" bloom=$k"))
-    }
     }
   }
 
@@ -677,7 +645,7 @@ object Scan {
   def appendSharded(spark: SparkSession, laidBatch: DataFrame,
       dir: String, idCol: String,
       shardCol: String = "shard"): Unit =
-      withSidecarCtx { withWriterLease(spark, dir) {
+      withWriterLease(spark, dir) {
     // every mutation rolls an interrupted delete forward first (the
     // id probe's readShards would too, but the manifest fold must
     // never read a pre-roll-forward sidecar)
@@ -798,7 +766,7 @@ object Scan {
           s"rows=$nRows shards=${touched.size}")
       } finally batch.unpersist()
     } finally b0.unpersist()
-  } }
+  }
 
   /** Recompute and atomically replace a table's manifest sidecars from
     * its CURRENT files — the maintenance call after any rewrite that
@@ -812,7 +780,7 @@ object Scan {
     */
   def refreshManifests(spark: SparkSession, dir: String,
       statCols: Seq[String] = Nil, shardCol: String = "shard"): Unit =
-      withSidecarCtx { withWriterLease(spark, dir) {
+      withWriterLease(spark, dir) {
     val sc =
       if (statCols.nonEmpty) statCols
       else statColsOf(spark, dir)
@@ -862,7 +830,7 @@ object Scan {
           s"$dir/$BloomSidecar"))))
     }
     logEntry(spark, dir, "refresh", s"stat_cols=${sc.mkString("+")}")
-  } }
+  }
 
   /** TARGETED manifest refresh — recompute ONLY the named shards'
     * stats (and bloom) rows exactly from their files, leaving every
@@ -880,7 +848,7 @@ object Scan {
     */
   def refreshShards(spark: SparkSession, dir: String, shards: Seq[Int],
       shardCol: String = "shard"): Unit =
-      withSidecarCtx { withWriterLease(spark, dir) {
+      withWriterLease(spark, dir) {
     if (shards.isEmpty) return
     recoverPendingDelete(spark, dir, shardCol)
     val fs = new Path(dir).getFileSystem(
@@ -941,7 +909,7 @@ object Scan {
       settleSidecarSwaps(statsSwap +: bloomSwap.toSeq)
     }
     logEntry(spark, dir, "refresh_shards", s"shards=${shards.size}")
-  } }
+  }
 
   private def writeManifests(spark: SparkSession, tableDir: String,
       schema: org.apache.spark.sql.types.StructType,
@@ -1122,7 +1090,7 @@ object Scan {
       dataType: org.apache.spark.sql.types.DataType,
       addToStats: Boolean = true,
       shardCol: String = "shard"): Unit =
-      withSidecarCtx { withWriterLease(spark, dir) {
+      withWriterLease(spark, dir) {
     recoverPendingDelete(spark, dir, shardCol)
     val schema = tableSchemaOf(spark, dir).getOrElse(sys.error(
       s"evolveAddColumn: $dir has no $SchemaSidecar declared-schema " +
@@ -1146,25 +1114,17 @@ object Scan {
         .withColumn(colName, lit(null).cast(dataType))
       graft.dw.Merge.atomicOverwrite(spark, widened,
         s"$dir/$SchemaSidecar")
-      invalidateSidecarCtx(dir) // the declared schema just changed
     }
     // 3. meta stat_cols names it — appends start folding its stats
     if (addToStats) readMeta(spark, dir).foreach { m =>
       if (!m.statCols.contains(colName)) {
-        import spark.implicits._
         val nm = m.copy(statCols = m.statCols :+ colName)
-        graft.dw.Merge.atomicOverwrite(spark,
-          Seq((nm.statCols, nm.shardCol, nm.sortCol, nm.bloomKey,
-              nm.bloomM, nm.bloomK, nm.zTotalBits, nm.nShards))
-            .toDF("stat_cols", "shard_col", "sort_col", "bloom_key",
-              "bloom_m", "bloom_k", "z_total_bits", "n_shards")
-            .coalesce(1),
+        graft.dw.Merge.atomicOverwrite(spark, metaFrame(spark, nm),
           s"$dir/$MetaSidecar")
-        invalidateSidecarCtx(dir) // the meta just changed
       }
     }
     logEntry(spark, dir, "evolve_add", s"col=$colName")
-  } }
+  }
 
   /** SCHEMA EVOLUTION, drop side — remove a column WITHOUT republishing
     * (the ALTER TABLE DROP COLUMN contract at 100 TB): the declared
@@ -1189,7 +1149,7 @@ object Scan {
   def evolveDropColumn(spark: SparkSession, dir: String,
       colName: String,
       shardCol: String = "shard"): Unit =
-      withSidecarCtx { withWriterLease(spark, dir) {
+      withWriterLease(spark, dir) {
     recoverPendingDelete(spark, dir, shardCol)
     val schema = tableSchemaOf(spark, dir).getOrElse(sys.error(
       s"evolveDropColumn: $dir has no $SchemaSidecar declared-schema " +
@@ -1206,16 +1166,9 @@ object Scan {
     // 1. meta stat_cols stops naming it — appends stop folding
     meta.foreach { m =>
       if (m.statCols.contains(colName)) {
-        import spark.implicits._
         val nm = m.copy(statCols = m.statCols.filterNot(_ == colName))
-        graft.dw.Merge.atomicOverwrite(spark,
-          Seq((nm.statCols, nm.shardCol, nm.sortCol, nm.bloomKey,
-              nm.bloomM, nm.bloomK, nm.zTotalBits, nm.nShards))
-            .toDF("stat_cols", "shard_col", "sort_col", "bloom_key",
-              "bloom_m", "bloom_k", "z_total_bits", "n_shards")
-            .coalesce(1),
+        graft.dw.Merge.atomicOverwrite(spark, metaFrame(spark, nm),
           s"$dir/$MetaSidecar")
-        invalidateSidecarCtx(dir) // the meta just changed
       }
     }
     // 2. stats manifest drops its envelope columns
@@ -1230,9 +1183,8 @@ object Scan {
     graft.dw.Merge.atomicOverwrite(spark,
       readSidecar(spark, dir, SchemaSidecar).drop(colName),
       s"$dir/$SchemaSidecar")
-    invalidateSidecarCtx(dir) // the declared schema just changed
     logEntry(spark, dir, "evolve_drop", s"col=$colName")
-  } }
+  }
 
   val PendingDelete = "_pending_delete"
 
@@ -1274,7 +1226,7 @@ object Scan {
   def deleteByKeys(spark: SparkSession, dir: String, keys: Seq[Any],
       shardCol: String = "shard",
       sortCol: Option[String] = None): (Seq[Int], Seq[Int], Long) =
-      withSidecarCtx { withWriterLease(spark, dir) {
+      withWriterLease(spark, dir) {
     require(keys.nonEmpty, "need at least one key")
     graft.dw.Merge.recover(spark, dir)
     recoverPendingDelete(spark, dir, shardCol)
@@ -1292,7 +1244,7 @@ object Scan {
     if (r._2.nonEmpty) logEntry(spark, dir, "delete_keys",
       s"keys=${keys.size} removed=${r._3} shards=${r._2.size}")
     r
-      } }
+      }
 
   def deleteByKey(spark: SparkSession, dir: String, key: Any,
       shardCol: String = "shard",
@@ -1335,7 +1287,7 @@ object Scan {
   def deleteByKeysDeferred(spark: SparkSession, dir: String,
       keys: Seq[Any], shardCol: String = "shard")
       : (Seq[Int], Seq[Int], Long) =
-      withSidecarCtx { withWriterLease(spark, dir) {
+      withWriterLease(spark, dir) {
     require(keys.nonEmpty, "need at least one key")
     graft.dw.Merge.recover(spark, dir)
     recoverPendingDelete(spark, dir, shardCol)
@@ -1395,7 +1347,7 @@ object Scan {
         s"keys=${keys.size} masked=$removed shards=${touched.size}")
       (cands, touched, removed)
     } finally delta.unpersist()
-  } }
+  }
 
   /** Apply the table's deletion vector PHYSICALLY: rewrite exactly the
     * shards the vector names (kept rows = raw files minus masked
@@ -1409,7 +1361,7 @@ object Scan {
   def applyDeletionVectors(spark: SparkSession, dir: String,
       shardCol: String = "shard", sortCol: Option[String] = None)
       : (Seq[Int], Long) =
-      withSidecarCtx { withWriterLease(spark, dir) {
+      withWriterLease(spark, dir) {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(s"$dir/$DvSidecar"))) return (Nil, 0L)
@@ -1432,7 +1384,7 @@ object Scan {
     logEntry(spark, dir, "dv_apply",
       s"removed=$removed shards=${dvShards.size}")
     (dvShards, removed)
-  } }
+  }
 
   /** The shared TARGETED-REWRITE core: republish exactly `shards` from
     * their logical rows (deletion vector applied — any pending mask on
@@ -1508,7 +1460,7 @@ object Scan {
       laidBatch: DataFrame, idCol: String, shardCol: String = "shard",
       sortCol: Option[String] = None,
       maxKeys: Int = 100000): (Seq[Int], Seq[Int], Long) =
-      withSidecarCtx { withWriterLease(spark, dir) {
+      withWriterLease(spark, dir) {
     val kc = bloomConfigOf(spark, dir).map(_._1).getOrElse(sys.error(
       s"upsertSharded: $dir has no bloom index — a pruned MERGE " +
         "routes old versions through the key bloom"))
@@ -1530,7 +1482,7 @@ object Scan {
         s"keys=${keys.size} replaced=$removed shards=${touched.size}")
       (cands, touched, removed)
     } finally b.unpersist()
-  } }
+  }
 
   /** [[deleteByKeys]] routed by the STATS envelopes instead of the
     * bloom — the retention-expiry shape (`DELETE WHERE ts < cutoff`,
@@ -1545,7 +1497,7 @@ object Scan {
   def deleteByRange(spark: SparkSession, dir: String,
       ranges: Seq[(String, Any, Any)], shardCol: String = "shard",
       sortCol: Option[String] = None): (Seq[Int], Seq[Int], Long) =
-      withSidecarCtx { withWriterLease(spark, dir) {
+      withWriterLease(spark, dir) {
     require(ranges.nonEmpty, "need at least one range")
     graft.dw.Merge.recover(spark, dir)
     recoverPendingDelete(spark, dir, shardCol)
@@ -1559,7 +1511,7 @@ object Scan {
       s"cols=${ranges.map(_._1).mkString("+")} removed=${r._3} " +
         s"shards=${r._2.size}")
     r
-      } }
+      }
 
   /** The shared delete core (steps 1–2 of the protocol; see
     * [[deleteByKeys]]): probe the candidate shards for matches, land
@@ -1795,7 +1747,7 @@ object Scan {
     * directory yet" means exactly "no rows there yet".
     */
   def readShards(spark: SparkSession, dir: String, shards: Seq[Int],
-      shardCol: String = "shard"): DataFrame = withSidecarCtx {
+      shardCol: String = "shard"): DataFrame = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     // the one delete-protocol window a reader could observe (a shard
@@ -1906,14 +1858,6 @@ object Scan {
     * column depending on which). */
   private[graft] def tableSchemaOf(spark: SparkSession,
       dir: String): Option[org.apache.spark.sql.types.StructType] = {
-    val c = sidecarCtx.get
-    if (c == null) tableSchemaOfNow(spark, dir)
-    else c.schema.getOrElseUpdate(new Path(dir).toString,
-      tableSchemaOfNow(spark, dir))
-  }
-
-  private def tableSchemaOfNow(spark: SparkSession,
-      dir: String): Option[org.apache.spark.sql.types.StructType] = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(s"$dir/$SchemaSidecar"))) None
@@ -1952,7 +1896,7 @@ object Scan {
     */
   def readPrunedByRange(spark: SparkSession, dir: String,
       ranges: Seq[(String, Any, Any)],
-      shardCol: String = "shard"): DataFrame = withSidecarCtx {
+      shardCol: String = "shard"): DataFrame = {
     val cands = candidateShardsByStats(statsManifest(spark, dir), ranges,
       shardCol)
     val residual = ranges.map { case (c, lo, hi) =>
@@ -1967,10 +1911,11 @@ object Scan {
     * bloom says maybe (false-positive shards cost I/O, never rows).
     */
   def readPrunedByKey(spark: SparkSession, dir: String, keyCol: String,
-      key: Any, shardCol: String = "shard"): DataFrame = withSidecarCtx {
+      key: Any, shardCol: String = "shard"): DataFrame = {
     // two jobs on a hit, one on a miss: the coverage pass reads each
-    // manifest row's own (m, k) (no geometry probe, no meta read), the
-    // sidecar schemas come from footers, and an empty candidate set
+    // manifest row's own (m, k) (no geometry probe), the sidecar
+    // schemas come from footers and a pending vector's key column from
+    // the meta, both read on the driver, and an empty candidate set
     // reads the declared-schema empty frame
     val cands = candidateShardsByKey(bloomManifest(spark, dir), key,
       shardCol)
@@ -2026,7 +1971,7 @@ object Scan {
     * (row-identical to a full scan with the same predicate). */
   def readPrunedByPrefix(spark: SparkSession, dir: String,
       prefixCol: String, prefix: String,
-      shardCol: String = "shard"): DataFrame = withSidecarCtx {
+      shardCol: String = "shard"): DataFrame = {
     val cands = candidateShardsByPrefix(statsManifest(spark, dir),
       prefixCol, prefix, shardCol)
     readShards(spark, dir, cands, shardCol)
@@ -2050,7 +1995,7 @@ object Scan {
   def readPruned(spark: SparkSession, dir: String,
       ranges: Seq[(String, Any, Any)] = Nil,
       keys: Seq[Any] = Nil,
-      shardCol: String = "shard"): DataFrame = withSidecarCtx {
+      shardCol: String = "shard"): DataFrame = {
     require(ranges.nonEmpty || keys.nonEmpty,
       "need at least one predicate (ranges and/or keys)")
     // FUSED planning: the bloom key comes from the 1-row meta sidecar
@@ -2140,7 +2085,7 @@ object Scan {
     */
   def vacuumTable(spark: SparkSession, dir: String,
       shardCol: String = "shard"): (Seq[String], Long) =
-      withSidecarCtx { withWriterLease(spark, dir) {
+      withWriterLease(spark, dir) {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     graft.dw.Merge.recover(spark, dir)
@@ -2171,9 +2116,6 @@ object Scan {
         drop(new Path(s"$dir/${b}__swap_new"))
         drop(new Path(s"$dir/${b}__swap_old"))
       }
-      // a promoted swap of ANY sidecar (meta, schema, stats, bloom, dv)
-      // changed what the sidecars say
-      if (bases.nonEmpty) invalidateSidecarCtx(dir)
     }
     // history-log truncation: keep the newest LogKeep entries (a
     // streaming mount writes one per batch — unbounded without this);
@@ -2185,7 +2127,7 @@ object Scan {
       entries.dropRight(LogKeep).foreach(st => drop(st.getPath))
     }
     (removed.map(_._1).toSeq, removed.map(_._2).sum)
-      } }
+      }
 
   /** SNAPSHOT — a consistent point-in-time copy of the table (data
     * files, every `_graft_*` sidecar, and the history log) into
@@ -2237,7 +2179,7 @@ object Scan {
     * it as `_graft_snapshot_log` for audit). */
   def restoreTable(spark: SparkSession, dir: String,
       snapDir: String): Unit =
-      withSidecarCtx { withWriterLease(spark, dir) {
+      withWriterLease(spark, dir) {
     val conf = spark.sparkContext.hadoopConfiguration
     val snap = new Path(snapDir)
     val fs = snap.getFileSystem(conf)
@@ -2255,9 +2197,8 @@ object Scan {
       val ok = fs.create(new Path(tmp, "_SUCCESS"), true)
       ok.close()
     }
-    invalidateSidecarCtx(dir) // the swap replaced the whole table
     logEntry(spark, dir, "restore", s"from=$snapDir")
-  } }
+  }
 
   /** One [[fsckTable]] finding: `severity` is "error" (the reads-
     * through-manifests contract is broken — rows can be MISSED),
@@ -2296,7 +2237,7 @@ object Scan {
     */
   def fsckTable(spark: SparkSession, dir: String,
       shardCol: String = "shard",
-      deep: Boolean = false): Seq[FsckFinding] = withSidecarCtx {
+      deep: Boolean = false): Seq[FsckFinding] = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val out = scala.collection.mutable.Buffer.empty[FsckFinding]

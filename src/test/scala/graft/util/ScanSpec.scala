@@ -711,27 +711,25 @@ class ScanSpec extends SparkSpec {
     "reader never sees a pre-mutation config") {
     val dir = freshDir()
     publish(dir)
-    Scan.withSidecarCtx {
-      val s0 = Scan.tableSchemaOf(spark, dir).get
-      assert(!s0.fieldNames.contains("score"))
-      val m0 = Scan.readMeta(spark, dir).get
-      // memoized re-read returns the identical config
-      assert(Scan.readMeta(spark, dir).get === m0)
-      // a nested evolve (re-entrant scope) must invalidate BOTH entries:
-      // the chain's next reads see the post-evolution schema and meta
-      Scan.evolveAddColumn(spark, dir, "score",
-        org.apache.spark.sql.types.LongType)
-      assert(Scan.tableSchemaOf(spark, dir).get.fieldNames
-        .contains("score"))
-      assert(Scan.readMeta(spark, dir).get.statCols.contains("score"))
-      // a whole-table republish invalidates too (nShards changes)
-      Scan.writeSharded(spark, laid.withColumn("score", lit(7L)), dir,
-        statCols = Seq("user_id"), sortCol = Some("zvalue"),
-        bloomKeyCol = Some("user_id"), zTotalBits = Some(32),
-        nShards = Some(10))
-      assert(Scan.readMeta(spark, dir).get.nShards === Some(10))
-      assert(Scan.readMeta(spark, dir).get.statCols === Seq("user_id"))
-    }
+    val s0 = Scan.tableSchemaOf(spark, dir).get
+    assert(!s0.fieldNames.contains("score"))
+    val m0 = Scan.readMeta(spark, dir).get
+    // memoized re-read returns the identical config
+    assert(Scan.readMeta(spark, dir).get === m0)
+    // a nested evolve (re-entrant scope) must invalidate BOTH entries:
+    // the chain's next reads see the post-evolution schema and meta
+    Scan.evolveAddColumn(spark, dir, "score",
+      org.apache.spark.sql.types.LongType)
+    assert(Scan.tableSchemaOf(spark, dir).get.fieldNames
+      .contains("score"))
+    assert(Scan.readMeta(spark, dir).get.statCols.contains("score"))
+    // a whole-table republish invalidates too (nShards changes)
+    Scan.writeSharded(spark, laid.withColumn("score", lit(7L)), dir,
+      statCols = Seq("user_id"), sortCol = Some("zvalue"),
+      bloomKeyCol = Some("user_id"), zTotalBits = Some(32),
+      nShards = Some(10))
+    assert(Scan.readMeta(spark, dir).get.nShards === Some(10))
+    assert(Scan.readMeta(spark, dir).get.statCols === Seq("user_id"))
     // outside any scope reads are uncached — current state, as before
     assert(Scan.readMeta(spark, dir).get.nShards === Some(10))
   }
@@ -751,7 +749,7 @@ class ScanSpec extends SparkSpec {
         .otherwise(col("n_rows"))), statsPath)
     val ansi = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
-    try Scan.withSidecarCtx {
+    try {
       assert(!Scan.statsManifest(spark, dir).columns
         .contains("_stale_rows"))
       intercept[Exception] {
@@ -775,17 +773,15 @@ class ScanSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val statsPath = s"$dir/${Scan.StatsSidecar}"
-    Scan.withSidecarCtx {
-      assert(!Scan.statsManifest(spark, dir).columns.contains("score_min"))
-      // the crash window between a stats swap's renames: a complete,
-      // WIDER version in `__swap_new` and no base
-      spark.read.parquet(statsPath).withColumn("score_min", lit(0L))
-        .write.parquet(statsPath + "__swap_new")
-      fs.delete(new org.apache.hadoop.fs.Path(statsPath), true)
-      Scan.vacuumTable(spark, dir)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(statsPath)))
-      assert(Scan.statsManifest(spark, dir).columns.contains("score_min"))
-    }
+    assert(!Scan.statsManifest(spark, dir).columns.contains("score_min"))
+    // the crash window between a stats swap's renames: a complete,
+    // WIDER version in `__swap_new` and no base
+    spark.read.parquet(statsPath).withColumn("score_min", lit(0L))
+      .write.parquet(statsPath + "__swap_new")
+    fs.delete(new org.apache.hadoop.fs.Path(statsPath), true)
+    Scan.vacuumTable(spark, dir)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(statsPath)))
+    assert(Scan.statsManifest(spark, dir).columns.contains("score_min"))
   }
 
   test("refreshManifests rebuilds bloom bits with the table's OWN " +
@@ -1521,5 +1517,92 @@ class ScanSpec extends SparkSpec {
       assert(Scan.readPrunedByKey(spark, dir, "user_id", 777L)
         .select("event_id").collect().map(_.getLong(0)).toSeq === Seq(777L))
     }
+  }
+
+  // 1600 rows in 16 shards of 100, bloom-indexed on user_id
+  private def laid16 = (0L until 1600L).map(i =>
+      (i, i, 10L * i, s"t${i % 3}", (i / 100).toInt, i))
+    .toDF("event_id", "user_id", "ts_us", "event_type", "shard", "zvalue")
+
+  test("job count: reading the meta, stats columns, bloom config or " +
+    "declared schema starts no Spark job; on a 16-shard table a 1-row " +
+    "appendSharded runs in at most 16 jobs and a 1-row upsertSharded " +
+    "in at most 28") {
+    val dir = freshDir()
+    Scan.writeSharded(spark, laid16, dir,
+      statCols = Seq("user_id", "ts_us"), sortCol = Some("zvalue"),
+      bloomKeyCol = Some("user_id"), zTotalBits = Some(11),
+      nShards = Some(16))
+    val reads = jobsDuring {
+      assert(Scan.readMeta(spark, dir).get.nShards === Some(16))
+      assert(Scan.statColsOf(spark, dir) === Seq("user_id", "ts_us"))
+      assert(Scan.bloomConfigOf(spark, dir) === Some(("user_id", 4096, 3)))
+      assert(Scan.tableSchemaOf(spark, dir).get.fieldNames.toSeq ===
+        laid16.columns.toSeq)
+    }
+    val append = jobsDuring(Scan.appendSharded(spark,
+      Seq((1600L, 1600L, 16000L, "t1", 15, 1600L)).toDF(laid16.columns: _*),
+      dir, "event_id"))
+    val upsert = jobsDuring(Scan.upsertSharded(spark, dir,
+      Seq((777L, 777L, 1L, "t9", 7, 777L)).toDF(laid16.columns: _*),
+      "user_id"))
+    assert(spark.read.parquet(dir).count() === 1601L)
+    assert(Scan.readPrunedByKey(spark, dir, "user_id", 777L)
+      .select("ts_us", "event_type").as[(Long, String)].collect().toSeq ===
+      Seq((1L, "t9")))
+    info(s"jobs: meta/config/schema reads $reads, appendSharded $append, " +
+      s"upsertSharded $upsert")
+    assert(reads === 0, s"meta/config/schema reads ran $reads jobs")
+    assert(append <= 16, s"appendSharded ran $append jobs")
+    assert(upsert <= 28, s"upsertSharded ran $upsert jobs")
+  }
+
+  test("property: the driver-side readMeta decodes exactly the row " +
+    "spark.read.parquet reads from the meta sidecar, through the verbs " +
+    "that rewrite it") {
+    def viaSpark(dir: String): Scan.TableMeta = {
+      val r = spark.read.parquet(s"$dir/${Scan.MetaSidecar}").head()
+      def opt[T](c: String): Option[T] =
+        if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[T](c))
+      Scan.TableMeta(r.getAs[scala.collection.Seq[String]]("stat_cols").toSeq,
+        r.getAs[String]("shard_col"), opt[String]("sort_col"),
+        opt[String]("bloom_key"), r.getAs[Int]("bloom_m"),
+        r.getAs[Int]("bloom_k"), opt[Int]("z_total_bits"),
+        opt[Int]("n_shards"))
+    }
+    def same(dir: String): Scan.TableMeta = {
+      val m = Scan.readMeta(spark, dir)
+      assert(m === Some(viaSpark(dir)), dir)
+      m.get
+    }
+    assert(Scan.readMeta(spark, freshDir()).isEmpty)
+    // every optional field null, one stats column
+    val bare = freshDir()
+    Scan.writeSharded(spark, laid, bare, statCols = Seq("ts_us"),
+      shardCol = "shard")
+    assert(same(bare) === Scan.TableMeta(Seq("ts_us"), "shard", None, None,
+      4096, 3, None, None))
+    // dropping the only stats column leaves an empty stat_cols list
+    Scan.evolveDropColumn(spark, bare, "ts_us")
+    assert(same(bare).statCols.isEmpty)
+    // every optional field set, several stats columns
+    val full = freshDir()
+    Scan.writeSharded(spark, laid, full,
+      statCols = Seq("user_id", "ts_us", "event_type"),
+      sortCol = Some("zvalue"), bloomKeyCol = Some("user_id"),
+      bloomM = 2048, bloomK = 2, zTotalBits = Some(10), nShards = Some(10))
+    assert(same(full) === Scan.TableMeta(
+      Seq("user_id", "ts_us", "event_type"), "shard", Some("zvalue"),
+      Some("user_id"), 2048, 2, Some(10), Some(10)))
+    Scan.evolveAddColumn(spark, full, "score",
+      org.apache.spark.sql.types.LongType, addToStats = true)
+    assert(same(full).statCols === Seq("user_id", "ts_us", "event_type",
+      "score"))
+    Scan.evolveDropColumn(spark, full, "ts_us")
+    assert(same(full).statCols === Seq("user_id", "event_type", "score"))
+    // a re-shard rewrites n_shards and keeps z_total_bits
+    Compaction.reshardSharded(spark, full, 4)
+    val m = same(full)
+    assert((m.nShards, m.zTotalBits) === ((Some(4), Some(10))))
   }
 }
