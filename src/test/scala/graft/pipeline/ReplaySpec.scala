@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
@@ -26,10 +28,10 @@ class ReplaySpec extends SparkSpec {
     .csv(resource("us_states.csv"))
 
   /** Full-loaded warehouse + the delta file staged into STG, ready for
-    * `warehouseStages`.
+    * `warehouseStages`. Built once; every case gets its own copy.
     */
-  private def setup(): Warehouse = {
-    val root = Files.createTempDirectory("wh-replay").toString
+  private lazy val staged: Path = {
+    val root = Files.createTempDirectory("wh-replay")
     val raw = s"$root/raw"
     Files.createDirectories(Paths.get(raw))
     Files.copy(Paths.get(resource("usgs_sample.csv")),
@@ -47,7 +49,20 @@ class ReplaySpec extends SparkSpec {
       java.util.Arrays.asList(header, replay, novel))
     graft.ingest.Staging.run(spark, s"$raw/all_day_*.csv", wh.stg,
       s"${wh.rejected}/delta", "job-delta", ts2.toString)
-    wh
+    root
+  }
+
+  /** A fresh copy of the [[staged]] warehouse (every file, checksums
+    * included, so the copy reads exactly as the original). */
+  private def setup(): Warehouse = {
+    val root = Files.createTempDirectory("wh-replay")
+    val files = Files.walk(staged)
+    try files.iterator().asScala.foreach { p =>
+      val to = root.resolve(staged.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(to)
+      else Files.copy(p, to)
+    } finally files.close()
+    Warehouse(s"$root/wh")
   }
 
   private def snapshot(wh: Warehouse): Map[String, Set[String]] =
@@ -66,11 +81,14 @@ class ReplaySpec extends SparkSpec {
         if (fp == f) throw new RuntimeException(s"injected crash at $f")
       })
 
-  private lazy val control: Map[String, Set[String]] = {
+  /** The warehouse after one uncrashed run: what every replay must equal. */
+  private lazy val controlWh: Warehouse = {
     val wh = setup()
     runStages(wh)
-    snapshot(wh)
+    wh
   }
+
+  private lazy val control: Map[String, Set[String]] = snapshot(controlWh)
 
   test("crash at pre-fact-swap (dims durable, fact not): replay heals") {
     val wh = setup()
@@ -112,11 +130,7 @@ class ReplaySpec extends SparkSpec {
   // still equal the control; this case counts rows and keys instead
   test("replay appends no fact row twice, and a stale pending fact dir is " +
     "overwritten, not committed") {
-    val controlRows = {
-      val wh = setup()
-      runStages(wh)
-      spark.read.parquet(wh.fact).count()
-    }
+    val controlRows = spark.read.parquet(controlWh.fact).count()
     def assertNoDuplicates(wh: Warehouse, label: String): Unit = {
       val fact = spark.read.parquet(wh.fact)
       assert(fact.count() === controlRows, label)
