@@ -2176,7 +2176,7 @@ object ExtensionQueries {
       graft.util.Scan.appendSharded(s, lay(batch), table, "doc_id")
       val (breached, filesBefore) =
         graft.util.Compaction.compactShardsTargeted(s, table,
-          maxFilesPerShard = 1, sortCol = Some("zvalue"))
+          maxFilesPerShard = 1)
       val v = dict
         .join(dict.agg(((max(col("rank")) + 0L) / 2).cast("long")
           .as("rank")), Seq("rank"))

@@ -346,18 +346,9 @@ object DeltaStream {
     */
   private def maintain(s: SparkSession, tableDir: String,
       maxFilesPerShard: Int, maxStaleFraction: Double): Unit = {
-    val fileCountBreach = maxFilesPerShard > 0 && {
-      val p = new Path(tableDir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).exists(d =>
-        d.isDirectory && d.getPath.getName.startsWith("shard=") &&
-          fs.listStatus(d.getPath).count(f => f.isFile &&
-            !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith(".")) > maxFilesPerShard)
-    }
-    if (fileCountBreach) {
-      Compaction.compactShardsTargeted(s, tableDir, maxFilesPerShard,
-        sortCol = Some("zvalue"))
+    if (maxFilesPerShard > 0 && Scan.shardFileCounts(s, tableDir)
+        .values.exists(_ > maxFilesPerShard)) {
+      Compaction.compactShardsTargeted(s, tableDir, maxFilesPerShard)
       Scan.vacuumTable(s, tableDir)
     }
     if (maxStaleFraction > 0 &&
@@ -365,7 +356,7 @@ object DeltaStream {
       val man = Scan.statsManifest(s, tableDir)
       if (man.columns.contains("_stale_rows")) {
         val stale = man.filter(col("_stale_rows") > 0L)
-          .select(col("shard").cast("int"))
+          .select(col(Scan.ShardCol).cast("int"))
           .collect().map(_.getInt(0)).toSeq
         Scan.refreshShards(s, tableDir, stale)
       }

@@ -25,6 +25,11 @@ import org.apache.spark.sql.graftshim.shim
   * Returns (filesBefore, filesAfter-target). Skips (returns unchanged
   * counts) when the directory is already at or below the target count —
   * compaction must be idempotent-cheap enough to run on a schedule.
+  *
+  * The sharded-table verbs below read their layout from the table, as
+  * [[graft.util.Scan]] does: shards are the `shard=N` directories under
+  * [[graft.util.Scan.ShardCol]], and a rewrite sorts each shard by the
+  * `sort_col` its meta recorded at publication.
   */
 object Compaction {
 
@@ -94,15 +99,14 @@ object Compaction {
   private def dataFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
     val p = new Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
-        && !s.getPath.getName.startsWith("."))
+      .filter(Scan.isDataFile)
   }
 
   /** Compaction for a SHARD-PARTITIONED table with manifest sidecars
     * ([[graft.util.Scan]]'s layout): rewrites each `shard=N` directory's
     * accumulated small files (streaming appends land a file per batch)
-    * back to one file per shard, sorted within the file by `sortCol`
-    * when given (the z-order curve position), and RECOMPUTES the stats +
+    * back to one file per shard, sorted within the file by the meta's
+    * sort column (the z-order curve position), and RECOMPUTES the stats +
     * bloom manifests from the rewritten files INSIDE THE SAME atomic
     * swap — data and manifests publish together, so a compacted table
     * can never strand a stale sidecar describing files that no longer
@@ -119,33 +123,23 @@ object Compaction {
     * Scale shape: one shard-keyed exchange + the per-shard manifest
     * aggregates — all embarrassingly parallel per shard; the shard count
     * (not the file count) bounds every post-shuffle stage.
-    */
-  /** `maxRecordsPerFile > 0` bounds each rewritten shard to a DIRECTORY
+    *
+    * `maxRecordsPerFile > 0` bounds each rewritten shard to a DIRECTORY
     * of files of at most that many rows instead of exactly one — the
     * per-shard-bytes safety valve for a growing table whose shard count
     * is frozen: file sizes stay bounded across any number of appends
     * even before a re-shard ([[reshardSharded]]) re-lays the table out.
     */
   def compactSharded(spark: SparkSession, dir: String,
-      shardCol: String = "shard",
-      sortCol: Option[String] = None,
       maxRecordsPerFile: Long = 0L): (Int, Int) =
       Scan.withWriterLease(spark, dir) {
     graft.dw.Merge.recover(spark, dir)
-    Scan.recoverPendingDelete(spark, dir, shardCol)
+    Scan.recoverPendingDelete(spark, dir)
     // merge-on-read contract: compaction is where deferred deletes
     // become physical — apply the pending deletion vector (targeted:
     // only the shards it names) before looking at file counts
-    Scan.applyDeletionVectors(spark, dir, shardCol, sortCol)
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val shardDirs = fs.listStatus(p).toSeq.filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith(s"$shardCol="))
-    val perShard = shardDirs.map { d =>
-      fs.listStatus(d.getPath).count(s => s.isFile
-        && !s.getPath.getName.startsWith("_")
-        && !s.getPath.getName.startsWith("."))
-    }
+    Scan.applyDeletionVectors(spark, dir)
+    val perShard = Scan.shardFileCounts(spark, dir).values
     val nBefore = perShard.sum
     if (!perShard.exists(_ > 1)) {
       // nothing to rewrite, but the manifests may still be LOOSE: an
@@ -155,7 +149,7 @@ object Compaction {
       // (`maxStaleFraction` mounts) re-triggering a no-op compact on
       // every subsequent batch, forever
       if (Scan.manifestStaleness(spark, dir) > 0)
-        Scan.refreshManifests(spark, dir, shardCol = shardCol)
+        Scan.refreshManifests(spark, dir)
       return (nBefore, nBefore)
     }
     // configuration from the durable meta sidecar when present
@@ -164,7 +158,6 @@ object Compaction {
     val meta = Scan.readMeta(spark, dir)
     val statCols = Scan.statColsOf(spark, dir)
     val bloomCfg = Scan.bloomConfigOf(spark, dir)
-    val sort = sortCol.orElse(meta.flatMap(_.sortCol))
     // dict sidecars (frozen string-dim frames) must survive the swap:
     // materialize them off the old directory before it is replaced
     val dicts = Scan.readDicts(spark, dir).map { case (c, d) =>
@@ -179,21 +172,21 @@ object Compaction {
     // same writeSharded protocol (meta first, append-mode data write),
     // so compaction preserves the crash-heal property it relies on
     try {
-      graft.util.Scan.writeSharded(spark, df, dir, statCols, shardCol,
-        sort, bloomCfg.map(_._1),
+      graft.util.Scan.writeSharded(spark, df, dir, statCols,
+        meta.flatMap(_.sortCol), bloomCfg.map(_._1),
         bloomCfg.map(_._2).getOrElse(4096),
         bloomCfg.map(_._3).getOrElse(3),
         meta.flatMap(_.zTotalBits), meta.flatMap(_.nShards),
         maxRecordsPerFile, dicts)
     } finally dicts.values.foreach(_.unpersist())
-    (nBefore, shardDirs.size)
+    (nBefore, perShard.size)
       }
 
   /** TARGETED compaction — rewrite ONLY the shards whose data-file
     * count exceeds `maxFilesPerShard`, through the pending/`_COMMIT`
     * protocol ([[graft.util.Scan.rewriteShards]]): each breaching
-    * shard's accumulated batch files become one file (or
-    * `maxRecordsPerFile`-bounded), its manifest rows recompute exactly
+    * shard's accumulated batch files become one file, its manifest rows
+    * recompute exactly
     * and its staleness zeroes, and every OTHER shard's files and
     * manifest rows pass through untouched. This is the maintenance
     * economics a 100 TB table requires: [[compactSharded]]'s full
@@ -208,32 +201,19 @@ object Compaction {
     * Returns (breaching shard ids, data files before across them).
     */
   def compactShardsTargeted(spark: SparkSession, dir: String,
-      maxFilesPerShard: Int = 1, shardCol: String = "shard",
-      sortCol: Option[String] = None,
-      maxRecordsPerFile: Long = 0L): (Seq[Int], Int) =
+      maxFilesPerShard: Int = 1): (Seq[Int], Int) =
       Scan.withWriterLease(spark, dir) {
     require(maxFilesPerShard >= 1, "need maxFilesPerShard >= 1")
     graft.dw.Merge.recover(spark, dir)
-    Scan.recoverPendingDelete(spark, dir, shardCol)
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val breaching = fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith(s"$shardCol="))
-      .map { d =>
-        val n = fs.listStatus(d.getPath).count(s => s.isFile
-          && !s.getPath.getName.startsWith("_")
-          && !s.getPath.getName.startsWith("."))
-        (d.getPath.getName.stripPrefix(s"$shardCol=").toInt, n)
-      }
-      .filter(_._2 > maxFilesPerShard)
+    Scan.recoverPendingDelete(spark, dir)
+    val breaching =
+      Scan.shardFileCounts(spark, dir).filter(_._2 > maxFilesPerShard)
     if (breaching.isEmpty) return (Nil, 0)
-    val shards = breaching.map(_._1).sorted
-    Scan.rewriteShards(spark, dir, shards, shardCol, sortCol,
-      maxRecordsPerFile)
+    val shards = breaching.keys.toSeq.sorted
+    Scan.rewriteShards(spark, dir, shards)
     Scan.logEntry(spark, dir, "compact_targeted",
-      s"shards=${shards.size} files_before=${breaching.map(_._2).sum}")
-    (shards, breaching.map(_._2).sum)
+      s"shards=${shards.size} files_before=${breaching.values.sum}")
+    (shards, breaching.values.sum)
       }
 
   /** SHARD-COUNT EVOLUTION — the re-layout a growing table eventually
@@ -256,16 +236,15 @@ object Compaction {
     * aggregates — the same cost as a compaction, run as rarely (when
     * per-shard bytes breach the target, typically after ~2× growth).
     */
-  def reshardSharded(spark: SparkSession, dir: String, newNShards: Int,
-      shardCol: String = "shard", zvalueCol: String = "zvalue")
-      : (Int, Int) =
+  def reshardSharded(spark: SparkSession, dir: String,
+      newNShards: Int): (Int, Int) =
       Scan.withWriterLease(spark, dir) {
     require(newNShards >= 1, "need newNShards >= 1")
     graft.dw.Merge.recover(spark, dir)
-    Scan.recoverPendingDelete(spark, dir, shardCol)
+    Scan.recoverPendingDelete(spark, dir)
     // apply any pending deletion vector before re-laying out: the DV
     // names OLD shard numbers, which the re-shard is about to retire
-    Scan.applyDeletionVectors(spark, dir, shardCol)
+    Scan.applyDeletionVectors(spark, dir)
     val meta = Scan.readMeta(spark, dir).getOrElse(sys.error(
       s"reshardSharded: $dir has no ${Scan.MetaSidecar} sidecar — " +
         "re-publish through writeSharded(zTotalBits=…) first"))
@@ -278,11 +257,11 @@ object Compaction {
       c -> d.persist()
     }
     dicts.values.foreach(_.count())
-    val relaid = Scan.readTable(spark, dir).withColumn(shardCol,
-      shiftright(col(zvalueCol) * newNShards, shift).cast("int"))
+    val relaid = Scan.readTable(spark, dir).withColumn(Scan.ShardCol,
+      shiftright(col("zvalue") * newNShards, shift).cast("int"))
     try {
       graft.util.Scan.writeSharded(spark, relaid, dir, meta.statCols,
-        shardCol, meta.sortCol.orElse(Some(zvalueCol)), meta.bloomKey,
+        meta.sortCol.orElse(Some("zvalue")), meta.bloomKey,
         meta.bloomM, meta.bloomK, Some(shift), Some(newNShards),
         dicts = dicts)
     } finally dicts.values.foreach(_.unpersist())

@@ -20,11 +20,17 @@ import org.apache.spark.sql.functions._
   * the table directory ignore them):
   * {{{
   *   table/
-  *     shard=0/part-*.parquet     — rows, zvalue-sorted within the file
-  *     shard=1/…
+  *     shard=0/part-*.parquet     — rows, sorted within the file by the
+  *     shard=1/…                    meta's sort column (the curve position)
+  *     _graft_meta/               — TableMeta: stat cols, sort col, bloom
   *     _graft_stats/              — shardStats manifest (rows = shards)
   *     _graft_bloom/              — bloomBitsTable + key_col (optional)
   * }}}
+  *
+  * The table describes itself: the shard column is always [[ShardCol]]
+  * (`shard=N` directories, the `shard` column of every manifest), and a
+  * verb that rewrites shards sorts them by the `sort_col` the meta
+  * recorded at [[writeSharded]] — no verb takes either as an option.
   *
   * Write and sidecars publish ATOMICALLY through
   * [[graft.dw.Merge.atomicOverwriteDir]]'s rename-pair swap, so a reader
@@ -54,6 +60,10 @@ object Scan {
     * the lease expires and a second writer breaks it. */
   private val SidecarAwait = scala.concurrent.duration.Duration(
     10, java.util.concurrent.TimeUnit.MINUTES)
+
+  /** The shard column: the `shard=N` partition directories and the
+    * `shard` column of the stats, bloom and deletion-vector sidecars. */
+  val ShardCol = "shard"
 
   val StatsSidecar = "_graft_stats"
   val BloomSidecar = "_graft_bloom"
@@ -168,13 +178,19 @@ object Scan {
 
   /** Await concurrent sidecar swaps EACH individually (not a fail-fast
     * `Future.sequence`), so none is still writing when the caller
-    * unwinds, then rethrow the first failure. Finite timeout: see
-    * [[SidecarAwait]]. */
+    * unwinds, then rethrow the first failure in `swaps` order with every
+    * later one attached as suppressed — none is dropped. Finite timeout:
+    * see [[SidecarAwait]]. */
   private def settleSidecarSwaps(
       swaps: Seq[scala.concurrent.Future[Unit]]): Unit =
     swaps.map(f => scala.util.Try(
       scala.concurrent.Await.result(f, SidecarAwait)))
-      .collectFirst { case scala.util.Failure(e) => throw e }
+      .collect { case scala.util.Failure(e) => e } match {
+      case first +: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ => ()
+    }
 
   /** The Spark schema of the parquet directory `path`, from ONE footer
     * read on the driver: list the directory, open its first part file
@@ -216,11 +232,38 @@ object Scan {
       path: String): Option[org.apache.hadoop.fs.FileStatus] = {
     val p = new Path(path)
     try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(p).iterator
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
+      .listStatus(p).iterator.filter(isDataFile)
       .minByOption(_.getPath.getName)
     catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** Whether a listed entry is a parquet data file: `_`- and
+    * `.`-prefixed names (`_SUCCESS`, sidecars, checksums) are not. */
+  private[graft] def isDataFile(st: org.apache.hadoop.fs.FileStatus)
+      : Boolean =
+    st.isFile && !st.getPath.getName.startsWith("_") &&
+      !st.getPath.getName.startsWith(".")
+
+  /** The number of data files in one directory; 0 when it is missing. */
+  private def dataFileCount(fs: org.apache.hadoop.fs.FileSystem,
+      p: Path): Int =
+    try fs.listStatus(p).count(isDataFile)
+    catch { case _: java.io.FileNotFoundException => 0 }
+
+  /** Data files per `shard=N` directory of the table: one listing of the
+    * table directory and one of each shard directory, no file opened.
+    * The count compaction and the maintained mounts trigger on, and the
+    * one fsck checks manifests against. */
+  private[graft] def shardFileCounts(spark: SparkSession,
+      dir: String): Map[Int, Int] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(p).iterator
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith(s"$ShardCol="))
+      .map(st => st.getPath.getName.stripPrefix(s"$ShardCol=").toInt ->
+        dataFileCount(fs, st.getPath))
+      .toMap
   }
 
   /** The footer key under which Spark's parquet writer stores the row
@@ -378,17 +421,19 @@ object Scan {
     * configuration — [[refreshManifests]] can heal missing stats/bloom
     * sidecars with no operator-supplied knowledge (the round-14 recovery
     * gap: a recovered table was only repairable by someone who
-    * independently knew the stats columns).
+    * independently knew the stats columns). `shardColumn` is the stored
+    * `shard_col` value: [[ShardCol]] for every table this code writes;
+    * `sortCol` is the sort every rewrite of the table applies.
     */
   private[graft] case class TableMeta(statCols: Seq[String],
-      shardCol: String, sortCol: Option[String], bloomKey: Option[String],
+      shardColumn: String, sortCol: Option[String], bloomKey: Option[String],
       bloomM: Int, bloomK: Int, zTotalBits: Option[Int],
       nShards: Option[Int])
 
   /** `meta` as the sidecar's one-row, one-partition frame. */
   private def metaFrame(spark: SparkSession, meta: TableMeta): DataFrame = {
     import spark.implicits._
-    Seq((meta.statCols, meta.shardCol, meta.sortCol, meta.bloomKey,
+    Seq((meta.statCols, meta.shardColumn, meta.sortCol, meta.bloomKey,
         meta.bloomM, meta.bloomK, meta.zTotalBits, meta.nShards))
       .toDF("stat_cols", "shard_col", "sort_col", "bloom_key",
         "bloom_m", "bloom_k", "z_total_bits", "n_shards")
@@ -499,7 +544,7 @@ object Scan {
       }.toMap
   }
 
-  /** Write `laid` — a frame already carrying `shardCol` (normally a
+  /** Write `laid` — a frame already carrying [[ShardCol]] (normally a
     * [[graft.ext.Corpus.zorderLayoutN]] assignment with the payload in
     * `keepCols`) — as a shard-partitioned parquet table with its stats
     * manifest (over `statCols`) and optional bloom index (over
@@ -508,14 +553,15 @@ object Scan {
     * at cluster scale add `maxRecordsPerFile` and the per-shard file set
     * stays a directory listing) and sorted within files by `sortCol`
     * when given (the z-order curve position), so every row group's
-    * min/max envelope is as tight as the layout allows.
+    * min/max envelope is as tight as the layout allows. The meta records
+    * `sortCol`; every later rewrite of the table sorts by it.
     *
     * Manifests are computed from the frame AS WRITTEN (one extra pass
     * over the tmp files, embarrassingly parallel per shard) — the
     * manifest describes the files, not the plan that produced them.
     */
   def writeSharded(spark: SparkSession, laid: DataFrame, dir: String,
-      statCols: Seq[String], shardCol: String = "shard",
+      statCols: Seq[String],
       sortCol: Option[String] = None, bloomKeyCol: Option[String] = None,
       bloomM: Int = 4096, bloomK: Int = 3,
       zTotalBits: Option[Int] = None, nShards: Option[Int] = None,
@@ -541,7 +587,7 @@ object Scan {
       locally {
         import scala.concurrent.ExecutionContext.Implicits.global
         settleSidecarSwaps(Seq(
-          SparkFuture(spark)(writeMeta(spark, tmp, TableMeta(statCols, shardCol,
+          SparkFuture(spark)(writeMeta(spark, tmp, TableMeta(statCols, ShardCol,
             sortCol, bloomKeyCol, bloomM, bloomK, zTotalBits,
             nShards))),
           // 0-row schema sidecar: a delete can legally empty EVERY
@@ -564,14 +610,14 @@ object Scan {
               .parquet(s"$tmp/$DictSidecar/col=$c"))
           })
       }
-      val parted = laid.repartition(col(shardCol))
+      val parted = laid.repartition(col(ShardCol))
       val sorted = sortCol.fold(parted)(c =>
-        parted.sortWithinPartitions(shardCol, c))
+        parted.sortWithinPartitions(ShardCol, c))
       val writer =
         if (maxRecordsPerFile > 0)
           sorted.write.option("maxRecordsPerFile", maxRecordsPerFile)
         else sorted.write
-      writer.partitionBy(shardCol).mode("append").parquet(tmp)
+      writer.partitionBy(ShardCol).mode("append").parquet(tmp)
       // NULL shards (a z-order layout's unroutable NULL-dim rows) land
       // in Hive's default partition — a shard the int-keyed manifests
       // cannot name, so pruned reads would silently never see those
@@ -581,11 +627,16 @@ object Scan {
       val fs = new Path(tmp).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
       require(!fs.exists(new Path(
-        s"$tmp/$shardCol=__HIVE_DEFAULT_PARTITION__")),
-        s"writeSharded: rows with NULL $shardCol — route unroutable " +
+        s"$tmp/$ShardCol=__HIVE_DEFAULT_PARTITION__")),
+        s"writeSharded: rows with NULL $ShardCol — route unroutable " +
           "(NULL-dimension) rows explicitly before publishing")
-      writeManifests(spark, tmp, laid.schema, statCols, shardCol,
-        bloomKeyCol, bloomM, bloomK)
+      // the written files' schema is known from the frame, so the read
+      // starts no partition-discovery inference job; the bloom geometry
+      // comes from the meta written above
+      val written = writtenSchema(spark, tmp, laid.schema)
+        .fold(spark.read.parquet(tmp))(sc => spark.read.schema(sc).parquet(tmp))
+      rebuildManifests(spark, tmp, statCols, None, Some(written),
+        countMasked = false)
     }
     logEntry(spark, dir, "publish",
       s"shards=${nShards.getOrElse(-1)} stat_cols=${statCols.mkString("+")}" +
@@ -600,7 +651,7 @@ object Scan {
     * `mode("append")` strands the sidecars stale and the pruned read
     * silently MISSES the appended rows.
     *
-    * `laidBatch` carries `shardCol` (normally assigned against the
+    * `laidBatch` carries [[ShardCol]] (normally assigned against the
     * table's frozen z-order frame — [[graft.ext.Corpus
     * .zorderLayoutAgainstN]], so batch and corpus agree on shard
     * spaces). Steps, in a deliberately safe order:
@@ -643,13 +694,12 @@ object Scan {
     * re-aggregated.
     */
   def appendSharded(spark: SparkSession, laidBatch: DataFrame,
-      dir: String, idCol: String,
-      shardCol: String = "shard"): Unit =
+      dir: String, idCol: String): Unit =
       withWriterLease(spark, dir) {
     // every mutation rolls an interrupted delete forward first (the
     // id probe's readShards would too, but the manifest fold must
     // never read a pre-roll-forward sidecar)
-    recoverPendingDelete(spark, dir, shardCol)
+    recoverPendingDelete(spark, dir)
     val statCols = statColsOf(spark, dir)
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -658,10 +708,10 @@ object Scan {
     try {
       // NULL shards are rejected BEFORE anything lands (same contract
       // as writeSharded — the int-keyed manifests cannot name them)
-      val touched = b0.select(col(shardCol).cast("int")).distinct()
+      val touched = b0.select(col(ShardCol).cast("int")).distinct()
         .collect().map { r =>
           require(!r.isNullAt(0),
-            s"appendSharded: rows with NULL $shardCol — route " +
+            s"appendSharded: rows with NULL $ShardCol — route " +
               "unroutable (NULL-dimension) rows explicitly")
           r.getInt(0)
         }.toSeq.sorted
@@ -677,7 +727,7 @@ object Scan {
           sys.error(s"appendSharded: $dir has a deletion-vector " +
             "sidecar but no recoverable bloom config"))
         val collisions =
-          joinDv(spark, dir, b0, shardCol, kc, "left_semi").count()
+          joinDv(spark, dir, b0, kc, "left_semi").count()
         require(collisions == 0L,
           s"appendSharded: $collisions batch rows collide with " +
             "pending deletion-vector entries — apply the vector " +
@@ -685,7 +735,7 @@ object Scan {
             "re-inserting these keys")
       }
       // 1. bounded idempotence probe: ids present in the touched shards
-      val present = readShards(spark, dir, touched, shardCol)
+      val present = readShards(spark, dir, touched)
         .select(col(idCol))
       val batch = b0.join(present, Seq(idCol), "left_anti").persist()
       try {
@@ -695,20 +745,16 @@ object Scan {
         val nRows = batch.count()
         if (nRows == 0L) return
         // 2a. stats fold: old rows + batch-side exact stats per shard
-        val batchStats = graft.ext.Corpus.shardStats(batch, shardCol,
+        val batchStats = graft.ext.Corpus.shardStats(batch, ShardCol,
           statCols)
         val old = statsManifest(spark, dir)
         val bb = batchStats.columns.foldLeft(batchStats)((d, c) =>
-          if (c == shardCol) d else d.withColumnRenamed(c, s"_b_$c"))
-        // pre-staleness manifests lack `_stale_rows`; treat as 0
-        val oldStale =
-          if (old.columns.contains("_stale_rows")) col("_stale_rows")
-          else lit(0L)
-        val merged = old.join(bb, Seq(shardCol), "full_outer")
-          .select(col(shardCol) +:
+          if (c == ShardCol) d else d.withColumnRenamed(c, s"_b_$c"))
+        val merged = old.join(bb, Seq(ShardCol), "full_outer")
+          .select(col(ShardCol) +:
             (coalesce(col("n_rows"), lit(0L)) +
               coalesce(col("_b_n_rows"), lit(0L))).as("n_rows") +:
-            (coalesce(oldStale, lit(0L)) +
+            (staleRows(old) +
               coalesce(col("_b_n_rows"), lit(0L))).as("_stale_rows") +:
             statCols.flatMap { c =>
               Seq(
@@ -727,13 +773,13 @@ object Scan {
           val (kc, m, k) = bloomConfigOf(spark, dir).getOrElse(sys.error(
             s"appendSharded: $dir has a bloom sidecar but no " +
               "recoverable bloom config (empty sidecar, no meta)"))
-          val nb = graft.ext.Corpus.bloomBitsTable(batch, shardCol, kc,
+          val nb = graft.ext.Corpus.bloomBitsTable(batch, ShardCol, kc,
               m, k)
-            .select(col("shard"), col("n_keys").as("_b_n_keys"),
+            .select(col(ShardCol), col("n_keys").as("_b_n_keys"),
               col("_bits").as("_b_bits"))
           val empty = array().cast("array<long>")
-          ob.join(nb, Seq("shard"), "full_outer")
-            .select(col("shard"),
+          ob.join(nb, Seq(ShardCol), "full_outer")
+            .select(col(ShardCol),
               (coalesce(col("n_keys"), lit(0L)) +
                 coalesce(col("_b_n_keys"), lit(0L))).as("n_keys"),
               array_sort(array_distinct(concat(
@@ -760,8 +806,8 @@ object Scan {
         // 3. data lands last — the manifests already cover it; one file
         // per touched shard per batch (shard-keyed exchange), so file
         // growth is batches × touched shards, not × task parallelism
-        batch.repartition(col(shardCol))
-          .write.mode("append").partitionBy(shardCol).parquet(dir)
+        batch.repartition(col(ShardCol))
+          .write.mode("append").partitionBy(ShardCol).parquet(dir)
         logEntry(spark, dir, "append",
           s"rows=$nRows shards=${touched.size}")
       } finally batch.unpersist()
@@ -773,62 +819,18 @@ object Scan {
     * bypassed [[writeSharded]] (and the healer for the recovery window
     * documented on [[graft.dw.Merge.atomicOverwriteDir]]). Stats columns
     * are recovered from the existing sidecars when not passed, and the
-    * bloom geometry ALWAYS is ([[bloomConfigOf]] — the meta sidecar, or
-    * the bloom sidecar of a pre-meta table): the delete paths probe with
-    * that geometry, so bits rebuilt with any other m/k would silently
-    * miss rows. A refresh never changes what the manifest covers.
+    * bloom geometry ALWAYS is ([[rebuildManifests]]). A refresh never
+    * changes what the manifest covers.
     */
   def refreshManifests(spark: SparkSession, dir: String,
-      statCols: Seq[String] = Nil, shardCol: String = "shard"): Unit =
+      statCols: Seq[String] = Nil): Unit =
       withWriterLease(spark, dir) {
     val sc =
       if (statCols.nonEmpty) statCols
       else statColsOf(spark, dir)
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val bloomCfg = bloomConfigOf(spark, dir)
-    // each sidecar swaps independently (sidecar paths are `_`-prefixed,
-    // so their own __swap_new dirs stay invisible to table readers);
     // the declared-schema read null-fills evolved columns in old files
-    val back = readTable(spark, dir)
-    // a refresh makes the manifests exact FOR THE FILES — but rows a
-    // pending deletion vector masks are still manifest looseness
-    // (physical-but-not-logical), so `_stale_rows` carries the masked
-    // count per shard instead of zero: the staleness signal that
-    // drives the maintained mounts to compact (which applies the
-    // vector) must survive a refresh, or the loop would never converge
-    val masked: Option[DataFrame] =
-      if (!fs.exists(new Path(s"$dir/$DvSidecar"))) None
-      else bloomCfg.map { case (kc, _, _) =>
-        joinDv(spark, dir, back, shardCol, kc, "left_semi")
-          .groupBy(col(shardCol).cast("int").as(shardCol))
-          .agg(count(lit(1)).as("_masked_rows"))
-      }
-    val exact = graft.ext.Corpus.shardStats(back, shardCol, sc)
-    val stats = masked match {
-      case None => exact.withColumn("_stale_rows", lit(0L))
-      case Some(m) => exact
-        .join(m.withColumnRenamed(shardCol, "_m_shard"),
-          exact(shardCol).cast("int") === col("_m_shard"), "left_outer")
-        .withColumn("_stale_rows",
-          coalesce(col("_masked_rows"), lit(0L)))
-        .drop("_m_shard", "_masked_rows")
-    }
-    // the two sidecar swaps are independent full-table aggregations
-    // with distinct outputs — concurrent (§2.6), the refresh pays
-    // max(stats, bloom) instead of the sum
-    locally {
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val mb = bloomCfg.map { case (kc, m, k) =>
-        graft.ext.Corpus.bloomBitsTable(back, shardCol, kc, m, k)
-          .withColumn("key_col", lit(kc))
-      }
-      settleSidecarSwaps(Seq(
-        SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, stats,
-          s"$dir/$StatsSidecar"))) ++
-        mb.map(df => SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, df,
-          s"$dir/$BloomSidecar"))))
-    }
+    rebuildManifests(spark, dir, sc, None, Some(readTable(spark, dir)),
+      countMasked = true)
     logEntry(spark, dir, "refresh", s"stat_cols=${sc.mkString("+")}")
   }
 
@@ -846,142 +848,138 @@ object Scan {
     * manifest row (the manifest-ahead heal). No data file is read for
     * unnamed shards, none is written at all.
     */
-  def refreshShards(spark: SparkSession, dir: String, shards: Seq[Int],
-      shardCol: String = "shard"): Unit =
+  def refreshShards(spark: SparkSession, dir: String,
+      shards: Seq[Int]): Unit =
       withWriterLease(spark, dir) {
     if (shards.isEmpty) return
-    recoverPendingDelete(spark, dir, shardCol)
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val existing = existingShards(fs, dir, shards, shardCol)
-    val statCols = statColsOf(spark, dir)
-    val raw =
-      if (existing.isEmpty) None
-      else Some(readShardsRaw(spark, dir, existing, shardCol))
-    val hasDv = fs.exists(new Path(s"$dir/$DvSidecar"))
-    val masked: Option[DataFrame] = raw.flatMap { r =>
-      if (!hasDv) None
-      else bloomConfigOf(spark, dir).map { case (kc, _, _) =>
-        joinDv(spark, dir, r, shardCol, kc, "left_semi")
-          .groupBy(col(shardCol).cast("int").as("_m_shard"))
-          .agg(count(lit(1)).as("_masked_rows"))
-      }
-    }
-    val old = statsManifest(spark, dir)
-    val oldStale =
-      if (old.columns.contains("_stale_rows")) col("_stale_rows")
-      else lit(0L)
-    val keep = old.withColumn("_stale_rows", coalesce(oldStale, lit(0L)))
-      .filter(!col(shardCol).cast("int").isin(shards: _*))
-    val fresh = raw.map { r =>
-      val exact = graft.ext.Corpus.shardStats(r, shardCol, statCols)
-      masked match {
-        case None => exact.withColumn("_stale_rows", lit(0L))
-        case Some(m) => exact
-          .join(m, exact(shardCol).cast("int") === col("_m_shard"),
-            "left_outer")
-          .withColumn("_stale_rows",
-            coalesce(col("_masked_rows"), lit(0L)))
-          .drop("_m_shard", "_masked_rows")
-      }
-    }
-    // independent sidecar swaps, concurrent (§2.6) — same shape and
-    // rationale as [[refreshManifests]]
-    locally {
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val statsSwap = {
-        val df = fresh.fold(keep)(keep.unionByName(_))
-        SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, df,
-          s"$dir/$StatsSidecar"))
-      }
-      val bloomSwap =
-        if (!fs.exists(new Path(s"$dir/$BloomSidecar"))) None
-        else bloomConfigOf(spark, dir).map { case (kc, m, k) =>
-          val ob = bloomManifest(spark, dir)
-            .filter(!col("shard").cast("int").isin(shards: _*))
-          val nb = raw.map(r =>
-            graft.ext.Corpus.bloomBitsTable(r, shardCol, kc, m, k)
-              .withColumn("key_col", lit(kc)))
-          val df = nb.fold(ob)(ob.unionByName(_))
-          SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, df,
-            s"$dir/$BloomSidecar"))
-        }
-      settleSidecarSwaps(statsSwap +: bloomSwap.toSeq)
-    }
+    recoverPendingDelete(spark, dir)
+    rebuildManifests(spark, dir, statColsOf(spark, dir), Some(shards),
+      shardFiles(spark, dir, shards), countMasked = true)
     logEntry(spark, dir, "refresh_shards", s"shards=${shards.size}")
   }
 
-  private def writeManifests(spark: SparkSession, tableDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      statCols: Seq[String], shardCol: String,
-      bloomKeyCol: Option[String], bloomM: Int, bloomK: Int): Unit = {
-    // the written files' schema is known from the frame, so the read
-    // starts no partition-discovery inference job
-    val back = writtenSchema(spark, tableDir, schema, shardCol)
-      .fold(spark.read.parquet(tableDir))(sc =>
-        spark.read.schema(sc).parquet(tableDir))
-    // `_stale_rows` = rows folded in by [[appendSharded]] since the
-    // stats were last computed EXACTLY from files — the measurable
-    // staleness signal (0 here: this manifest IS exact). NDV looseness
-    // itself is unobservable without re-reading the data; the rows that
-    // entered through additive folds are a free, honest proxy.
-    // The stats and bloom passes are INDEPENDENT aggregations over the
-    // written files with distinct output dirs — submitted concurrently
-    // (§2.6 sibling-job overlap) so the publish pays max() of the two
-    // instead of their sum. A FUSED single aggregate was tried first
-    // and measured WORSE at 10x (multiple countDistinct + collect_set
-    // plans as an expanded sort-aggregate: x167's two ~100 ms passes
-    // became one 1-2 s job; per-row bloom hashing repeated k md5 slices
-    // per row where the distinct-first form hashes per distinct key) —
-    // two well-shaped passes overlapped beat one mis-shaped pass.
-    val bloomFut = bloomKeyCol.map { kc =>
-      import scala.concurrent.ExecutionContext.Implicits.global
-      SparkFuture(spark)(graft.ext.Corpus.bloomBitsTable(back, shardCol, kc,
-          bloomM, bloomK)
-        .withColumn("key_col", lit(kc))
-        .write.mode("overwrite").parquet(s"$tableDir/$BloomSidecar"))
-    }
-    // the bloom future is awaited even when the stats pass THROWS — no
-    // orphaned job keeps writing into the table dir while the caller
-    // unwinds; the stats failure stays primary and carries a bloom
-    // failure as suppressed, a bloom-only failure surfaces as its own.
-    // Finite timeout: see [[SidecarAwait]].
-    var primary: Throwable = null
-    try {
-      graft.ext.Corpus.shardStats(back, shardCol, statCols)
-        .withColumn("_stale_rows", lit(0L))
-        .write.mode("overwrite").parquet(s"$tableDir/$StatsSidecar")
-    } catch { case t: Throwable => primary = t; throw t }
-    finally bloomFut.foreach { f =>
-      try scala.concurrent.Await.result(f, SidecarAwait)
-      catch {
-        case t: Throwable =>
-          if (primary == null) throw t else primary.addSuppressed(t)
+  /** The one EXACT MANIFEST BUILDER: [[writeSharded]]'s publish,
+    * [[refreshManifests]], [[refreshShards]] and the delete protocol's
+    * roll-forward ([[applyPendingDelete]]) all rebuild the stats and
+    * bloom sidecars here. `files` are the rows of the rebuilt shards'
+    * files (None when none of them holds a file). `shards` names the
+    * rebuilt shards: every other shard's old manifest rows pass through
+    * unchanged, and a named shard without files loses its rows; None
+    * rebuilds the whole table and keeps no old row.
+    *
+    * `_stale_rows` counts the rows that entered a shard through additive
+    * folds since its stats were last computed exactly from files — NDV
+    * looseness itself is unobservable without re-reading the data, and
+    * fold-entered rows are a free, honest proxy. It is 0 for a rebuilt
+    * shard — its rows ARE exact for its files — except that under
+    * `countMasked` the rows a pending
+    * deletion vector masks count in: they are physical-but-not-logical
+    * looseness, and the staleness signal that drives the maintained
+    * mounts to compact (which applies the vector) must survive a
+    * refresh, or the loop would never converge. The delete protocol
+    * rewrites shards from rows read with the vector applied, so it
+    * passes `countMasked = false` and pays no masked-row join.
+    *
+    * The bloom geometry is the table's own ([[bloomConfigOf]] — the
+    * meta sidecar, or the bloom sidecar of a pre-meta table): the delete
+    * paths probe with it, so bits rebuilt with any other m/k would
+    * silently miss rows. A targeted rebuild keeps old bloom rows, so it
+    * rebuilds bloom rows only where a bloom sidecar exists.
+    *
+    * Each sidecar is replaced in its own atomic swap (sidecar paths are
+    * `_`-prefixed, so their `__swap_new` dirs stay invisible to table
+    * readers). The stats and bloom passes are INDEPENDENT aggregations
+    * with distinct outputs — submitted concurrently (§2.6 sibling-job
+    * overlap), so a rebuild pays max() of the two instead of their sum.
+    * A FUSED single aggregate was tried first and measured WORSE at 10x
+    * (multiple countDistinct + collect_set plans as an expanded
+    * sort-aggregate: x167's two ~100 ms passes became one 1-2 s job;
+    * per-row bloom hashing repeated k md5 slices per row where the
+    * distinct-first form hashes per distinct key) — two well-shaped
+    * passes overlapped beat one mis-shaped pass. Each frame is built
+    * inside its own future, so a failing bloom pass rides a failing
+    * stats pass as suppressed ([[settleSidecarSwaps]]).
+    */
+  private def rebuildManifests(spark: SparkSession, dir: String,
+      statCols: Seq[String], shards: Option[Seq[Int]],
+      files: Option[DataFrame], countMasked: Boolean): Unit = {
+    val fs = new Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val config = bloomConfigOf(spark, dir)
+    val bloomCfg =
+      if (shards.isEmpty) config
+      else if (!fs.exists(new Path(s"$dir/$BloomSidecar"))) None
+      else Some(config.getOrElse(sys.error(
+        s"$dir has a bloom sidecar but no recoverable bloom config " +
+          "(empty sidecar, no meta)")))
+    val maskKey =
+      if (countMasked && fs.exists(new Path(s"$dir/$DvSidecar")))
+        config.map(_._1)
+      else None
+    def kept(man: => DataFrame): Option[DataFrame] = shards.map(s =>
+      man.filter(!col(ShardCol).cast("int").isin(s: _*)))
+    def stats(): DataFrame = {
+      val fresh = files.map { f =>
+        val exact = graft.ext.Corpus.shardStats(f, ShardCol, statCols)
+        maskKey.fold(exact.withColumn("_stale_rows", lit(0L))) { kc =>
+          val masked = joinDv(spark, dir, f, kc, "left_semi")
+            .groupBy(col(ShardCol).cast("int").as("_m_shard"))
+            .agg(count(lit(1)).as("_masked_rows"))
+          exact.join(masked,
+              exact(ShardCol).cast("int") === col("_m_shard"), "left_outer")
+            .withColumn("_stale_rows",
+              coalesce(col("_masked_rows"), lit(0L)))
+            .drop("_m_shard", "_masked_rows")
+        }
       }
+      val old = kept(statsManifest(spark, dir)).map(m =>
+        m.withColumn("_stale_rows", staleRows(m)))
+      (old ++ fresh).reduce(_ unionByName _)
     }
+    def bloom(kc: String, m: Int, k: Int): DataFrame =
+      (kept(bloomManifest(spark, dir)) ++ files.map(f =>
+        graft.ext.Corpus.bloomBitsTable(f, ShardCol, kc, m, k)
+          .withColumn("key_col", lit(kc)))).reduce(_ unionByName _)
+    import scala.concurrent.ExecutionContext.Implicits.global
+    def swap(name: String)(df: => DataFrame) =
+      SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, df,
+        s"$dir/$name"))
+    settleSidecarSwaps(swap(StatsSidecar)(stats()) +:
+      bloomCfg.toSeq.map { case (kc, m, k) =>
+        swap(BloomSidecar)(bloom(kc, m, k))
+      })
   }
 
+  /** A manifest's `_stale_rows`, 0 where it is NULL or absent — a
+    * pre-staleness manifest lacks the column, and its envelopes are
+    * valid with exactness unknown. */
+  private def staleRows(man: DataFrame): Column =
+    if (man.columns.contains("_stale_rows"))
+      coalesce(col("_stale_rows"), lit(0L))
+    else lit(0L)
+
   /** The schema `spark.read.parquet(dir)` infers for a table written
-    * from a frame of `schema` partitioned by `shardCol`: the other columns
-    * in frame order, nullable as a file source reads them, then `shardCol`
-    * typed as partition discovery types its directory values — int when
-    * every value fits one, else long. None when a value is not integral;
-    * the caller then infers. Lists `dir` only; no Spark job. */
+    * from a frame of `schema` partitioned by [[ShardCol]]: the other
+    * columns in frame order, nullable as a file source reads them, then
+    * the shard column typed as partition discovery types its directory
+    * values — int when every value fits one, else long. None when a
+    * value is not integral; the caller then infers. Lists `dir` only; no
+    * Spark job. */
   private def writtenSchema(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      shardCol: String): Option[org.apache.spark.sql.types.StructType] = {
+      schema: org.apache.spark.sql.types.StructType)
+      : Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     val p = new Path(dir)
     val values = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(s"$shardCol=")).map(_.stripPrefix(s"$shardCol="))
+      .filter(_.startsWith(s"$ShardCol=")).map(_.stripPrefix(s"$ShardCol="))
     val shardType =
       if (values.forall(_.toIntOption.isDefined)) Some(IntegerType)
       else if (values.forall(_.toLongOption.isDefined)) Some(LongType)
       else None
     shardType.map(t => StructType(
-      asNullable(StructType(schema.filterNot(_.name == shardCol)))
-        .asInstanceOf[StructType].fields :+ StructField(shardCol, t)))
+      asNullable(StructType(schema.filterNot(_.name == ShardCol)))
+        .asInstanceOf[StructType].fields :+ StructField(ShardCol, t)))
   }
 
   def statsManifest(spark: SparkSession, dir: String): DataFrame =
@@ -1005,13 +1003,12 @@ object Scan {
     * manifest (the scan-planning step, bounded by shard count).
     */
   def candidateShardsByStats(manifest: DataFrame,
-      ranges: Seq[(String, Any, Any)],
-      shardCol: String = "shard"): Seq[Int] = {
+      ranges: Seq[(String, Any, Any)]): Seq[Int] = {
     require(ranges.nonEmpty, "need at least one range")
     val overlap = ranges.map { case (c, lo, hi) =>
       col(s"${c}_min") <= lit(hi) && col(s"${c}_max") >= lit(lo)
     }.reduce(_ && _)
-    manifest.filter(overlap).select(col(shardCol).cast("int"))
+    manifest.filter(overlap).select(col(ShardCol).cast("int"))
       .collect().map(_.getInt(0)).toSeq.sorted
   }
 
@@ -1026,9 +1023,8 @@ object Scan {
     * manifest row's own (m, k). Driver-side filter-collect over the
     * shards-sized manifest.
     */
-  def candidateShardsByKey(bloom: DataFrame, key: Any,
-      shardCol: String = "shard"): Seq[Int] =
-    candidateShardsByKeys(bloom, Seq(key), shardCol)
+  def candidateShardsByKey(bloom: DataFrame, key: Any): Seq[Int] =
+    candidateShardsByKeys(bloom, Seq(key))
 
   /** Candidate shards for an IN-list `keyCol IN (keys…)`: the UNION of
     * each key's bloom-maybe shards, computed in ONE pass over the
@@ -1042,8 +1038,8 @@ object Scan {
     * 1,500-key batch overflows the stack; the probe caught it). The
     * join shape is flat in the key count and stays shards-bounded on
     * the scan side. */
-  def candidateShardsByKeys(bloom: DataFrame, keys: Seq[Any],
-      shardCol: String = "shard"): Seq[Int] = {
+  def candidateShardsByKeys(bloom: DataFrame,
+      keys: Seq[Any]): Seq[Int] = {
     require(keys.nonEmpty, "need at least one key")
     val matched =
       if (keys.size <= 64)
@@ -1054,7 +1050,7 @@ object Scan {
         bloom.join(broadcast(keysDf), bloomCovers(col("_probe_key")),
           "left_semi")
       }
-    matched.select(col(shardCol).cast("int"))
+    matched.select(col(ShardCol).cast("int"))
       .collect().map(_.getInt(0)).toSeq.sorted
   }
 
@@ -1088,10 +1084,9 @@ object Scan {
     */
   def evolveAddColumn(spark: SparkSession, dir: String, colName: String,
       dataType: org.apache.spark.sql.types.DataType,
-      addToStats: Boolean = true,
-      shardCol: String = "shard"): Unit =
+      addToStats: Boolean = true): Unit =
       withWriterLease(spark, dir) {
-    recoverPendingDelete(spark, dir, shardCol)
+    recoverPendingDelete(spark, dir)
     val schema = tableSchemaOf(spark, dir).getOrElse(sys.error(
       s"evolveAddColumn: $dir has no $SchemaSidecar declared-schema " +
         "sidecar — republish through writeSharded first"))
@@ -1147,17 +1142,16 @@ object Scan {
     * folding), manifests second (extra columns nothing names are
     * harmless), declared schema last (reads narrow). */
   def evolveDropColumn(spark: SparkSession, dir: String,
-      colName: String,
-      shardCol: String = "shard"): Unit =
+      colName: String): Unit =
       withWriterLease(spark, dir) {
-    recoverPendingDelete(spark, dir, shardCol)
+    recoverPendingDelete(spark, dir)
     val schema = tableSchemaOf(spark, dir).getOrElse(sys.error(
       s"evolveDropColumn: $dir has no $SchemaSidecar declared-schema " +
         "sidecar — republish through writeSharded first"))
     require(schema.fieldNames.contains(colName),
       s"evolveDropColumn: $dir has no column '$colName'")
     val meta = readMeta(spark, dir)
-    val protectedCols = Seq(shardCol) ++ meta.flatMap(_.sortCol) ++
+    val protectedCols = Seq(ShardCol) ++ meta.flatMap(_.sortCol) ++
       meta.flatMap(_.bloomKey) ++ readDicts(spark, dir).keys
     require(!protectedCols.contains(colName),
       s"evolveDropColumn: '$colName' is part of $dir's layout/index " +
@@ -1223,33 +1217,26 @@ object Scan {
     * Returns (candidate shards, shards actually rewritten, rows
     * removed).
     */
-  def deleteByKeys(spark: SparkSession, dir: String, keys: Seq[Any],
-      shardCol: String = "shard",
-      sortCol: Option[String] = None): (Seq[Int], Seq[Int], Long) =
+  def deleteByKeys(spark: SparkSession, dir: String,
+      keys: Seq[Any]): (Seq[Int], Seq[Int], Long) =
       withWriterLease(spark, dir) {
     require(keys.nonEmpty, "need at least one key")
     graft.dw.Merge.recover(spark, dir)
-    recoverPendingDelete(spark, dir, shardCol)
+    recoverPendingDelete(spark, dir)
     val (keyCol, _, _) = bloomConfigOf(spark, dir).getOrElse(sys.error(
       s"deleteByKeys: $dir has no recoverable bloom config"))
     // an empty bloom manifest (every shard previously emptied) yields
     // no candidates from the coverage filter itself — no separate
     // isEmpty probe job
-    val cands = candidateShardsByKeys(bloomManifest(spark, dir), keys,
-      shardCol)
+    val cands = candidateShardsByKeys(bloomManifest(spark, dir), keys)
     val matchPred =
       if (keys.size == 1) col(keyCol) === lit(keys.head)
       else col(keyCol).isin(keys: _*)
-    val r = deleteWhere(spark, dir, cands, matchPred, shardCol, sortCol)
+    val r = deleteWhere(spark, dir, cands, matchPred)
     if (r._2.nonEmpty) logEntry(spark, dir, "delete_keys",
       s"keys=${keys.size} removed=${r._3} shards=${r._2.size}")
     r
       }
-
-  def deleteByKey(spark: SparkSession, dir: String, key: Any,
-      shardCol: String = "shard",
-      sortCol: Option[String] = None): (Seq[Int], Seq[Int], Long) =
-    deleteByKeys(spark, dir, Seq(key), shardCol, sortCol)
 
   /** MERGE-ON-READ delete — the DEFERRED form of [[deleteByKeys]]: no
     * shard is rewritten; the matched (shard, key) pairs land in the
@@ -1285,31 +1272,29 @@ object Scan {
     * logically removed).
     */
   def deleteByKeysDeferred(spark: SparkSession, dir: String,
-      keys: Seq[Any], shardCol: String = "shard")
-      : (Seq[Int], Seq[Int], Long) =
+      keys: Seq[Any]): (Seq[Int], Seq[Int], Long) =
       withWriterLease(spark, dir) {
     require(keys.nonEmpty, "need at least one key")
     graft.dw.Merge.recover(spark, dir)
-    recoverPendingDelete(spark, dir, shardCol)
+    recoverPendingDelete(spark, dir)
     val (keyCol, _, _) = bloomConfigOf(spark, dir).getOrElse(sys.error(
       s"deleteByKeysDeferred: $dir has no recoverable bloom config — " +
         "deletion vectors key on the bloom column"))
     // empty manifest → no candidates from the coverage filter
-    val cands = candidateShardsByKeys(bloomManifest(spark, dir), keys,
-      shardCol)
+    val cands = candidateShardsByKeys(bloomManifest(spark, dir), keys)
     if (cands.isEmpty) return (cands, Nil, 0L)
     val matchPred =
       if (keys.size == 1) col(keyCol) === lit(keys.head)
       else col(keyCol).isin(keys: _*)
     // logical matches only — rows an earlier vector already masks do
     // not re-count (readShards applies the DV), so replay converges
-    val delta = readShards(spark, dir, cands, shardCol)
+    val delta = readShards(spark, dir, cands)
       .filter(matchPred)
-      .groupBy(col(shardCol).cast("int").as("shard"),
+      .groupBy(col(ShardCol).cast("int").as(ShardCol),
         col(keyCol).as("key"))
       .agg(count(lit(1)).as("_n")).persist()
     try {
-      val perShard = delta.groupBy("shard")
+      val perShard = delta.groupBy(ShardCol)
         .agg(sum("_n").as("_n")).collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       val touched = perShard.keys.toSeq.sorted
@@ -1317,9 +1302,9 @@ object Scan {
       if (touched.isEmpty) return (cands, Nil, 0L)
       // the commit point: old vector ∪ delta, one atomic sidecar swap
       val newDv = deletionVector(spark, dir)
-        .fold(delta.select(col("shard"), col("key")))(
-          _.select(col("shard").cast("int").as("shard"), col("key"))
-            .unionByName(delta.select(col("shard"), col("key")))
+        .fold(delta.select(col(ShardCol), col("key")))(
+          _.select(col(ShardCol).cast("int").as(ShardCol), col("key"))
+            .unionByName(delta.select(col(ShardCol), col("key")))
             .distinct())
       graft.dw.Merge.atomicOverwrite(spark, newDv.coalesce(1),
         s"$dir/$DvSidecar")
@@ -1331,16 +1316,13 @@ object Scan {
       // conditional nesting depth (measured: 19 shards 3 s, 26 shards
       // 132 s — the probe caught it)
       val old = statsManifest(spark, dir)
-      val oldStale =
-        if (old.columns.contains("_stale_rows")) col("_stale_rows")
-        else lit(0L)
       import spark.implicits._
       val bumps = perShard.toSeq.toDF("_b_shard", "_b_n")
       graft.dw.Merge.atomicOverwrite(spark,
         old.join(broadcast(bumps),
-            old(shardCol).cast("int") === col("_b_shard"), "left_outer")
+            old(ShardCol).cast("int") === col("_b_shard"), "left_outer")
           .withColumn("_stale_rows",
-            coalesce(oldStale, lit(0L)) + coalesce(col("_b_n"), lit(0L)))
+            staleRows(old) + coalesce(col("_b_n"), lit(0L)))
           .drop("_b_shard", "_b_n"),
         s"$dir/$StatsSidecar")
       logEntry(spark, dir, "delete_deferred",
@@ -1358,29 +1340,27 @@ object Scan {
     * call is the targeted form (touches only DV shards, not every
     * multi-file shard). Returns (shards rewritten, rows physically
     * removed). */
-  def applyDeletionVectors(spark: SparkSession, dir: String,
-      shardCol: String = "shard", sortCol: Option[String] = None)
-      : (Seq[Int], Long) =
+  def applyDeletionVectors(spark: SparkSession,
+      dir: String): (Seq[Int], Long) =
       withWriterLease(spark, dir) {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(s"$dir/$DvSidecar"))) return (Nil, 0L)
     graft.dw.Merge.recover(spark, dir)
-    recoverPendingDelete(spark, dir, shardCol)
+    recoverPendingDelete(spark, dir)
     val named = dvManifest(spark, dir)
-      .select(col("shard").cast("int")).distinct()
+      .select(col(ShardCol).cast("int")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val dvShards = existingShards(fs, dir, named, shardCol)
+    val dvShards = existingShards(fs, dir, named)
     if (dvShards.isEmpty) {
       fs.delete(new Path(s"$dir/$DvSidecar"), true)
       return (Nil, 0L)
     }
     // rows the vector masks, counted in one pass over the DV shards
-    val raw = readShardsRaw(spark, dir, dvShards, shardCol)
-    val removed = joinDv(spark, dir, raw, shardCol, dvKeyCol(spark, dir),
-      "left_semi").count()
-    rewriteShards(spark, dir, dvShards, shardCol, sortCol,
-      dvShards = Some(named))
+    val raw = readShardsRaw(spark, dir, dvShards)
+    val removed =
+      joinDv(spark, dir, raw, dvKeyCol(spark, dir), "left_semi").count()
+    rewriteShards(spark, dir, dvShards, dvShards = Some(named))
     logEntry(spark, dir, "dv_apply",
       s"removed=$removed shards=${dvShards.size}")
     (dvShards, removed)
@@ -1388,44 +1368,18 @@ object Scan {
 
   /** The shared TARGETED-REWRITE core: republish exactly `shards` from
     * their logical rows (deletion vector applied — any pending mask on
-    * these shards becomes physical and is cleared), one file per shard
-    * (or `maxRecordsPerFile`-bounded), sorted by the table's sort
-    * column, through the same pending/`_COMMIT` crash protocol as the
-    * delete family — [[applyPendingDelete]] then recomputes exactly
-    * the touched shards' manifest rows and zeroes their staleness,
-    * untouched shards' files and manifest rows pass through
-    * bit-stable. Work ∝ the named shards, never the table. `dvShards`:
-    * see [[applyPendingDelete]]. */
+    * these shards becomes physical and is cleared), one file per shard,
+    * sorted by the table's sort column, through the same pending/`_COMMIT`
+    * crash protocol as the delete family ([[commitRewrite]]) — the
+    * touched shards' manifest rows are recomputed exactly with their
+    * staleness zeroed, untouched shards' files and manifest rows pass
+    * through bit-stable. Work ∝ the named shards, never the table.
+    * `dvShards`: see [[applyPendingDelete]]. */
   private[graft] def rewriteShards(spark: SparkSession, dir: String,
-      shards: Seq[Int], shardCol: String = "shard",
-      sortCol: Option[String] = None,
-      maxRecordsPerFile: Long = 0L,
-      dvShards: Option[Seq[Int]] = None): Unit = {
-    if (shards.isEmpty) return
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val sort = sortCol.orElse(readMeta(spark, dir).flatMap(_.sortCol))
-    val raw = readShardsRaw(spark, dir, shards, shardCol)
-    val kept = applyDv(spark, dir, raw, shardCol)
-    val keptW = kept.repartition(col(shardCol))
-    val sorted = sort.fold(keptW)(c =>
-      keptW.sortWithinPartitions(shardCol, c))
-    val writer =
-      if (maxRecordsPerFile > 0)
-        sorted.write.option("maxRecordsPerFile", maxRecordsPerFile)
-      else sorted.write
-    writer.mode("overwrite").partitionBy(shardCol)
-      .parquet(s"$dir/$PendingDelete")
-    val withRows = shards.filter(s =>
-      fs.exists(new Path(s"$dir/$PendingDelete/$shardCol=$s")))
-    val emptied = shards.diff(withRows)
-    val commit = new Path(s"$dir/$PendingDelete/_COMMIT")
-    val out = fs.create(commit, true)
-    out.write((s"kept:${withRows.mkString(",")}" +
-      s"|emptied:${emptied.mkString(",")}").getBytes("UTF-8"))
-    out.close()
-    applyPendingDelete(spark, dir, shardCol, withRows, emptied, dvShards)
-  }
+      shards: Seq[Int], dvShards: Option[Seq[Int]] = None): Unit =
+    if (shards.nonEmpty)
+      commitRewrite(spark, dir, shards,
+        applyDv(spark, dir, readShardsRaw(spark, dir, shards)), dvShards)
 
   /** MERGE (upsert) on a sharded z-ordered table, routed BY THE INDEX —
     * the reference's fact MERGE (`Delta Load Scripts/dw2_delta_load2
@@ -1457,8 +1411,7 @@ object Scan {
     * old-version rows replaced).
     */
   def upsertSharded(spark: SparkSession, dir: String,
-      laidBatch: DataFrame, idCol: String, shardCol: String = "shard",
-      sortCol: Option[String] = None,
+      laidBatch: DataFrame, idCol: String,
       maxKeys: Int = 100000): (Seq[Int], Seq[Int], Long) =
       withWriterLease(spark, dir) {
     val kc = bloomConfigOf(spark, dir).map(_._1).getOrElse(sys.error(
@@ -1475,9 +1428,8 @@ object Scan {
         s"upsertSharded: staged batch exceeds $maxKeys distinct keys " +
           "— that is a rewrite, not a MERGE; use writeSharded")
       if (keys.isEmpty) return (Nil, Nil, 0L)
-      val (cands, touched, removed) =
-        deleteByKeys(spark, dir, keys, shardCol, sortCol)
-      appendSharded(spark, b, dir, idCol, shardCol)
+      val (cands, touched, removed) = deleteByKeys(spark, dir, keys)
+      appendSharded(spark, b, dir, idCol)
       logEntry(spark, dir, "upsert",
         s"keys=${keys.size} replaced=$removed shards=${touched.size}")
       (cands, touched, removed)
@@ -1495,84 +1447,88 @@ object Scan {
     * producing candidates at all (the envelopes tightened past it).
     */
   def deleteByRange(spark: SparkSession, dir: String,
-      ranges: Seq[(String, Any, Any)], shardCol: String = "shard",
-      sortCol: Option[String] = None): (Seq[Int], Seq[Int], Long) =
+      ranges: Seq[(String, Any, Any)]): (Seq[Int], Seq[Int], Long) =
       withWriterLease(spark, dir) {
     require(ranges.nonEmpty, "need at least one range")
     graft.dw.Merge.recover(spark, dir)
-    recoverPendingDelete(spark, dir, shardCol)
-    val cands = candidateShardsByStats(statsManifest(spark, dir),
-      ranges, shardCol)
+    recoverPendingDelete(spark, dir)
+    val cands = candidateShardsByStats(statsManifest(spark, dir), ranges)
     val matchPred = ranges.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
     }.reduce(_ && _)
-    val r = deleteWhere(spark, dir, cands, matchPred, shardCol, sortCol)
+    val r = deleteWhere(spark, dir, cands, matchPred)
     if (r._2.nonEmpty) logEntry(spark, dir, "delete_range",
       s"cols=${ranges.map(_._1).mkString("+")} removed=${r._3} " +
         s"shards=${r._2.size}")
     r
       }
 
-  /** The shared delete core (steps 1–2 of the protocol; see
-    * [[deleteByKeys]]): probe the candidate shards for matches, land
-    * kept rows in the pending area, write the `_COMMIT` pivot, then
-    * roll forward. A row where `matchPred` evaluates NULL is KEPT —
-    * deletes remove only rows the predicate PROVES match.
+  /** The shared delete core (see [[deleteByKeys]]): probe the
+    * candidate shards for matches, then rewrite the touched shards
+    * without them ([[commitRewrite]]). A row where `matchPred` evaluates
+    * NULL is KEPT — deletes remove only rows the predicate PROVES match.
     *
     * Scale shape: TWO jobs regardless of how many shards are touched —
     * one aggregate over the candidate shards (per-shard match counts,
     * rows out = candidates) and one shard-partitioned write of every
     * touched shard's kept rows into the pending area — not a
     * per-shard driver loop, which would serialize a wide retention
-    * delete no matter how many executors exist. A shard whose rows ALL
-    * match writes no pending dir; the `_COMMIT` marker records it as
-    * `emptied` so roll-forward deletes it without a replacement.
+    * delete no matter how many executors exist.
     */
   private def deleteWhere(spark: SparkSession, dir: String,
-      cands0: Seq[Int], matchPred: Column, shardCol: String,
-      sortCol: Option[String]): (Seq[Int], Seq[Int], Long) = {
+      cands0: Seq[Int], matchPred: Column): (Seq[Int], Seq[Int], Long) = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val cands = existingShards(fs, dir, cands0, shardCol)
+    val cands = existingShards(fs, dir, cands0)
     if (cands.isEmpty) return (cands, Nil, 0L)
-    val sort = sortCol.orElse(readMeta(spark, dir).flatMap(_.sortCol))
-    val back = readShards(spark, dir, cands, shardCol)
+    val back = readShards(spark, dir, cands)
     // one probe job: per-shard match counts (over-approximated
     // candidates — bloom fps, loose envelopes — rewrite nothing)
     val hits = back.filter(matchPred)
-      .groupBy(col(shardCol).cast("int").as("_s"))
+      .groupBy(col(ShardCol).cast("int").as("_s"))
       .agg(count(lit(1)).as("_n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val touched = hits.keys.toSeq.sorted
     val removed = hits.values.sum
     if (touched.isEmpty) return (cands, Nil, 0L)
-    // one write job: every touched shard's kept rows, shard-partitioned
-    // into the pending area (a fully-emptied shard produces no dir)
-    val kept = back
-      .filter(col(shardCol).isin(touched: _*) &&
-        !coalesce(matchPred, lit(false)))
-      .repartition(col(shardCol))
-    sort.fold(kept)(c => kept.sortWithinPartitions(shardCol, c))
-      .write.mode("overwrite").partitionBy(shardCol)
+    commitRewrite(spark, dir, touched, back.filter(
+      col(ShardCol).isin(touched: _*) && !coalesce(matchPred, lit(false))))
+    (cands, touched, removed)
+  }
+
+  /** Steps 1–2 of the delete protocol, then the roll-forward: `kept` —
+    * the rows the rewritten `shards` keep — lands shard-partitioned
+    * under `_pending_delete`, sorted within each file by the table's
+    * sort column (a shard that keeps no row writes no pending dir), and
+    * the `_COMMIT` marker written LAST names which shards kept rows and
+    * which emptied — after it exists recovery ROLLS FORWARD, before it
+    * recovery rolls back (no table state changes until the marker is
+    * durable). [[applyPendingDelete]] then swaps the shards in.
+    * `dvShards`: see there. */
+  private def commitRewrite(spark: SparkSession, dir: String,
+      shards: Seq[Int], kept: DataFrame,
+      dvShards: Option[Seq[Int]] = None): Unit = {
+    val fs = new Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val parted = kept.repartition(col(ShardCol))
+    readMeta(spark, dir).flatMap(_.sortCol)
+      .fold(parted)(c => parted.sortWithinPartitions(ShardCol, c))
+      .write.mode("overwrite").partitionBy(ShardCol)
       .parquet(s"$dir/$PendingDelete")
-    val withRows = touched.filter(s =>
-      fs.exists(new Path(s"$dir/$PendingDelete/$shardCol=$s")))
-    val emptied = touched.diff(withRows)
-    // 2. the commit point: after this marker exists, recovery ROLLS
-    // FORWARD; before it, recovery rolls back (no table state changes
-    // until the marker is durable)
-    val commit = new Path(s"$dir/$PendingDelete/_COMMIT")
-    val out = fs.create(commit, true)
+    val withRows = shards.filter(s =>
+      fs.exists(new Path(s"$dir/$PendingDelete/$ShardCol=$s")))
+    val emptied = shards.diff(withRows)
+    val out = fs.create(new Path(s"$dir/$PendingDelete/_COMMIT"), true)
     out.write((s"kept:${withRows.mkString(",")}" +
       s"|emptied:${emptied.mkString(",")}").getBytes("UTF-8"))
     out.close()
-    applyPendingDelete(spark, dir, shardCol, withRows, emptied)
-    (cands, touched, removed)
+    applyPendingDelete(spark, dir, withRows, emptied, dvShards)
   }
 
   /** Steps 3–5 of the delete protocol: swap each kept shard, delete
     * each fully-emptied shard, rebuild the touched shards' manifest
-    * rows exactly, drop the pending area. Idempotent — the pending
+    * rows exactly ([[rebuildManifests]]; untouched rows pass through
+    * unchanged), drop the pending area. Idempotent — the pending
     * content is the final state (a kept shard whose pending dir is
     * already consumed is skipped, never re-deleted), emptied-shard
     * deletes are no-ops when re-applied, and the manifest recompute
@@ -1580,92 +1536,36 @@ object Scan {
     * every shard the deletion vector names (collected under the same
     * lease). */
   private def applyPendingDelete(spark: SparkSession, dir: String,
-      shardCol: String, kept: Seq[Int], emptied: Seq[Int],
+      kept: Seq[Int], emptied: Seq[Int],
       dvShards: Option[Seq[Int]] = None): Unit = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val touched = (kept ++ emptied).sorted
     kept.foreach { s =>
-      val pending = new Path(s"$dir/$PendingDelete/$shardCol=$s")
+      val pending = new Path(s"$dir/$PendingDelete/$ShardCol=$s")
       if (fs.exists(pending)) {
-        val target = new Path(s"$dir/$shardCol=$s")
+        val target = new Path(s"$dir/$ShardCol=$s")
         fs.delete(target, true)
         require(fs.rename(pending, target),
           s"delete swap rename $pending -> $target failed")
       }
     }
     emptied.foreach { s =>
-      fs.delete(new Path(s"$dir/$shardCol=$s"), true)
+      fs.delete(new Path(s"$dir/$ShardCol=$s"), true)
     }
-    // touched shards' manifest rows recomputed EXACTLY from the
-    // rewritten files; untouched rows pass through unchanged. Inline
-    // shard read (NOT readShards — its reader-window recovery would
-    // re-enter this very routine while the pending area still exists)
-    val statCols = statColsOf(spark, dir)
-    // only dirs with DATA files: a fully-emptied shard leaves a dir of
-    // markers, which contributes no rows but would break schema
-    // inference if it were the only path
-    val existing = touched.filter { s =>
-      val p = new Path(s"$dir/$shardCol=$s")
-      fs.exists(p) && fs.listStatus(p).exists(f => f.isFile &&
-        !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith("."))
-    }
-    val oldStats = statsManifest(spark, dir)
-    val stale =
-      if (oldStats.columns.contains("_stale_rows")) col("_stale_rows")
-      else lit(0L)
-    val keepStats = oldStats
-      .withColumn("_stale_rows", coalesce(stale, lit(0L)))
-      .filter(!col(shardCol).isin(touched: _*))
-    // every touched shard emptied → their manifest rows simply vanish;
-    // no table-dir read (a delete that emptied EVERY shard leaves no
-    // data dirs to infer a schema from — the wedge the sidecar-only
-    // rebuild avoids)
-    def backRead(): DataFrame = {
-      val rd = tableSchemaOf(spark, dir)
-        .fold(spark.read)(sc => spark.read.schema(sc))
-      rd.option("basePath", dir)
-        .parquet(existing.map(s => s"$dir/$shardCol=$s"): _*)
-    }
-    val newStats =
-      if (existing.isEmpty) None
-      else Some(graft.ext.Corpus.shardStats(backRead(),
-        shardCol, statCols).withColumn("_stale_rows", lit(0L)))
-    val statsDf = newStats.fold(keepStats)(keepStats.unionByName(_))
-    val bloomDf =
-      if (!fs.exists(new Path(s"$dir/$BloomSidecar"))) None
-      else Some {
-        val ob = bloomManifest(spark, dir)
-        val (kc, m, k) = bloomConfigOf(spark, dir).getOrElse(sys.error(
-          s"applyPendingDelete: $dir has a bloom sidecar but no " +
-            "recoverable bloom config (empty sidecar, no meta)"))
-        val keepBloom = ob.filter(!col("shard").isin(touched: _*))
-        // a fully-emptied shard simply has no bloom row anymore
-        val newBloom =
-          if (existing.isEmpty) None
-          else Some(graft.ext.Corpus.bloomBitsTable(backRead(),
-            shardCol, kc, m, k).withColumn("key_col", lit(kc)))
-        newBloom.fold(keepBloom)(keepBloom.unionByName(_))
-      }
-    // the two rebuilds read the SAME post-swap files into distinct
-    // sidecar outputs — concurrent (§2.6), pays max() not the sum
-    locally {
-      import scala.concurrent.ExecutionContext.Implicits.global
-      settleSidecarSwaps(Seq(SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark,
-          statsDf, s"$dir/$StatsSidecar"))) ++
-        bloomDf.map(df => SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark,
-          df, s"$dir/$BloomSidecar"))))
-    }
+    // the kept rows were read with the deletion vector applied, so no
+    // rebuilt row is masked; a fully-emptied shard's rows simply vanish
+    rebuildManifests(spark, dir, statColsOf(spark, dir), Some(touched),
+      shardFiles(spark, dir, touched), countMasked = false)
     // deletion-vector entries for the rewritten shards are now applied
     // physically (every rewrite path computes kept rows DV-filtered —
-    // deleteWhere reads through readShards, applyDeletionVectors
-    // anti-joins explicitly) — clear them; an empty remainder drops
-    // the sidecar so readers stop anti-joining. Idempotent on
-    // recovery re-runs (filtering already-cleared shards is a no-op).
+    // deleteWhere reads through readShards, rewriteShards through
+    // applyDv) — clear them; an empty remainder drops the sidecar so
+    // readers stop anti-joining. Idempotent on recovery re-runs
+    // (filtering already-cleared shards is a no-op).
     if (fs.exists(new Path(s"$dir/$DvSidecar"))) {
       val rest = dvManifest(spark, dir)
-        .filter(!col("shard").cast("int").isin(touched: _*))
+        .filter(!col(ShardCol).cast("int").isin(touched: _*))
       // a caller holding the vector's shard set answers emptiness
       // without the probe job
       val restEmpty = dvShards.fold(rest.isEmpty)(_.forall(touched.contains))
@@ -1681,8 +1581,8 @@ object Scan {
       val p = new Path(s"$dir/$PendingDelete")
       if (!fs.exists(p)) Nil
       else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith(s"$shardCol="))
-        .map(_.stripPrefix(s"$shardCol=").toInt)
+        .filter(_.startsWith(s"$ShardCol="))
+        .map(_.stripPrefix(s"$ShardCol=").toInt)
         .filterNot(kept.contains)
     }
     require(leftover.isEmpty,
@@ -1698,8 +1598,7 @@ object Scan {
     * (re-apply the remaining swaps and the sidecar rebuild for the
     * shards the marker names — all idempotent). Cheap when there is
     * nothing to do: one FS existence probe. */
-  def recoverPendingDelete(spark: SparkSession, dir: String,
-      shardCol: String = "shard"): Unit = {
+  def recoverPendingDelete(spark: SparkSession, dir: String): Unit = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val pending = new Path(s"$dir/$PendingDelete")
@@ -1730,7 +1629,7 @@ object Scan {
             .map(_.stripPrefix("emptied:")).getOrElse("")))
       } else (ints(body), Nil)
     if (kept.nonEmpty || emptied.nonEmpty)
-      applyPendingDelete(spark, dir, shardCol, kept, emptied)
+      applyPendingDelete(spark, dir, kept, emptied)
     else fs.delete(pending, true)
   }
 
@@ -1746,8 +1645,8 @@ object Scan {
     * whose data never landed (the documented crash window), and "no
     * directory yet" means exactly "no rows there yet".
     */
-  def readShards(spark: SparkSession, dir: String, shards: Seq[Int],
-      shardCol: String = "shard"): DataFrame = {
+  def readShards(spark: SparkSession, dir: String,
+      shards: Seq[Int]): DataFrame = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     // the one delete-protocol window a reader could observe (a shard
@@ -1760,10 +1659,9 @@ object Scan {
     if (fs.exists(new Path(s"$dir/$PendingDelete")))
       withWriterLease(spark, dir, waitMs = 60 * 1000L) {
         if (fs.exists(new Path(s"$dir/$PendingDelete")))
-          recoverPendingDelete(spark, dir, shardCol)
+          recoverPendingDelete(spark, dir)
       }
-    applyDv(spark, dir,
-      readShardsRaw(spark, dir, shards, shardCol), shardCol)
+    applyDv(spark, dir, readShardsRaw(spark, dir, shards))
   }
 
   /** The PHYSICAL shard read — files as they are, deletion vectors NOT
@@ -1771,19 +1669,35 @@ object Scan {
     * (deletion-vector application itself) read through this; every
     * logical read goes through [[readShards]]. */
   private[graft] def readShardsRaw(spark: SparkSession, dir: String,
-      shards: Seq[Int], shardCol: String = "shard"): DataFrame = {
+      shards: Seq[Int]): DataFrame = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val existing = existingShards(fs, dir, shards, shardCol)
-    if (existing.isEmpty) emptyTableFrame(spark, dir, shardCol)
+    val existing = existingShards(fs, dir, shards)
+    if (existing.isEmpty) emptyTableFrame(spark, dir)
     else {
       // declared schema (one tiny sidecar footer) so shards written
       // before an evolveAddColumn null-fill the added columns
       val rd = tableSchemaOf(spark, dir)
         .fold(spark.read)(sc => spark.read.schema(sc))
       rd.option("basePath", dir)
-        .parquet(existing.map(s => s"$dir/$shardCol=$s"): _*)
+        .parquet(existing.map(s => s"$dir/$ShardCol=$s"): _*)
     }
+  }
+
+  /** The physical rows of those of `shards` whose directory holds a
+    * data file — None when none does: a fully-emptied shard leaves a
+    * directory of markers, which holds no rows but would break schema
+    * inference were it the only path. Read inline, never through
+    * [[readShards]], whose reader-window recovery would re-enter the
+    * delete roll-forward while the pending area still exists. */
+  private def shardFiles(spark: SparkSession, dir: String,
+      shards: Seq[Int]): Option[DataFrame] = {
+    val fs = new Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val withFiles = shards.filter(s =>
+      dataFileCount(fs, new Path(s"$dir/$ShardCol=$s")) > 0)
+    if (withFiles.isEmpty) None
+    else Some(readShardsRaw(spark, dir, withFiles))
   }
 
   /** Filter `shards` to the ones whose `shard=<s>` directory exists —
@@ -1793,9 +1707,9 @@ object Scan {
     * narrow set keeps the per-shard probes — listing a 10k-shard table
     * dir to check 2 candidates would invert the saving. */
   private def existingShards(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, shards: Seq[Int], shardCol: String): Seq[Int] =
+      dir: String, shards: Seq[Int]): Seq[Int] =
     if (shards.size <= 4)
-      shards.filter(s => fs.exists(new Path(s"$dir/$shardCol=$s")))
+      shards.filter(s => fs.exists(new Path(s"$dir/$ShardCol=$s")))
     else {
       val present =
         try fs.listStatus(new Path(dir)).iterator.collect {
@@ -1804,7 +1718,7 @@ object Scan {
         catch { // missing table dir ≡ no shards, as the probes read it
           case _: java.io.FileNotFoundException => Set.empty[String]
         }
-      shards.filter(s => present(s"$shardCol=$s"))
+      shards.filter(s => present(s"$ShardCol=$s"))
     }
 
   /** Apply the table's DELETION VECTOR to a frame read from its files:
@@ -1812,12 +1726,12 @@ object Scan {
     * logically deleted and filtered out with a broadcast anti-join (the
     * DV is takedown-sized — pairs, not rows). No sidecar → the frame
     * passes through at zero cost beyond one FS probe. */
-  private def applyDv(spark: SparkSession, dir: String, df: DataFrame,
-      shardCol: String): DataFrame = {
+  private def applyDv(spark: SparkSession, dir: String,
+      df: DataFrame): DataFrame = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(s"$dir/$DvSidecar"))) df
-    else joinDv(spark, dir, df, shardCol, dvKeyCol(spark, dir), "left_anti")
+    else joinDv(spark, dir, df, dvKeyCol(spark, dir), "left_anti")
   }
 
   /** The column a table's deletion-vector keys match: its bloom key. */
@@ -1827,15 +1741,15 @@ object Scan {
         "config — the DV keys are bloom-key-typed by construction"))
 
   /** `df` semi- or anti-joined (`how`) against the table's
-    * deletion-vector (shard, key) pairs on (`shardCol`, `kc`): a
+    * deletion-vector (shard, key) pairs on ([[ShardCol]], `kc`): a
     * broadcast join, the vector being takedown-sized. */
   private def joinDv(spark: SparkSession, dir: String, df: DataFrame,
-      shardCol: String, kc: String, how: String): DataFrame = {
+      kc: String, how: String): DataFrame = {
     val dv = dvManifest(spark, dir)
-      .select(col("shard").cast("int").as("_dv_shard"),
+      .select(col(ShardCol).cast("int").as("_dv_shard"),
         col("key").as("_dv_key"))
     df.join(broadcast(dv),
-      df(shardCol).cast("int") === col("_dv_shard") &&
+      df(ShardCol).cast("int") === col("_dv_shard") &&
         df(kc) === col("_dv_key"), how)
   }
 
@@ -1879,8 +1793,8 @@ object Scan {
     }
 
   /** The table's empty frame (schema intact, no data read). */
-  private def emptyTableFrame(spark: SparkSession, dir: String,
-      shardCol: String): DataFrame = {
+  private def emptyTableFrame(spark: SparkSession,
+      dir: String): DataFrame = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new Path(s"$dir/$SchemaSidecar")))
@@ -1895,14 +1809,12 @@ object Scan {
     * candidate shards alone.
     */
   def readPrunedByRange(spark: SparkSession, dir: String,
-      ranges: Seq[(String, Any, Any)],
-      shardCol: String = "shard"): DataFrame = {
-    val cands = candidateShardsByStats(statsManifest(spark, dir), ranges,
-      shardCol)
+      ranges: Seq[(String, Any, Any)]): DataFrame = {
+    val cands = candidateShardsByStats(statsManifest(spark, dir), ranges)
     val residual = ranges.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
     }.reduce(_ && _)
-    readShards(spark, dir, cands, shardCol).filter(residual)
+    readShards(spark, dir, cands).filter(residual)
   }
 
   /** Manifest-pruned point lookup: candidate shards from the bloom
@@ -1911,16 +1823,14 @@ object Scan {
     * bloom says maybe (false-positive shards cost I/O, never rows).
     */
   def readPrunedByKey(spark: SparkSession, dir: String, keyCol: String,
-      key: Any, shardCol: String = "shard"): DataFrame = {
+      key: Any): DataFrame = {
     // two jobs on a hit, one on a miss: the coverage pass reads each
     // manifest row's own (m, k) (no geometry probe), the sidecar
     // schemas come from footers and a pending vector's key column from
     // the meta, both read on the driver, and an empty candidate set
     // reads the declared-schema empty frame
-    val cands = candidateShardsByKey(bloomManifest(spark, dir), key,
-      shardCol)
-    readShards(spark, dir, cands, shardCol)
-      .filter(col(keyCol) === lit(key))
+    val cands = candidateShardsByKey(bloomManifest(spark, dir), key)
+    readShards(spark, dir, cands).filter(col(keyCol) === lit(key))
   }
 
   /** The least string strictly greater than EVERY string with this
@@ -1955,12 +1865,12 @@ object Scan {
     * filter-collect over the shards-sized manifest, like every
     * candidate enumerator here. */
   def candidateShardsByPrefix(manifest: DataFrame, c: String,
-      prefix: String, shardCol: String = "shard"): Seq[Int] = {
+      prefix: String): Seq[Int] = {
     require(prefix.nonEmpty, "need a non-empty prefix")
     val lowOk = col(s"${c}_max") >= lit(prefix)
     val overlap = prefixSucc(prefix)
       .fold(lowOk)(hi => lowOk && col(s"${c}_min") < lit(hi))
-    manifest.filter(overlap).select(col(shardCol).cast("int"))
+    manifest.filter(overlap).select(col(ShardCol).cast("int"))
       .collect().map(_.getInt(0)).toSeq.sorted
   }
 
@@ -1970,11 +1880,10 @@ object Scan {
     * sidecar machinery; the residual `startswith` keeps exactness
     * (row-identical to a full scan with the same predicate). */
   def readPrunedByPrefix(spark: SparkSession, dir: String,
-      prefixCol: String, prefix: String,
-      shardCol: String = "shard"): DataFrame = {
+      prefixCol: String, prefix: String): DataFrame = {
     val cands = candidateShardsByPrefix(statsManifest(spark, dir),
-      prefixCol, prefix, shardCol)
-    readShards(spark, dir, cands, shardCol)
+      prefixCol, prefix)
+    readShards(spark, dir, cands)
       .filter(col(prefixCol).startsWith(prefix))
   }
 
@@ -1994,8 +1903,7 @@ object Scan {
     */
   def readPruned(spark: SparkSession, dir: String,
       ranges: Seq[(String, Any, Any)] = Nil,
-      keys: Seq[Any] = Nil,
-      shardCol: String = "shard"): DataFrame = {
+      keys: Seq[Any] = Nil): DataFrame = {
     require(ranges.nonEmpty || keys.nonEmpty,
       "need at least one predicate (ranges and/or keys)")
     // FUSED planning: the bloom key comes from the 1-row meta sidecar
@@ -2016,7 +1924,7 @@ object Scan {
           col(s"${c}_min") <= lit(hi) && col(s"${c}_max") >= lit(lo)
         }.reduce(_ && _)
         Some(statsManifest(spark, dir).filter(overlap)
-          .select(col(shardCol).cast("int").as("_shard"),
+          .select(col(ShardCol).cast("int").as("_shard"),
             lit(0).as("_side")))
       }
     // large IN-lists take the flat join shape (see
@@ -2029,7 +1937,7 @@ object Scan {
       else keyCol.map { _ =>
         bloomManifest(spark, dir)
           .filter(keys.map(key => bloomCovers(lit(key))).reduce(_ || _))
-          .select(col("shard").cast("int").as("_shard"),
+          .select(col(ShardCol).cast("int").as("_shard"),
             lit(1).as("_side"))
       }
     val rows = (statsSide, bloomSide) match {
@@ -2043,7 +1951,7 @@ object Scan {
       rows.filter(_.getInt(1) == s).map(_.getInt(0)).toSeq.sorted
     val bloomCands: Option[Seq[Int]] =
       if (bigList) Some(candidateShardsByKeys(bloomManifest(spark, dir),
-        keys, shardCol))
+        keys))
       else if (bloomSide.isDefined) Some(side(1))
       else None
     val cands = (statsSide, bloomCands) match {
@@ -2058,7 +1966,7 @@ object Scan {
       if (keys.size == 1) col(kc) === lit(keys.head)
       else col(kc).isin(keys: _*)
     }).reduce(_ && _)
-    readShards(spark, dir, cands, shardCol).filter(residual)
+    readShards(spark, dir, cands).filter(residual)
   }
 
   /** VACUUM — the storage-hygiene verb every long-lived table needs:
@@ -2083,14 +1991,14 @@ object Scan {
     * paths and the bytes reclaimed; a clean table returns (Nil, 0) at
     * the cost of one directory listing.
     */
-  def vacuumTable(spark: SparkSession, dir: String,
-      shardCol: String = "shard"): (Seq[String], Long) =
+  def vacuumTable(spark: SparkSession,
+      dir: String): (Seq[String], Long) =
       withWriterLease(spark, dir) {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     graft.dw.Merge.recover(spark, dir)
     if (fs.exists(new Path(dir)))
-      recoverPendingDelete(spark, dir, shardCol)
+      recoverPendingDelete(spark, dir)
     val removed = scala.collection.mutable.Buffer.empty[(String, Long)]
     def drop(p: Path): Unit = if (fs.exists(p)) {
       val bytes = fs.getContentSummary(p).getLength
@@ -2236,7 +2144,6 @@ object Scan {
     * Returns findings, empty when healthy.
     */
   def fsckTable(spark: SparkSession, dir: String,
-      shardCol: String = "shard",
       deep: Boolean = false): Seq[FsckFinding] = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -2248,14 +2155,7 @@ object Scan {
       return out.toSeq
     }
     val children = fs.listStatus(new Path(dir)).toSeq
-    val dataShards = children.collect {
-      case st if st.isDirectory &&
-          st.getPath.getName.startsWith(s"$shardCol=") &&
-          fs.listStatus(st.getPath).exists(x => x.isFile &&
-            !x.getPath.getName.startsWith("_") &&
-            !x.getPath.getName.startsWith(".")) =>
-        st.getPath.getName.stripPrefix(s"$shardCol=").toInt
-    }.toSet
+    val dataShards = shardFileCounts(spark, dir).filter(_._2 > 0).keySet
     if (children.exists(_.getPath.getName == PendingDelete))
       f("info", "pending_delete", None,
         "interrupted delete present — recovery converges it at the " +
@@ -2270,7 +2170,7 @@ object Scan {
       return out.toSeq
     }
     val man = statsManifest(spark, dir)
-    val manShards = man.select(col(shardCol).cast("int"))
+    val manShards = man.select(col(ShardCol).cast("int"))
       .collect().map(_.getInt(0)).toSet
     (dataShards -- manShards).toSeq.sorted.foreach(s =>
       f("error", "unmanifested_shard", Some(s),
@@ -2293,7 +2193,7 @@ object Scan {
             "sidecar, no meta) — key routing is dead")
       else {
         val bShards = bloomManifest(spark, dir)
-          .select(col("shard").cast("int")).collect().map(_.getInt(0))
+          .select(col(ShardCol).cast("int")).collect().map(_.getInt(0))
         bShards.filterNot(manShards).sorted.foreach(s =>
           f("warn", "bloom_orphan", Some(s),
             "bloom row for a shard the stats manifest does not know " +
@@ -2306,7 +2206,7 @@ object Scan {
           "deletion-vector sidecar but no bloom config — masked " +
             "keys cannot be typed/applied")
       else dvManifest(spark, dir)
-        .select(col("shard").cast("int")).distinct()
+        .select(col(ShardCol).cast("int")).distinct()
         .collect().map(_.getInt(0)).filterNot(dataShards)
         .sorted.foreach(s =>
           f("info", "dv_stale_entry", Some(s),
@@ -2316,11 +2216,11 @@ object Scan {
     if (deep && dataShards.nonEmpty) {
       val statCols = statColsOf(spark, dir)
       val actual = graft.ext.Corpus.shardStats(
-        readShardsRaw(spark, dir, dataShards.toSeq.sorted, shardCol),
-        shardCol, statCols)
+        readShardsRaw(spark, dir, dataShards.toSeq.sorted), ShardCol,
+        statCols)
       val a = actual.columns.foldLeft(actual)((d, c) =>
-        if (c == shardCol) d else d.withColumnRenamed(c, s"_a_$c"))
-      val joined = man.join(a, Seq(shardCol), "inner")
+        if (c == ShardCol) d else d.withColumnRenamed(c, s"_a_$c"))
+      val joined = man.join(a, Seq(ShardCol), "inner")
       val viol = statCols.flatMap { c =>
         Seq((s"${c}_min", s"_a_${c}_min",
             col(s"_a_${c}_min") < col(s"${c}_min")),
@@ -2328,7 +2228,7 @@ object Scan {
             col(s"_a_${c}_max") > col(s"${c}_max")))
       }
       val rowViol = col(s"_a_n_rows") > col("n_rows")
-      val checks = joined.select(col(shardCol).cast("int").as("_s"),
+      val checks = joined.select(col(ShardCol).cast("int").as("_s"),
         viol.map(v => coalesce(v._3, lit(false))).reduce(_ || _)
           .as("_env"), rowViol.as("_rows"))
         .filter(col("_env") || col("_rows")).collect()

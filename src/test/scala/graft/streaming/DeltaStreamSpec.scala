@@ -1352,8 +1352,7 @@ class DeltaStreamSpec extends SparkSpec {
     val q3 = mount()
     q3.processAllAvailable(); q3.stop()
     assert(spark.read.parquet(table).count() === 6L)
-    graft.util.Compaction.compactSharded(spark, table,
-      sortCol = Some("zvalue"))
+    graft.util.Compaction.compactSharded(spark, table)
     assert(Scan.readPrunedByRange(spark, table,
       Seq(("user_id", 150L, 170L))).select("event_id")
       .collect().map(_.getLong(0)).toSet === Set(3L, 20L))
@@ -1535,8 +1534,7 @@ class DeltaStreamSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq ===
       Seq(("de", 0L), ("en", 1L), ("es", 2L)))
     // compaction preserves the dict (the frame survives maintenance)
-    graft.util.Compaction.compactSharded(spark, table,
-      sortCol = Some("zvalue"))
+    graft.util.Compaction.compactSharded(spark, table)
     assert(Scan.readDicts(spark, table).contains("lang"))
     // a later batch still routes against the frozen frame post-compact
     jsonl(s"$docsDir/b2.json", (11L, "de", 20L))

@@ -3,7 +3,7 @@ package graft.util
 import java.nio.file.Files
 
 import graft.SparkSpec
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.shim
 
@@ -118,8 +118,7 @@ class ScanSpec extends SparkSpec {
     assert(Scan.readPrunedByRange(spark, dir, ranges).count() === 0L)
     assert(spark.read.parquet(dir)
       .filter(col("user_id").between(2000L, 2004L)).count() === 5L)
-    val (before, after) = Compaction.compactSharded(spark, dir,
-      sortCol = Some("zvalue"))
+    val (before, after) = Compaction.compactSharded(spark, dir)
     assert(before === 11 && after === 10) // shard 9 had 2 files
     // manifests describe the rewritten files: envelope now covers the
     // appended rows and the pruned read is exact again
@@ -173,8 +172,7 @@ class ScanSpec extends SparkSpec {
     assert(Scan.statsManifest(spark, dir).filter(col("shard") === 9)
       .head().getAs[Long]("n_rows") === 105L)
     // compaction folds the batch files back and restores exact stats
-    val (before, after) = Compaction.compactSharded(spark, dir,
-      sortCol = Some("zvalue"))
+    val (before, after) = Compaction.compactSharded(spark, dir)
     assert(before === 11 && after === 10)
     assert(Scan.readPrunedByRange(spark, dir, ranges).count() === 5L)
   }
@@ -706,36 +704,37 @@ class ScanSpec extends SparkSpec {
     assert(Scan.readShards(spark, dir, Seq(10)).count() === 1L)
   }
 
-  test("sidecar memo: within one verb-chain scope meta/schema reads are " +
-    "stable, and an evolve or republish invalidates them — a chained " +
-    "reader never sees a pre-mutation config") {
+  test("meta and declared-schema reads are stable between mutations, " +
+    "and the first read after an evolve or a republish already " +
+    "describes the mutated table") {
     val dir = freshDir()
     publish(dir)
     val s0 = Scan.tableSchemaOf(spark, dir).get
     assert(!s0.fieldNames.contains("score"))
     val m0 = Scan.readMeta(spark, dir).get
-    // memoized re-read returns the identical config
+    // a second read with no mutation between returns the identical config
     assert(Scan.readMeta(spark, dir).get === m0)
-    // a nested evolve (re-entrant scope) must invalidate BOTH entries:
-    // the chain's next reads see the post-evolution schema and meta
+    // an evolve rewrites BOTH the declared schema and the meta: the
+    // next reads see the post-evolution schema and meta
     Scan.evolveAddColumn(spark, dir, "score",
       org.apache.spark.sql.types.LongType)
     assert(Scan.tableSchemaOf(spark, dir).get.fieldNames
       .contains("score"))
     assert(Scan.readMeta(spark, dir).get.statCols.contains("score"))
-    // a whole-table republish invalidates too (nShards changes)
+    // a whole-table republish rewrites the meta too (nShards changes)
     Scan.writeSharded(spark, laid.withColumn("score", lit(7L)), dir,
       statCols = Seq("user_id"), sortCol = Some("zvalue"),
       bloomKeyCol = Some("user_id"), zTotalBits = Some(32),
       nShards = Some(10))
     assert(Scan.readMeta(spark, dir).get.nShards === Some(10))
     assert(Scan.readMeta(spark, dir).get.statCols === Seq("user_id"))
-    // outside any scope reads are uncached — current state, as before
+    // a repeated read still returns the current state
     assert(Scan.readMeta(spark, dir).get.nShards === Some(10))
   }
 
-  test("sidecar memo: a FAILED manifest swap invalidates the chain's " +
-    "memoized sidecar schema instead of recording the unwritten frame's") {
+  test("a FAILED manifest swap leaves the manifest on disk unchanged, " +
+    "and the next stats read describes that manifest, not the unwritten " +
+    "frame") {
     val dir = freshDir()
     publish(dir)
     // a pre-staleness stats manifest (no `_stale_rows`) whose shard-0
@@ -760,14 +759,14 @@ class ScanSpec extends SparkSpec {
       }
       assert(!spark.read.parquet(statsPath).columns
         .contains("_stale_rows"))
-      // the chain's next read describes the manifest ON DISK
+      // the next read describes the manifest ON DISK
       assert(!Scan.statsManifest(spark, dir).columns
         .contains("_stale_rows"))
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
-  test("sidecar memo: vacuum promoting ANY sidecar's completed swap " +
-    "(here stats) invalidates the chain's memo") {
+  test("after vacuum promotes a sidecar's completed swap (here stats), " +
+    "the next read describes the promoted sidecar") {
     val dir = freshDir()
     publish(dir)
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
@@ -1003,7 +1002,7 @@ class ScanSpec extends SparkSpec {
     val dir = freshDir()
     publish(dir)
     Scan.deleteByKeysDeferred(spark, dir, Seq(123L))
-    Compaction.compactSharded(spark, dir, sortCol = Some("zvalue"))
+    Compaction.compactSharded(spark, dir)
     assert(spark.read.parquet(dir).count() === 999L)
     assert(Scan.deletionVector(spark, dir).isEmpty)
     assert(spark.read.parquet(dir)
@@ -1122,7 +1121,7 @@ class ScanSpec extends SparkSpec {
     val before0 = files(0)
     val before2 = files(2)
     val (shards, nBefore) = Compaction.compactShardsTargeted(spark, dir,
-      maxFilesPerShard = 1, sortCol = Some("zvalue"))
+      maxFilesPerShard = 1)
     assert(shards === Seq(9) && nBefore === 3)
     assert(files(9).size === 1)
     // untouched shards bit-stable; shard 2's mask SURVIVES (not its
@@ -1285,7 +1284,7 @@ class ScanSpec extends SparkSpec {
     Scan.deleteByKeys(spark, dir, Seq(999999L))
     assert(Scan.tableGeneration(spark, dir) === g)
     // a full republish (directory swap) keeps the sibling log
-    Compaction.compactSharded(spark, dir, sortCol = Some("zvalue"))
+    Compaction.compactSharded(spark, dir)
     val hist = Scan.tableHistory(spark, dir)
     assert(hist.map(_._1) === hist.map(_._1).sorted &&
       hist.map(_._1).distinct.size === hist.size)
@@ -1321,7 +1320,7 @@ class ScanSpec extends SparkSpec {
         .toDF("event_id", "user_id", "event_type", "shard", "zvalue"),
       dir, "event_id")
     // compaction rewrites through the declared schema → physical drop
-    Compaction.compactSharded(spark, dir, sortCol = Some("zvalue"))
+    Compaction.compactSharded(spark, dir)
     assert(!spark.read.option("mergeSchema", "true").parquet(dir)
       .columns.contains("ts_us"))
     assert(spark.read.parquet(dir).count() === 1001L)
@@ -1578,8 +1577,7 @@ class ScanSpec extends SparkSpec {
     assert(Scan.readMeta(spark, freshDir()).isEmpty)
     // every optional field null, one stats column
     val bare = freshDir()
-    Scan.writeSharded(spark, laid, bare, statCols = Seq("ts_us"),
-      shardCol = "shard")
+    Scan.writeSharded(spark, laid, bare, statCols = Seq("ts_us"))
     assert(same(bare) === Scan.TableMeta(Seq("ts_us"), "shard", None, None,
       4096, 3, None, None))
     // dropping the only stats column leaves an empty stat_cols list
@@ -1604,5 +1602,136 @@ class ScanSpec extends SparkSpec {
     Compaction.reshardSharded(spark, full, 4)
     val m = same(full)
     assert((m.nShards, m.zTotalBits) === ((Some(4), Some(10))))
+  }
+
+  test("job count: the 15-verb inventory on a 16-shard bloom table runs " +
+    "each verb in at most its pinned count, 118 jobs in all") {
+    val dir = freshDir()
+    def row(r: (Long, Long, Long, String, Int, Long)) =
+      Seq(r).toDF(laid16.columns: _*)
+    val counts = Seq.newBuilder[(String, Int, Int)]
+    def verb(name: String, pin: Int)(body: => Unit): Unit =
+      counts += ((name, jobsDuring(body), pin))
+    verb("`writeSharded`", 10)(Scan.writeSharded(spark, laid16, dir,
+      statCols = Seq("user_id", "ts_us"), sortCol = Some("zvalue"),
+      bloomKeyCol = Some("user_id"), zTotalBits = Some(11),
+      nShards = Some(16)))
+    verb("`readPrunedByKey`, hit", 2)(assert(Scan.readPrunedByKey(spark,
+      dir, "user_id", 777L).collect().length === 1))
+    verb("`readPrunedByKey`, miss (no candidate shard)", 1)(assert(
+      Scan.readPrunedByKey(spark, dir, "user_id", 5000000L)
+        .collect().isEmpty))
+    verb("`readPrunedByRange`", 2)(assert(Scan.readPrunedByRange(spark,
+      dir, Seq(("user_id", 300L, 399L))).collect().length === 100))
+    verb("`readPruned` (range + key)", 2)(assert(Scan.readPruned(spark,
+      dir, Seq(("ts_us", 7000L, 7990L)), Seq(777L)).collect().length === 1))
+    verb("`deleteByKeysDeferred`, 4 keys in 4 shards", 8)(assert(
+      Scan.deleteByKeysDeferred(spark, dir,
+        Seq(150L, 550L, 950L, 1350L))._3 === 4L))
+    verb("`readPrunedByKey`, hit, vector pending", 3)(assert(
+      Scan.readPrunedByKey(spark, dir, "user_id", 551L)
+        .collect().length === 1))
+    verb("`applyDeletionVectors`, 4 shards", 14)(assert(
+      Scan.applyDeletionVectors(spark, dir) === ((Seq(1, 5, 9, 13), 4L))))
+    verb("`appendSharded`, 1 row", 16)(Scan.appendSharded(spark,
+      row((1600L, 1600L, 16000L, "t1", 15, 1600L)), dir, "event_id"))
+    verb("`deleteByKeys`, 1 key", 11)(assert(
+      Scan.deleteByKeys(spark, dir, Seq(250L))._3 === 1L))
+    verb("`upsertSharded`, 1 row", 28)(assert(Scan.upsertSharded(spark,
+      dir, row((777L, 777L, 1L, "t9", 7, 777L)), "user_id")._3 === 1L))
+    verb("`refreshManifests`", 6)(Scan.refreshManifests(spark, dir))
+    verb("`evolveAddColumn`", 3)(Scan.evolveAddColumn(spark, dir, "score",
+      org.apache.spark.sql.types.LongType))
+    verb("`compactSharded`", 10)(Compaction.compactSharded(spark, dir))
+    verb("`fsckTable`", 2)(assert(Scan.fsckTable(spark, dir).isEmpty))
+    assert(spark.read.parquet(dir).count() === 1596L)
+    val table = counts.result()
+    // the inventory as a markdown table, so it can be pasted as is
+    info(("| verb | jobs | pin |" +: "|---|---:|---:|" +: table.map {
+      case (n, j, p) => s"| $n | $j | $p |"
+    } :+ s"| **total** | **${table.map(_._2).sum}** | " +
+      s"**${table.map(_._3).sum}** |").mkString("\n"))
+    table.foreach { case (n, j, p) => assert(j <= p, s"$n ran $j jobs") }
+    assert(table.map(_._3).sum === 118)
+  }
+
+  test("property: after refreshShards, compactShardsTargeted, " +
+    "deleteByRange and applyDeletionVectors every touched shard's stats " +
+    "and bloom rows equal those recomputed from its files, _stale_rows " +
+    "is its masked-row count, and every other row is unchanged") {
+    val dir = freshDir()
+    publish(dir)
+    val statCols = Seq("user_id", "ts_us")
+    def byShard(df: DataFrame): Map[Int, Row] =
+      df.collect().map(r => r.getAs[Int]("shard") -> r).toMap
+    def sidecar(name: String): DataFrame =
+      spark.read.parquet(s"$dir/$name")
+        .withColumn("shard", col("shard").cast("int"))
+    // (stats, bloom) manifest rows by shard
+    def manifests(): (Map[Int, Row], Map[Int, Row]) =
+      (byShard(sidecar(Scan.StatsSidecar)), byShard(sidecar(Scan.BloomSidecar)))
+    def check(verb: String, touched: Seq[Int],
+        before: (Map[Int, Row], Map[Int, Row])): Unit = {
+      val files = spark.read.parquet(dir)
+      val exactStats = graft.ext.Corpus.shardStats(files, "shard", statCols)
+      val exactBloom = graft.ext.Corpus.bloomBitsTable(files, "shard",
+        "user_id", 4096, 3)
+      // physical rows the pending deletion vector masks, per shard
+      val masked: Map[Int, Long] =
+        if (Scan.deletionVector(spark, dir).isEmpty) Map.empty
+        else files.join(sidecar(Scan.DvSidecar)
+              .select(col("shard").as("_dv_shard"), col("key").as("_dv_key")),
+            files("shard") === col("_dv_shard") &&
+              files("user_id") === col("_dv_key"), "left_semi")
+          .groupBy("shard").count().collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val stats = byShard(sidecar(Scan.StatsSidecar)
+        .select((exactStats.columns :+ "_stale_rows").map(col): _*))
+      val bloom = byShard(sidecar(Scan.BloomSidecar)
+        .select(exactBloom.columns.map(col): _*))
+      val wantStats = byShard(exactStats)
+      val wantBloom = byShard(exactBloom)
+      assert(touched.nonEmpty, verb)
+      touched.foreach { s =>
+        assert(stats.get(s).map(r => Row.fromSeq(r.toSeq.init)) ===
+          wantStats.get(s), s"$verb: stats of shard $s")
+        assert(stats.get(s).map(_.getAs[Long]("_stale_rows")) ===
+          wantStats.get(s).map(_ => masked.getOrElse(s, 0L)),
+          s"$verb: _stale_rows of shard $s")
+        assert(bloom.get(s) === wantBloom.get(s), s"$verb: bloom of shard $s")
+      }
+      val (stats1, bloom1) = manifests()
+      (before._1.keySet ++ stats1.keySet -- touched).foreach(s =>
+        assert(stats1.get(s) === before._1.get(s), s"$verb: stats of untouched $s"))
+      (before._2.keySet ++ bloom1.keySet -- touched).foreach(s =>
+        assert(bloom1.get(s) === before._2.get(s), s"$verb: bloom of untouched $s"))
+    }
+    def batch(rows: (Long, Long)*) = rows.map { case (id, u) =>
+      (id, u, 10L * u, "t9", (u / 100).toInt, u)
+    }.toDF("event_id", "user_id", "ts_us", "event_type", "shard", "zvalue")
+    // a vector masks a row in shards 2 and 7; appends loosen 7 and 9 and
+    // give each a second file
+    Scan.deleteByKeysDeferred(spark, dir, Seq(250L, 777L))
+    Scan.appendSharded(spark, batch((5000L, 790L), (5001L, 990L)), dir,
+      "event_id")
+    var before = manifests()
+    Scan.refreshShards(spark, dir, Seq(2, 7, 9))
+    check("refreshShards", Seq(2, 7, 9), before)
+    // shards 7 and 9 hold two files: rewritten, shard 7's mask applied
+    before = manifests()
+    val (compacted, _) = Compaction.compactShardsTargeted(spark, dir, 1)
+    assert(compacted === Seq(7, 9))
+    check("compactShardsTargeted", compacted, before)
+    // the range spans shard 2, whose mask the rewrite makes physical
+    before = manifests()
+    val (_, ranged, removed) =
+      Scan.deleteByRange(spark, dir, Seq(("user_id", 280L, 320L)))
+    assert(ranged === Seq(2, 3) && removed === 41L)
+    check("deleteByRange", ranged, before)
+    Scan.deleteByKeysDeferred(spark, dir, Seq(1L, 450L, 555L))
+    before = manifests()
+    val (applied, n) = Scan.applyDeletionVectors(spark, dir)
+    assert(applied === Seq(0, 4, 5) && n === 3L)
+    check("applyDeletionVectors", applied, before)
   }
 }
