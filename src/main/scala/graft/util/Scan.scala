@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** MANIFEST-PRUNED READS — the consumer side of the data-skipping toolkit
@@ -43,9 +43,10 @@ import org.apache.spark.sql.functions._
   * whose predicate column is NULL match no predicate on either path).
   *
   * Scale shape: the manifests are rows = shards (KBs at 100 TB — Delta
-  * checkpoints are the existence proof); candidate enumeration is a
-  * driver-side filter-collect over that manifest — the scan-planning step
-  * every lakehouse reader performs, bounded by shard count, never by data.
+  * checkpoints are the existence proof); they are decoded on the driver
+  * and candidate enumeration filters them there with no Spark job — the
+  * scan-planning step every lakehouse reader performs, bounded by shard
+  * count, never by data.
   * The data read is `|candidate shards| / |shards|` of the corpus; with a
   * z-ordered layout underneath, a d-dimensional predicate keeps that
   * fraction small on EVERY clustered dimension (measured: BASELINE.md,
@@ -200,41 +201,69 @@ object Scan {
     * job. None when there is no such file or key (a missing directory,
     * a footer another writer produced); the caller then infers. */
   private[graft] def footerSchema(spark: SparkSession,
-      path: String): Option[org.apache.spark.sql.types.StructType] = {
+      path: String): Option[org.apache.spark.sql.types.StructType] =
+    partFiles(spark, path).headOption.flatMap(footerSchemaOf(spark, _))
+
+  /** [[footerSchema]] of one part file. */
+  private def footerSchemaOf(spark: SparkSession,
+      st: org.apache.hadoop.fs.FileStatus)
+      : Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.format.converter.ParquetMetadataConverter
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sparkContext.hadoopConfiguration
-    firstPartFile(spark, path).flatMap { st =>
-      val opts = HadoopReadOptions.builder(conf)
-        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        .build()
-      val json = scala.util.Try {
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
-          opts)
-        try r.getFooter.getFileMetaData.getKeyValueMetaData
-          .get(SparkRowMetadata)
-        finally r.close()
-      }.toOption.flatMap(Option(_))
-      json.flatMap(j => scala.util.Try(
-        org.apache.spark.sql.types.DataType.fromJson(j)).toOption)
-        .collect { case sc: org.apache.spark.sql.types.StructType =>
-          asNullable(sc).asInstanceOf[org.apache.spark.sql.types.StructType]
-        }
-    }
+    val opts = HadoopReadOptions.builder(conf)
+      .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      .build()
+    val json = scala.util.Try {
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+        opts)
+      try r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(SparkRowMetadata)
+      finally r.close()
+    }.toOption.flatMap(Option(_))
+    json.flatMap(j => scala.util.Try(
+      org.apache.spark.sql.types.DataType.fromJson(j)).toOption)
+      .collect { case sc: org.apache.spark.sql.types.StructType =>
+        asNullable(sc).asInstanceOf[org.apache.spark.sql.types.StructType]
+      }
   }
 
-  /** The first data file, in name order, of the parquet directory
-    * `path` (`_`- and `.`-prefixed names are not data); None when the
-    * directory is missing or holds no data file. One listing. */
-  private def firstPartFile(spark: SparkSession,
-      path: String): Option[org.apache.hadoop.fs.FileStatus] = {
+  /** The data files, in name order, of the parquet directory `path`
+    * (`_`- and `.`-prefixed names are not data); empty when the
+    * directory is missing. One listing. */
+  private def partFiles(spark: SparkSession,
+      path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val p = new Path(path)
     try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(p).iterator.filter(isDataFile)
-      .minByOption(_.getPath.getName)
-    catch { case _: java.io.FileNotFoundException => None }
+      .listStatus(p).toSeq.filter(isDataFile).sortBy(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** The rows of the parquet directory `path`, decoded ON THE DRIVER with
+    * no Spark job: every part file, row group by row group, through
+    * Spark's own parquet record materializer ([[graftshim.shim
+    * .decodeParquetRows]]) under the schema [[footerSchema]] reads — the
+    * rows and schema `spark.read.parquet(path)` reads. Each file is opened
+    * under one copy of the session's Hadoop configuration per read:
+    * `ParquetReader.builder(…, path)` would build and parse a fresh
+    * default `Configuration` (~100 KB of XML) per call. None when the
+    * directory holds no part file with a Spark schema in its footer.
+    *
+    * For sidecars whose size is bounded by the shard count, never by the
+    * data: the whole directory is held in driver memory. */
+  private def driverRows(spark: SparkSession, path: String)
+      : Option[(org.apache.spark.sql.types.StructType,
+        Seq[org.apache.spark.sql.catalyst.InternalRow])] = {
+    val files = partFiles(spark, path)
+    files.headOption.flatMap(footerSchemaOf(spark, _)).map { sc =>
+      val conf = new org.apache.hadoop.conf.Configuration(
+        spark.sparkContext.hadoopConfiguration)
+      (sc, files.flatMap(st =>
+        org.apache.spark.sql.graftshim.shim.decodeParquetRows(spark, conf,
+          st, sc)))
+    }
   }
 
   /** Whether a listed entry is a parquet data file: `_`- and
@@ -446,54 +475,32 @@ object Scan {
       .parquet(s"$tableDir/$MetaSidecar")
 
   /** The table's [[TableMeta]], read on the driver with no Spark job:
-    * the sidecar's one row is decoded from its part file's first row
-    * group with parquet's example record reader (the meta is
-    * [[writeMeta]]'s eight columns; an absent optional value has no
-    * repetition). The file is opened under the session's Hadoop
-    * configuration: `ParquetReader.builder(…, path)` would build and
-    * parse a fresh default `Configuration` (~100 KB of XML) per read.
-    * None when the table has no meta sidecar; a sidecar directory
-    * without that row fails. */
+    * the sidecar's one row is decoded by [[driverRows]], the decoder the
+    * stats and bloom manifests are read with. None when the table has no
+    * meta sidecar; a sidecar directory without that row fails. */
   private[graft] def readMeta(spark: SparkSession,
       dir: String): Option[TableMeta] = {
-    import org.apache.parquet.HadoopReadOptions
-    import org.apache.parquet.example.data.Group
-    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.io.ColumnIOFactory
     val path = s"$dir/$MetaSidecar"
     val conf = spark.sparkContext.hadoopConfiguration
     if (!new Path(path).getFileSystem(conf).exists(new Path(path))) None
     else {
-      val part = firstPartFile(spark, path).getOrElse(sys.error(
+      val (sc, rows) = driverRows(spark, path).getOrElse(sys.error(
         s"$path: meta sidecar without a data file"))
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(part, conf),
-        HadoopReadOptions.builder(conf).build())
-      val row = try {
-        val schema = r.getFooter.getFileMetaData.getSchema
-        Option(r.readNextRowGroup()).flatMap(rows => Option(
-          new ColumnIOFactory().getColumnIO(schema).getRecordReader[Group](
-            rows, new GroupRecordConverter(schema)).read()))
-      } finally r.close()
-      val g = row.getOrElse(sys.error(s"$path: meta sidecar without a row"))
-      def opt[T](f: String)(get: Int => T): Option[T] = {
-        val i = g.getType.getFieldIndex(f)
-        if (g.getFieldRepetitionCount(i) == 0) None else Some(get(i))
+      val g = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(sc)(rows.headOption.getOrElse(sys.error(
+          s"$path: meta sidecar without a row")))
+        .asInstanceOf[org.apache.spark.sql.Row]
+      def opt[T](f: String): Option[T] = {
+        val i = sc.fieldIndex(f)
+        if (g.isNullAt(i)) None else Some(g.getAs[T](i))
       }
-      def str(f: String) = opt(f)(g.getString(_, 0))
-      def int(f: String) = opt(f)(g.getInteger(_, 0))
-      // Spark's 3-level LIST: stat_cols → repeated group → element
-      val statCols = opt("stat_cols")(g.getGroup(_, 0))
-        .fold(Seq.empty[String]) { list =>
-          (0 until list.getFieldRepetitionCount(0)).map { i =>
-            val e = list.getGroup(0, i)
-            if (e.getFieldRepetitionCount(0) == 0) null else e.getString(0, 0)
-          }
-        }
-      Some(TableMeta(statCols, str("shard_col").orNull, str("sort_col"),
-        str("bloom_key"), int("bloom_m").getOrElse(0),
-        int("bloom_k").getOrElse(0), int("z_total_bits"), int("n_shards")))
+      Some(TableMeta(
+        opt[scala.collection.Seq[String]]("stat_cols").fold(
+          Seq.empty[String])(_.toSeq),
+        opt[String]("shard_col").orNull, opt[String]("sort_col"),
+        opt[String]("bloom_key"), opt[Int]("bloom_m").getOrElse(0),
+        opt[Int]("bloom_k").getOrElse(0), opt[Int]("z_total_bits"),
+        opt[Int]("n_shards")))
     }
   }
 
@@ -817,17 +824,14 @@ object Scan {
   /** Recompute and atomically replace a table's manifest sidecars from
     * its CURRENT files — the maintenance call after any rewrite that
     * bypassed [[writeSharded]] (and the healer for the recovery window
-    * documented on [[graft.dw.Merge.atomicOverwriteDir]]). Stats columns
-    * are recovered from the existing sidecars when not passed, and the
-    * bloom geometry ALWAYS is ([[rebuildManifests]]). A refresh never
-    * changes what the manifest covers.
+    * documented on [[graft.dw.Merge.atomicOverwriteDir]]). The stats
+    * columns and the bloom geometry are the table's own ([[statColsOf]],
+    * [[rebuildManifests]]): a refresh never changes what the manifest
+    * covers.
     */
-  def refreshManifests(spark: SparkSession, dir: String,
-      statCols: Seq[String] = Nil): Unit =
+  def refreshManifests(spark: SparkSession, dir: String): Unit =
       withWriterLease(spark, dir) {
-    val sc =
-      if (statCols.nonEmpty) statCols
-      else statColsOf(spark, dir)
+    val sc = statColsOf(spark, dir)
     // the declared-schema read null-fills evolved columns in old files
     rebuildManifests(spark, dir, sc, None, Some(readTable(spark, dir)),
       countMasked = true)
@@ -888,9 +892,11 @@ object Scan {
     *
     * Each sidecar is replaced in its own atomic swap (sidecar paths are
     * `_`-prefixed, so their `__swap_new` dirs stay invisible to table
-    * readers). The stats and bloom passes are INDEPENDENT aggregations
-    * with distinct outputs — submitted concurrently (§2.6 sibling-job
-    * overlap), so a rebuild pays max() of the two instead of their sum.
+    * readers), as ONE file: the kept rows are a driver-held relation,
+    * which would otherwise split into a file per core. The stats and
+    * bloom passes are INDEPENDENT aggregations with distinct outputs —
+    * submitted concurrently (§2.6 sibling-job overlap), so a rebuild
+    * pays max() of the two instead of their sum.
     * A FUSED single aggregate was tried first and measured WORSE at 10x
     * (multiple countDistinct + collect_set plans as an expanded
     * sort-aggregate: x167's two ~100 ms passes became one 1-2 s job;
@@ -942,8 +948,8 @@ object Scan {
           .withColumn("key_col", lit(kc)))).reduce(_ unionByName _)
     import scala.concurrent.ExecutionContext.Implicits.global
     def swap(name: String)(df: => DataFrame) =
-      SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark, df,
-        s"$dir/$name"))
+      SparkFuture(spark)(graft.dw.Merge.atomicOverwrite(spark,
+        df.coalesce(1), s"$dir/$name"))
     settleSidecarSwaps(swap(StatsSidecar)(stats()) +:
       bloomCfg.toSeq.map { case (kc, m, k) =>
         swap(BloomSidecar)(bloom(kc, m, k))
@@ -982,11 +988,38 @@ object Scan {
         .asInstanceOf[StructType].fields :+ StructField(ShardCol, t)))
   }
 
+  /** The table's stats manifest (one row per shard: `shard`, `n_rows`,
+    * `<c>_min`/`<c>_max`/`<c>_ndv` per stats column, `_stale_rows`) as a
+    * SNAPSHOT taken at the call: the sidecar is decoded on the driver
+    * ([[driverRows]]) and held as a local relation, so candidate planning
+    * over it ([[candidateShardsByStats]], [[candidateShardsByPrefix]])
+    * collects with no Spark job. A later mutation of the table does not
+    * show in a frame already returned; call again to see it. A missing
+    * sidecar fails as `spark.read.parquet` does.
+    *
+    * Driver memory: one row per shard, a few longs and strings each. */
   def statsManifest(spark: SparkSession, dir: String): DataFrame =
-    readSidecar(spark, dir, StatsSidecar)
+    driverSidecar(spark, s"$dir/$StatsSidecar")
 
+  /** The table's bloom manifest (one row per shard: `shard`, `n_keys`,
+    * `_bits`, `m`, `k`, `key_col`), a snapshot taken at the call like
+    * [[statsManifest]]; the bloom probes ([[candidateShardsByKey]],
+    * [[candidateShardsByKeys]] up to 64 keys) collect with no Spark job.
+    *
+    * Driver memory: a row's `_bits` holds at most min(m, k·n_keys) longs,
+    * so 128 shards at m = 4096 hold at most 4 MB. */
   def bloomManifest(spark: SparkSession, dir: String): DataFrame =
-    readSidecar(spark, dir, BloomSidecar)
+    driverSidecar(spark, s"$dir/$BloomSidecar")
+
+  /** The sidecar directory `path` as a local relation over its
+    * [[driverRows]]; a plain (lazy) Spark read when no part file carries
+    * a Spark schema, so a missing sidecar fails exactly as
+    * `spark.read.parquet` does. */
+  private def driverSidecar(spark: SparkSession, path: String): DataFrame =
+    driverRows(spark, path).fold(spark.read.parquet(path)) {
+      case (sc, rows) =>
+        org.apache.spark.sql.graftshim.shim.localFrame(spark, sc, rows)
+    }
 
   private def dvManifest(spark: SparkSession, dir: String): DataFrame =
     readSidecar(spark, dir, DvSidecar)
@@ -999,8 +1032,10 @@ object Scan {
     * reference's analytic predicates are string equalities of exactly
     * this shape). A shard whose stats column is entirely NULL has NULL
     * min/max and is excluded — correct, since NULL matches no range
-    * predicate. Driver-side filter-collect over the shards-sized
-    * manifest (the scan-planning step, bounded by shard count).
+    * predicate. Over a [[statsManifest]] frame the filter folds into
+    * the driver-held manifest and the collect runs no Spark job (the
+    * scan-planning step, bounded by shard count); any other frame pays
+    * one filter-collect job.
     */
   def candidateShardsByStats(manifest: DataFrame,
       ranges: Seq[(String, Any, Any)]): Seq[Int] = {
@@ -1020,8 +1055,9 @@ object Scan {
     * .bloomPositions]]), so probe and index can never disagree on the
     * hash family; keys are native-typed (string keys hash their own
     * bytes, integral keys the digits they always did), under each
-    * manifest row's own (m, k). Driver-side filter-collect over the
-    * shards-sized manifest.
+    * manifest row's own (m, k). Over a [[bloomManifest]] frame the
+    * coverage filter folds into the driver-held manifest and the collect
+    * runs no Spark job.
     */
   def candidateShardsByKey(bloom: DataFrame, key: Any): Seq[Int] =
     candidateShardsByKeys(bloom, Seq(key))
@@ -1037,7 +1073,9 @@ object Scan {
     * Catalyst's column converter recurses per node (measured: a
     * 1,500-key batch overflows the stack; the probe caught it). The
     * join shape is flat in the key count and stays shards-bounded on
-    * the scan side. */
+    * the scan side. Over a [[bloomManifest]] frame the inline shape runs
+    * no Spark job (the filter folds into the driver-held manifest); the
+    * join shape runs its join. */
   def candidateShardsByKeys(bloom: DataFrame,
       keys: Seq[Any]): Seq[Int] = {
     require(keys.nonEmpty, "need at least one key")
@@ -1098,7 +1136,7 @@ object Scan {
           .withColumn(s"${colName}_min", lit(null).cast(dataType))
           .withColumn(s"${colName}_max", lit(null).cast(dataType))
           .withColumn(s"${colName}_ndv", lit(0L))
-        graft.dw.Merge.atomicOverwrite(spark, widened,
+        graft.dw.Merge.atomicOverwrite(spark, widened.coalesce(1),
           s"$dir/$StatsSidecar")
       }
     }
@@ -1170,8 +1208,8 @@ object Scan {
     val manCols = Seq(s"${colName}_min", s"${colName}_max",
       s"${colName}_ndv").filter(man.columns.contains)
     if (manCols.nonEmpty) {
-      graft.dw.Merge.atomicOverwrite(spark, man.drop(manCols: _*),
-        s"$dir/$StatsSidecar")
+      graft.dw.Merge.atomicOverwrite(spark,
+        man.drop(manCols: _*).coalesce(1), s"$dir/$StatsSidecar")
     }
     // 3. declared schema narrows — reads project the column away
     graft.dw.Merge.atomicOverwrite(spark,
@@ -1310,20 +1348,23 @@ object Scan {
         s"$dir/$DvSidecar")
       // advisory staleness fold: masked rows are manifest looseness,
       // exactly like append-folded rows — the compaction trigger. The
-      // per-shard bumps join in as a FLAT shards-sized frame: a nested
-      // when/coalesce chain here is depth = touched shards, and
-      // Catalyst's common-subexpression analysis is EXPONENTIAL in
-      // conditional nesting depth (measured: 19 shards 3 s, 26 shards
-      // 132 s — the probe caught it)
+      // manifest's rows are on the driver already: the per-shard bumps
+      // are added there and the result is written as one local frame
       val old = statsManifest(spark, dir)
-      import spark.implicits._
-      val bumps = perShard.toSeq.toDF("_b_shard", "_b_n")
+      val stale = Option.when(old.columns.contains("_stale_rows"))(
+        old.schema.fieldIndex("_stale_rows"))
+      val shardAt = old.schema.fieldIndex(ShardCol)
+      val bumped = old.collect().toSeq.map { r =>
+        val n = stale.filterNot(r.isNullAt).fold(0L)(r.getLong) +
+          perShard.getOrElse(r.getAs[Number](shardAt).intValue, 0L)
+        val vals = r.toSeq
+        Row.fromSeq(stale.fold(vals :+ n)(vals.updated(_, n)))
+      }
+      val schema = stale.fold(old.schema.add("_stale_rows",
+        org.apache.spark.sql.types.LongType))(_ => old.schema)
       graft.dw.Merge.atomicOverwrite(spark,
-        old.join(broadcast(bumps),
-            old(ShardCol).cast("int") === col("_b_shard"), "left_outer")
-          .withColumn("_stale_rows",
-            staleRows(old) + coalesce(col("_b_n"), lit(0L)))
-          .drop("_b_shard", "_b_n"),
+        spark.createDataFrame(java.util.Arrays.asList(bumped: _*), schema)
+          .coalesce(1),
         s"$dir/$StatsSidecar")
       logEntry(spark, dir, "delete_deferred",
         s"keys=${keys.size} masked=$removed shards=${touched.size}")
@@ -1824,11 +1865,11 @@ object Scan {
     */
   def readPrunedByKey(spark: SparkSession, dir: String, keyCol: String,
       key: Any): DataFrame = {
-    // two jobs on a hit, one on a miss: the coverage pass reads each
-    // manifest row's own (m, k) (no geometry probe), the sidecar
-    // schemas come from footers and a pending vector's key column from
-    // the meta, both read on the driver, and an empty candidate set
-    // reads the declared-schema empty frame
+    // one job on a hit, none on a miss: the bloom manifest is decoded
+    // and probed on the driver with each row's own (m, k), the declared
+    // schema comes from a footer and a pending vector's key column from
+    // the meta, and an empty candidate set reads the declared-schema
+    // empty frame, which plans no job
     val cands = candidateShardsByKey(bloomManifest(spark, dir), key)
     readShards(spark, dir, cands).filter(col(keyCol) === lit(key))
   }
@@ -1861,8 +1902,8 @@ object Scan {
     * column: because the stats envelopes are NATIVE-typed string
     * min/max in binary UTF8 order, every value matching `prefix%` lies
     * in the half-open range [prefix, succ(prefix)), so the prefix
-    * predicate routes the SAME stats envelope a range does. Driver-side
-    * filter-collect over the shards-sized manifest, like every
+    * predicate routes the SAME stats envelope a range does. Over a
+    * [[statsManifest]] frame the collect runs no Spark job, like every
     * candidate enumerator here. */
   def candidateShardsByPrefix(manifest: DataFrame, c: String,
       prefix: String): Seq[Int] = {
@@ -1906,60 +1947,18 @@ object Scan {
       keys: Seq[Any] = Nil): DataFrame = {
     require(ranges.nonEmpty || keys.nonEmpty,
       "need at least one predicate (ranges and/or keys)")
-    // FUSED planning: the bloom key comes from the 1-row meta sidecar
-    // (the index knows what it indexes), (m, k) from each bloom row,
-    // and both shards-sized sidecar
-    // filters run as ONE job — a union, not a join (no exchange), with
-    // the set intersection done driver-side over the collected rows.
-    // One manifest pass + one collect where the naive plan paid two
-    // sidecar collects plus a key_col probe; the fixed planning cost is
-    // what dominates a well-pruned read, so it is the term to halve.
+    // both manifests are decoded and filtered on the driver, so each
+    // side's candidates cost no Spark job; the bloom key comes from the
+    // meta (the index knows what it indexes)
     val keyCol = if (keys.isEmpty) None else Some(
       bloomConfigOf(spark, dir).getOrElse(sys.error(
         s"readPruned: $dir has no bloom index for a key predicate"))._1)
-    val statsSide =
-      if (ranges.isEmpty) None
-      else {
-        val overlap = ranges.map { case (c, lo, hi) =>
-          col(s"${c}_min") <= lit(hi) && col(s"${c}_max") >= lit(lo)
-        }.reduce(_ && _)
-        Some(statsManifest(spark, dir).filter(overlap)
-          .select(col(ShardCol).cast("int").as("_shard"),
-            lit(0).as("_side")))
-      }
-    // large IN-lists take the flat join shape (see
-    // [[candidateShardsByKeys]] — the inline disjunction is
-    // list-deep and overflows Catalyst's converter), giving up the
-    // one-pass fusion for the rare big-list case
-    val bigList = keys.size > 64
-    val bloomSide =
-      if (bigList) None
-      else keyCol.map { _ =>
-        bloomManifest(spark, dir)
-          .filter(keys.map(key => bloomCovers(lit(key))).reduce(_ || _))
-          .select(col(ShardCol).cast("int").as("_shard"),
-            lit(1).as("_side"))
-      }
-    val rows = (statsSide, bloomSide) match {
-      case (Some(a), Some(b)) => a.unionByName(b).collect()
-      case (Some(a), None)    => a.collect()
-      case (None, Some(b))    => b.collect()
-      // big-list keys-only: everything comes from the join path below
-      case (None, None)       => Array.empty[org.apache.spark.sql.Row]
-    }
-    def side(s: Int): Seq[Int] =
-      rows.filter(_.getInt(1) == s).map(_.getInt(0)).toSeq.sorted
-    val bloomCands: Option[Seq[Int]] =
-      if (bigList) Some(candidateShardsByKeys(bloomManifest(spark, dir),
-        keys))
-      else if (bloomSide.isDefined) Some(side(1))
-      else None
-    val cands = (statsSide, bloomCands) match {
-      case (Some(_), Some(b)) => side(0).intersect(b)
-      case (Some(_), None)    => side(0)
-      case (None, Some(b))    => b
-      case _                  => sys.error("unreachable")
-    }
+    val cands = (
+      Option.when(ranges.nonEmpty)(
+        candidateShardsByStats(statsManifest(spark, dir), ranges)) ++
+      Option.when(keys.nonEmpty)(
+        candidateShardsByKeys(bloomManifest(spark, dir), keys))
+    ).reduce(_ intersect _)
     val residual = (ranges.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
     } ++ keyCol.map { kc =>
@@ -2251,20 +2250,20 @@ object Scan {
     * folds since the stats were last exact (`_stale_rows / n_rows`).
     * 0 right after [[writeSharded]]/[[refreshManifests]]/
     * `compactSharded`; grows toward 1 on an append-only shard that
-    * never gets maintained. Driver-side aggregate over the shards-sized
-    * manifest — the signal a scheduled refresh triggers on (looseness,
-    * not file count). Pre-staleness manifests read as 0 (exactness
-    * unknown but envelopes valid — refresh on file count still applies).
+    * never gets maintained. A fold over the driver-held manifest rows
+    * ([[statsManifest]]) with no Spark job — the signal a scheduled
+    * refresh triggers on (looseness, not file count). Pre-staleness
+    * manifests read as 0 (exactness unknown but envelopes valid —
+    * refresh on file count still applies).
     */
   def manifestStaleness(spark: SparkSession, dir: String): Double = {
     val man = statsManifest(spark, dir)
     if (!man.columns.contains("_stale_rows")) 0.0
-    else {
-      val r = man.agg(max(
-        when(col("n_rows") > 0,
-          col("_stale_rows").cast("double") / col("n_rows"))
-          .otherwise(lit(0.0))).as("s")).head()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
+    else man.select(col("n_rows"), col("_stale_rows")).collect()
+      .flatMap { r =>
+        if (r.isNullAt(0) || r.getLong(0) <= 0) Some(0.0)
+        else Option.unless(r.isNullAt(1))(
+          r.getLong(1).toDouble / r.getLong(0))
+      }.maxOption.getOrElse(0.0)
   }
 }

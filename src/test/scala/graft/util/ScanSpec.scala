@@ -307,7 +307,7 @@ class ScanSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/${Scan.StatsSidecar}"),
       true)
-    Scan.refreshManifests(spark, dir, statCols = Seq("user_id", "ts_us"))
+    Scan.refreshManifests(spark, dir)
     assert(Scan.candidateShardsByStats(Scan.statsManifest(spark, dir),
       Seq(("user_id", 250L, 349L))) === Seq(2, 3))
     // bloom config survived the refresh (recovered from its sidecar)
@@ -1733,5 +1733,121 @@ class ScanSpec extends SparkSpec {
     val (applied, n) = Scan.applyDeletionVectors(spark, dir)
     assert(applied === Seq(0, 4, 5) && n === 3L)
     check("applyDeletionVectors", applied, before)
+  }
+
+  test("job count: with the stats and bloom manifests read on the driver, " +
+    "a lookup hit on a 16-shard bloom table runs in at most 1 Spark job, " +
+    "a miss in none, a range or combined pruned read in at most 1, and " +
+    "candidate planning (stats, one key, 64 keys) in none") {
+    val dir = freshDir()
+    Scan.writeSharded(spark, laid16, dir,
+      statCols = Seq("user_id", "ts_us"), sortCol = Some("zvalue"),
+      bloomKeyCol = Some("user_id"), zTotalBits = Some(11),
+      nShards = Some(16))
+    val hit = jobsDuring(assert(Scan.readPrunedByKey(spark, dir, "user_id",
+      777L).select("event_id").collect().map(_.getLong(0)).toSeq ===
+      Seq(777L)))
+    val miss = jobsDuring(assert(Scan.readPrunedByKey(spark, dir, "user_id",
+      5000000L).collect().isEmpty))
+    val range = jobsDuring(assert(Scan.readPrunedByRange(spark, dir,
+      Seq(("user_id", 300L, 399L))).collect().length === 100))
+    val combined = jobsDuring(assert(Scan.readPruned(spark, dir,
+      Seq(("ts_us", 7000L, 7990L)), Seq(777L)).collect().length === 1))
+    // one key in every shard: the widest inline IN-list
+    val keys: Seq[Any] = (0L until 1600L by 25L)
+    assert(keys.size === 64)
+    val planning = jobsDuring {
+      assert(Scan.candidateShardsByStats(Scan.statsManifest(spark, dir),
+        Seq(("user_id", 250L, 349L))) === Seq(2, 3))
+      assert(Scan.candidateShardsByKey(Scan.bloomManifest(spark, dir),
+        777L).contains(7))
+      assert(Scan.candidateShardsByKeys(Scan.bloomManifest(spark, dir),
+        keys) === (0 until 16))
+    }
+    info(s"jobs: lookup hit $hit, miss $miss, readPrunedByRange $range, " +
+      s"readPruned $combined, candidate planning $planning")
+    assert(hit <= 1, s"lookup hit ran $hit jobs")
+    assert(miss === 0, s"lookup miss ran $miss jobs")
+    assert(range <= 1, s"readPrunedByRange ran $range jobs")
+    assert(combined <= 1, s"readPruned ran $combined jobs")
+    assert(planning === 0, s"candidate planning ran $planning jobs")
+  }
+
+  test("property: the driver-read stats and bloom manifests equal " +
+    "spark.read.parquet of the same sidecar, in rows and in schema, " +
+    "through folds, evolutions, a re-shard, an emptied table, a " +
+    "multi-file sidecar and long/string/double/timestamp stats columns") {
+    val fs = new org.apache.hadoop.fs.Path(freshDir()).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map {
+        case s: scala.collection.Seq[_] => s.mkString("[", ",", "]")
+        case v => String.valueOf(v)
+      }.mkString("|")).toSeq.sorted
+    def same(dir: String, what: String): Unit =
+      Seq(Scan.StatsSidecar -> Scan.statsManifest _,
+        Scan.BloomSidecar -> Scan.bloomManifest _).foreach {
+        case (name, read) =>
+          val path = s"$dir/$name"
+          if (fs.exists(new org.apache.hadoop.fs.Path(path))) {
+            val plain = spark.read.parquet(path)
+            val driver = read(spark, dir)
+            assert(driver.schema === plain.schema, s"$what: $name schema")
+            assert(rows(driver) === rows(plain), s"$what: $name rows")
+          }
+      }
+    // a fresh publish; an append fold and a deferred-delete fold
+    val dir = freshDir()
+    Scan.writeSharded(spark, laid, dir,
+      statCols = Seq("user_id", "ts_us"), sortCol = Some("zvalue"),
+      bloomKeyCol = Some("user_id"), zTotalBits = Some(10),
+      nShards = Some(10))
+    same(dir, "publish")
+    Scan.appendSharded(spark,
+      Seq((5000L, 990L, 9900L, "t1", 9, 990L)).toDF(laid.columns: _*),
+      dir, "event_id")
+    Scan.deleteByKeysDeferred(spark, dir, Seq(250L, 777L))
+    assert(Scan.manifestStaleness(spark, dir) > 0)
+    same(dir, "append + deferred delete")
+    // NULL min/max for the added stats column, then drop and re-shard
+    Scan.evolveAddColumn(spark, dir, "score",
+      org.apache.spark.sql.types.DoubleType, addToStats = true)
+    assert(spark.read.parquet(s"$dir/${Scan.StatsSidecar}")
+      .filter(col("score_min").isNotNull).isEmpty)
+    same(dir, "evolveAddColumn")
+    Scan.evolveDropColumn(spark, dir, "ts_us")
+    same(dir, "evolveDropColumn")
+    Compaction.reshardSharded(spark, dir, 4)
+    same(dir, "reshardSharded")
+    // each sidecar rewritten as three part files
+    Seq(Scan.StatsSidecar, Scan.BloomSidecar).foreach { name =>
+      val path = s"$dir/$name"
+      graft.dw.Merge.atomicOverwrite(spark,
+        spark.read.parquet(path).repartition(3), path)
+      assert(fs.listStatus(new org.apache.hadoop.fs.Path(path))
+        .count(_.getPath.getName.startsWith("part-")) === 3, path)
+    }
+    same(dir, "three part files")
+    // every shard emptied: zero-row manifests
+    Scan.deleteByRange(spark, dir, Seq(("user_id", 0L, 999L)))
+    assert(spark.read.parquet(s"$dir/${Scan.StatsSidecar}").isEmpty)
+    same(dir, "zero rows")
+    // long, string, double and timestamp stats columns, NULL in shard 3
+    val typed = freshDir()
+    Scan.writeSharded(spark, laid
+        .withColumn("score", when(col("shard") =!= 3, col("user_id") / 2.0))
+        .withColumn("at", when(col("shard") =!= 3,
+          col("ts_us").cast("timestamp"))),
+      typed, statCols = Seq("user_id", "event_type", "score", "at"),
+      sortCol = Some("zvalue"), bloomKeyCol = Some("event_type"))
+    same(typed, "typed stats columns")
+    // a missing sidecar fails as a plain read does
+    val missing = freshDir()
+    val plain = intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(s"$missing/${Scan.StatsSidecar}"))
+    Seq(Scan.statsManifest _, Scan.bloomManifest _).foreach { read =>
+      assert(intercept[org.apache.spark.sql.AnalysisException](
+        read(spark, missing)).getCondition === plain.getCondition)
+    }
   }
 }
