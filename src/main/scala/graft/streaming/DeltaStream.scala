@@ -352,15 +352,11 @@ object DeltaStream {
       Scan.vacuumTable(s, tableDir)
     }
     if (maxStaleFraction > 0 &&
-        Scan.manifestStaleness(s, tableDir) > maxStaleFraction) {
-      val man = Scan.statsManifest(s, tableDir)
-      if (man.columns.contains("_stale_rows")) {
-        val stale = man.filter(col("_stale_rows") > 0L)
-          .select(col(Scan.ShardCol).cast("int"))
-          .collect().map(_.getInt(0)).toSeq
-        Scan.refreshShards(s, tableDir, stale)
-      }
-    }
+        Scan.manifestStaleness(s, tableDir) > maxStaleFraction)
+      Scan.refreshShards(s, tableDir, Scan.statsManifest(s, tableDir)
+        .filter(col("_stale_rows") > 0L)
+        .select(col(Scan.ShardCol).cast("int"))
+        .collect().map(_.getInt(0)).toSeq)
   }
 
   /** Run a table verb, retrying with backoff while another writer holds
@@ -1719,9 +1715,7 @@ object DeltaStream {
         .schema(schemaOf(keyField -> StringType)).json(feedDir),
         checkpointDir, None, spread = false) { (batch, _) =>
       val s = batch.sparkSession
-      val keyCol = Scan.bloomConfigOf(s, tableDir).map(_._1)
-        .getOrElse(sys.error(s"takedown mount: $tableDir has no " +
-          "bloom index — deletion vectors key on the bloom column"))
+      val keyCol = Scan.bloomKeyOf(s, tableDir)
       val keyType = Scan.tableSchemaOf(s, tableDir)
         .flatMap(sc => sc.fields.find(_.name == keyCol))
         .map(_.dataType)

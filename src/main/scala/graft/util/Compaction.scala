@@ -1,14 +1,15 @@
 package graft.util
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftshim.shim
 
 /** Small-file compaction — the table-maintenance pass every long-running
   * ingest loop needs: streaming micro-batches and delta appends
-  * (`DeltaStream`, `Merge.upsert`) each add a few files, and after enough
-  * batches a 100 TB table is millions of KB-sized parquet files whose
-  * per-file open/footer cost dominates every scan. `compact` rewrites a
+  * (`DeltaStream`, the warehouse's fact appends through
+  * `Merge.commitAppend`) each add a few files, and after enough batches a
+  * 100 TB table is millions of KB-sized parquet files whose per-file
+  * open/footer cost dominates every scan. `compact` rewrites a
   * parquet directory into ⌈bytes / targetBytes⌉ files sized off the ACTUAL
   * on-disk footprint (no rows are collected, no data is interpreted — one
   * `FileSystem` metadata sweep decides the file count).
@@ -111,10 +112,9 @@ object Compaction {
     * swap — data and manifests publish together, so a compacted table
     * can never strand a stale sidecar describing files that no longer
     * exist (the round-13 gap: `compact` alone silently invalidated the
-    * x156/x159 sidecars). Manifest configuration (stats columns, bloom
-    * key/m/k) is recovered from the existing sidecars — a compaction
-    * never changes what the manifests cover, only which files they
-    * describe.
+    * x156/x159 sidecars). The configuration is the table's meta
+    * ([[republish]]) — a compaction never changes what the manifests
+    * cover, only which files they describe.
     *
     * Skips (returns unchanged counts) when no shard directory holds more
     * than one data file — idempotent-cheap on a schedule, like
@@ -123,17 +123,11 @@ object Compaction {
     * Scale shape: one shard-keyed exchange + the per-shard manifest
     * aggregates — all embarrassingly parallel per shard; the shard count
     * (not the file count) bounds every post-shuffle stage.
-    *
-    * `maxRecordsPerFile > 0` bounds each rewritten shard to a DIRECTORY
-    * of files of at most that many rows instead of exactly one — the
-    * per-shard-bytes safety valve for a growing table whose shard count
-    * is frozen: file sizes stay bounded across any number of appends
-    * even before a re-shard ([[reshardSharded]]) re-lays the table out.
     */
-  def compactSharded(spark: SparkSession, dir: String,
-      maxRecordsPerFile: Long = 0L): (Int, Int) =
+  def compactSharded(spark: SparkSession, dir: String): (Int, Int) =
       Scan.withWriterLease(spark, dir) {
     graft.dw.Merge.recover(spark, dir)
+    val meta = Scan.metaOf(spark, dir)
     Scan.recoverPendingDelete(spark, dir)
     // merge-on-read contract: compaction is where deferred deletes
     // become physical — apply the pending deletion vector (targeted:
@@ -152,35 +146,30 @@ object Compaction {
         Scan.refreshManifests(spark, dir)
       return (nBefore, nBefore)
     }
-    // configuration from the durable meta sidecar when present
-    // (recovery-window tables may hold ONLY meta + data — the heal
-    // path), sidecar sniffing otherwise (pre-meta tables)
-    val meta = Scan.readMeta(spark, dir)
-    val statCols = Scan.statColsOf(spark, dir)
-    val bloomCfg = Scan.bloomConfigOf(spark, dir)
-    // dict sidecars (frozen string-dim frames) must survive the swap:
-    // materialize them off the old directory before it is replaced
+    // declared-schema read: a compaction after evolveAddColumn widens
+    // every pre-evolution file for good (null-filled on read, written
+    // wide), after which the declared schema and the files agree
+    republish(spark, dir, Scan.readTable(spark, dir), meta)
+    (nBefore, perShard.size)
+      }
+
+  /** Republish `df` as the whole table `dir` under `meta` in one atomic
+    * swap: data + exact manifests + meta through [[Scan.writeSharded]]'s
+    * protocol (meta first, append-mode data write), so a rewrite keeps
+    * the crash-heal property it relies on. The table's dict sidecars
+    * (frozen string-dim frames) are materialized off the old directory
+    * before it is replaced, and republished with it. */
+  private def republish(spark: SparkSession, dir: String, df: DataFrame,
+      meta: Scan.TableMeta): Unit = {
     val dicts = Scan.readDicts(spark, dir).map { case (c, d) =>
       c -> d.persist()
     }
     dicts.values.foreach(_.count())
-    // declared-schema read: a compaction after evolveAddColumn widens
-    // every pre-evolution file for good (null-filled on read, written
-    // wide), after which the declared schema and the files agree
-    val df = Scan.readTable(spark, dir)
-    // one atomic swap republishes data + exact manifests + meta — the
-    // same writeSharded protocol (meta first, append-mode data write),
-    // so compaction preserves the crash-heal property it relies on
-    try {
-      graft.util.Scan.writeSharded(spark, df, dir, statCols,
-        meta.flatMap(_.sortCol), bloomCfg.map(_._1),
-        bloomCfg.map(_._2).getOrElse(4096),
-        bloomCfg.map(_._3).getOrElse(3),
-        meta.flatMap(_.zTotalBits), meta.flatMap(_.nShards),
-        maxRecordsPerFile, dicts)
-    } finally dicts.values.foreach(_.unpersist())
-    (nBefore, perShard.size)
-      }
+    try Scan.writeSharded(spark, df, dir, meta.statCols, meta.sortCol,
+      meta.bloomKey, meta.bloomM, meta.bloomK, meta.zTotalBits,
+      meta.nShards, dicts)
+    finally dicts.values.foreach(_.unpersist())
+  }
 
   /** TARGETED compaction — rewrite ONLY the shards whose data-file
     * count exceeds `maxFilesPerShard`, through the pending/`_COMMIT`
@@ -227,10 +216,9 @@ object Compaction {
     * manifests describe the new shards; candidates just enumerate
     * differently — spec-pinned in `CompactionSpec`).
     *
-    * Requires the table's meta sidecar to carry `z_total_bits`
+    * Requires the table's meta to carry `z_total_bits`
     * ([[graft.util.Scan.writeSharded]]'s `zTotalBits` — every layout
-    * publisher in this repo passes it); a table without one predates
-    * the meta protocol and must be re-published through `writeSharded`.
+    * publisher in this repo passes it).
     *
     * Scale shape: one full-table shard-keyed exchange + the manifest
     * aggregates — the same cost as a compaction, run as rarely (when
@@ -245,27 +233,15 @@ object Compaction {
     // apply any pending deletion vector before re-laying out: the DV
     // names OLD shard numbers, which the re-shard is about to retire
     Scan.applyDeletionVectors(spark, dir)
-    val meta = Scan.readMeta(spark, dir).getOrElse(sys.error(
-      s"reshardSharded: $dir has no ${Scan.MetaSidecar} sidecar — " +
-        "re-publish through writeSharded(zTotalBits=…) first"))
+    val meta = Scan.metaOf(spark, dir)
     val shift = meta.zTotalBits.getOrElse(sys.error(
       s"reshardSharded: $dir's meta lacks z_total_bits — the table " +
         "was not published from a z-order layout"))
-    val oldN = meta.nShards.getOrElse(-1)
     import org.apache.spark.sql.functions.{col, shiftright}
-    val dicts = Scan.readDicts(spark, dir).map { case (c, d) =>
-      c -> d.persist()
-    }
-    dicts.values.foreach(_.count())
-    val relaid = Scan.readTable(spark, dir).withColumn(Scan.ShardCol,
-      shiftright(col("zvalue") * newNShards, shift).cast("int"))
-    try {
-      graft.util.Scan.writeSharded(spark, relaid, dir, meta.statCols,
-        meta.sortCol.orElse(Some("zvalue")), meta.bloomKey,
-        meta.bloomM, meta.bloomK, Some(shift), Some(newNShards),
-        dicts = dicts)
-    } finally dicts.values.foreach(_.unpersist())
-    (oldN, newNShards)
+    republish(spark, dir, Scan.readTable(spark, dir).withColumn(Scan.ShardCol,
+      shiftright(col("zvalue") * newNShards, shift).cast("int")),
+      meta.copy(nShards = Some(newNShards)))
+    (meta.nShards.getOrElse(-1), newNShards)
   }
 }
 

@@ -17,15 +17,34 @@ import org.apache.spark.sql.functions._
   * even listed past the manifest row.
   *
   * Layout on disk (all sidecars `_`-prefixed, so plain parquet reads of
-  * the table directory ignore them):
+  * the table directory ignore them), with the verbs that write each:
   * {{{
   *   table/
-  *     shard=0/part-*.parquet     — rows, sorted within the file by the
-  *     shard=1/…                    meta's sort column (the curve position)
-  *     _graft_meta/               — TableMeta: stat cols, sort col, bloom
-  *     _graft_stats/              — shardStats manifest (rows = shards)
-  *     _graft_bloom/              — bloomBitsTable + key_col (optional)
+  *     shard=0/part-*.parquet — rows, sorted within the file by the meta's
+  *     shard=1/…                sort column (the curve position)
+  *     _graft_meta/   — TableMeta: stat cols, sort col, bloom key/m/k,
+  *                      z bits, shard count (writeSharded; the evolve
+  *                      verbs rewrite stat_cols)
+  *     _graft_stats/  — shardStats manifest, rows = shards, with
+  *                      `_stale_rows` (rebuilt by writeSharded, the
+  *                      refreshes and every shard rewrite; folded by
+  *                      appendSharded and deleteByKeysDeferred; widened
+  *                      or narrowed by the evolve verbs)
+  *     _graft_bloom/  — bloomBitsTable + key_col, when the meta names a
+  *                      bloom key (rebuilt as the stats are; folded by
+  *                      appendSharded)
+  *     _graft_schema/ — 0-row declared schema (writeSharded, the evolve
+  *                      verbs)
+  *     _graft_dicts/  — col=<c>/ frozen string-dim dictionaries
+  *                      (writeSharded)
+  *     _graft_dv/     — pending deletion vector (deleteByKeysDeferred;
+  *                      cleared by the rewrites that apply it)
   * }}}
+  *
+  * No other format is read: [[writeSharded]] writes the meta and the
+  * declared schema before the data, so a table without them was not
+  * published here, and every verb that needs the configuration refuses
+  * it ([[metaOf]]) rather than guessing at it.
   *
   * The table describes itself: the shard column is always [[ShardCol]]
   * (`shard=N` directories, the `shard` column of every manifest), and a
@@ -199,7 +218,7 @@ object Scan {
     * [[SparkRowMetadata]] — the schema `spark.read.parquet(path)` would
     * infer, nullable as a file source reads it, without the inference
     * job. None when there is no such file or key (a missing directory,
-    * a footer another writer produced); the caller then infers. */
+    * a footer another writer produced). */
   private[graft] def footerSchema(spark: SparkSession,
       path: String): Option[org.apache.spark.sql.types.StructType] =
     partFiles(spark, path).headOption.flatMap(footerSchemaOf(spark, _))
@@ -457,7 +476,10 @@ object Scan {
   private[graft] case class TableMeta(statCols: Seq[String],
       shardColumn: String, sortCol: Option[String], bloomKey: Option[String],
       bloomM: Int, bloomK: Int, zTotalBits: Option[Int],
-      nShards: Option[Int])
+      nShards: Option[Int]) {
+    /** The bloom configuration (key column, m, k); None without a key. */
+    def bloom: Option[(String, Int, Int)] = bloomKey.map((_, bloomM, bloomK))
+  }
 
   /** `meta` as the sidecar's one-row, one-partition frame. */
   private def metaFrame(spark: SparkSession, meta: TableMeta): DataFrame = {
@@ -504,31 +526,33 @@ object Scan {
     }
   }
 
-  /** The table's stats columns — from the meta sidecar when present, by
-    * sniffing the stats manifest's `_min` columns otherwise (pre-meta
-    * tables stay readable). */
+  /** The table's [[TableMeta]], the one source of its configuration: a
+    * table without the meta sidecar was not published by [[writeSharded]],
+    * and every verb that reads its configuration fails here, naming the
+    * sidecar. */
+  private[graft] def metaOf(spark: SparkSession, dir: String): TableMeta =
+    readMeta(spark, dir).getOrElse(sys.error(
+      s"$dir has no $MetaSidecar sidecar — not a sharded table published " +
+        "by writeSharded"))
+
+  /** The table's stats columns, from its meta. */
   private[graft] def statColsOf(spark: SparkSession,
       dir: String): Seq[String] =
-    readMeta(spark, dir).map(_.statCols).getOrElse(
-      statsManifest(spark, dir).columns.toSeq
-        .filter(_.endsWith("_min")).map(_.dropRight(4)))
+    metaOf(spark, dir).statCols
 
-  /** The table's bloom configuration (key column, m, k) — from the meta
-    * sidecar when present, from a bloom manifest row otherwise. The
-    * manifest-row fallback returns None on a ZERO-row bloom sidecar (a
-    * delete can legally empty every shard, and the config must survive
-    * that — which is exactly why the meta sidecar carries it). */
+  /** The table's bloom configuration (key column, m, k), from its meta;
+    * None when the table was published without a bloom key. */
   private[graft] def bloomConfigOf(spark: SparkSession,
       dir: String): Option[(String, Int, Int)] =
-    readMeta(spark, dir).flatMap(m =>
-      m.bloomKey.map((_, m.bloomM, m.bloomK))).orElse {
-      val fs = new Path(dir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new Path(s"$dir/$BloomSidecar"))) None
-      else bloomManifest(spark, dir)
-        .select("key_col", "m", "k").limit(1).collect().headOption
-        .map(r => (r.getString(0), r.getInt(1), r.getInt(2)))
-    }
+    metaOf(spark, dir).bloom
+
+  /** The table's bloom key column, for the verbs that route by it (key
+    * deletes, deletion vectors, upserts, key predicates); fails when the
+    * table was published without a bloom key. */
+  private[graft] def bloomKeyOf(spark: SparkSession, dir: String): String =
+    metaOf(spark, dir).bloomKey.getOrElse(sys.error(
+      s"$dir has no bloom index — key routing and deletion vectors key " +
+        "on the bloom column"))
 
   /** The table's persisted string-dimension dictionaries — the frozen
     * value→rank mappings its z-order layout was built with
@@ -556,9 +580,8 @@ object Scan {
     * `keepCols`) — as a shard-partitioned parquet table with its stats
     * manifest (over `statCols`) and optional bloom index (over
     * `bloomKeyCol`), all published in ONE atomic swap. Rows are
-    * range-grouped one task per shard (1 file per shard directory here;
-    * at cluster scale add `maxRecordsPerFile` and the per-shard file set
-    * stays a directory listing) and sorted within files by `sortCol`
+    * range-grouped one task per shard (1 file per shard directory) and
+    * sorted within files by `sortCol`
     * when given (the z-order curve position), so every row group's
     * min/max envelope is as tight as the layout allows. The meta records
     * `sortCol`; every later rewrite of the table sorts by it.
@@ -572,9 +595,10 @@ object Scan {
       sortCol: Option[String] = None, bloomKeyCol: Option[String] = None,
       bloomM: Int = 4096, bloomK: Int = 3,
       zTotalBits: Option[Int] = None, nShards: Option[Int] = None,
-      maxRecordsPerFile: Long = 0L,
       dicts: Map[String, DataFrame] = Map.empty): Unit = {
     require(statCols.nonEmpty, "need at least one stats column")
+    val meta = TableMeta(statCols, ShardCol, sortCol, bloomKeyCol, bloomM,
+      bloomK, zTotalBits, nShards)
     withWriterLease(spark, dir) {
     graft.dw.Merge.atomicOverwriteDir(spark, dir) { tmp =>
       // meta FIRST: recover promotes on the DATA write's _SUCCESS, so
@@ -594,9 +618,7 @@ object Scan {
       locally {
         import scala.concurrent.ExecutionContext.Implicits.global
         settleSidecarSwaps(Seq(
-          SparkFuture(spark)(writeMeta(spark, tmp, TableMeta(statCols, ShardCol,
-            sortCol, bloomKeyCol, bloomM, bloomK, zTotalBits,
-            nShards))),
+          SparkFuture(spark)(writeMeta(spark, tmp, meta)),
           // 0-row schema sidecar: a delete can legally empty EVERY
           // shard, after which the table dir holds only `_`-sidecars
           // and plain parquet schema inference fails — this keeps an
@@ -618,13 +640,8 @@ object Scan {
           })
       }
       val parted = laid.repartition(col(ShardCol))
-      val sorted = sortCol.fold(parted)(c =>
-        parted.sortWithinPartitions(ShardCol, c))
-      val writer =
-        if (maxRecordsPerFile > 0)
-          sorted.write.option("maxRecordsPerFile", maxRecordsPerFile)
-        else sorted.write
-      writer.partitionBy(ShardCol).mode("append").parquet(tmp)
+      sortCol.fold(parted)(c => parted.sortWithinPartitions(ShardCol, c))
+        .write.partitionBy(ShardCol).mode("append").parquet(tmp)
       // NULL shards (a z-order layout's unroutable NULL-dim rows) land
       // in Hive's default partition — a shard the int-keyed manifests
       // cannot name, so pruned reads would silently never see those
@@ -638,11 +655,10 @@ object Scan {
         s"writeSharded: rows with NULL $ShardCol — route unroutable " +
           "(NULL-dimension) rows explicitly before publishing")
       // the written files' schema is known from the frame, so the read
-      // starts no partition-discovery inference job; the bloom geometry
-      // comes from the meta written above
+      // starts no partition-discovery inference job
       val written = writtenSchema(spark, tmp, laid.schema)
         .fold(spark.read.parquet(tmp))(sc => spark.read.schema(sc).parquet(tmp))
-      rebuildManifests(spark, tmp, statCols, None, Some(written),
+      rebuildManifests(spark, tmp, meta, None, Some(written),
         countMasked = false)
     }
     logEntry(spark, dir, "publish",
@@ -707,10 +723,14 @@ object Scan {
     // id probe's readShards would too, but the manifest fold must
     // never read a pre-roll-forward sidecar)
     recoverPendingDelete(spark, dir)
-    val statCols = statColsOf(spark, dir)
+    val meta = metaOf(spark, dir)
+    val statCols = meta.statCols
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val hasBloom = fs.exists(new Path(s"$dir/$BloomSidecar"))
+    // the bloom fold needs the old bloom rows; a sidecar lost in the
+    // publish crash window is rebuilt by the next refresh
+    val bloomCfg =
+      meta.bloom.filter(_ => fs.exists(new Path(s"$dir/$BloomSidecar")))
     val b0 = laidBatch.persist()
     try {
       // NULL shards are rejected BEFORE anything lands (same contract
@@ -730,11 +750,8 @@ object Scan {
       // clears the mask. Costs one broadcast semi-join, only while a
       // vector is pending.
       if (fs.exists(new Path(s"$dir/$DvSidecar"))) {
-        val kc = bloomConfigOf(spark, dir).map(_._1).getOrElse(
-          sys.error(s"appendSharded: $dir has a deletion-vector " +
-            "sidecar but no recoverable bloom config"))
         val collisions =
-          joinDv(spark, dir, b0, kc, "left_semi").count()
+          joinDv(spark, dir, b0, bloomKeyOf(spark, dir), "left_semi").count()
         require(collisions == 0L,
           s"appendSharded: $collisions batch rows collide with " +
             "pending deletion-vector entries — apply the vector " +
@@ -761,8 +778,8 @@ object Scan {
           .select(col(ShardCol) +:
             (coalesce(col("n_rows"), lit(0L)) +
               coalesce(col("_b_n_rows"), lit(0L))).as("n_rows") +:
-            (staleRows(old) +
-              coalesce(col("_b_n_rows"), lit(0L))).as("_stale_rows") +:
+            (StaleRows + coalesce(col("_b_n_rows"), lit(0L)))
+              .as("_stale_rows") +:
             statCols.flatMap { c =>
               Seq(
                 least(col(s"${c}_min"), col(s"_b_${c}_min"))
@@ -775,11 +792,8 @@ object Scan {
                   .as(s"${c}_ndv"))
             }: _*)
         // 2b. bloom fold: bitwise union per shard (wider = safe)
-        val mergedBloom = if (!hasBloom) None else Some {
+        val mergedBloom = bloomCfg.map { case (kc, m, k) =>
           val ob = bloomManifest(spark, dir)
-          val (kc, m, k) = bloomConfigOf(spark, dir).getOrElse(sys.error(
-            s"appendSharded: $dir has a bloom sidecar but no " +
-              "recoverable bloom config (empty sidecar, no meta)"))
           val nb = graft.ext.Corpus.bloomBitsTable(batch, ShardCol, kc,
               m, k)
             .select(col(ShardCol), col("n_keys").as("_b_n_keys"),
@@ -825,17 +839,17 @@ object Scan {
     * its CURRENT files — the maintenance call after any rewrite that
     * bypassed [[writeSharded]] (and the healer for the recovery window
     * documented on [[graft.dw.Merge.atomicOverwriteDir]]). The stats
-    * columns and the bloom geometry are the table's own ([[statColsOf]],
-    * [[rebuildManifests]]): a refresh never changes what the manifest
-    * covers.
+    * columns and the bloom geometry are the meta's: a refresh never
+    * changes what the manifest covers.
     */
   def refreshManifests(spark: SparkSession, dir: String): Unit =
       withWriterLease(spark, dir) {
-    val sc = statColsOf(spark, dir)
+    val meta = metaOf(spark, dir)
     // the declared-schema read null-fills evolved columns in old files
-    rebuildManifests(spark, dir, sc, None, Some(readTable(spark, dir)),
+    rebuildManifests(spark, dir, meta, None, Some(readTable(spark, dir)),
       countMasked = true)
-    logEntry(spark, dir, "refresh", s"stat_cols=${sc.mkString("+")}")
+    logEntry(spark, dir, "refresh",
+      s"stat_cols=${meta.statCols.mkString("+")}")
   }
 
   /** TARGETED manifest refresh — recompute ONLY the named shards'
@@ -857,7 +871,7 @@ object Scan {
       withWriterLease(spark, dir) {
     if (shards.isEmpty) return
     recoverPendingDelete(spark, dir)
-    rebuildManifests(spark, dir, statColsOf(spark, dir), Some(shards),
+    rebuildManifests(spark, dir, metaOf(spark, dir), Some(shards),
       shardFiles(spark, dir, shards), countMasked = true)
     logEntry(spark, dir, "refresh_shards", s"shards=${shards.size}")
   }
@@ -884,11 +898,11 @@ object Scan {
     * rewrites shards from rows read with the vector applied, so it
     * passes `countMasked = false` and pays no masked-row join.
     *
-    * The bloom geometry is the table's own ([[bloomConfigOf]] — the
-    * meta sidecar, or the bloom sidecar of a pre-meta table): the delete
-    * paths probe with it, so bits rebuilt with any other m/k would
-    * silently miss rows. A targeted rebuild keeps old bloom rows, so it
-    * rebuilds bloom rows only where a bloom sidecar exists.
+    * The stats columns and the bloom geometry are `meta`'s, the table's
+    * own: the delete paths probe with that geometry, so bits rebuilt with
+    * any other m/k would silently miss rows. A targeted rebuild keeps old
+    * bloom rows, so it skips a bloom sidecar the publish crash window
+    * lost (the next full refresh rebuilds it).
     *
     * Each sidecar is replaced in its own atomic swap (sidecar paths are
     * `_`-prefixed, so their `__swap_new` dirs stay invisible to table
@@ -907,26 +921,21 @@ object Scan {
     * stats pass as suppressed ([[settleSidecarSwaps]]).
     */
   private def rebuildManifests(spark: SparkSession, dir: String,
-      statCols: Seq[String], shards: Option[Seq[Int]],
+      meta: TableMeta, shards: Option[Seq[Int]],
       files: Option[DataFrame], countMasked: Boolean): Unit = {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val config = bloomConfigOf(spark, dir)
-    val bloomCfg =
-      if (shards.isEmpty) config
-      else if (!fs.exists(new Path(s"$dir/$BloomSidecar"))) None
-      else Some(config.getOrElse(sys.error(
-        s"$dir has a bloom sidecar but no recoverable bloom config " +
-          "(empty sidecar, no meta)")))
+    val bloomCfg = meta.bloom.filter(_ =>
+      shards.isEmpty || fs.exists(new Path(s"$dir/$BloomSidecar")))
     val maskKey =
       if (countMasked && fs.exists(new Path(s"$dir/$DvSidecar")))
-        config.map(_._1)
+        meta.bloomKey
       else None
     def kept(man: => DataFrame): Option[DataFrame] = shards.map(s =>
       man.filter(!col(ShardCol).cast("int").isin(s: _*)))
     def stats(): DataFrame = {
       val fresh = files.map { f =>
-        val exact = graft.ext.Corpus.shardStats(f, ShardCol, statCols)
+        val exact = graft.ext.Corpus.shardStats(f, ShardCol, meta.statCols)
         maskKey.fold(exact.withColumn("_stale_rows", lit(0L))) { kc =>
           val masked = joinDv(spark, dir, f, kc, "left_semi")
             .groupBy(col(ShardCol).cast("int").as("_m_shard"))
@@ -938,8 +947,8 @@ object Scan {
             .drop("_m_shard", "_masked_rows")
         }
       }
-      val old = kept(statsManifest(spark, dir)).map(m =>
-        m.withColumn("_stale_rows", staleRows(m)))
+      val old = kept(statsManifest(spark, dir))
+        .map(_.withColumn("_stale_rows", StaleRows))
       (old ++ fresh).reduce(_ unionByName _)
     }
     def bloom(kc: String, m: Int, k: Int): DataFrame =
@@ -956,13 +965,9 @@ object Scan {
       })
   }
 
-  /** A manifest's `_stale_rows`, 0 where it is NULL or absent — a
-    * pre-staleness manifest lacks the column, and its envelopes are
-    * valid with exactness unknown. */
-  private def staleRows(man: DataFrame): Column =
-    if (man.columns.contains("_stale_rows"))
-      coalesce(col("_stale_rows"), lit(0L))
-    else lit(0L)
+  /** A manifest's `_stale_rows`, 0 where it is NULL: a full-outer fold's
+    * new shard has no old row. */
+  private val StaleRows: Column = coalesce(col("_stale_rows"), lit(0L))
 
   /** The schema `spark.read.parquet(dir)` infers for a table written
     * from a frame of `schema` partitioned by [[ShardCol]]: the other
@@ -1125,9 +1130,8 @@ object Scan {
       addToStats: Boolean = true): Unit =
       withWriterLease(spark, dir) {
     recoverPendingDelete(spark, dir)
-    val schema = tableSchemaOf(spark, dir).getOrElse(sys.error(
-      s"evolveAddColumn: $dir has no $SchemaSidecar declared-schema " +
-        "sidecar — republish through writeSharded first"))
+    val meta = metaOf(spark, dir)
+    val schema = declaredSchema(spark, dir)
     // 1. stats manifest gains the new column's (NULL, NULL, 0) rows
     if (addToStats) {
       val man = statsManifest(spark, dir)
@@ -1149,13 +1153,10 @@ object Scan {
         s"$dir/$SchemaSidecar")
     }
     // 3. meta stat_cols names it — appends start folding its stats
-    if (addToStats) readMeta(spark, dir).foreach { m =>
-      if (!m.statCols.contains(colName)) {
-        val nm = m.copy(statCols = m.statCols :+ colName)
-        graft.dw.Merge.atomicOverwrite(spark, metaFrame(spark, nm),
-          s"$dir/$MetaSidecar")
-      }
-    }
+    if (addToStats && !meta.statCols.contains(colName))
+      graft.dw.Merge.atomicOverwrite(spark,
+        metaFrame(spark, meta.copy(statCols = meta.statCols :+ colName)),
+        s"$dir/$MetaSidecar")
     logEntry(spark, dir, "evolve_add", s"col=$colName")
   }
 
@@ -1183,26 +1184,20 @@ object Scan {
       colName: String): Unit =
       withWriterLease(spark, dir) {
     recoverPendingDelete(spark, dir)
-    val schema = tableSchemaOf(spark, dir).getOrElse(sys.error(
-      s"evolveDropColumn: $dir has no $SchemaSidecar declared-schema " +
-        "sidecar — republish through writeSharded first"))
-    require(schema.fieldNames.contains(colName),
+    require(declaredSchema(spark, dir).fieldNames.contains(colName),
       s"evolveDropColumn: $dir has no column '$colName'")
-    val meta = readMeta(spark, dir)
-    val protectedCols = Seq(ShardCol) ++ meta.flatMap(_.sortCol) ++
-      meta.flatMap(_.bloomKey) ++ readDicts(spark, dir).keys
+    val meta = metaOf(spark, dir)
+    val protectedCols = Seq(ShardCol) ++ meta.sortCol ++ meta.bloomKey ++
+      readDicts(spark, dir).keys
     require(!protectedCols.contains(colName),
       s"evolveDropColumn: '$colName' is part of $dir's layout/index " +
         s"machinery (${protectedCols.mkString(", ")}) — it cannot be " +
         "dropped without republishing")
     // 1. meta stat_cols stops naming it — appends stop folding
-    meta.foreach { m =>
-      if (m.statCols.contains(colName)) {
-        val nm = m.copy(statCols = m.statCols.filterNot(_ == colName))
-        graft.dw.Merge.atomicOverwrite(spark, metaFrame(spark, nm),
-          s"$dir/$MetaSidecar")
-      }
-    }
+    if (meta.statCols.contains(colName))
+      graft.dw.Merge.atomicOverwrite(spark, metaFrame(spark,
+        meta.copy(statCols = meta.statCols.filterNot(_ == colName))),
+        s"$dir/$MetaSidecar")
     // 2. stats manifest drops its envelope columns
     val man = statsManifest(spark, dir)
     val manCols = Seq(s"${colName}_min", s"${colName}_max",
@@ -1219,6 +1214,9 @@ object Scan {
   }
 
   val PendingDelete = "_pending_delete"
+
+  /** The `_COMMIT` marker's body, as [[commitRewrite]] writes it. */
+  private val CommitMarker = """kept:([\d,]*)\|emptied:([\d,]*)""".r
 
   /** PRUNED DELETE — takedown routed BY THE INDEX: remove every row with
     * `keyCol ∈ keys` (the table's bloom key column) by REWRITING ONLY
@@ -1261,8 +1259,7 @@ object Scan {
     require(keys.nonEmpty, "need at least one key")
     graft.dw.Merge.recover(spark, dir)
     recoverPendingDelete(spark, dir)
-    val (keyCol, _, _) = bloomConfigOf(spark, dir).getOrElse(sys.error(
-      s"deleteByKeys: $dir has no recoverable bloom config"))
+    val keyCol = bloomKeyOf(spark, dir)
     // an empty bloom manifest (every shard previously emptied) yields
     // no candidates from the coverage filter itself — no separate
     // isEmpty probe job
@@ -1315,9 +1312,7 @@ object Scan {
     require(keys.nonEmpty, "need at least one key")
     graft.dw.Merge.recover(spark, dir)
     recoverPendingDelete(spark, dir)
-    val (keyCol, _, _) = bloomConfigOf(spark, dir).getOrElse(sys.error(
-      s"deleteByKeysDeferred: $dir has no recoverable bloom config — " +
-        "deletion vectors key on the bloom column"))
+    val keyCol = bloomKeyOf(spark, dir)
     // empty manifest → no candidates from the coverage filter
     val cands = candidateShardsByKeys(bloomManifest(spark, dir), keys)
     if (cands.isEmpty) return (cands, Nil, 0L)
@@ -1351,20 +1346,16 @@ object Scan {
       // manifest's rows are on the driver already: the per-shard bumps
       // are added there and the result is written as one local frame
       val old = statsManifest(spark, dir)
-      val stale = Option.when(old.columns.contains("_stale_rows"))(
-        old.schema.fieldIndex("_stale_rows"))
+      val stale = old.schema.fieldIndex("_stale_rows")
       val shardAt = old.schema.fieldIndex(ShardCol)
       val bumped = old.collect().toSeq.map { r =>
-        val n = stale.filterNot(r.isNullAt).fold(0L)(r.getLong) +
-          perShard.getOrElse(r.getAs[Number](shardAt).intValue, 0L)
-        val vals = r.toSeq
-        Row.fromSeq(stale.fold(vals :+ n)(vals.updated(_, n)))
+        Row.fromSeq(r.toSeq.updated(stale,
+          (if (r.isNullAt(stale)) 0L else r.getLong(stale)) +
+            perShard.getOrElse(r.getAs[Number](shardAt).intValue, 0L)))
       }
-      val schema = stale.fold(old.schema.add("_stale_rows",
-        org.apache.spark.sql.types.LongType))(_ => old.schema)
       graft.dw.Merge.atomicOverwrite(spark,
-        spark.createDataFrame(java.util.Arrays.asList(bumped: _*), schema)
-          .coalesce(1),
+        spark.createDataFrame(java.util.Arrays.asList(bumped: _*),
+          old.schema).coalesce(1),
         s"$dir/$StatsSidecar")
       logEntry(spark, dir, "delete_deferred",
         s"keys=${keys.size} masked=$removed shards=${touched.size}")
@@ -1400,7 +1391,7 @@ object Scan {
     // rows the vector masks, counted in one pass over the DV shards
     val raw = readShardsRaw(spark, dir, dvShards)
     val removed =
-      joinDv(spark, dir, raw, dvKeyCol(spark, dir), "left_semi").count()
+      joinDv(spark, dir, raw, bloomKeyOf(spark, dir), "left_semi").count()
     rewriteShards(spark, dir, dvShards, dvShards = Some(named))
     logEntry(spark, dir, "dv_apply",
       s"removed=$removed shards=${dvShards.size}")
@@ -1455,9 +1446,7 @@ object Scan {
       laidBatch: DataFrame, idCol: String,
       maxKeys: Int = 100000): (Seq[Int], Seq[Int], Long) =
       withWriterLease(spark, dir) {
-    val kc = bloomConfigOf(spark, dir).map(_._1).getOrElse(sys.error(
-      s"upsertSharded: $dir has no bloom index — a pruned MERGE " +
-        "routes old versions through the key bloom"))
+    val kc = bloomKeyOf(spark, dir)
     require(kc == idCol,
       s"upsertSharded: $dir blooms on '$kc', not the merge key " +
         s"'$idCol' — old versions would not be routable")
@@ -1552,7 +1541,7 @@ object Scan {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val parted = kept.repartition(col(ShardCol))
-    readMeta(spark, dir).flatMap(_.sortCol)
+    metaOf(spark, dir).sortCol
       .fold(parted)(c => parted.sortWithinPartitions(ShardCol, c))
       .write.mode("overwrite").partitionBy(ShardCol)
       .parquet(s"$dir/$PendingDelete")
@@ -1596,7 +1585,7 @@ object Scan {
     }
     // the kept rows were read with the deletion vector applied, so no
     // rebuilt row is masked; a fully-emptied shard's rows simply vanish
-    rebuildManifests(spark, dir, statColsOf(spark, dir), Some(touched),
+    rebuildManifests(spark, dir, metaOf(spark, dir), Some(touched),
       shardFiles(spark, dir, touched), countMasked = false)
     // deletion-vector entries for the rewritten shards are now applied
     // physically (every rewrite path computes kept rows DV-filtered —
@@ -1659,16 +1648,12 @@ object Scan {
     } finally in.close()
     def ints(s: String): Seq[Int] =
       s.split(",").filter(_.nonEmpty).map(_.toInt).toSeq
-    // marker format `kept:a,b|emptied:c` (a plain list reads as kept —
-    // the pre-emptied-shard marker form)
-    val (kept, emptied) =
-      if (body.contains("kept:")) {
-        val parts = body.split('|').map(_.trim)
-        (ints(parts.find(_.startsWith("kept:"))
-          .map(_.stripPrefix("kept:")).getOrElse("")),
-          ints(parts.find(_.startsWith("emptied:"))
-            .map(_.stripPrefix("emptied:")).getOrElse("")))
-      } else (ints(body), Nil)
+    // the marker [[commitRewrite]] writes: `kept:a,b|emptied:c`
+    val (kept, emptied) = body match {
+      case CommitMarker(k, e) => (ints(k), ints(e))
+      case _ => sys.error(s"$commit: unreadable commit marker '$body' — " +
+        "refusing to roll the delete forward or back")
+    }
     if (kept.nonEmpty || emptied.nonEmpty)
       applyPendingDelete(spark, dir, kept, emptied)
     else fs.delete(pending, true)
@@ -1718,9 +1703,7 @@ object Scan {
     else {
       // declared schema (one tiny sidecar footer) so shards written
       // before an evolveAddColumn null-fill the added columns
-      val rd = tableSchemaOf(spark, dir)
-        .fold(spark.read)(sc => spark.read.schema(sc))
-      rd.option("basePath", dir)
+      spark.read.schema(declaredSchema(spark, dir)).option("basePath", dir)
         .parquet(existing.map(s => s"$dir/$ShardCol=$s"): _*)
     }
   }
@@ -1772,17 +1755,12 @@ object Scan {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(s"$dir/$DvSidecar"))) df
-    else joinDv(spark, dir, df, dvKeyCol(spark, dir), "left_anti")
+    else joinDv(spark, dir, df, bloomKeyOf(spark, dir), "left_anti")
   }
 
-  /** The column a table's deletion-vector keys match: its bloom key. */
-  private def dvKeyCol(spark: SparkSession, dir: String): String =
-    bloomConfigOf(spark, dir).map(_._1).getOrElse(sys.error(
-      s"$dir has a deletion-vector sidecar but no recoverable bloom " +
-        "config — the DV keys are bloom-key-typed by construction"))
-
   /** `df` semi- or anti-joined (`how`) against the table's
-    * deletion-vector (shard, key) pairs on ([[ShardCol]], `kc`): a
+    * deletion-vector (shard, key) pairs on ([[ShardCol]], `kc`, the
+    * bloom key: the vector's keys are typed as it): a
     * broadcast join, the vector being takedown-sized. */
   private def joinDv(spark: SparkSession, dir: String, df: DataFrame,
       kc: String, how: String): DataFrame = {
@@ -1803,45 +1781,37 @@ object Scan {
     else Some(dvManifest(spark, dir))
   }
 
-  /** The table's DECLARED schema — the 0-row schema sidecar's, when
-    * present. This is what makes both edge states readable: a table
-    * whose every shard a delete emptied (no data files to infer from),
-    * and an EVOLVED table whose old files lack the added columns
-    * (reads with the declared schema null-fill them per file — the
-    * add-column semantics — where bare inference would pick one
-    * file's footer at random and silently drop or surface the new
-    * column depending on which). */
+  /** The table's DECLARED schema — the 0-row schema sidecar's, from its
+    * footer; None when the sidecar is missing. This is what makes both
+    * edge states readable: a table whose every shard a delete emptied
+    * (no data files to infer from), and an EVOLVED table whose old files
+    * lack the added columns (reads with the declared schema null-fill
+    * them per file — the add-column semantics — where bare inference
+    * would pick one file's footer at random and silently drop or surface
+    * the new column depending on which). */
   private[graft] def tableSchemaOf(spark: SparkSession,
-      dir: String): Option[org.apache.spark.sql.types.StructType] = {
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$dir/$SchemaSidecar"))) None
-    else {
-      val path = s"$dir/$SchemaSidecar"
-      footerSchema(spark, path).orElse(Some(spark.read.parquet(path).schema))
-    }
-  }
+      dir: String): Option[org.apache.spark.sql.types.StructType] =
+    footerSchema(spark, s"$dir/$SchemaSidecar")
 
-  /** Full-table read under the declared schema (see [[tableSchemaOf]]);
-    * plain inference for pre-sidecar tables. Every maintenance rewrite
-    * (refresh, compact, re-shard) reads through this, so a rewrite
-    * after an [[evolveAddColumn]] widens the old files for good. */
+  /** [[tableSchemaOf]], failing for a table without the sidecar. */
+  private def declaredSchema(spark: SparkSession,
+      dir: String): org.apache.spark.sql.types.StructType =
+    tableSchemaOf(spark, dir).getOrElse(sys.error(
+      s"$dir has no $SchemaSidecar declared-schema sidecar — not a " +
+        "sharded table published by writeSharded"))
+
+  /** Full-table read under the declared schema (see [[tableSchemaOf]]).
+    * Every maintenance rewrite (refresh, compact, re-shard) reads through
+    * this, so a rewrite after an [[evolveAddColumn]] widens the old files
+    * for good. */
   private[graft] def readTable(spark: SparkSession,
       dir: String): DataFrame =
-    tableSchemaOf(spark, dir) match {
-      case Some(sc) => spark.read.schema(sc).parquet(dir)
-      case None     => spark.read.parquet(dir)
-    }
+    spark.read.schema(declaredSchema(spark, dir)).parquet(dir)
 
   /** The table's empty frame (schema intact, no data read). */
   private def emptyTableFrame(spark: SparkSession,
-      dir: String): DataFrame = {
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(s"$dir/$SchemaSidecar")))
-      readSidecar(spark, dir, SchemaSidecar).filter(lit(false))
-    else spark.read.parquet(dir).filter(lit(false))
-  }
+      dir: String): DataFrame =
+    readSidecar(spark, dir, SchemaSidecar).filter(lit(false))
 
   /** Manifest-pruned range scan: candidate shards from the stats
     * manifest, read only those, then the residual filter — by the
@@ -1950,9 +1920,7 @@ object Scan {
     // both manifests are decoded and filtered on the driver, so each
     // side's candidates cost no Spark job; the bloom key comes from the
     // meta (the index knows what it indexes)
-    val keyCol = if (keys.isEmpty) None else Some(
-      bloomConfigOf(spark, dir).getOrElse(sys.error(
-        s"readPruned: $dir has no bloom index for a key predicate"))._1)
+    val keyCol = Option.when(keys.nonEmpty)(bloomKeyOf(spark, dir))
     val cands = (
       Option.when(ranges.nonEmpty)(
         candidateShardsByStats(statsManifest(spark, dir), ranges)) ++
@@ -2119,6 +2087,8 @@ object Scan {
     * machinery RELIES on, without mutating anything. Shallow checks
     * are metadata-only (listings + shards-sized sidecar reads):
     *
+    *  - a table without its meta sidecar is an "error" (every verb that
+    *    reads the configuration refuses it), and no further check runs;
     *  - every `shard=N` data directory has a stats-manifest row —
     *    an UNMANIFESTED shard is an "error" (candidate enumeration
     *    would never name it: pruned reads MISS its rows);
@@ -2127,8 +2097,7 @@ object Scan {
     *    reads treat it as empty, the next refresh heals it);
     *  - bloom rows for shards the stats manifest does not know are
     *    a "warn" (wider-never-narrower: extra candidates cost I/O,
-    *    never rows); a bloom or DV sidecar without a recoverable
-    *    config is an "error";
+    *    never rows);
     *  - deletion-vector entries naming missing shard dirs are "info"
     *    (masking nothing); shard ids ≥ the meta's `n_shards` are an
     *    "error" (the layout contract);
@@ -2162,6 +2131,12 @@ object Scan {
     children.map(_.getPath.getName)
       .filter(n => n.endsWith("__swap_new") || n.endsWith("__swap_old"))
       .foreach(n => f("info", "swap_debris", None, s"$n — vacuum"))
+    val meta = readMeta(spark, dir).getOrElse {
+      f("error", "meta", None,
+        s"no $MetaSidecar sidecar — the table's configuration is lost " +
+          "and every verb that reads it refuses the table")
+      return out.toSeq
+    }
     if (!children.exists(_.getPath.getName == StatsSidecar)) {
       f("error", "stats_manifest", None,
         "no stats sidecar — pruned reads have no candidates " +
@@ -2179,41 +2154,27 @@ object Scan {
       f("warn", "manifest_ahead", Some(s),
         "manifest row but no data directory (append crash window) — " +
           "reads as empty, refresh heals"))
-    val meta = readMeta(spark, dir)
-    meta.flatMap(_.nShards).foreach { n =>
+    meta.nShards.foreach { n =>
       (dataShards ++ manShards).filter(_ >= n).toSeq.sorted.foreach(s =>
         f("error", "shard_out_of_range", Some(s),
           s"shard id >= n_shards=$n — violates the layout contract"))
     }
-    if (children.exists(_.getPath.getName == BloomSidecar)) {
-      if (bloomConfigOf(spark, dir).isEmpty)
-        f("error", "bloom_config", None,
-          "bloom sidecar present but key/m/k unrecoverable (empty " +
-            "sidecar, no meta) — key routing is dead")
-      else {
-        val bShards = bloomManifest(spark, dir)
-          .select(col(ShardCol).cast("int")).collect().map(_.getInt(0))
-        bShards.filterNot(manShards).sorted.foreach(s =>
+    if (children.exists(_.getPath.getName == BloomSidecar))
+      bloomManifest(spark, dir).select(col(ShardCol).cast("int")).collect()
+        .map(_.getInt(0)).filterNot(manShards).sorted.foreach(s =>
           f("warn", "bloom_orphan", Some(s),
             "bloom row for a shard the stats manifest does not know " +
               "— extra candidate I/O only"))
-      }
-    }
-    if (children.exists(_.getPath.getName == DvSidecar)) {
-      if (bloomConfigOf(spark, dir).isEmpty)
-        f("error", "dv_config", None,
-          "deletion-vector sidecar but no bloom config — masked " +
-            "keys cannot be typed/applied")
-      else dvManifest(spark, dir)
+    if (children.exists(_.getPath.getName == DvSidecar))
+      dvManifest(spark, dir)
         .select(col(ShardCol).cast("int")).distinct()
         .collect().map(_.getInt(0)).filterNot(dataShards)
         .sorted.foreach(s =>
           f("info", "dv_stale_entry", Some(s),
             "deletion-vector entry for a missing shard dir — masks " +
               "nothing; cleared at apply"))
-    }
     if (deep && dataShards.nonEmpty) {
-      val statCols = statColsOf(spark, dir)
+      val statCols = meta.statCols
       val actual = graft.ext.Corpus.shardStats(
         readShardsRaw(spark, dir, dataShards.toSeq.sorted), ShardCol,
         statCols)
@@ -2252,18 +2213,13 @@ object Scan {
     * `compactSharded`; grows toward 1 on an append-only shard that
     * never gets maintained. A fold over the driver-held manifest rows
     * ([[statsManifest]]) with no Spark job — the signal a scheduled
-    * refresh triggers on (looseness, not file count). Pre-staleness
-    * manifests read as 0 (exactness unknown but envelopes valid —
-    * refresh on file count still applies).
+    * refresh triggers on (looseness, not file count).
     */
-  def manifestStaleness(spark: SparkSession, dir: String): Double = {
-    val man = statsManifest(spark, dir)
-    if (!man.columns.contains("_stale_rows")) 0.0
-    else man.select(col("n_rows"), col("_stale_rows")).collect()
-      .flatMap { r =>
+  def manifestStaleness(spark: SparkSession, dir: String): Double =
+    statsManifest(spark, dir).select(col("n_rows"), col("_stale_rows"))
+      .collect().flatMap { r =>
         if (r.isNullAt(0) || r.getLong(0) <= 0) Some(0.0)
         else Option.unless(r.isNullAt(1))(
           r.getLong(1).toDouble / r.getLong(0))
       }.maxOption.getOrElse(0.0)
-  }
 }

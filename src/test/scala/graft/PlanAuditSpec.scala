@@ -126,22 +126,20 @@ class PlanAuditSpec extends SparkSpec {
   // construction; their physical shape is covered by PipelineSpec
   private val skip = Set("e2e_full_load", "e2e_delta_load", "e2e_stream_delta")
 
-  test("no query plans a cartesian product; nested loops only where documented") {
-    val offenders = SparkEntry.queries.toSeq
-      .filterNot { case (name, _) => skip(name) }
-      .sortBy(_._1)
-      .flatMap { case (name, fn) =>
+  // one test per query: no cartesian product, nested loops only where
+  // documented. A query that throws while being built fails only its own
+  // test, and `-oD` reports each query's time
+  SparkEntry.queries.toSeq.filterNot { case (name, _) => skip(name) }
+    .sortBy(_._1).foreach { case (name, fn) =>
+      test(s"plan audit: $name") {
         val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
         spark.catalog.clearCache()
-        val cartesian = plan.contains("CartesianProduct")
-        val nestedLoop = plan.contains("BroadcastNestedLoopJoin") &&
-          !nestedLoopAllowed(name)
-        if (cartesian) Some(s"$name: CartesianProduct")
-        else if (nestedLoop) Some(s"$name: undocumented BroadcastNestedLoopJoin")
-        else None
+        assert(!plan.contains("CartesianProduct"), s"$name: CartesianProduct")
+        assert(!plan.contains("BroadcastNestedLoopJoin") ||
+          nestedLoopAllowed(name),
+          s"$name: undocumented BroadcastNestedLoopJoin")
       }
-    assert(offenders.isEmpty, offenders.mkString("; "))
-  }
+    }
 
   test("x10 computes every quality signal in one fused expression pass") {
     // the signals are computed by the single codegen'd `quality_scores`

@@ -123,41 +123,6 @@ class CompactionSpec extends SparkSpec {
       .select("event_id").collect().map(_.getLong(0)).toSet === before)
   }
 
-  test("compactSharded with maxRecordsPerFile: shard directories hold " +
-    "bounded files instead of one unbounded rewrite") {
-    import spark.implicits._
-    val dir = freshDir()
-    val laid = (0L until 900L).map(i => (i, i, (i / 300).toInt, i))
-      .toDF("event_id", "user_id", "shard", "zvalue")
-    Scan.writeSharded(spark, laid, dir, statCols = Seq("user_id"),
-      sortCol = Some("zvalue"), zTotalBits = Some(10),
-      nShards = Some(3))
-    // scatter appends so every shard holds >1 file (compaction arms)
-    (0 until 3).foreach { b =>
-      (0 until 3).map(sh => (10000L + 10 * b + sh, 10000L + 10 * b + sh,
-          sh, 1000L + b))
-        .toDF("event_id", "user_id", "shard", "zvalue")
-        .coalesce(1).write.mode("append").partitionBy("shard")
-        .parquet(dir)
-    }
-    Compaction.compactSharded(spark, dir, maxRecordsPerFile = 100L)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    (0 until 3).foreach { sh =>
-      val files = fs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$dir/shard=$sh")).toSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
-          && !s.getPath.getName.startsWith("."))
-      assert(files.size >= 3) // ~303 rows / 100-row cap
-      files.foreach { f =>
-        assert(spark.read.parquet(f.getPath.toString).count() <= 100L)
-      }
-    }
-    assert(spark.read.parquet(dir).count() === 909L)
-    // manifests refreshed exactly in the same swap
-    assert(Scan.manifestStaleness(spark, dir) === 0.0)
-  }
-
   test("compactSharded with nothing to rewrite still RESETS a stale " +
     "manifest — an append into a brand-new single-file shard must not " +
     "leave the staleness trigger re-firing a no-op compact forever") {

@@ -509,7 +509,7 @@ class ScanSpec extends SparkSpec {
       .parquet(s"$dir/${Scan.PendingDelete}/shard=2")
     val out = fs.create(new org.apache.hadoop.fs.Path(
       s"$dir/${Scan.PendingDelete}/_COMMIT"), true)
-    out.write("2".getBytes("UTF-8")); out.close()
+    out.write("kept:2|emptied:".getBytes("UTF-8")); out.close()
     // a pruned read triggers the roll-forward transparently
     assert(Scan.readPrunedByRange(spark, dir,
       Seq(("lang", "es", "es"))).count() === 0L)
@@ -737,31 +737,29 @@ class ScanSpec extends SparkSpec {
     "frame") {
     val dir = freshDir()
     publish(dir)
-    // a pre-staleness stats manifest (no `_stale_rows`) whose shard-0
-    // row count sits at Long.MaxValue: the append's additive n_rows fold
-    // overflows (ANSI arithmetic) inside the stats swap's write, so the
-    // swap fails and the old manifest stays on disk
+    // a stats manifest whose shard-0 row count sits at Long.MaxValue:
+    // the append's additive n_rows fold overflows (ANSI arithmetic)
+    // inside the stats swap's write, so the swap fails and the old
+    // manifest stays on disk
     val statsPath = s"$dir/${Scan.StatsSidecar}"
     graft.dw.Merge.atomicOverwrite(spark, spark.read.parquet(statsPath)
-      .drop("_stale_rows")
       .withColumn("n_rows", when(col("shard") === 0, lit(Long.MaxValue))
         .otherwise(col("n_rows"))), statsPath)
+    def shard0Rows(man: DataFrame): Long =
+      man.filter(col("shard") === 0).select("n_rows").head().getLong(0)
     val ansi = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try {
-      assert(!Scan.statsManifest(spark, dir).columns
-        .contains("_stale_rows"))
+      assert(shard0Rows(Scan.statsManifest(spark, dir)) === Long.MaxValue)
       intercept[Exception] {
         Scan.appendSharded(spark,
           Seq((5000L, 42L, 420L, "t0", 0, 42L)).toDF("event_id",
             "user_id", "ts_us", "event_type", "shard", "zvalue"),
           dir, "event_id")
       }
-      assert(!spark.read.parquet(statsPath).columns
-        .contains("_stale_rows"))
+      assert(shard0Rows(spark.read.parquet(statsPath)) === Long.MaxValue)
       // the next read describes the manifest ON DISK
-      assert(!Scan.statsManifest(spark, dir).columns
-        .contains("_stale_rows"))
+      assert(shard0Rows(Scan.statsManifest(spark, dir)) === Long.MaxValue)
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
@@ -1407,12 +1405,7 @@ class ScanSpec extends SparkSpec {
         Scan.SchemaSidecar, s"${Scan.DictSidecar}/col=event_type")
         .foreach(n => same(s"$dir/$n"))
     sidecars()
-    // a pre-staleness stats manifest, then the append fold that adds
-    // `_stale_rows` back
     val statsPath = s"$dir/${Scan.StatsSidecar}"
-    graft.dw.Merge.atomicOverwrite(spark,
-      spark.read.parquet(statsPath).drop("_stale_rows"), statsPath)
-    same(statsPath)
     Scan.appendSharded(spark,
       Seq((5000L, 2000L, 20000L, "t1", 9, 2000L)).toDF("event_id",
         "user_id", "ts_us", "event_type", "shard", "zvalue"),
@@ -1602,6 +1595,41 @@ class ScanSpec extends SparkSpec {
     Compaction.reshardSharded(spark, full, 4)
     val m = same(full)
     assert((m.nShards, m.zTotalBits) === ((Some(4), Some(10))))
+    // a compaction republishes the meta it read, unchanged
+    Scan.appendSharded(spark, Seq((5000L, 500L, "t1", 1, 500L, 7L))
+      .toDF("event_id", "user_id", "event_type", "shard", "zvalue", "score"),
+      full, "event_id")
+    assert(Compaction.compactSharded(spark, full) === ((5, 4)))
+    assert(same(full) === m)
+  }
+
+  test("a table without its meta sidecar is refused: each verb that " +
+    "reads the configuration fails with one error naming the sidecar, " +
+    "nothing is mutated, and fsck reports an error") {
+    val dir = freshDir()
+    publish(dir)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/${Scan.MetaSidecar}"),
+      true)
+    val messages = Seq[(String, () => Any)](
+      "statColsOf" -> (() => Scan.statColsOf(spark, dir)),
+      "bloomConfigOf" -> (() => Scan.bloomConfigOf(spark, dir)),
+      "appendSharded" -> (() => Scan.appendSharded(spark,
+        Seq((5000L, 42L, 420L, "t0", 0, 42L)).toDF(laid.columns: _*),
+        dir, "event_id")),
+      "refreshManifests" -> (() => Scan.refreshManifests(spark, dir)),
+      "deleteByKeys" -> (() => Scan.deleteByKeys(spark, dir, Seq(250L))),
+      "compactSharded" -> (() => Compaction.compactSharded(spark, dir))
+    ).map { case (verb, run) =>
+      val e = intercept[RuntimeException](run())
+      assert(e.getMessage.contains(Scan.MetaSidecar), s"$verb: $e")
+      e.getMessage
+    }
+    assert(messages.distinct.size === 1, messages)
+    assert(spark.read.parquet(dir).count() === 1000L)
+    assert(Scan.fsckTable(spark, dir).exists(x =>
+      x.severity == "error" && x.check == "meta"))
   }
 
   test("job count: the 15-verb inventory on a 16-shard bloom table runs " +
