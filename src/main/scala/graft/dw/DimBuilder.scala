@@ -9,28 +9,32 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Dimension construction: distinct natural keys → dense sequential
-  * surrogate IDs in sort order; delta loads continue from the current max.
+  * surrogate IDs in sort order, continuing after the ids a dimension
+  * already has.
   *
   * Reference behavior: `Full Load Scripts/dw_full_load2.py:37-39`
   * (`enumerate(sorted(values), start=1)` over a collected list) and the
-  * delta continuation `Delta Load Scripts/dw2_delta_load2.py:32-34,70-73,179`.
+  * delta continuation `Delta Load Scripts/dw2_delta_load2.py:32-34,70-73,179`
+  * (`start=max+1`): one numbering, whose start is the only difference.
   *
-  * Spark-first shape: the reference's `Distinct → ToList → enumerate` would
-  * serialize every distinct value through one element — a scaling cliff.
-  * Here it is `distinct()` (map-side partial aggregation, shuffled by key)
-  * followed by `row_number()` over a global sort. The single-partition
-  * window is deliberate and safe: it runs over the *post-distinct dimension
-  * values* (bounded, tiny — network codes, category names, countries), never
-  * over fact rows. NULL sorts first, making the engine strictly more defined
-  * than the reference (Python `sorted()` raises on None among strings,
-  * SURVEY §1.4/§7.4.5).
+  * The warehouse numbers its dims with [[extendRows]], the reference's own
+  * shape on the driver: `enumerate(sorted(new values), start=max+1)` over
+  * the collected existing dimension and the collected new value tuples,
+  * from an empty dimension in the full load
+  * ([[graft.dw.FactBuilder.star]]). A bounded dimension is already pulled
+  * whole to the driver by the broadcast join that consumes it, so numbering
+  * its values there costs no Spark job.
   *
-  * Delta extension is the reference's own shape, on the driver:
-  * `enumerate(sorted(new values), start=max+1)` over the collected existing
-  * dimension and the collected new value tuples ([[extendRows]]). A bounded
-  * dimension is already pulled whole to the driver by the broadcast join
-  * that consumes it, so numbering its handful of new values there costs no
-  * Spark job; [[extendRows]] uses [[build]]'s order, so both number alike.
+  * [[build]] is the same numbering as a Spark plan, for the queries that
+  * number a table's values in place (and the reference the tests compare
+  * [[extendRows]] with): `distinct()` (map-side partial aggregation,
+  * shuffled by key) followed by `row_number()` over a global sort. The
+  * single-partition window is deliberate and safe: it runs over the
+  * *post-distinct dimension values* (bounded, tiny — network codes,
+  * category names, countries), never over fact rows. NULL sorts first in
+  * both, making the engine strictly more defined than the reference
+  * (Python `sorted()` raises on None among strings, SURVEY §1.4/§7.4.5);
+  * [[extendRows]] uses [[build]]'s order, so both number alike.
   */
 object DimBuilder {
 
@@ -68,7 +72,8 @@ object DimBuilder {
     */
   val DefaultMaxDimRows: Long = 10000000L
 
-  /** Delta extension (`dw2_delta_load2.py:173-187`) on the driver:
+  /** Extension (`dw2_delta_load2.py:173-187`; from an empty `existing`,
+    * the full load's numbering) on the driver:
     * `existing` rows are `id +: key values`, `values` rows are key tuples in
     * the same column order. Tuples absent from `existing` (null-safe: a
     * NULL value matches a NULL value, as Python's `value not in dict` does)
@@ -86,7 +91,7 @@ object DimBuilder {
       .sorted(ascNullsFirst)
     require(existing.size + fresh.size <= maxDimRows,
       s"DimBuilder.extendRows: dimension exceeds maxDimRows=$maxDimRows rows" +
-        " — delta extension numbers BOUNDED dims on the driver; raise" +
+        " — the driver-side numbering is for BOUNDED dims; raise" +
         " maxDimRows only if that cardinality is intended")
     fresh.zipWithIndex.map { case (k, i) => Row.fromSeq((maxId + 1L + i) +: k) }
   }

@@ -1,7 +1,11 @@
 package graft.dw
 
+import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
+
 import graft.schemas.Schemas
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,35 +23,56 @@ import org.apache.spark.sql.types._
   */
 object FactBuilder {
 
-  final case class Dims(network: DataFrame, regionCountry: DataFrame,
-      seismicType: DataFrame, magCategory: DataFrame, depthCategory: DataFrame,
-      date: DataFrame)
+  /** The six dimension tables, in the reference's build order. */
+  val dimNames: Seq[String] = Seq("T_DIM_Network", "T_DIM_RegionCountry",
+    "T_DIM_Seismic_Activity_Type", "T_DIM_magCategory", "T_DIM_depthCategory",
+    "T_DIM_date")
 
-  /** Category columns are defaulted before both dim build and fact lookup
-    * (`dw_full_load2.py:145,159,201-202`).
+  /** One slice's star: its row count, each dimension's NEW rows (in
+    * [[dimNames]] order, each row shaped like the table's), and its fact
+    * resolved against the existing rows plus the new ones.
     */
-  private def magName: Column = coalesce(col("LB_magCategory"), lit("Not Felt"))
-  private def depthName: Column = coalesce(col("LB_depthCategory"), lit("Shallow"))
+  final case class Star(rows: Long, fresh: Seq[(String, Seq[Row])], fact: DataFrame)
 
-  /** All six dimensions from the enriched ODS (`dw_full_load2.py:102-182`). */
-  def buildDims(ods: DataFrame): Dims = {
-    def numbered(name: String): DataFrame = {
-      val cols = Schemas.dim(name).fieldNames.toSeq
-      DimBuilder.build(ods, dimValues(name), cols.tail, cols.head)
+  /** The warehouse's star build over an enriched-ODS `slice`, given each
+    * dimension's `existing` rows: the reference's `enumerate(sorted(values),
+    * start)` (`dw_full_load2.py:37-39`, `dw2_delta_load2.py:32-34,173-187`),
+    * which starts from 1 over empty dims and from max + 1 otherwise.
+    *
+    * One aggregate over the slice yields its row count and every
+    * dimension's distinct value tuples; the tuples absent from the existing
+    * rows are numbered on the driver by [[DimBuilder.extendRows]] (date ids
+    * are intrinsic yyyymmdd, `dw2_delta_load2.py:329-333`, so new dates are
+    * kept as they are). The fact joins the slice to local relations of
+    * existing plus new rows, so it reads no dimension table.
+    */
+  def star(slice: DataFrame, existing: String => Seq[Row], jobId: String,
+      insertionTs: Timestamp): Star = {
+    val summary = slice.agg(count(lit(1)), dimNames.map(name =>
+      collect_set(struct(dimValues(name): _*))): _*).head()
+    val old = dimNames.map(existing)
+    val fresh = dimNames.zip(old).zipWithIndex.map { case ((name, rows), i) =>
+      val values = summary.getSeq[Row](i + 1)
+      name -> (
+        if (name == "T_DIM_date") {
+          val ids = rows.map(_.get(0)).toSet
+          values.filter(r => !r.isNullAt(0) && !ids(r.get(0)))
+        } else DimBuilder.extendRows(rows, values))
     }
-    Dims(numbered("T_DIM_Network"), numbered("T_DIM_RegionCountry"),
-      numbered("T_DIM_Seismic_Activity_Type"), numbered("T_DIM_magCategory"),
-      numbered("T_DIM_depthCategory"),
-      DateDim.build(ods, to_timestamp(col("DT_time"), "yyyy-MM-dd HH:mm:ss")))
+    val dims = fresh.zip(old).map { case ((name, rows), known) =>
+      name -> slice.sparkSession.createDataFrame((known ++ rows).asJava,
+        Schemas.dim(name))
+    }.toMap
+    Star(summary.getLong(0), fresh, buildFact(slice, dims, jobId, insertionTs))
   }
 
   /** One dimension's row over enriched-ODS rows, as columns named and
     * ordered like the dimension table's own: the key tuple of a
-    * surrogate-keyed dimension (the values [[buildDims]] numbers), or the
+    * surrogate-keyed dimension (the values [[star]] numbers), or the
     * whole row of the date dimension, whose id is intrinsic (NULL for a row
     * without a parseable time).
     */
-  def dimValues(name: String): Seq[Column] = name match {
+  private def dimValues(name: String): Seq[Column] = name match {
     case "T_DIM_Network" => Seq(col("LB_net").as("LB_NetworkSymbol"))
     case "T_DIM_RegionCountry" => Seq(col("LB_Region"), col("LB_Country"))
     case "T_DIM_Seismic_Activity_Type" => Seq(col("LB_type"))
@@ -59,23 +84,29 @@ object FactBuilder {
       DateDim.attrs(to_timestamp(col("DT_time"), "yyyy-MM-dd HH:mm:ss").cast("date"))
   }
 
+  /** Category columns are defaulted before both dim build and fact lookup
+    * (`dw_full_load2.py:145,159,201-202`).
+    */
+  private def magName: Column = coalesce(col("LB_magCategory"), lit("Not Felt"))
+  private def depthName: Column = coalesce(col("LB_depthCategory"), lit("Shallow"))
+
   /** P14/J1 — fact assembly (`dw_full_load2.py:185-230`): five broadcast
     * null-safe left-outer dim joins, date key derived directly from
     * `DT_time`, audit stamping.
     */
-  def buildFact(ods: DataFrame, dims: Dims, jobId: String,
-      insertionTs: java.sql.Timestamp): DataFrame = {
+  private def buildFact(ods: DataFrame, dims: Map[String, DataFrame],
+      jobId: String, insertionTs: Timestamp): DataFrame = {
     val dtObj = to_timestamp(col("DT_time"), "yyyy-MM-dd HH:mm:ss")
     val enriched = ods
-      .join(broadcast(dims.network), col("LB_net") <=> col("LB_NetworkSymbol"), "left_outer")
-      .join(broadcast(dims.regionCountry.withColumnRenamed("LB_Region", "_dim_region")
+      .join(broadcast(dims("T_DIM_Network")), col("LB_net") <=> col("LB_NetworkSymbol"), "left_outer")
+      .join(broadcast(dims("T_DIM_RegionCountry").withColumnRenamed("LB_Region", "_dim_region")
           .withColumnRenamed("LB_Country", "_dim_country")),
         col("LB_Region") <=> col("_dim_region") && col("LB_Country") <=> col("_dim_country"),
         "left_outer")
-      .join(broadcast(dims.seismicType.withColumnRenamed("LB_type", "_dim_type")),
+      .join(broadcast(dims("T_DIM_Seismic_Activity_Type").withColumnRenamed("LB_type", "_dim_type")),
         col("LB_type") <=> col("_dim_type"), "left_outer")
-      .join(broadcast(dims.magCategory), magName <=> col("LB_magCategoryName"), "left_outer")
-      .join(broadcast(dims.depthCategory), depthName <=> col("LB_depthCategoryName"), "left_outer")
+      .join(broadcast(dims("T_DIM_magCategory")), magName <=> col("LB_magCategoryName"), "left_outer")
+      .join(broadcast(dims("T_DIM_depthCategory")), depthName <=> col("LB_depthCategoryName"), "left_outer")
     enriched.select(
       col("ID_Event"),
       col("ID_Network_ID"),

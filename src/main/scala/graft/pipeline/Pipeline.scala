@@ -7,14 +7,14 @@ import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 import graft.archive.Archive
-import graft.dw.{DimBuilder, FactBuilder, Merge}
+import graft.dw.{FactBuilder, Merge}
 import graft.ingest.Staging
 import graft.ods.{OdsTransform, PlaceParser}
 import graft.schemas.Schemas
 import graft.util.{Compaction, SparkFuture}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.functions.{collect_set, count, lit, struct}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Warehouse layout: one parquet directory per layer table, mirroring the
   * reference's BigQuery datasets (STG_ds / ODS_ds / DW_ds, SURVEY §1.2).
@@ -29,9 +29,7 @@ final case class Warehouse(root: String) {
   val archive: String = s"$root/archive"
   val runLog: String = s"$root/run_log"
 
-  val dimNames: Seq[String] = Seq("T_DIM_Network", "T_DIM_RegionCountry",
-    "T_DIM_Seismic_Activity_Type", "T_DIM_magCategory", "T_DIM_depthCategory",
-    "T_DIM_date")
+  val dimNames: Seq[String] = FactBuilder.dimNames
 }
 
 /** Stage sequencing (SURVEY §3.2): the reference's five sequential Dataflow
@@ -56,12 +54,21 @@ object Controller {
     val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  /** Write a driver-held dimension's rows as one file: a local relation
+    * would otherwise split into a file per core. */
+  private[pipeline] def writeDim(spark: SparkSession, wh: Warehouse,
+      name: String, rows: Seq[Row], mode: String): Unit =
+    spark.createDataFrame(rows.asJava, Schemas.dim(name)).coalesce(1)
+      .write.mode(mode).parquet(wh.dim(name))
 }
 
 /** The full-load chain: STG → ODS → place parse → DW truncate-reload →
   * archive (`load_controller_DAG.py:187`).
   */
 object FullLoad {
+
+  import Controller.writeDim
 
   def run(spark: SparkSession, rawPattern: String, states: DataFrame,
       wh: Warehouse, jobId: String, insertionTs: Timestamp): Unit = {
@@ -71,57 +78,47 @@ object FullLoad {
       s"${wh.rejected}/${insertionTs.getTime}", jobId, insertionTs.toString)
 
     // stages 2–4 — ODS, T_ODS, six dims and the fact are all derived from
-    // the just-written STG through IN-MEMORY frames (each layer persisted;
-    // parquet round-trips are value-exact for these types, so the written
-    // layer and the frame passed forward are identical by construction) and
-    // their eight table writes are submitted as ONE batch of concurrent
-    // jobs: every write is to its own path, dependencies flow through the
-    // caches (block-level locking makes concurrent first materialization
-    // compute-once), and the chain's wall time drops from the sum of
-    // sequential write barriers to roughly its longest dependency path.
-    // On a cluster this is the same standard overlap of sibling jobs'
-    // scheduling fixed costs; restartability is unchanged — every layer is
-    // still on disk when run() returns.
+    // the just-written STG through IN-MEMORY state: ODS and T_ODS are
+    // persisted frames (parquet round-trips are value-exact for these
+    // types, so the written layer and the frame passed forward are
+    // identical by construction), the dims are driver-held rows. Their
+    // table writes are submitted as concurrent jobs: every write is to its
+    // own path, dependencies flow through the caches (block-level locking
+    // makes concurrent first materialization compute-once), and the chain's
+    // wall time drops from the sum of sequential write barriers to roughly
+    // its longest dependency path. Restartability is unchanged — every
+    // layer is still on disk when run() returns.
     val ods = OdsTransform.toOds(spark.read.schema(Schemas.stg).parquet(wh.stg),
       insertionTs).persist()
     val tOds = PlaceParser.parsePlaces(ods, states, insertionTs).persist()
-    val dims = FactBuilder.buildDims(tOds)
-    val byName = Map(
-      "T_DIM_Network" -> dims.network,
-      "T_DIM_RegionCountry" -> dims.regionCountry,
-      "T_DIM_Seismic_Activity_Type" -> dims.seismicType,
-      "T_DIM_magCategory" -> dims.magCategory,
-      "T_DIM_depthCategory" -> dims.depthCategory,
-      "T_DIM_date" -> dims.date)
     try {
       implicit val ec: ExecutionContext = ExecutionContext.global
-      // register every persist BEFORE submitting the concurrent jobs, so no
-      // future's cache lookup can race a sibling's registration
-      byName.values.foreach(_.persist())
-      // A5 — row counts ride the writes that run anyway via observe
-      val obsTOds = Observation()
-      val obsFact = Observation()
-      Await.result(Future.sequence(
+      val layers = Seq(
         // the staging metrics record is a metadata-sized append with no
         // reader in this chain — it overlaps the layer writes instead of
         // serializing between stage 1 and stage 2
         SparkFuture(spark)(RunLog.append(spark, wh.runLog, jobId, "staging",
-          stgMetrics.counters, insertionTs)) +:
-        SparkFuture(spark)(ods.write.mode("overwrite").parquet(wh.ods)) +:
-        SparkFuture(spark)(tOds.observe(obsTOds, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(wh.tOds)) +:
-        SparkFuture(spark)(FactBuilder.buildFact(tOds, dims, jobId, insertionTs)
-          .observe(obsFact, count(lit(1)).as("n"))
+          stgMetrics.counters, insertionTs)),
+        SparkFuture(spark)(ods.write.mode("overwrite").parquet(wh.ods)),
+        SparkFuture(spark)(tOds.write.mode("overwrite").parquet(wh.tOds)))
+      // stage 4 — the star build the delta also runs, over the whole T_ODS
+      // from empty dims (its one aggregate overlaps the writes above):
+      // every value is new, so each dim is numbered from 1 and its rows are
+      // the whole table
+      val star = FactBuilder.star(tOds, _ => Nil, jobId, insertionTs)
+      // A5 — the fact's row count rides its write via observe
+      val obsFact = Observation()
+      Await.result(Future.sequence(layers ++
+        (SparkFuture(spark)(star.fact.observe(obsFact, count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(wh.fact)) +:
-        byName.toSeq.map { case (name, df) =>
-          SparkFuture(spark)(df.write.mode("overwrite").parquet(wh.dim(name)))
-        }), Duration.Inf)
+        star.fresh.map { case (name, rows) =>
+          SparkFuture(spark)(writeDim(spark, wh, name, rows, "overwrite"))
+        })), Duration.Inf)
       RunLog.append(spark, wh.runLog, jobId, "full_load", Map(
-        "rows_tods_written" -> obsTOds.get("n").asInstanceOf[Long],
+        "rows_tods_written" -> star.rows,
         "rows_fact_written" -> obsFact.get("n").asInstanceOf[Long]),
         insertionTs)
     } finally {
-      byName.values.foreach(_.unpersist(blocking = false))
       tOds.unpersist(blocking = false)
       ods.unpersist(blocking = false)
     }
@@ -138,7 +135,7 @@ object FullLoad {
   */
 object DeltaLoad {
 
-  import Controller.exists
+  import Controller.{exists, writeDim}
 
   def run(spark: SparkSession, rawPattern: String, states: DataFrame,
       wh: Warehouse, jobId: String, insertionTs: Timestamp): Unit = {
@@ -183,10 +180,11 @@ object DeltaLoad {
     * reads the cached DELTA SLICE — the place-parsed rows this batch
     * actually appends — never a re-scan of the whole T_ODS. Dim values and
     * dates present only in older rows are already in the dimension tables
-    * by induction (the full load built them from the whole table, every
-    * delta extends them), so extending from the slice yields the same new
-    * rows the full re-scan would, at delta cost instead of table cost. The
-    * fact is APPENDED to, not rewritten: the reference's MERGE on
+    * by induction: the full load runs the same [[FactBuilder.star]] over the
+    * whole table from empty dims, and every delta runs it over its slice
+    * from the dims as they stand. So extending from the slice yields the
+    * same new rows the full re-scan would, at delta cost instead of table
+    * cost. The fact is APPENDED to, not rewritten: the reference's MERGE on
     * `ID_Event` (`dw2_delta_load2.py:101-131`) updates matched keys and
     * inserts the rest, but the slice is already deduped against T_ODS,
     * whose key set equals the fact's (the full load writes the fact from
@@ -196,7 +194,7 @@ object DeltaLoad {
     * (Delta Lake's blind-append commit, Iceberg's fast append). Each append
     * adds files; [[Compaction.compactIfFragmented]] rewrites the fact once
     * their open cost outweighs a split. An empty delta (every landed event
-    * already warehoused) skips dim extension and the fact append outright.
+    * already warehoused) appends to no dim and skips the fact outright.
     *
     * Job shape: a 100-event delta is dominated by per-job cost, not data,
     * so no job here exists only to answer a small question. Every table is
@@ -204,8 +202,8 @@ object DeltaLoad {
     * aggregate over the slice yields its row count and every dimension's
     * distinct value tuples; each existing dimension is collected once (the
     * broadcast joins would pull it whole to the driver anyway) and extended
-    * there by [[DimBuilder.extendRows]]; an extension with no new values
-    * appends nothing.
+    * there ([[FactBuilder.star]]); an extension with no new values appends
+    * nothing.
     *
     * Replay safety (crash / streaming foreachBatch retry): the batch's
     * commits are ORDERED — dim appends, then the fact commit (a visible
@@ -273,63 +271,37 @@ object DeltaLoad {
     val background = scala.collection.mutable.ArrayBuffer[Future[Unit]](odsAppend)
     try {
       // stage 4 — incremental dims (max-key continuation) + fact append,
-      // all from the delta slice. One aggregate over it: the row count and,
-      // per dimension, the distinct value tuples (in dimension column order)
-      val summary = delta.agg(count(lit(1)), wh.dimNames.map(name =>
-        collect_set(struct(FactBuilder.dimValues(name): _*))): _*).head()
-      if (summary.getLong(0) > 0) {
+      // all from the delta slice. Each existing dim is collected once
+      // (concurrent jobs, overlapping the slice's aggregate) and extended on
+      // the driver by FactBuilder.star; its fact joins local relations of
+      // existing ∪ new rows — content-identical to the post-append tables,
+      // and free of any scan of the dim paths, so the appends below cannot
+      // race a reader of those paths.
+      val existing = wh.dimNames.map(name => name -> SparkFuture(spark)(
+        spark.read.schema(Schemas.dim(name)).parquet(wh.dim(name)).collect().toSeq)).toMap
+      val star = FactBuilder.star(delta, name => Await.result(existing(name), Duration.Inf),
+        jobId, insertionTs)
+      if (star.rows > 0) {
         // Pre-write the T_ODS slice to a pending dir CONCURRENTLY with the
-        // stage-4 builds; the pending dir is invisible to T_ODS readers, so
+        // fact write; the pending dir is invisible to T_ODS readers, so
         // replay ordering is preserved while the write overlaps the fact
         // build instead of serializing after it. Only the metadata-only
         // rename below (Merge.commitAppend) is the post-merge commit.
         val pendingTOds = s"${wh.tOds}__pending"
-        val obsTOds = Observation()
         val tOdsStage = SparkFuture(spark) {
-          delta.observe(obsTOds, count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(pendingTOds)
+          delta.write.mode("overwrite").parquet(pendingTOds)
         }
         background += tOdsStage
-        // each existing dim is collected once (concurrent jobs) and extended
-        // on the driver. Date-dim IDs are intrinsic (yyyymmdd,
-        // dw2_delta_load2.py:329-333): new dates append as-is; surrogate-keyed
-        // dims continue from max id. The post-extension dims are local
-        // relations of existing ∪ fresh rows — content-identical to the
-        // post-append tables, and free of any scan of the dim paths, so the
-        // appends below cannot race a reader of those paths.
-        val existing = Await.result(Future.sequence(wh.dimNames.map(name =>
-          SparkFuture(spark)(spark.read.schema(Schemas.dim(name))
-            .parquet(wh.dim(name)).collect().toSeq))), Duration.Inf)
-        val extended = wh.dimNames.zip(existing).zipWithIndex.map {
-          case ((name, rows), i) =>
-            val values = summary.getSeq[Row](i + 1)
-            val fresh =
-              if (name == "T_DIM_date") {
-                val ids = rows.map(_.get(0)).toSet
-                values.filter(r => !r.isNullAt(0) && !ids(r.get(0)))
-              } else DimBuilder.extendRows(rows, values)
-            (name, rows, fresh)
-        }
-        def local(name: String, rows: Seq[Row]): DataFrame =
-          spark.createDataFrame(rows.asJava, Schemas.dim(name))
-        val full = extended.map { case (name, rows, fresh) =>
-          name -> local(name, rows ++ fresh)
-        }.toMap
-        val staged = FactBuilder.buildFact(delta,
-          FactBuilder.Dims(full("T_DIM_Network"), full("T_DIM_RegionCountry"),
-            full("T_DIM_Seismic_Activity_Type"), full("T_DIM_magCategory"),
-            full("T_DIM_depthCategory"), full("T_DIM_date")),
-          jobId, insertionTs)
         // fact — a keyed append, pre-written to a pending dir while the dim
         // appends run. The slice is already deduped against T_ODS, whose key
         // set equals the fact's, so the anti-join against the fact's key
         // column drops rows only on a replay after a crash at post-merge.
         Merge.recover(spark, wh.fact)
         val pendingFact = s"${wh.fact}__pending"
-        val factFiles = Compaction.appendFiles(spark, wh.fact, summary.getLong(0))
+        val factFiles = Compaction.appendFiles(spark, wh.fact, star.rows)
         val obsFact = Observation()
         val factStage = SparkFuture(spark) {
-          OdsTransform.dedupeAgainstExisting(staged,
+          OdsTransform.dedupeAgainstExisting(star.fact,
               spark.read.schema(Schemas.factEvents).parquet(wh.fact))
             .coalesce(factFiles).observe(obsFact, count(lit(1)).as("n"))
             .write.mode("overwrite").parquet(pendingFact)
@@ -338,9 +310,8 @@ object DeltaLoad {
         // barrier: append each dim's new rows (a dim with none appends
         // nothing) and require them + the ODS append durable before the
         // fact commit
-        val appends = extended.collect { case (name, _, fresh) if fresh.nonEmpty =>
-          SparkFuture(spark)(local(name, fresh).write.mode("append")
-            .parquet(wh.dim(name)))
+        val appends = star.fresh.collect { case (name, rows) if rows.nonEmpty =>
+          SparkFuture(spark)(writeDim(spark, wh, name, rows, "append"))
         }
         background ++= appends
         Await.result(Future.sequence(odsAppend +: appends), Duration.Inf)
@@ -363,20 +334,14 @@ object DeltaLoad {
         // through the swap once their open cost outweighs a split. A kill
         // between the swap's renames is healed by the next run's recover.
         Compaction.compactIfFragmented(spark, wh.fact)
-        Await.result(odsAppend, Duration.Inf)
-        preRunLog()
-        // A5 — all three observed writes are durable; persist the run record
-        RunLog.append(spark, wh.runLog, jobId, "delta_load", Map(
-          "rows_ods_appended" -> obsOds.get("n").asInstanceOf[Long],
-          "rows_tods_appended" -> obsTOds.get("n").asInstanceOf[Long]),
-          insertionTs)
-      } else {
-        Await.result(odsAppend, Duration.Inf)
-        preRunLog()
-        RunLog.append(spark, wh.runLog, jobId, "delta_load", Map(
-          "rows_ods_appended" -> obsOds.get("n").asInstanceOf[Long],
-          "rows_tods_appended" -> 0L), insertionTs)
       }
+      Await.result(odsAppend, Duration.Inf)
+      preRunLog()
+      // A5 — every write is durable; persist the run record (T_ODS
+      // absorbed the whole slice)
+      RunLog.append(spark, wh.runLog, jobId, "delta_load", Map(
+        "rows_ods_appended" -> obsOds.get("n").asInstanceOf[Long],
+        "rows_tods_appended" -> star.rows), insertionTs)
     } finally {
       // if stage 4 threw, the background writes (ODS append, pending T_ODS
       // slice) may still be running: unpersisting their source frames under

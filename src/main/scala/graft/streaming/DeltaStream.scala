@@ -301,9 +301,9 @@ object DeltaStream {
     * construction-time parameter: a between-batches `reshardSharded`
     * changes the table's shard space, and an appender still sharding at
     * the old count would corrupt it. */
-  private def shardsNow(s: SparkSession, tableDir: String,
-      nShards: Int): Int =
-    Scan.readMeta(s, tableDir).flatMap(_.nShards).getOrElse(nShards)
+  private def shardsNow(s: SparkSession, tableDir: String): Int =
+    Scan.metaOf(s, tableDir).nShards.getOrElse(sys.error(
+      s"$tableDir: its ${Scan.MetaSidecar} records no n_shards"))
 
   /** Land one laid-out batch: persisted while its NULL shards quarantine
     * and the rest append, and while `andThen` (a mount's trigger) runs. */
@@ -445,9 +445,9 @@ object DeltaStream {
     * shard count via [[shardsNow]]); returns the layout and that count. */
   private def layStringBatch(s: SparkSession, batch: DataFrame,
       tableDir: String, boundsDir: String, idCol: String, strCol: String,
-      numCol: String, bits: Int, nShards: Int): (DataFrame, Int) = {
+      numCol: String, bits: Int): (DataFrame, Int) = {
     val dict = Scan.readDicts(s, tableDir)(strCol)
-    val n = shardsNow(s, tableDir, nShards)
+    val n = shardsNow(s, tableDir)
     (layString(Par.spread(batch), s.read.parquet(boundsDir), idCol, strCol,
       numCol, bits, n, dict), n)
   }
@@ -1189,7 +1189,7 @@ object DeltaStream {
         .schema(eventSchema(idCol, xCol, yCol)).json(eventsDir),
         checkpointDir, None, spread = false) { (batch, batchId) =>
       val s = batch.sparkSession
-      val n = shardsNow(s, tableDir, nShards)
+      val n = shardsNow(s, tableDir)
       landBatch(s, lay(Par.spread(batch), s.read.parquet(boundsDir), n),
         tableDir, idCol, batchId)(_ => ())
       maintain(s, tableDir, maxFilesPerShard, maxStaleFraction)
@@ -1239,7 +1239,7 @@ object DeltaStream {
         checkpointDir, None, spread = false) { (batch, batchId) =>
       val s = batch.sparkSession
       val (laid, _) = layStringBatch(s, batch, tableDir, boundsDir, idCol,
-        strCol, numCol, bits, nShards)
+        strCol, numCol, bits)
       landBatch(s, laid, tableDir, idCol, batchId)(_ => ())
       maintain(s, tableDir, maxFilesPerShard, maxStaleFraction)
     }
@@ -1283,7 +1283,7 @@ object DeltaStream {
       val fs = new Path(tableDir).getFileSystem(
         s.sparkContext.hadoopConfiguration)
       val (laid, nShardsEff) = layStringBatch(s, batch, tableDir, boundsDir,
-        idCol, strCol, numCol, bits, nShards)
+        idCol, strCol, numCol, bits)
       landBatch(s, laid, tableDir, idCol, batchId) { laid =>
         // the trigger: this batch's UNSEEN-category fraction (rows
         // whose string value exists but has no dict position; rows

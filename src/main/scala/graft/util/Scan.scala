@@ -535,17 +535,6 @@ object Scan {
       s"$dir has no $MetaSidecar sidecar — not a sharded table published " +
         "by writeSharded"))
 
-  /** The table's stats columns, from its meta. */
-  private[graft] def statColsOf(spark: SparkSession,
-      dir: String): Seq[String] =
-    metaOf(spark, dir).statCols
-
-  /** The table's bloom configuration (key column, m, k), from its meta;
-    * None when the table was published without a bloom key. */
-  private[graft] def bloomConfigOf(spark: SparkSession,
-      dir: String): Option[(String, Int, Int)] =
-    metaOf(spark, dir).bloom
-
   /** The table's bloom key column, for the verbs that route by it (key
     * deletes, deletion vectors, upserts, key predicates); fails when the
     * table was published without a bloom key. */

@@ -1,9 +1,12 @@
 package graft.analytics
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.dw.FactBuilder
 import graft.ingest.Staging
 import graft.ods.{OdsTransform, PlaceParser}
+import graft.schemas.Schemas
 import org.apache.spark.sql.functions._
 
 class MeasuresSpec extends SparkSpec {
@@ -18,8 +21,9 @@ class MeasuresSpec extends SparkSpec {
       Staging.finalizeStg(split.accepted, "JOB-1", "whole_month_07.csv", "20240701-120000"), ts)
     val states = spark.read.option("header", "true").csv(resource("us_states.csv"))
     val ods = PlaceParser.parsePlaces(ods0, states, ts)
-    val dims = FactBuilder.buildDims(ods)
-    (FactBuilder.buildFact(ods, dims, "JOB-1", ts).cache(), dims.seismicType)
+    val star = FactBuilder.star(ods, _ => Nil, "JOB-1", ts)
+    (star.fact.cache(), spark.createDataFrame(
+      star.fresh.toMap.apply("T_DIM_Seismic_Activity_Type").asJava, Schemas.dimType))
   }
 
   test("Q12/Q5-Q11: totals by type and overall") {

@@ -79,8 +79,7 @@ class DwSpec extends SparkSpec {
   }
 
   test("P14/J1: fact assembly resolves all FKs incl. NULL natural keys") {
-    val dims = FactBuilder.buildDims(ods)
-    val fact = FactBuilder.buildFact(ods, dims, "JOB-1", ts).cache()
+    val fact = FactBuilder.star(ods, _ => Nil, "JOB-1", ts).fact.cache()
     assert(fact.count() === ods.count())
     // the short fixture row has NULL net — dict-lookup semantics say it must
     // still resolve (None is a key), so no fact row may have a NULL net FK

@@ -7,8 +7,10 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.archive.Archive
+import graft.dw.{DateDim, DimBuilder}
 import graft.schemas.Schemas
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.shim
 import org.apache.spark.sql.types.StructType
@@ -254,6 +256,57 @@ class PipelineSpec extends SparkSpec {
       "job-delta", ts2)).size
     info(s"jobs per delta: $jobs")
     assert(jobs <= 40)
+  }
+
+  // The full load numbers its dims with the delta's driver-side extension
+  // from empty dims: one aggregate feeds all six, and the dims and the
+  // fact's dim joins are local relations instead of window-numbered
+  // frames. A fixture full load ran 52 jobs with the window-numbered dims,
+  // 26 after; graft.Probe's e2e_full_load at sf0.01 went from 60 to 34.
+  test("job count: one fixture full load runs in at most 26 Spark jobs") {
+    val (raw, wh) = setup()
+    val lookup = states // its header read is not the full load's job
+    val jobs = jobsDuring(Controller.run(spark, s"$raw/*.csv", lookup, wh,
+      "job-full", ts)).size
+    info(s"jobs per full load: $jobs")
+    assert(jobs <= 26)
+  }
+
+  test("the full load's dims equal the window numbering over the written " +
+    "T_ODS: the same rows and ids, one part file each") {
+    val (raw, wh) = setup()
+    Controller.run(spark, s"$raw/*.csv", states, wh, "job-full", ts)
+    val tOds = spark.read.parquet(wh.tOds)
+    val mag = coalesce($"LB_magCategory", lit("Not Felt"))
+    val depth = coalesce($"LB_depthCategory", lit("Shallow"))
+    def window(name: String, values: Column*) = {
+      val cols = Schemas.dim(name).fieldNames.toSeq
+      DimBuilder.build(tOds, values, cols.tail, cols.head)
+    }
+    val reference = Map(
+      "T_DIM_Network" -> window("T_DIM_Network", $"LB_net"),
+      "T_DIM_RegionCountry" -> window("T_DIM_RegionCountry", $"LB_Region",
+        $"LB_Country"),
+      "T_DIM_Seismic_Activity_Type" -> window("T_DIM_Seismic_Activity_Type",
+        $"LB_type"),
+      "T_DIM_magCategory" -> window("T_DIM_magCategory", mag,
+        DateDim.magDescription(mag)),
+      "T_DIM_depthCategory" -> window("T_DIM_depthCategory", depth,
+        DateDim.depthDescription(depth)),
+      "T_DIM_date" -> DateDim.build(tOds,
+        to_timestamp($"DT_time", "yyyy-MM-dd HH:mm:ss")))
+    def rows(df: DataFrame): Seq[Seq[Any]] =
+      df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("\u0000"))
+    val dims = wh.dimNames.map(n => n -> spark.read.parquet(wh.dim(n))).toMap
+    // the fixture's short row (NULL network, empty place) reaches the dims
+    assert(dims("T_DIM_Network").filter($"LB_NetworkSymbol".isNull).count() === 1)
+    assert(dims("T_DIM_RegionCountry")
+      .filter($"LB_Region".isNull && $"LB_Country".isNull).count() === 1)
+    wh.dimNames.foreach { n =>
+      assert(rows(dims(n)) === rows(reference(n)), n)
+      assert(new java.io.File(wh.dim(n)).listFiles()
+        .count(_.getName.startsWith("part-")) === 1, n)
+    }
   }
 
   /** The invariant the delta's fact append rests on: the fact holds

@@ -1527,8 +1527,8 @@ class ScanSpec extends SparkSpec {
       nShards = Some(16))
     val reads = jobsDuring {
       assert(Scan.readMeta(spark, dir).get.nShards === Some(16))
-      assert(Scan.statColsOf(spark, dir) === Seq("user_id", "ts_us"))
-      assert(Scan.bloomConfigOf(spark, dir) === Some(("user_id", 4096, 3)))
+      assert(Scan.metaOf(spark, dir).statCols === Seq("user_id", "ts_us"))
+      assert(Scan.metaOf(spark, dir).bloom === Some(("user_id", 4096, 3)))
       assert(Scan.tableSchemaOf(spark, dir).get.fieldNames.toSeq ===
         laid16.columns.toSeq)
     }
@@ -1613,8 +1613,8 @@ class ScanSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/${Scan.MetaSidecar}"),
       true)
     val messages = Seq[(String, () => Any)](
-      "statColsOf" -> (() => Scan.statColsOf(spark, dir)),
-      "bloomConfigOf" -> (() => Scan.bloomConfigOf(spark, dir)),
+      "metaOf.statCols" -> (() => Scan.metaOf(spark, dir).statCols),
+      "metaOf.bloom" -> (() => Scan.metaOf(spark, dir).bloom),
       "appendSharded" -> (() => Scan.appendSharded(spark,
         Seq((5000L, 42L, 420L, "t0", 0, 42L)).toDF(laid.columns: _*),
         dir, "event_id")),
